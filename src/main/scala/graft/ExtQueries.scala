@@ -739,8 +739,8 @@ object ExtQueries {
       val table = graft.streaming.EventStream.runToMemorySink(
         graft.streaming.EventStream.hourlyCounts(s, dir),
         s"q96_sink_${System.nanoTime()}", statePartitions = Some(8),
-        // watermark-evicted open windows × event types: a fixed domain,
-        // not data-proportional — in-memory state provider (r20 gate)
+        // hourly windows over the time range × event types (Complete mode
+        // evicts nothing), not data-proportional — in-memory provider
         boundedState = true)
       table.orderBy(col("bucket"), col("event_type"))
     },
@@ -2471,8 +2471,8 @@ object ExtQueries {
       val table = graft.streaming.EventStream.runToMemorySink(
         graft.streaming.EventStream.slidingCounts(s, dir),
         s"q201_sink_${System.nanoTime()}", statePartitions = Some(8),
-        // watermark-evicted open sliding windows × event types: a fixed
-        // domain — in-memory provider (r20 gate)
+        // sliding windows over the time range × event types (Complete
+        // mode evicts nothing) — in-memory provider
         boundedState = true)
       table.orderBy(col("bucket"), col("event_type"))
     },
@@ -3153,8 +3153,8 @@ object ExtQueries {
       val sink = graft.streaming.EventStream.runToMemorySink(
         graft.streaming.EventStream.dailyTypeCounts(s, dir),
         s"q264_sink_${System.nanoTime()}", statePartitions = Some(8),
-        // watermark-evicted open daily windows × event types: a fixed
-        // domain — in-memory provider (r20 gate)
+        // daily windows over the time range × event types (Complete mode
+        // evicts nothing) — in-memory provider
         boundedState = true)
       val w = Window.partitionBy(col("day"))
         .orderBy(col("n").desc, col("event_type"))

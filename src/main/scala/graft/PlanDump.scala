@@ -24,7 +24,7 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
     // same conf hook as Bench — lets a "before" dump force the pre-gate
-    // plan shape (e.g. SPARK_GRAFT_EXTRA_CONF=spark.graft.localGraphEdgeLimit=0)
+    // plan shape (e.g. SPARK_GRAFT_EXTRA_CONF=spark.graft.driverRowLimit=0)
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
       val i = kv.indexOf('=')
       if (i > 0) builder.config(kv.take(i).trim, kv.drop(i + 1).trim)

@@ -680,17 +680,18 @@ object TextDedup {
     * Two physical strategies behind one semantics, picked by edge count —
     * the same shape as Spark's own broadcast-join threshold:
     *
-    *  - **≤ `localEdgeThreshold` undirected edges** (default 1M): collect
-    *    the edge list and run exact union-find with path compression, then
-    *    broadcast the (id, group_id) labels back. The collect is boxed
-    *    GenericRows plus a vertex hash map — budget ~100-300 bytes per edge
-    *    for long ids (more for string ids), i.e. a few hundred MB of driver
-    *    heap AT the default threshold; size the threshold to the driver,
-    *    the distributed path below costs no driver memory. LSH near-dup
+    *  - **directed edge rows (two per pair) within
+    *    [[graft.ops.Bounded.fitsDriver]]** (default 4M rows = 2M pairs):
+    *    collect the edge list and run exact union-find with path
+    *    compression, then broadcast the (id, group_id) labels back. The
+    *    collect is boxed GenericRows plus a vertex hash map — budget
+    *    ~100-300 bytes per pair for long ids (more for string ids), i.e.
+    *    ~0.2–0.6 GB of driver heap at the default limit; the
+    *    distributed path below costs no driver memory. LSH near-dup
     *    edges are a sliver of any corpus, so this is the common case, and
     *    it replaces ~4 shuffle stages PER ROUND with one collect + one
     *    broadcast join.
-    *  - **above the threshold** (or non-orderable driver-side id type):
+    *  - **above the limit** (or non-orderable driver-side id type):
     *    distributed iterative min-label propagation with POINTER JUMPING —
     *    each round takes the min label across edges (one hop), then
     *    shortcuts every label to its label's label, so convergence is
@@ -704,12 +705,12 @@ object TextDedup {
     * and already materialized. The CALLER owns the cache: call
     * `.unpersist()` on the result when done with it (long-lived sessions
     * that skip this accumulate one cache per dedup run). */
-  def dedupGroups(pairs: DataFrame, allIds: DataFrame, maxIter: Int = 5,
-                  localEdgeThreshold: Long = 1000000L): DataFrame = {
+  def dedupGroups(pairs: DataFrame, allIds: DataFrame,
+                  maxIter: Int = 5): DataFrame = {
     val edges = pairs.select(col("id_a"), col("id_b"))
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nUndirected = edges.count() / 2
+    val nDirected = edges.count()
     val idOrdering: Option[Ordering[Any]] = pairs.schema("id_a").dataType match {
       case LongType => Some(Ordering.by((x: Any) => x.asInstanceOf[Long]))
       case IntegerType => Some(Ordering.by((x: Any) => x.asInstanceOf[Int]))
@@ -726,15 +727,7 @@ object TextDedup {
       })
       case _ => None
     }
-    // measurement knob (bench forensics only): force the distributed
-    // pointer-jumping loop even under the local threshold, so its
-    // round-count/wall behavior can be benched on corpora whose candidate
-    // graphs would otherwise take the fast path — results are identical
-    // by the label-choice proof above
-    val forceDistributed =
-      sys.env.get("GRAFT_DEDUP_FORCE_DISTRIBUTED").contains("1")
-    if (!forceDistributed &&
-        nUndirected <= localEdgeThreshold && idOrdering.isDefined)
+    if (fitsDriver(edges.sparkSession, nDirected) && idOrdering.isDefined)
       return dedupGroupsLocal(edges, allIds, idOrdering.get)
     // the monotone-sum convergence probe needs numeric ids (an ANSI cast of
     // a string id to decimal throws); string/other ids use an explicit
@@ -827,15 +820,17 @@ object TextDedup {
   }
 
   /** Small-graph fast path for [[dedupGroups]]: exact union-find with path
-    * compression over the collected edge list (the caller has verified the
-    * count fits the driver), labels = min id per component, broadcast back
-    * over the full id table. Deterministic and identical in output to the
-    * distributed loop. */
+    * compression over the collected edge list (the caller has checked
+    * [[graft.ops.Bounded.fitsDriver]]), labels = min id per component,
+    * broadcast back over the full id table. Deterministic and identical in
+    * output to the distributed loop. */
   private def dedupGroupsLocal(edges: DataFrame, allIds: DataFrame,
                                ord: Ordering[Any]): DataFrame = {
     val spark = edges.sparkSession
     // each undirected edge once (edges holds both directions)
-    val rows = edges.filter(col("id_a") < col("id_b")).collectBounded(2 << 20, "local CC fast path (<1M edges, gated)")
+    val rows = edges.filter(col("id_a") < col("id_b"))
+      .collectBounded(driverRowBound(spark),
+        "local CC fast path (within the driver limit)")
     val idx = new java.util.HashMap[Any, Integer]()
     val vals = new scala.collection.mutable.ArrayBuffer[Any]()
     def ix(v: Any): Int = {

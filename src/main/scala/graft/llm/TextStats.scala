@@ -1142,14 +1142,12 @@ object TextStats {
     // here — the opposite regime from the sf-scaled trading graph where
     // cadence-1 wins on AQE statistics (see pageRank's scaladoc; on a
     // 3-round loop the lineage stays shallow without them)
-    // localEdgeThreshold: the vocab co-occurrence graph is bounded by
-    // the (minCount-filtered) vocabulary — thousands of edges, not
-    // corpus-sized — so the distributed rank loop's ~3·iters tiny-stage
-    // jobs ARE the operator's wall; the gated local fold replays the
-    // identical integer arithmetic (see pageRankLocal's parity spec)
+    // the vocab co-occurrence graph is bounded by the (minCount-filtered)
+    // vocabulary — thousands of edges, not corpus-sized — so it fits the
+    // driver limit and pageRank folds it in-core
     val ranks = graft.ops.Graph.pageRank(edges, "src", "dst",
       iters = iters, damp = damp, dedupEdges = false,
-      checkpointEvery = iters, localEdgeThreshold = 1L << 20)
+      checkpointEvery = iters)
     val names = vocab.groupBy(col("__id")).agg(min(col("w")).as("token"))
     val out = ranks.join(names, ranks("id") === names("__id"))
       .select(col("token"), col("r").as("rank"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The engine's ONLY sanctioned driver-side materialization.
   *
@@ -18,6 +18,33 @@ import org.apache.spark.sql.Dataset
   * bound stated in code is a bound the cluster enforces.
   */
 object Bounded {
+  /** Default for [[driverRowLimit]]: 4M rows. */
+  private val DefaultDriverRowLimit = 4000000L
+  val DriverRowLimitKey = "spark.graft.driverRowLimit"
+
+  /** The row limit behind [[fitsDriver]]. `spark.graft.driverRowLimit`
+    * overrides the default (tests set it to force a leg); `0` means
+    * nothing fits. This is the only `spark.graft.*` key the engine reads. */
+  def driverRowLimit(spark: SparkSession): Long =
+    spark.conf.get(DriverRowLimitKey, DefaultDriverRowLimit.toString).toLong
+
+  /** The engine's one "small enough for the driver?" decision. Every
+    * operator with a driver-side replay (graph rounds, periodogram,
+    * dedup union-find) or a broadcast node frame asks it with the input
+    * size it has already observed. An input within the limit may be
+    * collected or broadcast; above it the operator runs its distributed
+    * plan. */
+  def fitsDriver(spark: SparkSession, rows: Long): Boolean = {
+    val limit = driverRowLimit(spark)
+    limit > 0L && rows <= limit
+  }
+
+  /** `times` × [[driverRowLimit]] as a [[BoundedOps.collectBounded]]
+    * bound: the collect behind a passed [[fitsDriver]] check is held to
+    * the same limit that admitted it. */
+  def driverRowBound(spark: SparkSession, times: Long = 1L): Int =
+    math.min(times * driverRowLimit(spark), Int.MaxValue - 1L).toInt
+
   implicit class BoundedOps[T](private val ds: Dataset[T]) extends AnyVal {
     /** Driver-side collect with an enforced row bound. `why` names the
       * call site's O-argument (shown in the violation error). */

@@ -98,8 +98,7 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5, damp: Int = 85,
                dedupEdges: Boolean = true,
-               checkpointEvery: Int = 1,
-               localEdgeThreshold: Long = 0L): DataFrame = {
+               checkpointEvery: Int = 1): DataFrame = {
     require(iters >= 1 && damp >= 0 && damp <= 100 && checkpointEvery >= 1)
     // dedupEdges=false skips a full edge shuffle when the caller's edge
     // list is already distinct (e.g. tradingPairsGraph); duplicate edges
@@ -116,51 +115,36 @@ object Graph {
     // Persisted here, released as soon as `edged` is materialized.
     val ePer = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val eCnt = ePer.count()
-    // GATED small-graph fast path (the dedupGroupsLocal convention):
-    // below max(caller threshold, spark.graft.localGraphEdgeLimit) the
-    // distributed rank loop is pure job-scheduling overhead — each of
-    // the ~3·iters tiny-stage jobs costs more wall than the whole
-    // computation (and the per-round broadcast cycles were measured to
-    // anti-scale with core count, r19 driver: 10.1 s @32c vs 2.7 s @8c).
-    // The local loop replays the EXACT integer arithmetic of the
-    // distributed plan (floor divs in the same order), so results are
-    // bit-identical (PageRankLocalParitySpec); the collect is bounded
-    // and reads the warm edge cache. See [[GraphLocal]] for the 100 TB
-    // honesty argument.
-    val localLimit = math.max(localEdgeThreshold,
-      GraphLocal.limit(edges.sparkSession))
-    if (localLimit > 0L && eCnt <= localLimit) {
-      val out = pageRankLocal(ePer, iters, damp, localLimit)
+    // Below the driver limit the distributed rank loop is pure job
+    // scheduling — each of its ~3·iters tiny-stage jobs costs more wall
+    // than the whole computation — so the collected edge list is folded
+    // in-core with the same floor divisions in the same order
+    // ([[GraphLocal]]; bit-identical, PageRankLocalParitySpec).
+    val spark = edges.sparkSession
+    if (Bounded.fitsDriver(spark, eCnt)) {
+      val arr = GraphLocal.collectEdges(ePer, "gated local pageRank replay")
       ePer.unpersist()
-      return out
+      return GraphLocal.pageRank(spark, arr, iters, damp)
     }
     val deg = ePer.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // JOIN-STRATEGY GATE (r19 optimization, guide §3.1): the per-round
-    // join carries a NODE-sized rank frame against the persisted EDGE
-    // frame. A localCheckpointed rank frame has no size statistics, so
-    // the planner kept choosing a co-partitioned SortMergeJoin — which
-    // RE-SORTS the whole |E| cache every round (measured sf0.1: 1.7 s
-    // per round on 1.17M edges for milliseconds of arithmetic). When the
-    // node count is below spark.graft.broadcastNodeLimit (default 4M
-    // rows ≈ ≤100 MB built relation — a deliberate explicit-hint
-    // broadcast per §3.1, far below the 8 GB cap), broadcast the rank
-    // frame instead and key the edge cache by DST — the aggregation key
-    // — so each round is ONE exchange-free cached map stage (broadcast
-    // probe + partial/final agg on the cache's own partitioning). Above
-    // the gate (node frames that would not fit every executor) the r18
-    // co-partitioned SMJ shape is kept, with the edge cache now ALSO
-    // sorted by src at build so the per-round merge re-sorts only the
-    // node frame, never |E|. Both paths compute identical integers.
-    val spark = edges.sparkSession
-    val bcastNodeLimit = spark.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong
-    // node universe: every endpoint, annotated dangling when no out-edge.
-    // ONE exchange instead of the r18 union+distinct+left-join+repartition
-    // chain (which read the edge frame twice and shuffled three times):
-    // explode each edge into (src,1),(dst,0) endpoint rows, then a single
-    // keyed max — dangling ⇔ the node never appears as src. Partial
-    // aggregation collapses the exploded rows map-side, and the agg
-    // output is already hash(id)-partitioned for the round joins.
+    // JOIN STRATEGY (guide §3.1): the per-round join carries a
+    // NODE-sized rank frame against the persisted EDGE frame. A
+    // localCheckpointed rank frame has no size statistics, so unhinted
+    // the planner picks a co-partitioned SortMergeJoin that RE-SORTS the
+    // whole |E| cache every round (measured sf0.1: 1.7 s per round on
+    // 1.17M edges for milliseconds of arithmetic). When the node count
+    // fits the driver limit, the rank frame is broadcast instead and the
+    // edge cache keyed by DST — the aggregation key — so each round is
+    // ONE exchange-free cached map stage. A node frame too big for that
+    // keeps the co-partitioned SMJ, with the edge cache sorted by src at
+    // build so the per-round merge re-sorts only the node frame, never
+    // |E|. Both shapes compute identical integers.
+    // node universe: every endpoint, annotated dangling when no out-edge,
+    // in ONE exchange: explode each edge into (src,1),(dst,0) endpoint
+    // rows, then a single keyed max — dangling ⇔ the node never appears
+    // as src. Partial aggregation collapses the exploded rows map-side,
+    // and the agg output is already hash(id)-partitioned for the round
+    // joins.
     val nodes = ePer.select(explode(array(
         struct(col("src").as("id"), lit(1).as("__o")),
         struct(col("dst").as("id"), lit(0).as("__o")))).as("n"))
@@ -170,7 +154,7 @@ object Graph {
     // N: one O(1) driver readout (the fit-side pattern) — needed to place
     // the integer literals r0/base into the plan
     val n = nodes.count()
-    val useBcast = n <= bcastNodeLimit
+    val useBcast = Bounded.fitsDriver(spark, n)
     val edged = {
       val degJ = if (useBcast) broadcast(deg) else deg
       val j = ePer.join(degJ, "src")
@@ -221,10 +205,9 @@ object Graph {
                 s"(${damp}L * (coalesce(s, 0L) + __dmass div ${n}L)) div 100"))
                 .as("r"))
         }
-      // (r19 A/B: skipping mid-loop checkpoints in broadcast mode was
-      // measured SLOWER — q149 4.4→5.6 s, q405 5.1→11.3 s — the nested
-      // broadcast chain re-runs analysis/codegen over a growing tree
-      // each round. Cadence-1 checkpoints stay.)
+      // (skipping mid-loop checkpoints in broadcast mode was measured
+      // SLOWER — q149 4.4→5.6 s, q405 5.1→11.3 s — the nested broadcast
+      // chain re-runs analysis/codegen over a growing tree each round)
       val cadence = if (hasDangling) 1 else checkpointEvery
       if (i % cadence == 0 && i < iters) {
         ranks = ranks.localCheckpoint(true)
@@ -241,65 +224,6 @@ object Graph {
     edged.unpersist()
     nodes.unpersist()
     out
-  }
-
-  /** Small-graph fast path for [[pageRank]] (caller-gated via
-    * `localEdgeThreshold`): the collected edge list is folded with the
-    * SAME integer arithmetic as the distributed plan — r₀ = Scale/n,
-    * base = (100−damp)·(Scale/n)/100, share = r div outdeg summed per
-    * dst, r' = base + damp·(s + dmass div n) div 100 — every op an
-    * exact Long floor-div/add, so the output is bit-identical to the
-    * distributed loop on any graph (PageRankLocalParitySpec asserts
-    * this on dangling and non-dangling graphs). */
-  private def pageRankLocal(e: DataFrame, iters: Int,
-                            damp: Int, bound: Long): DataFrame = {
-    val spark = e.sparkSession
-    import graft.ops.Bounded._
-    val rows = e.collectBounded(math.min(bound, Int.MaxValue - 1L).toInt,
-      "gated sub-threshold pageRank fast path")
-    val idx = new java.util.HashMap[Long, Integer]()
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    def ix(v: Long): Int = {
-      val g = idx.get(v)
-      if (g != null) g.intValue()
-      else { idx.put(v, ids.length); ids += v; ids.length - 1 }
-    }
-    val es = new Array[Int](rows.length)
-    val ed = new Array[Int](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      es(i) = ix(rows(i).getLong(0)); ed(i) = ix(rows(i).getLong(1)); i += 1
-    }
-    import spark.implicits._
-    if (ids.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("id", "r")
-    val n = ids.length.toLong
-    val outdeg = new Array[Long](ids.length)
-    i = 0; while (i < es.length) { outdeg(es(i)) += 1L; i += 1 }
-    val r0 = Scale / n
-    val base = (100 - damp) * (Scale / n) / 100
-    var r = Array.fill(ids.length)(r0)
-    val hasDangling = outdeg.contains(0L)
-    for (_ <- 1 to iters) {
-      val s = new Array[Long](ids.length)
-      var j = 0
-      while (j < es.length) { s(ed(j)) += r(es(j)) / outdeg(es(j)); j += 1 }
-      val dm =
-        if (!hasDangling) 0L
-        else {
-          var d = 0L; var k = 0
-          while (k < r.length) { if (outdeg(k) == 0L) d += r(k); k += 1 }
-          d / n
-        }
-      val nr = new Array[Long](ids.length)
-      var k = 0
-      while (k < r.length) {
-        nr(k) = base + damp.toLong * (s(k) + dm) / 100; k += 1
-      }
-      r = nr
-    }
-    spark.createDataset(ids.indices.map(k => (ids(k), r(k))))
-      .toDF("id", "r")
   }
 
   /** Synchronous LABEL-PROPAGATION community detection (Raghavan et al.
@@ -345,31 +269,21 @@ object Graph {
       if (assumeSymmetric) e0
       else e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
         .distinct()
-    // r19 JOIN-STRATEGY GATE (the [[pageRank]] doctrine, guide §3.1):
-    // below spark.graft.broadcastNodeLimit the node-sized label frame is
-    // BROADCAST into each round's join, so the edge cache is keyed by
-    // the AGGREGATION key `a` instead of the join key `b` — every round
-    // (and the closed-form round 1) then runs exchange-free on the
-    // cache's own partitioning (hash(a) satisfies the (a,lbl) and (a)
-    // clusterings). The |E| count gates conservatively: #nodes ≤ 2|E|.
     val spark = edges.sparkSession
-    val bcastNodeLimit = spark.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong
     val ePre = e1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val eCnt = ePre.count()
-    // r20 gated local replay ([[GraphLocal]]): below the edge gate the
-    // whole round loop runs in-core off one bounded collect of the warm
-    // cache — same min-label/argmax integers (LabelPropLocalParitySpec).
-    val localLimit = GraphLocal.limit(spark)
-    if (localLimit > 0L && eCnt <= localLimit) {
-      val arr = GraphLocal.collectEdges(ePre, localLimit,
+    // Below the driver limit the round loop is job scheduling for
+    // milliseconds of arithmetic: it runs in-core off one bounded collect
+    // of the warm cache, same min-label/argmax integers ([[GraphLocal]]).
+    if (Bounded.fitsDriver(spark, eCnt)) {
+      val arr = GraphLocal.collectEdges(ePre,
         "gated local labelPropagation replay")
       ePre.unpersist()
       return GraphLocal.labelPropagation(spark, arr, iters)
     }
-    val useBcast = eCnt <= bcastNodeLimit / 2
-    val e = ePre
-      .repartition(col(if (useBcast) "a" else "b"))
+    // above it: edges keyed by the join key b, so each round's
+    // labels ⋈ edges join is co-partitioned with the cache
+    val e = ePre.repartition(col("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     e.count() // materialize off the warm ePre cache, then release it
     ePre.unpersist()
@@ -386,8 +300,7 @@ object Graph {
     }
     if (1 % checkpointEvery == 0 && iters > 1) ck()
     for (i <- 2 to iters) {
-      val labJ = if (useBcast) broadcast(labels) else labels
-      val nb = e.join(labJ, e("b") === labJ("id"))
+      val nb = e.join(labels, e("b") === labels("id"))
         .groupBy(col("a"), col("lbl"))
         .agg(count(lit(1)).as("c"))
       labels = nb.groupBy(col("a"))
@@ -530,20 +443,13 @@ object Graph {
     require(radius >= 1 && radius <= 8, s"radius=$radius")
     require(k >= 4 && k <= 256, s"k=$k")
     graft.functions.Kmv.register(edges.sparkSession)
-    // r19 round shape (the [[pageRank]] broadcast doctrine, guide §3.1 +
-    // §2.4): the r18 round was  e ⋈ balls (SMJ re-sorting the |E| cache
-    // every round) → explode → UNION with the own-ball explode → one
-    // kmv_sketch aggregation with a full exchange of the exploded rows.
-    // Two changes, both result-identical:
-    //  1. SELF-LOOP rows (v,v) are added to the persisted edge frame, so
-    //     the join itself emits each node's own ball and the union branch
-    //     disappears — one join + one aggregation per round. kmv_sketch
-    //     is set-based (min-k of DISTINCT hashes), so the same multiset
-    //     of (id, hash) rows arrives either way.
-    //  2. Below spark.graft.broadcastNodeLimit/2 edges, the ball frame is
-    //     BROADCAST and the edge cache is keyed by SRC — the aggregation
-    //     key — so the round is one exchange-free cached map stage.
-    //     Above the gate the r18 dst-keyed co-partitioned join is kept.
+    // Round shape: SELF-LOOP rows (v,v) are added to the persisted edge
+    // frame, so the join itself emits each node's own ball — one join +
+    // one aggregation per round, no union branch. kmv_sketch is
+    // set-based (min-k of DISTINCT hashes), so the same multiset of
+    // (id, hash) rows arrives as with a separate own-ball union. The
+    // edge cache is keyed by dst, the join key, so the balls ⋈ edges
+    // join is co-partitioned with it.
     val ePre = edges.select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
@@ -551,20 +457,17 @@ object Graph {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val eCnt = ePre.count()
-    // r20 gated local replay ([[GraphLocal]]): same md5 min-k sketch
-    // rounds and IEEE-double estimator sequence in-core off one bounded
-    // collect (KmvGraphLocalParitySpec) — the per-round kmv fold's
-    // distributed form is job-orchestration-bound below the gate.
-    val localLimit = GraphLocal.limit(edges.sparkSession)
-    if (localLimit > 0L && eCnt <= localLimit) {
-      val arr = GraphLocal.collectEdges(ePre, localLimit,
+    // Below the driver limit the per-round kmv fold's distributed form is
+    // job-scheduling-bound: the same md5 min-k sketch rounds and
+    // IEEE-double estimator sequence run in-core off one bounded collect
+    // ([[GraphLocal]]).
+    if (Bounded.fitsDriver(edges.sparkSession, eCnt)) {
+      val arr = GraphLocal.collectEdges(ePre,
         "gated local harmonic-centrality replay")
       ePre.unpersist()
       return GraphLocal.harmonicCentralityKmv(edges.sparkSession, arr,
         radius, k)
     }
-    val useBcast = eCnt <= edges.sparkSession.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong / 2
     val nodes = ePre.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct()
     val e = ePre
@@ -574,7 +477,7 @@ object Graph {
       // shrink this cache to ~10 partitions at sf0.1 (15 MB of edges),
       // serializing the sketch work — pin the session's shuffle width
       .repartition(ePre.sparkSession.sessionState.conf.numShufflePartitions,
-        col(if (useBcast) "src" else "dst"))
+        col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     e.count() // materialize off the warm ePre cache, then release it
     ePre.unpersist()
@@ -592,15 +495,13 @@ object Graph {
       .localCheckpoint(true)
     var lastCk: Option[DataFrame] = Some(balls)
     for (r <- 1 to radius) {
-      val ballsJ = if (useBcast) broadcast(balls) else balls
-      val merged = e.join(ballsJ, e("dst") === ballsJ("id"))
+      val merged = e.join(balls, e("dst") === balls("id"))
         .select(e("src").as("id"), col("ball").as("__b"))
         .groupBy(col("id"))
         .agg(expr(s"kmv_sketch_arr(__b, $k)").as("ball"))
       val carry = balls.select(col("id"), col("est").as("__ep"),
         col("harmonic").as("__hp"))
-      val next = merged
-        .join(if (useBcast) broadcast(carry) else carry, Seq("id"))
+      val next = merged.join(carry, Seq("id"))
         .select(col("id"), col("ball"), estOf(col("ball")).as("est"),
           (col("__hp") +
             (estOf(col("ball")) - col("__ep")) / lit(r.toDouble))
@@ -638,9 +539,8 @@ object Graph {
     require(k >= 4 && k <= 256, s"k=$k")
     graft.functions.Kmv.register(edges.sparkSession)
     import graft.ops.Bounded._
-    // r19: same self-loop + broadcast-gated round shape as
-    // [[harmonicCentralityKmv]] (see the comment there) — one join, one
-    // exchange-free kmv aggregation per round in broadcast mode.
+    // same self-loop round shape as [[harmonicCentralityKmv]] (see the
+    // comment there) — one join and one kmv aggregation per round
     val ePre = edges.select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
@@ -662,17 +562,14 @@ object Graph {
             .compareTo(sMax.multiply(new java.math.BigDecimal(9))) >= 0)
       }.toDF("r", "n_nodes", "sum_ball", "coverage", "reaches_90pct")
     }
-    // r20 gated local replay ([[GraphLocal]]): same sketch rounds and
-    // floor-scaled exact-decimal sums in-core (KmvGraphLocalParitySpec).
-    val localLimit = GraphLocal.limit(edges.sparkSession)
-    if (localLimit > 0L && eCnt <= localLimit) {
-      val arr = GraphLocal.collectEdges(ePre, localLimit,
+    // below the driver limit: the same sketch rounds and floor-scaled
+    // exact-decimal sums in-core ([[GraphLocal]])
+    if (Bounded.fitsDriver(edges.sparkSession, eCnt)) {
+      val arr = GraphLocal.collectEdges(ePre,
         "gated local neighborhood-function replay")
       ePre.unpersist()
       return finish(GraphLocal.neighborhoodSums(arr, radius, k))
     }
-    val useBcast = eCnt <= edges.sparkSession.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong / 2
     val nodes = ePre.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct()
     val e = ePre
@@ -682,7 +579,7 @@ object Graph {
       // shrink this cache to ~10 partitions at sf0.1 (15 MB of edges),
       // serializing the sketch work — pin the session's shuffle width
       .repartition(ePre.sparkSession.sessionState.conf.numShufflePartitions,
-        col(if (useBcast) "src" else "dst"))
+        col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     e.count() // materialize off the warm ePre cache, then release it
     ePre.unpersist()
@@ -708,8 +605,7 @@ object Graph {
     var lastCk: Option[DataFrame] = Some(balls)
     val sums = scala.collection.mutable.ArrayBuffer(readout(balls))
     for (r <- 1 to radius) {
-      val ballsJ = if (useBcast) broadcast(balls) else balls
-      val next = e.join(ballsJ, e("dst") === ballsJ("id"))
+      val next = e.join(balls, e("dst") === balls("id"))
         .select(e("src").as("id"), col("ball").as("__b"))
         .groupBy(col("id"))
         .agg(expr(s"kmv_sketch_arr(__b, $k)").as("ball"))
@@ -962,34 +858,35 @@ object Graph {
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
     val e = if (dedupEdges) e0.distinct() else e0
-    // Same r19 build/round shape as [[pageRank]] (see the gate comment
-    // there): edge frame persisted once for the four build derivations,
-    // node universe + dangling flag in ONE exchange, rank/contrib frames
-    // broadcast below spark.graft.broadcastNodeLimit with the edge cache
-    // keyed by the aggregation key (dst) so rounds are exchange-free.
+    // Same build/round shape as [[pageRank]] (see the join-strategy
+    // comment there): edge frame persisted once for the four build
+    // derivations, node universe + dangling flag in ONE exchange,
+    // rank/contrib frames broadcast when the node count fits the driver
+    // limit, with the edge cache keyed by the aggregation key (dst) so
+    // rounds are exchange-free.
     val ePer = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val seedIds = seeds
       .select(col(seedCol).cast(LongType).as("id")).distinct()
-    // r20 gated local replay ([[GraphLocal]]): seeds are first
-    // intersected with the node universe (the operator ignores non-graph
-    // seeds anyway), so the seed collect is bounded by 2·|E| ≤ 2·gate.
-    // Same Long floor arithmetic as the distributed rounds
-    // (PprLocalParitySpec).
+    // Below the driver limit the rounds are job scheduling for
+    // milliseconds of arithmetic: the same Long floor arithmetic runs
+    // in-core ([[GraphLocal]]). Seeds are first intersected with the node
+    // universe (the operator ignores non-graph seeds anyway), so the seed
+    // collect is bounded by 2·|E| ≤ 2 × the limit.
+    val spark = edges.sparkSession
     val eCntPre = ePer.count()
-    val localLimitPpr = GraphLocal.limit(edges.sparkSession)
-    if (localLimitPpr > 0L && eCntPre <= localLimitPpr) {
+    if (Bounded.fitsDriver(spark, eCntPre)) {
       import graft.ops.Bounded._
-      val arr = GraphLocal.collectEdges(ePer, localLimitPpr,
+      val arr = GraphLocal.collectEdges(ePer,
         "gated local personalized-pageRank replay")
       val seedArr = seedIds
         .join(ePer.select(explode(array(col("src"), col("dst"))).as("id"))
           .distinct(), Seq("id"), "left_semi")
-        .collectBounded(math.min(2L * localLimitPpr, Int.MaxValue - 1L).toInt,
+        .collectBounded(driverRowBound(spark, 2),
           "pPR local replay seed set (⊆ node universe ≤ 2·|E|)")
         .map(_.getLong(0)).toSet
       ePer.unpersist()
-      return GraphLocal.personalizedPageRank(edges.sparkSession, arr,
-        seedArr, iters, damp)
+      return GraphLocal.personalizedPageRank(spark, arr, seedArr, iters,
+        damp)
     }
     val deg = ePer.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val nodes = ePer.select(explode(array(
@@ -1003,7 +900,7 @@ object Graph {
         coalesce(col("__seed"), lit(false)).as("__seed"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // one crossed readout: total node count (broadcast gate) and seed
-    // count in a single cached-frame job (r19 — was two counts)
+    // count in a single cached-frame job
     val cntRow = {
       import graft.ops.Bounded._
       nodes.agg(count(lit(1)).as("n"),
@@ -1012,10 +909,7 @@ object Graph {
     }
     val nS = cntRow.getLong(1)
     require(nS > 0, "personalizedPageRank: no seed is a graph node")
-    val spark = edges.sparkSession
-    val bcastNodeLimit = spark.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong
-    val useBcast = cntRow.getLong(0) <= bcastNodeLimit
+    val useBcast = Bounded.fitsDriver(spark, cntRow.getLong(0))
     val edged = {
       val degJ = if (useBcast) broadcast(deg) else deg
       val j = ePer.join(degJ, "src")
@@ -1175,22 +1069,20 @@ object Graph {
     require(sources.nonEmpty && maxHops >= 0, s"maxHops=$maxHops")
     val spark = edges.sparkSession
     import spark.implicits._
-    // gate BEFORE the src re-key (r20): the local path reads the frame
-    // once — paying the repartition exchange inside its collect lineage
-    // bought nothing (guide §2.4)
+    // gate BEFORE the src re-key: the local path reads the frame once —
+    // paying the repartition exchange inside its collect lineage would
+    // buy nothing (guide §2.4)
     val eBase = edges.select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val eCnt = eBase.count()
-    // r20 gated local replay ([[GraphLocal]]): plain BFS over the
-    // collected edge list — hop tags and early exit replay the
-    // distributed loop exactly (BfsSsspLocalParitySpec).
-    val localLimit = GraphLocal.limit(spark)
-    if (localLimit > 0L && eCnt <= localLimit) {
-      val arr = GraphLocal.collectEdges(eBase, localLimit,
-        "gated local BFS replay")
+    // below the driver limit: plain BFS over the collected edge list —
+    // hop tags and early exit replay the distributed loop exactly
+    // ([[GraphLocal]])
+    if (Bounded.fitsDriver(spark, eCnt)) {
+      val arr = GraphLocal.collectEdges(eBase, "gated local BFS replay")
       eBase.unpersist()
       return GraphLocal.bfsDistances(spark, arr, sources, maxHops)
     }
@@ -1198,12 +1090,6 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     e.count() // materialize off the warm eBase cache, then release it
     eBase.unpersist()
-    // r19 (guide §3.1): frontier/visited frames are node-sized and
-    // checkpointed (no stats) — unhinted, each hop re-sorted the |E|
-    // cache for a SortMergeJoin. Broadcast both below the pageRank gate.
-    val useBcast = eCnt <= spark.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong / 2
-    def hint(df: DataFrame): DataFrame = if (useBcast) broadcast(df) else df
     var visited = sources.distinct.toDF("id")
       .select(col("id").cast(LongType).as("id"), lit(0).as("dist"))
       .localCheckpoint(true)
@@ -1212,10 +1098,10 @@ object Graph {
     var done = maxHops == 0
     while (!done) {
       val next = e
-        .join(hint(frontier.select(col("id").as("__fid"))),
+        .join(frontier.select(col("id").as("__fid")),
           e("src") === col("__fid"))
         .select(col("dst").as("id")).distinct()
-        .join(hint(visited), Seq("id"), "left_anti")
+        .join(visited, Seq("id"), "left_anti")
         .select(col("id"), lit(hop).as("dist"))
         .localCheckpoint(true)
       if (next.isEmpty) {
@@ -1326,35 +1212,33 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val lab = labels.select(col(idCol).as("__lid"), col(labelCol).as("__ll"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r19: materialize BOTH caches before the 1-row readout below — its
+    // materialize BOTH caches before the 1-row readout below — its
     // broadcast subqueries are submitted concurrently, and un-materialized
     // caches made every subquery job recompute the shared upstream (the
     // measured q298 cost was ~1 s per racing subquery); two cheap counts
-    // turn those races into warm cache reads. The node-sized label sides
-    // are broadcast (guide §3.1) below the pageRank gate, so the |E|-row
-    // joins run map-side with no sort and no exchange.
+    // turn those races into warm cache reads. When the label count fits
+    // the driver limit the node-sized label sides are broadcast (guide
+    // §3.1), so the |E|-row joins run map-side with no sort and no
+    // exchange.
+    val spark = labels.sparkSession
     val labN = lab.count()
     val eCnt = e.count()
-    // r20 gated local replay ([[GraphLocal]]): the three aggregation
-    // passes over the |E| cache (intra join, degree pass, m2) collapse to
-    // one in-core fold below the edge gate — same Long counts, same
-    // floor-scaled isum(·,9) double sequence (ModularityLocalParitySpec).
-    // LONG-typed columns only, unique label ids only (a duplicated id
-    // multiplies the distributed joins — fall through rather than guess),
-    // nonempty labeled-degree mass (the degenerate empties keep the
-    // distributed plan's NULL semantics).
-    val localLimit = GraphLocal.limit(labels.sparkSession)
-    if (localLimit > 0L && eCnt > 0L && eCnt <= localLimit &&
-        labN <= 2L * localLimit &&
+    // Below the driver limit the three aggregation passes over the |E|
+    // cache (intra join, degree pass, m2) collapse to one in-core fold —
+    // same Long counts, same floor-scaled isum(·,9) double sequence
+    // ([[GraphLocal]]). LONG-typed columns only, unique label ids only (a
+    // duplicated id multiplies the distributed joins — fall through
+    // rather than guess), nonempty labeled-degree mass (the degenerate
+    // empties keep the distributed plan's NULL semantics).
+    if (eCnt > 0L && Bounded.fitsDriver(spark, eCnt) &&
+        labN <= 2L * Bounded.driverRowLimit(spark) &&
         e.schema.forall(_.dataType == LongType) &&
         lab.schema.forall(_.dataType == LongType)) {
       import graft.ops.Bounded._
-      val eRows = e.collectBounded(
-        math.min(localLimit, Int.MaxValue - 1L).toInt,
+      val eRows = e.collectBounded(driverRowBound(spark),
         "gated local modularity replay (edges)")
-      val labRows = lab
-        .collectBounded(math.min(2L * localLimit, Int.MaxValue - 1L).toInt,
-          "gated local modularity replay (labels ≤ 2·gate)")
+      val labRows = lab.collectBounded(driverRowBound(spark, 2),
+        "gated local modularity replay (labels ≤ 2 × the limit)")
       // NULL ids/labels have engine-specific join/group semantics — keep
       // the distributed plan for them rather than replicate
       if (eRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)) &&
@@ -1363,7 +1247,7 @@ object Graph {
         val labMap = new java.util.HashMap[Long, Long]()
         labRows.foreach(r => labMap.put(r.getLong(0), r.getLong(1)))
         if (labMap.size == labRows.length) {
-          val out = GraphLocal.modularity(labels.sparkSession, eArr, labMap)
+          val out = GraphLocal.modularity(spark, eArr, labMap)
           if (out.isDefined) {
             e.unpersist(); lab.unpersist()
             return out.get
@@ -1371,8 +1255,7 @@ object Graph {
         }
       }
     }
-    val useBcast = labN <= labels.sparkSession.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong
+    val useBcast = Bounded.fitsDriver(spark, labN)
     def side(f: DataFrame => DataFrame): DataFrame =
       if (useBcast) broadcast(f(lab)) else f(lab)
     val la = side(_.select(col("__lid").as("__sid"), col("__ll").as("__sl")))
@@ -1467,29 +1350,18 @@ object Graph {
     val eSrc = e0.repartition(col("src")).dropDuplicates("src", "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nEdges = eSrc.count()
-    // r20 gated local replay ([[GraphLocal]]): BigInt walks the identical
-    // integer sequence of both the LONG and DECIMAL(38,0) widths
-    // (HitsLocalParitySpec) — below the gate the per-round max readout +
-    // checkpoint cycle is job-orchestration-bound.
-    val localLimitHits = GraphLocal.limit(edges.sparkSession)
-    if (localLimitHits > 0L && nEdges <= localLimitHits) {
-      val arr = GraphLocal.collectEdges(eSrc, localLimitHits,
-        "gated local HITS replay")
+    // Below the driver limit the per-round max readout + checkpoint cycle
+    // is job-scheduling-bound: BigInt walks the identical integer
+    // sequence of both the LONG and DECIMAL(38,0) widths in-core
+    // ([[GraphLocal]]).
+    if (Bounded.fitsDriver(edges.sparkSession, nEdges)) {
+      val arr = GraphLocal.collectEdges(eSrc, "gated local HITS replay")
       eSrc.unpersist()
       return GraphLocal.hits(edges.sparkSession, arr, iters)
     }
     val eDst = eSrc.repartition(col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     eDst.count() // materializes off the warm eSrc cache
-    // r19 JOIN-STRATEGY GATE (the [[pageRank]] doctrine, guide §3.1):
-    // score frames are node-sized and checkpointed (no stats), so the
-    // planner kept re-sorting an |E| cache per half-round for an SMJ.
-    // Below the gate, broadcast the score frame and run each half-round
-    // against the edge copy partitioned by that half-round's AGGREGATION
-    // key — map-side join + exchange-free aggregation. #nodes ≤ 2|E|
-    // bounds the gate read off the already-paid edge count.
-    val useBcast = nEdges <= edges.sparkSession.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong / 2
     import graft.ops.Bounded._
     // one crossed 1-row job: both degree maxima off the warm caches —
     // the width proof needs maxIndeg·maxOutdeg (see scaladoc)
@@ -1537,16 +1409,12 @@ object Graph {
             .agg((widened(count(lit(1))) * lit(Scale)).as("__s"))
         else {
           val hub = normed(hubRaw, "src", "h")
-          val hubJ = if (useBcast) broadcast(hub) else hub
-          val eA = if (useBcast) eDst else eSrc // agg key dst vs join key src
-          eA.join(hubJ, eA("src") === hubJ("id"))
+          eSrc.join(hub, eSrc("src") === hub("id"))
             .groupBy(col("dst"))
             .agg(sum(widened(col("h"))).as("__s"))
         }).select(col("dst").as("__aid"), col("__s"))
       authRaw = if (i == iters) aRaw.localCheckpoint(true) else aRaw
-      val authJ = if (useBcast) broadcast(authRaw) else authRaw
-      val eH = if (useBcast) eSrc else eDst // agg key src vs join key dst
-      val hRaw = eH.join(authJ, eH("dst") === authJ("__aid"))
+      val hRaw = eDst.join(authRaw, eDst("dst") === authRaw("__aid"))
         .groupBy(col("src"))
         .agg(sum(widened(col("__s"))).as("__s"))
       hubRaw = hRaw.localCheckpoint(true)
@@ -1590,9 +1458,9 @@ object Graph {
     require(sources.nonEmpty && rounds >= 1, s"rounds=$rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    // gate BEFORE the src re-key (r20): the local path reads the frame
-    // once — paying the repartition exchange inside its collect lineage
-    // bought nothing (guide §2.4)
+    // gate BEFORE the src re-key: the local path reads the frame once —
+    // paying the repartition exchange inside its collect lineage would
+    // buy nothing (guide §2.4)
     val eBase = edges.select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"),
         col(weightCol).cast(LongType).as("w"))
@@ -1601,15 +1469,12 @@ object Graph {
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val eCnt = eBase.count()
-    // r20 gated local replay ([[GraphLocal]]): exact Long min/+
-    // relaxations over the collected min-collapsed edge list
-    // (BfsSsspLocalParitySpec).
-    val localLimit = GraphLocal.limit(spark)
-    if (localLimit > 0L && eCnt <= localLimit) {
+    // below the driver limit: exact Long min/+ relaxations over the
+    // collected min-collapsed edge list ([[GraphLocal]])
+    if (Bounded.fitsDriver(spark, eCnt)) {
       import graft.ops.Bounded._
-      val arr = eBase.collectBounded(
-          math.min(localLimit, Int.MaxValue - 1L).toInt,
-          "gated local SSSP replay")
+      val arr = eBase
+        .collectBounded(driverRowBound(spark), "gated local SSSP replay")
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       eBase.unpersist()
       return GraphLocal.ssspWeighted(spark, arr, sources, rounds)
@@ -1618,19 +1483,13 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     e.count() // materialize off the warm eBase cache, then release it
     eBase.unpersist()
-    // r19 (guide §3.1): the distance frame is node-sized and checkpointed
-    // (no stats) — unhinted, every relaxation round re-sorted the |E|
-    // cache for a SortMergeJoin. Broadcast it below the pageRank gate.
-    val useBcast = eCnt <= spark.conf
-      .get("spark.graft.broadcastNodeLimit", "4000000").toLong / 2
     var dist = sources.distinct.toDF("id")
       .select(col("id").cast(LongType).as("id"), lit(0L).as("dist"))
       .localCheckpoint(true)
     for (_ <- 1 to rounds) {
       val distJ = dist.select(col("id").as("__u"), col("dist").as("__du"))
       val relaxed = e
-        .join(if (useBcast) broadcast(distJ) else distJ,
-          e("src") === col("__u"))
+        .join(distJ, e("src") === col("__u"))
         .select(col("dst").as("id"), (col("__du") + col("w")).as("dist"))
       val next = dist.unionByName(relaxed)
         .groupBy(col("id")).agg(min(col("dist")).as("dist"))

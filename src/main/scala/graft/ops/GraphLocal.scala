@@ -2,46 +2,43 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Gated DRIVER-LOCAL replays of the iterative graph operators — the
-  * [[Graph.pageRankLocal]] / markovStationary convention (r19's verified
-  * win pattern) extended to the whole iterative tier (r20, VERDICT item 2:
-  * "consider driver-local rounds below the existing threshold").
+/** Driver-local replays of the iterative graph operators.
   *
-  * WHY (guide §1.2 "the distributed algorithm" + §5 "the driver"): each
-  * distributed round of these operators is 1–3 scheduled jobs (a broadcast
-  * collect, a join/aggregate stage, an eager checkpoint) over node-sized
-  * frames — milliseconds of arithmetic carried by seconds of driver/
-  * scheduler/codegen orchestration, and the per-round broadcast-collect
-  * cycles were measured to ANTI-SCALE with core count (r19 driver run:
-  * q149 10.1 s @32c vs 2.7 s @8c on identical code). Below the gate the
-  * whole loop is a single bounded collect + in-core integer arithmetic.
+  * Each distributed round of these operators is 1–3 scheduled jobs (a
+  * join/aggregate stage, an eager checkpoint, a readout) over node-sized
+  * frames: milliseconds of arithmetic carried by seconds of scheduling,
+  * and the per-round cycles were measured to get slower as cores are
+  * added (q149: 10.1 s on 32 cores vs 2.7 s on 8, identical code). When
+  * the operator's observed edge count passes [[Bounded.fitsDriver]], the
+  * whole loop is one bounded collect plus in-core integer arithmetic;
+  * above the limit the operator keeps its distributed loop.
   *
-  * HONESTY AT 100 TB: the gate is `spark.graft.localGraphEdgeLimit`
-  * (default 4M edge rows ≈ 64 MB collected — same order as the
-  * broadcastNodeLimit built-relation bound, far under the 1 GB
-  * driver-result cap). Above it, every operator keeps its distributed
-  * loop; the collect is `collectBounded`, so a mis-set gate fails loudly
-  * instead of OOMing the driver. The gate only ever changes WHERE the
-  * arithmetic runs, never the arithmetic: every replay below walks the
-  * SAME integer/IEEE-double op sequence as the distributed plan (asserted
-  * by the *LocalParitySpec suites and the DuckDB oracle at two SFs).
+  * Driver memory at the default limit (4M edge rows): the 64 MB of raw
+  * (Long, Long) payload is not the footprint. `Dataset.collect` holds
+  * every decoded `UnsafeRow` while it builds the `Row` array, and
+  * [[collectEdges]] then copies each `Row` into a (Long, Long) tuple.
+  * Measured on JDK 17 (compressed oops, two-long rows): ≈ 85 bytes per
+  * decoded row, ≈ 100 per `Row`, ≈ 45 per tuple. The transient peak is
+  * therefore ≈ 185 bytes per edge, ≈ 0.75 GB for a limit-sized collect.
+  * The replay itself adds 8 bytes per edge (two dense int arrays) and, by
+  * estimate, ≈ 100 per node (the boxed id index). `collectBounded` holds
+  * the collect to the same limit, so an input that outgrows it fails
+  * loudly instead of growing the driver.
   *
-  * All replays are single-pass over primitive arrays/maps; none exceeds
-  * O(rounds · |E| · k) work on a ≤ 4M-edge graph — well under a second.
+  * The limit only changes WHERE the arithmetic runs: every replay walks
+  * the SAME integer / IEEE-double op sequence as the distributed plan
+  * (GraphLocalParitySpec runs every operator on each side of the limit;
+  * the DuckDB oracle checks the queries at two scale factors).
   */
 private[ops] object GraphLocal {
-
-  /** The shared local-replay gate (edge rows). 0 disables every local path
-    * (parity specs use this to force the distributed loop). */
-  def limit(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.localGraphEdgeLimit", "4000000").toLong
 
   import graft.ops.Bounded._
 
   /** Bounded edge collect off an (ideally already-persisted) canonical
-    * edge frame with columns (srcLike, dstLike) castable to long. */
-  def collectEdges(e: DataFrame, bound: Long, what: String): Array[(Long, Long)] =
-    e.collectBounded(math.min(bound, Int.MaxValue - 1L).toInt, what)
+    * edge frame with columns (srcLike, dstLike) castable to long, held to
+    * the driver row limit. */
+  def collectEdges(e: DataFrame, what: String): Array[(Long, Long)] =
+    e.collectBounded(driverRowBound(e.sparkSession), what)
       .map(r => (r.getLong(0), r.getLong(1)))
 
   /** Compact id index: node ids → dense ints, preserving first-seen order
@@ -57,59 +54,76 @@ private[ops] object GraphLocal {
     def size: Int = ids.length
   }
 
-  /** [[Graph.labelPropagation]] rounds on a SYMMETRIC DEDUPED loop-free
-    * edge list (exactly the frame the distributed loop consumes): round 1
-    * is min neighbor id; each later round counts neighbor labels and takes
-    * (max count, then min label) — the same argmax as
-    * `max(struct(c, -lbl))`. Returns (id, community). */
+  /** Dense-index an edge list: (index, src ints, dst ints). */
+  private def indexed(edges: Array[(Long, Long)])
+      : (Idx, Array[Int], Array[Int]) = {
+    val ix = new Idx
+    val es = new Array[Int](edges.length)
+    val ed = new Array[Int](edges.length)
+    var i = 0
+    while (i < edges.length) {
+      es(i) = ix(edges(i)._1); ed(i) = ix(edges(i)._2); i += 1
+    }
+    (ix, es, ed)
+  }
+
+  /** [[Graph.labelPropagation]] rounds on the loop-free edge list the
+    * distributed loop consumes: round 1 is min neighbor id per `a`; each
+    * later round counts the labels of LABELED neighbors and takes (max
+    * count, then min label) — the same argmax as `max(struct(c, -lbl))`.
+    * A node that never appears as `a`, or whose neighbors all lost their
+    * label, gets no label and is left out — exactly what the distributed
+    * `groupBy(a)` and inner label join do when a caller's
+    * `assumeSymmetric` frame is not symmetric. Returns (id, community). */
   def labelPropagation(spark: SparkSession, edges: Array[(Long, Long)],
                        iters: Int): DataFrame = {
     import spark.implicits._
     if (edges.isEmpty)
       return Seq.empty[(Long, Long)].toDF("id", "community")
-    val ix = new Idx
-    val ea = new Array[Int](edges.length)
-    val eb = new Array[Int](edges.length)
+    val (ix, ea, eb) = indexed(edges)
+    val n = ix.size
+    // round 1 closed form: groupBy(a).agg(min(b))
+    var has = new Array[Boolean](n)
+    var lbl = new Array[Long](n)
     var i = 0
     while (i < edges.length) {
-      ea(i) = ix(edges(i)._1); eb(i) = ix(edges(i)._2); i += 1
-    }
-    val n = ix.size
-    // round 1 closed form: min neighbor id per a (symmetric ⇒ every node
-    // appears as a); matches groupBy(a).agg(min(b))
-    var lbl = Array.fill[Long](n)(Long.MaxValue)
-    i = 0
-    while (i < edges.length) {
-      val b = edges(i)._2
-      if (b < lbl(ea(i))) lbl(ea(i)) = b
+      val a = ea(i); val b = edges(i)._2
+      if (!has(a) || b < lbl(a)) { lbl(a) = b; has(a) = true }
       i += 1
     }
     for (_ <- 2 to iters) {
-      // per node: count labels of neighbors, argmax (count, -label)
+      // per node: count labels of labeled neighbors, argmax (count, -label)
       val cnt = new Array[java.util.HashMap[Long, Long]](n)
       i = 0
       while (i < edges.length) {
-        val a = ea(i)
-        if (cnt(a) == null) cnt(a) = new java.util.HashMap[Long, Long]()
-        cnt(a).merge(lbl(eb(i)), 1L, (x, y) => x + y)
+        val b = eb(i)
+        if (has(b)) {
+          val a = ea(i)
+          if (cnt(a) == null) cnt(a) = new java.util.HashMap[Long, Long]()
+          cnt(a).merge(lbl(b), 1L, (x, y) => x + y)
+        }
         i += 1
       }
       val next = new Array[Long](n)
+      val nextHas = new Array[Boolean](n)
       var v = 0
       while (v < n) {
-        var bestC = -1L; var bestL = Long.MaxValue
-        val it = cnt(v).entrySet().iterator()
-        while (it.hasNext) {
-          val en = it.next()
-          val c = en.getValue.longValue(); val l = en.getKey.longValue()
-          if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
+        if (cnt(v) != null) {
+          var bestC = -1L; var bestL = Long.MaxValue
+          val it = cnt(v).entrySet().iterator()
+          while (it.hasNext) {
+            val en = it.next()
+            val c = en.getValue.longValue(); val l = en.getKey.longValue()
+            if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
+          }
+          next(v) = bestL; nextHas(v) = true
         }
-        next(v) = bestL
         v += 1
       }
-      lbl = next
+      lbl = next; has = nextHas
     }
-    spark.createDataset(ix.ids.indices.map(v => (ix.ids(v), lbl(v))))
+    spark.createDataset(ix.ids.indices.filter(v => has(v))
+        .map(v => (ix.ids(v), lbl(v))))
       .toDF("id", "community")
   }
 
@@ -123,13 +137,7 @@ private[ops] object GraphLocal {
     if (edges.isEmpty)
       return Seq.empty[(Long, Long, Long)].toDF("id", "hub", "auth")
     val scale = BigInt(Graph.Scale)
-    val ix = new Idx
-    val es = new Array[Int](edges.length)
-    val ed = new Array[Int](edges.length)
-    var i = 0
-    while (i < edges.length) {
-      es(i) = ix(edges(i)._1); ed(i) = ix(edges(i)._2); i += 1
-    }
+    val (ix, es, ed) = indexed(edges)
     val n = ix.size
     def normed(raw: Array[BigInt]): Array[BigInt] = {
       var mx = BigInt(0)
@@ -139,6 +147,7 @@ private[ops] object GraphLocal {
     }
     var hubRaw: Array[BigInt] = null
     var authRaw: Array[BigInt] = null
+    var i = 0
     for (it <- 1 to iters) {
       val aRaw = new Array[BigInt](n)
       if (it == 1) {
@@ -182,35 +191,36 @@ private[ops] object GraphLocal {
     }).toDF("id", "hub", "auth")
   }
 
+  /** [[Graph.pageRank]] rounds: personalized PageRank with every node a
+    * seed. With |S| = n the seed-restricted terms — r₀ = Scale/n,
+    * base = (100−damp)·(Scale/n)/100, dangling mass div n — are exactly
+    * pageRank's, so one fold serves both operators. Returns (id, r). */
+  def pageRank(spark: SparkSession, edges: Array[(Long, Long)], iters: Int,
+               damp: Int): DataFrame = {
+    import spark.implicits._
+    if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("id", "r")
+    else personalizedPageRank(spark, edges, _ => true, iters, damp)
+  }
+
   /** [[Graph.personalizedPageRank]] rounds on a DEDUPED directed edge
-    * list + surviving seed set. Pure Long floor arithmetic (everything
+    * list + seed predicate. Pure Long floor arithmetic (everything
     * non-negative), identical to the distributed plan. Returns (id, r)
     * over the full node universe. */
   def personalizedPageRank(spark: SparkSession, edges: Array[(Long, Long)],
-                           seeds: Set[Long], iters: Int,
+                           isSeedId: Long => Boolean, iters: Int,
                            damp: Int): DataFrame = {
     import spark.implicits._
-    val ix = new Idx
-    val es = new Array[Int](edges.length)
-    val ed = new Array[Int](edges.length)
-    var i = 0
-    while (i < edges.length) {
-      es(i) = ix(edges(i)._1); ed(i) = ix(edges(i)._2); i += 1
-    }
+    val (ix, es, ed) = indexed(edges)
     val n = ix.size
     val outdeg = new Array[Long](n)
-    i = 0; while (i < es.length) { outdeg(es(i)) += 1L; i += 1 }
-    val isSeed = new Array[Boolean](n)
-    var nS = 0L
-    var v = 0
-    while (v < n) {
-      if (seeds.contains(ix.ids(v))) { isSeed(v) = true; nS += 1L }
-      v += 1
-    }
+    var i = 0
+    while (i < es.length) { outdeg(es(i)) += 1L; i += 1 }
+    val isSeed = Array.tabulate(n)(v => isSeedId(ix.ids(v)))
+    val nS = isSeed.count(identity).toLong
     require(nS > 0, "personalizedPageRank: no seed is a graph node")
     val r0 = Graph.Scale / nS
     val base = (100 - damp) * (Graph.Scale / nS) / 100
-    val hasDangling = outdeg.exists(_ == 0L)
+    val hasDangling = outdeg.contains(0L)
     var r = Array.tabulate(n)(v => if (isSeed(v)) r0 else 0L)
     for (_ <- 1 to iters) {
       val s = new Array[Long](n)
@@ -381,17 +391,12 @@ private[ops] object GraphLocal {
     * Idx order; `visit` receives the per-node est array. */
   private def kmvRounds(edges: Array[(Long, Long)], radius: Int, k: Int)(
       visit: (Int, Array[Array[Long]], Array[Double]) => Unit): Idx = {
-    val ix = new Idx
-    val es = new Array[Int](edges.length)
-    val ed = new Array[Int](edges.length)
-    var i = 0
-    while (i < edges.length) {
-      es(i) = ix(edges(i)._1); ed(i) = ix(edges(i)._2); i += 1
-    }
+    val (ix, es, ed) = indexed(edges)
     val n = ix.size
     // adjacency: out-neighbors per node (dense int ids)
     val degOut = new Array[Int](n)
-    i = 0; while (i < es.length) { degOut(es(i)) += 1; i += 1 }
+    var i = 0
+    while (i < es.length) { degOut(es(i)) += 1; i += 1 }
     val off = new Array[Int](n + 1)
     i = 0; while (i < n) { off(i + 1) = off(i) + degOut(i); i += 1 }
     val nbr = new Array[Int](edges.length)

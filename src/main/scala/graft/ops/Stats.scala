@@ -3129,36 +3129,30 @@ object Stats {
   def periodogram(df: DataFrame, orderCols: Seq[String], valueCol: String,
                   maxK: Int = 6, maxSeriesRows: Long = 1L << 22): DataFrame = {
     require(maxK >= 1, s"maxK=$maxK")
-    // r20 gated local replay (the markovStationary convention, guide
-    // §1.2/§7.3): this operator's input is BY CONTRACT a bounded
-    // O(time-range) series, yet the distributed form pays driver-side
-    // analysis + whole-stage codegen of 2·maxK Taylor–Horner aggregate
-    // trees on every run (profiled: q357 8.3 s cold / ~2 s warm, of
-    // which jobs are <1 s). Below spark.graft.localSeriesLimit (default
-    // = the operator's own 4M-row series contract) the ordered series is
-    // collected once and the IDENTICAL double sequence — integer phase,
-    // quadrant reduction, Taylor–Horner, floor-scaled 10⁶ sums — runs
-    // in-core (PeriodogramLocalParitySpec asserts bit parity; the
-    // declared-query oracles replay unchanged). Above the gate the
-    // distributed plan (with its in-plan seriesBound guard) is kept.
-    val localLimit = math.min(df.sparkSession.conf
-      .get("spark.graft.localSeriesLimit", (1L << 22).toString).toLong,
-      maxSeriesRows)
-    if (localLimit > 0L) {
-      import graft.ops.Bounded._
-      val cap = math.min(localLimit, Int.MaxValue - 2L).toInt
+    // This operator's input is BY CONTRACT a bounded O(time-range)
+    // series, yet the distributed form pays driver-side analysis +
+    // whole-stage codegen of 2·maxK Taylor–Horner aggregate trees on
+    // every run (profiled: q357 8.3 s cold / ~2 s warm, of which jobs
+    // are <1 s). So the ordered series is probed with a collect one row
+    // past the driver limit: when it fits, the IDENTICAL double sequence
+    // — integer phase, quadrant reduction, Taylor–Horner, floor-scaled
+    // 10⁶ sums — runs in-core (PeriodogramLocalParitySpec asserts bit
+    // parity). A longer series falls through to the distributed plan,
+    // whose in-plan seriesBound guard enforces the contract loudly.
+    val spark = df.sparkSession
+    val cap = math.min(math.min(driverRowLimit(spark), maxSeriesRows),
+      Int.MaxValue - 2L).toInt
+    if (cap > 0) {
       val taken = df.orderBy(orderCols.map(col): _*)
         .select(col(valueCol).cast(DoubleType))
         .limit(cap + 1)
         .collectBounded(cap + 1,
-          "gated local periodogram series (≤ gate+1 by the plan limit; " +
-            "gate+1 rows ⇒ fall through to the distributed plan)")
+          "gated local periodogram series (≤ limit+1 by the plan limit; " +
+            "limit+1 rows ⇒ fall through to the distributed plan)")
       if (taken.length <= cap)
-        return periodogramLocal(df.sparkSession,
+        return periodogramLocal(spark,
           taken.map(r => if (r.isNullAt(0)) null
             else java.lang.Double.valueOf(r.getDouble(0))), maxK)
-      // over the gate: fall through — the distributed plan's
-      // seriesBound still enforces the contract loudly
     }
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(orderCols.map(col): _*)
@@ -5134,60 +5128,43 @@ object Stats {
     val pg = materializeSmall(
       periodogram(df, orderCols, valueCol, maxK, maxSeriesRows),
       maxK, "spectralEntropy periodogram")
-    // r20 gated local tail (same gate as periodogram's replay): the
-    // entropy readout is four tiny plans over an O(maxK) literal frame —
-    // pure analysis/scheduling. Fold it in-core with the identical
-    // floor-scaled sums; 0 disables for the parity spec.
-    if (df.sparkSession.conf
-          .get("spark.graft.localSeriesLimit", (1L << 22).toString)
-          .toLong > 0L) {
-      import graft.ops.Bounded._
-      val rows = pg.collectBounded(maxK, "O(maxK) spectral-entropy readout")
-      val nVal = rows.map(_.getLong(1)).max
-      val powers = rows.collect {
-        case r if !r.isNullAt(2) => r.getDouble(2)
-      }
-      val tp: java.lang.Double =
-        if (powers.isEmpty) null
-        else java.lang.Double.valueOf(new java.math.BigDecimal(
-          powers.map(p => BigInt(math.floor(p * 1e6).toLong)).sum.bigInteger)
-          .doubleValue() / 1e6)
-      val hTerms = powers.filter(p => p > 0.0 && tp != null && tp > 0.0)
-        .map { p0 =>
-          val p = p0 / tp.doubleValue()
-          BigInt(math.floor((-p * math.log(p)) * 1e9).toLong)
-        }
-      val h: java.lang.Double =
-        if (hTerms.isEmpty) null
-        else java.lang.Double.valueOf(new java.math.BigDecimal(
-          hTerms.sum.bigInteger).doubleValue() / 1e9)
-      val tpPos = tp != null && tp.doubleValue() > 0.0
-      val se: java.lang.Double = if (tpPos) h else null
-      val hn: java.lang.Double =
-        if (tpPos && h != null)
-          java.lang.Double.valueOf(h.doubleValue() / math.log(maxK.toDouble))
-        else null
-      val spark = df.sparkSession
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          Seq(org.apache.spark.sql.Row(nVal, maxK, tp, se, hn)), 1),
-        StructType(Seq(StructField("n", LongType, nullable = true),
-          StructField("k_max", IntegerType, nullable = false),
-          StructField("total_power", DoubleType, nullable = true),
-          StructField("spectral_entropy", DoubleType, nullable = true),
-          StructField("h_norm", DoubleType, nullable = true))))
+    // the entropy readout over the O(maxK) power frame is folded in-core
+    // with the same floor-scaled sums: as Spark plans it would be four
+    // tiny jobs of pure analysis and scheduling
+    val rows = pg.collectBounded(maxK, "O(maxK) spectral-entropy readout")
+    val nVal = rows.map(_.getLong(1)).max
+    val powers = rows.collect {
+      case r if !r.isNullAt(2) => r.getDouble(2)
     }
-    val tot = pg.agg(max(col("n")).as("n"),
-      fs(col("power"), 6).as("total_power"))
-    val p = col("power") / col("__tp")
-    val h = pg.crossJoin(tot.select(col("total_power").as("__tp")))
-      .agg(fs(when(col("power") > 0.0 && col("__tp") > 0.0,
-        -p * log(p)), 9).as("__h"))
-    tot.crossJoin(h).select(col("n"), lit(maxK).as("k_max"),
-      col("total_power"),
-      when(col("total_power") > 0.0, col("__h")).as("spectral_entropy"),
-      when(col("total_power") > 0.0,
-        col("__h") / lit(math.log(maxK.toDouble))).as("h_norm"))
+    val tp: java.lang.Double =
+      if (powers.isEmpty) null
+      else java.lang.Double.valueOf(new java.math.BigDecimal(
+        powers.map(p => BigInt(math.floor(p * 1e6).toLong)).sum.bigInteger)
+        .doubleValue() / 1e6)
+    val hTerms = powers.filter(p => p > 0.0 && tp != null && tp > 0.0)
+      .map { p0 =>
+        val p = p0 / tp.doubleValue()
+        BigInt(math.floor((-p * math.log(p)) * 1e9).toLong)
+      }
+    val h: java.lang.Double =
+      if (hTerms.isEmpty) null
+      else java.lang.Double.valueOf(new java.math.BigDecimal(
+        hTerms.sum.bigInteger).doubleValue() / 1e9)
+    val tpPos = tp != null && tp.doubleValue() > 0.0
+    val se: java.lang.Double = if (tpPos) h else null
+    val hn: java.lang.Double =
+      if (tpPos && h != null)
+        java.lang.Double.valueOf(h.doubleValue() / math.log(maxK.toDouble))
+      else null
+    val spark = df.sparkSession
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        Seq(org.apache.spark.sql.Row(nVal, maxK, tp, se, hn)), 1),
+      StructType(Seq(StructField("n", LongType, nullable = true),
+        StructField("k_max", IntegerType, nullable = false),
+        StructField("total_power", DoubleType, nullable = true),
+        StructField("spectral_entropy", DoubleType, nullable = true),
+        StructField("h_norm", DoubleType, nullable = true))))
   }
 
   /** THEIL T INEQUALITY + BETWEEN/WITHIN DECOMPOSITION — the additively

@@ -107,27 +107,27 @@ object EventStream {
   private[graft] val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** DOMAIN-BOUNDED-state provider gate (r20, VERDICT item 5). Streams
-    * whose state is bounded by a fixed DOMAIN — quantile bins, nation ×
-    * event-type cells, watermark-evicted open windows × types — hold O(k)
-    * rows per shard REGARDLESS of data volume: at 100 TB exactly as at
-    * sf0.1, the state store contains the same handful of keys, so the
-    * "state scales with disk, not heap" argument for RocksDB does not
-    * apply and every run pays the per-shard native store open/commit for
-    * nothing (measured r18/r19: ~1–2 s per streaming query of RocksDB
-    * instance setup). Those streams declare `boundedState = true` and run
-    * on the in-memory HDFSBacked provider; DATA-PROPORTIONAL state
-    * (per-user sessions, dedup fingerprints, stream-stream join buffers)
-    * keeps RocksDB unconditionally. `spark.graft.boundedStateProvider`
-    * (values: memory | rocksdb, default memory) lets a deployment force
-    * RocksDB back on for the bounded tier too. */
+  /** In-memory provider for streams whose state does not grow with event
+    * volume. Their keys are a fixed domain (quantile bins, nation ×
+    * event-type cells) or time windows × event types, so the state store
+    * holds the same keys however many events arrive. RocksDB's "state
+    * scales with disk, not heap" argument then buys nothing, while every
+    * run pays its per-shard native store open/commit (measured ~1–2 s
+    * per streaming query). Those streams declare `boundedState = true`
+    * and run on the in-memory HDFSBacked provider; DATA-PROPORTIONAL
+    * state (per-user sessions, dedup fingerprints, stream-stream join
+    * buffers) keeps RocksDB.
+    *
+    * The windowed streams' bound is the input's TIME RANGE, not a fixed
+    * domain: [[runToMemorySink]] runs them in Complete mode, where the
+    * watermark never evicts a window, so the on-heap state is O(windows
+    * over the time range × event types) per retained version. That is
+    * small for the bounded replays these queries run and grows with the
+    * span of an unbounded stream. */
   private[graft] val HdfsBackedProvider =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-  private def stateProvider(spark: SparkSession, boundedState: Boolean): String =
-    if (boundedState && spark.conf
-          .get("spark.graft.boundedStateProvider", "memory") != "rocksdb")
-      HdfsBackedProvider
-    else RocksDbProvider
+  private def stateProvider(boundedState: Boolean): String =
+    if (boundedState) HdfsBackedProvider else RocksDbProvider
   private def withStateProvider[T](spark: SparkSession, provider: String)(
       f: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -416,7 +416,7 @@ object EventStream {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     statePartitions.foreach(n =>
       spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    try withStateProvider(spark, stateProvider(spark, boundedState)) {
+    try withStateProvider(spark, stateProvider(boundedState)) {
       val q: StreamingQuery = df.writeStream
         .outputMode(mode)
         .format("memory").queryName(name)

@@ -1,29 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import graft.ops.Graph
 
-/** The r20 gated local replays ([[graft.ops.GraphLocal]]) must be
+/** The driver-local replays ([[graft.ops.GraphLocal]]) must be
   * BIT-IDENTICAL to the distributed loops — same integer floor-div /
   * IEEE-double sequences in the same order — on directed, symmetric,
   * dangling and duplicate-edge graph shapes. Each case runs the operator
-  * twice: once with `spark.graft.localGraphEdgeLimit=0` (forcing the
-  * distributed path) and once with the default gate (local path), and
-  * asserts row-set equality. */
+  * on every leg [[graft.ops.Bounded.fitsDriver]] can select: the local
+  * replay (default limit), the distributed sort-merge loop (limit 0) and,
+  * for the operators that broadcast a node-sized frame, the broadcast
+  * loop (a limit between the node and the edge count). */
 class GraphLocalParitySpec extends SparkSuite {
   init()
   import spark.implicits._
-
-  private val GateKey = "spark.graft.localGraphEdgeLimit"
-
-  private def bothWays(f: => DataFrame): (Set[Seq[Any]], Set[Seq[Any]]) = {
-    def rows(df: DataFrame): Set[Seq[Any]] =
-      df.collect().map(_.toSeq).toSet
-    spark.conf.set(GateKey, "0")
-    val dist = try rows(f) finally spark.conf.unset(GateKey)
-    val local = rows(f) // default gate (4M) → local path on these toys
-    (dist, local)
-  }
 
   // a directed graph with a sink (5), a 2-cycle, duplicate-ish structure
   private val directed = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L),
@@ -38,6 +27,18 @@ class GraphLocalParitySpec extends SparkSuite {
       val (d, l) = bothWays(Graph.labelPropagation(sym.toDF("s", "t"),
         "s", "t", iters = it, assumeSymmetric = true))
       assert(d == l, s"iters=$it dist=$d local=$l")
+    }
+  }
+
+  test("labelPropagation parity: directed frame passed as symmetric") {
+    // a broken assumeSymmetric contract: node 5 never appears as `a`, so
+    // the distributed loop leaves it out — the replay must too (no
+    // Long.MaxValue label, no NPE on later rounds)
+    for (it <- 1 to 3) {
+      val (d, l) = bothWays(Graph.labelPropagation(directed.toDF("s", "t"),
+        "s", "t", iters = it, assumeSymmetric = true))
+      assert(d == l, s"iters=$it dist=$d local=$l")
+      assert(!l.exists(_.head == 5L), s"iters=$it local=$l")
     }
   }
 
@@ -136,5 +137,29 @@ class GraphLocalParitySpec extends SparkSuite {
     val (d, l) = bothWays(Graph.pageRank(directed.toDF("s", "t"), "s", "t",
       iters = 4, damp = 85))
     assert(d == l, s"dist=$d local=$l")
+  }
+
+  // `directed` has 8 edges over 5 nodes: a limit of 5 keeps the edges
+  // distributed and broadcasts the node-sized frames
+  test("pageRank parity: broadcast node frame") {
+    def pr = Graph.pageRank(directed.toDF("s", "t"), "s", "t", iters = 4)
+    val b = atDriverRowLimit(5L)(rowSet(pr))
+    assert(b == rowSet(pr), s"broadcast=$b")
+  }
+
+  test("personalizedPageRank parity: broadcast node frame") {
+    def ppr = Graph.personalizedPageRank(directed.toDF("s", "t"), "s", "t",
+      Seq(1L, 3L).toDF("seed"), "seed", iters = 4)
+    val b = atDriverRowLimit(5L)(rowSet(ppr))
+    assert(b == rowSet(ppr), s"broadcast=$b")
+  }
+
+  test("modularity parity: broadcast label frame") {
+    // 10 edge rows, 4 labels: a limit of 4 broadcasts the labels only
+    def q = Graph.modularity(sym.toDF("s", "t"), "s", "t",
+      Seq((1L, 10L), (2L, 10L), (3L, 20L), (4L, 20L)).toDF("id", "c"),
+      "id", "c")
+    val b = atDriverRowLimit(4L)(rowSet(q))
+    assert(b == rowSet(q), s"broadcast=$b")
   }
 }

@@ -433,14 +433,15 @@ class LlmOpsSpec extends SparkSuite {
   }
 
   test("dedup groups: distributed loop == local union-find (threshold forced)") {
-    // chain + separate component + singleton; threshold 0 forces the
-    // distributed pointer-jumping path, default takes local union-find
+    // chain + separate component + singleton; a driver row limit of 0
+    // forces the distributed pointer-jumping path, default takes local
+    // union-find
     val pairs = ((0L until 9L).map(i => (i, i + 1, 0.9)) ++
       Seq((20L, 21L, 0.8))).toDF("id_a", "id_b", "est_jaccard")
     val ids = ((0L to 9L) ++ Seq(20L, 21L, 30L)).toDF("id")
     val local = TextDedup.dedupGroups(pairs, ids)
-    val dist = TextDedup.dedupGroups(pairs, ids, maxIter = 6,
-      localEdgeThreshold = 0L)
+    val dist = atDriverRowLimit(0L)(
+      TextDedup.dedupGroups(pairs, ids, maxIter = 6))
     val lm = local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dm = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lm == dm, s"local $lm != distributed $dm")
@@ -459,8 +460,8 @@ class LlmOpsSpec extends SparkSuite {
     val pairs = Seq((privateUse, emoji, 0.9)).toDF("id_a", "id_b", "est_jaccard")
     val ids = Seq(privateUse, emoji).toDF("id")
     val local = TextDedup.dedupGroups(pairs, ids)
-    val dist = TextDedup.dedupGroups(pairs, ids, maxIter = 3,
-      localEdgeThreshold = 0L)
+    val dist = atDriverRowLimit(0L)(
+      TextDedup.dedupGroups(pairs, ids, maxIter = 3))
     val lm = local.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val dm = dist.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(lm == dm, s"local $lm != distributed $dm")

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.ops.Graph
 
-/** The gated small-graph pageRank fast path must be BIT-IDENTICAL to the
+/** The small-graph pageRank replay must be BIT-IDENTICAL to the
   * distributed loop — same integer floor-div arithmetic in the same order
   * — on every graph shape: dangling nodes (the dmass redistribution
   * term), no dangling, duplicate input edges (dedup path), and across
@@ -13,20 +12,9 @@ class PageRankLocalParitySpec extends SparkSuite {
   import spark.implicits._
 
   private def both(edges: Seq[(Long, Long)], iters: Int, damp: Int,
-                   dedup: Boolean = true): (Map[Long, Long], Map[Long, Long]) = {
-    val df = edges.toDF("s", "d")
-    // r20: the conf gate would route the un-thresholded call local too —
-    // force the distributed loop for the parity baseline
-    spark.conf.set("spark.graft.localGraphEdgeLimit", "0")
-    val dist = try Graph.pageRank(df, "s", "d", iters = iters, damp = damp,
-        dedupEdges = dedup)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("spark.graft.localGraphEdgeLimit")
-    val local = Graph.pageRank(df, "s", "d", iters = iters, damp = damp,
-        dedupEdges = dedup, localEdgeThreshold = 1L << 20)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (dist, local)
-  }
+                   dedup: Boolean = true) =
+    bothWays(Graph.pageRank(edges.toDF("s", "d"), "s", "d", iters = iters,
+      damp = damp, dedupEdges = dedup))
 
   test("parity: dangling graph (sink node) — dmass term replays exactly") {
     // 1→2→3, 3 dangling; 4→3 adds in-degree skew
@@ -50,16 +38,14 @@ class PageRankLocalParitySpec extends SparkSuite {
   }
 
   test("local path: empty edges give an empty (id, r) frame") {
-    val df = Seq.empty[(Long, Long)].toDF("s", "d")
-    val r = Graph.pageRank(df, "s", "d", localEdgeThreshold = 100L)
+    val r = Graph.pageRank(Seq.empty[(Long, Long)].toDF("s", "d"), "s", "d")
     assert(r.columns.toSeq == Seq("id", "r") && r.count() == 0L)
   }
 
   test("star graph with hub: hub collects damped mass, spokes equal") {
     // sanity on the local path's VALUES, not just parity: 3 spokes → hub
     val df = Seq((1L, 10L), (2L, 10L), (3L, 10L)).toDF("s", "d")
-    val r = Graph.pageRank(df, "s", "d", iters = 2, damp = 85,
-        localEdgeThreshold = 100L)
+    val r = Graph.pageRank(df, "s", "d", iters = 2, damp = 85)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r(1L) == r(2L) && r(2L) == r(3L))
     assert(r(10L) > r(1L))

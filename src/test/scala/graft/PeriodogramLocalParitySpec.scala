@@ -3,24 +3,14 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.ops.Stats
 
-/** The r20 gated local replay of the periodogram / spectral-entropy trig
-  * moments must be BIT-IDENTICAL to the distributed Taylor–Horner
-  * aggregation — same integer phase, quadrant reduction, polynomial fold
-  * and floor-scaled sums. Forced distributed via
-  * spark.graft.localSeriesLimit=0 vs the default local gate. */
+/** The local replay of the periodogram trig moments must be
+  * BIT-IDENTICAL to the distributed Taylor–Horner aggregation — same
+  * integer phase, quadrant reduction, polynomial fold and floor-scaled
+  * sums. Forced distributed with a driver row limit of 0 vs the default
+  * limit. */
 class PeriodogramLocalParitySpec extends SparkSuite {
   init()
   import spark.implicits._
-
-  private val GateKey = "spark.graft.localSeriesLimit"
-
-  private def bothWays(f: => DataFrame): (Set[Seq[Any]], Set[Seq[Any]]) = {
-    spark.conf.set(GateKey, "0")
-    val dist = try f.collect().map(_.toSeq).toSet
-      finally spark.conf.unset(GateKey)
-    val local = f.collect().map(_.toSeq).toSet
-    (dist, local)
-  }
 
   private def series(xs: Seq[java.lang.Double]): DataFrame =
     xs.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF("t", "x")

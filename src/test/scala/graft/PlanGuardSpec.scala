@@ -416,35 +416,63 @@ class PlanGuardSpec extends SparkSuite {
       .collect().length == 6)
   }
 
+  /** Every line of `src/main/scala`'s sources: (file, line number, text). */
+  private def mainSourceLines(): List[(java.nio.file.Path, Int, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"spec must run from the repo root (cwd=${System.getProperty("user.dir")})")
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .split("\n").zipWithIndex.map { case (l, i) => (p, i + 1, l) }
+      }.toList
+  }
+
   test("no raw .collect() in src/main — everything routes through collectBounded") {
     // graft.ops.Bounded is the only sanctioned driver-side
     // materialization (plan-level limit cap + loud bound assertion);
     // allowlist: Bounded.scala itself and OutOfCoreCheck's NEGATIVE
     // control, whose entire job is to OOM on an unbounded collect.
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"spec must run from the repo root (cwd=${System.getProperty("user.dir")})")
-    val offenders = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(p => p.toString.endsWith("ops/Bounded.scala") ||
-        p.toString.endsWith("OutOfCoreCheck.scala"))
-      .flatMap { p =>
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .split("\n").zipWithIndex
-          // .head()/.first() (paren forms — unambiguous Dataset actions;
-          // bare .head on Scala collections stays allowed) are raw 1-row
-          // driver readouts outside the fence unless the line routes
-          // through collectBounded (r18: two BFS/SSSP source readouts
-          // and three 1-row aggregate readouts were outside it)
-          .filter { case (l, _) =>
-            (l.contains(".collect()") || l.contains(".head()") ||
-              l.contains(".first()")) && !l.contains("collectBounded") }
-          .map { case (l, i) => s"$p:${i + 1}: ${l.trim}" }
-      }.toList
+    val offenders = mainSourceLines()
+      .filterNot { case (p, _, _) => p.toString.endsWith("ops/Bounded.scala") ||
+        p.toString.endsWith("OutOfCoreCheck.scala") }
+      // .head()/.first() (paren forms — unambiguous Dataset actions;
+      // bare .head on Scala collections stays allowed) are raw 1-row
+      // driver readouts outside the fence unless the line routes
+      // through collectBounded (r18: two BFS/SSSP source readouts
+      // and three 1-row aggregate readouts were outside it)
+      .filter { case (_, _, l) =>
+        (l.contains(".collect()") || l.contains(".head()") ||
+          l.contains(".first()")) && !l.contains("collectBounded") }
+      .map { case (p, i, l) => s"$p:$i: ${l.trim}" }
     assert(offenders.isEmpty,
       "raw .collect()/.head()/.first() outside Bounded/OutOfCoreCheck:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("one driver-size knob: src/main reads only spark.graft.driverRowLimit") {
+    // every "small enough for the driver?" gate goes through
+    // Bounded.fitsDriver; per-operator limits, per-call thresholds and
+    // env switches must not creep back in
+    val key = "spark\\.graft\\.[A-Za-z0-9_.]*[A-Za-z0-9_]".r
+    val hits = mainSourceLines()
+    val otherKeys = hits.flatMap { case (p, i, l) =>
+      key.findAllIn(l).filter(_ != "spark.graft.driverRowLimit")
+        .map(k => s"$p:$i: $k")
+    }
+    assert(otherKeys.isEmpty,
+      "spark.graft.* keys besides driverRowLimit:\n" + otherKeys.mkString("\n"))
+    val keyFiles = hits.collect {
+      case (p, _, l) if l.contains("\"spark.graft.") => p.getFileName.toString
+    }.toSet
+    assert(keyFiles == Set("Bounded.scala"), s"key literal outside Bounded: $keyFiles")
+    val banned = Seq("localEdgeThreshold", "GRAFT_DEDUP_FORCE_DISTRIBUTED")
+    val offenders = hits.collect {
+      case (p, i, l) if banned.exists(l.contains) => s"$p:$i: ${l.trim}"
+    }
+    assert(offenders.isEmpty, "retired gate knobs:\n" + offenders.mkString("\n"))
   }
 
   test("funnel: executed stages grow LINEARLY in stage count " +
