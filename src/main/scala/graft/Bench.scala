@@ -1,24 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import graft.ops.Bounded._
+
+/** The timed board: every registered query, or the comma-separated
+  * `SPARK_GRAFT_BENCH_ONLY` list, run `SPARK_GRAFT_BENCH_RUNS` times (default
+  * 3) with `fn(spark, sf).count()`; each query reports its fastest run.
+  * Prints one `# bench <name> <sec>` line per query, then one JSON line
+  * last, and writes the full per-query map to `BENCH_LOCAL.json`.
+  *
+  *   SPARK_GRAFT_BENCH_ONLY=q01_groupby_agg,q149_pagerank sbt "runMain graft.Bench"
+  */
 object Bench {
+  /** The driver captures only the last 2000 chars of stdout and parses the
+    * final line as JSON, so that line must fit well inside the window. */
+  val TailBudget = 1800
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // Optional conf overrides for A/B experiments and deployment tuning:
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v". The committed defaults stay the
-    // driver's bench contract; this only opens the same session knobs
-    // spark-submit --conf would.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val chosen = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(only => Harness.select(only.split(',').toSeq))
+      .getOrElse(SparkEntry.queries.toSeq)
+    val spark = Harness.session(sfDir)
     // Heap parity guard (JITTER.md r18): bench numbers are only comparable
     // at matched heap sizing. Print the JVM max heap on every run and warn
     // loudly when it differs from the 8g committed-band convention.
@@ -31,30 +31,19 @@ object Bench {
         "outside the 8g committed-band convention — totals are not " +
         "comparable to prior BENCH_r*.json without matching -Xmx " +
         "(see JITTER.md heap-parity note)")
-    // warm up session machinery (codegen, file-source init) so the first
-    // measured query isn't charged for it
-    spark.range(1000).selectExpr("sum(id)").collectBounded(1, "warmup")
-    spark.read.parquet(s"$sfDir/region.parquet").count()
     // Noise self-defense: each query runs THREE times (a fresh plan each
     // run — no shuffle/stage reuse between them) and reports the min, so
-    // transient box contention can't masquerade as a code regression (the
-    // r4→r6 driver tails moved 2–4× on untouched queries; ±0.3 s jitter on
-    // min-of-2 still flagged phantom "regressions" in r9/r10). Caches any
-    // query legitimately hands back (e.g. dedupGroups' caller-owned
-    // result) are dropped between queries so no query's memory squeezes
-    // the next.
+    // transient box contention can't masquerade as a code regression.
+    // Caches any query legitimately hands back (e.g. dedupGroups'
+    // caller-owned result) are dropped between queries so no query's
+    // memory squeezes the next.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // The heaviest queries run LAST: their GC/scheduler backwash was shown
-    // (r6/r7 driver tails) to inflate whatever query happens to follow them
-    // by 2-4x. With nothing after them, the backwash lands on spark.stop().
+    // The heaviest queries run LAST: their GC/scheduler backwash inflates
+    // whatever query happens to follow them by 2-4x. With nothing after
+    // them, the backwash lands on spark.stop().
     val heavy = Set("q60_dedup_groups", "q61_ivf_ann")
-    // local-dev isolation: SPARK_GRAFT_BENCH_ONLY=q60_dedup_groups,q29_...
-    // limits the run (the driver never sets it)
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val ordered = {
-      val all = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter(q => only.forall(_.contains(q._1)))
+      val all = chosen.sortBy(_._1)
       all.filterNot(q => heavy(q._1)) ++ all.filter(q => heavy(q._1))
     }
     val results = ordered.map { case (name, fn) =>
@@ -74,53 +63,50 @@ object Bench {
       // recorded as if they were fast successes
       name -> (if (times.size == runs) times.min else -1.0)
     }.sortBy(_._1)
-    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
-    def fmt(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // Human-readable full-name lines first (prefixed, not JSON — the driver
-    // ignores them), then ONE short machine line LAST. The driver captures
-    // only the TAIL of stdout, so the JSON line must stay well under the
-    // capture window: with 86+ queries the full qNN_name keys overflowed it
-    // (BENCH_r07 "parsed": null). Keys are truncated to the bare qNN prefix
-    // (~12 bytes/entry -> ~1.1 KB at 90 queries).
+    // ignores them), then ONE short machine line LAST.
     results.foreach { case (k, v) => println(s"# bench $k ${fmt(v)}") }
+    val (fullJson, tailJson) = boardLines(results, sfDir)
+    // cwd = repo root under sbt's forked run
+    try {
+      val w = new java.io.PrintWriter("BENCH_LOCAL.json", "UTF-8")
+      try w.println(fullJson) finally w.close()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}") }
+    println(tailJson)
+    System.out.flush()
+    spark.stop()
+  }
+
+  // Locale.ROOT: a comma-decimal default locale would emit invalid JSON.
+  private def fmt(v: Double): String =
+    if (v < 0) "-1"
+    else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The two board lines for per-query best times (`-1` = failed): the full
+    * map for `BENCH_LOCAL.json`, and the stdout line, which keeps only as
+    * many entries as fit in [[TailBudget]]. Keys are the bare qNN prefix of
+    * each name, sorted; `value` is the total over the queries that ran.
+    * The stdout line drops the fastest entries first (slow queries are the
+    * informative ones) and never a failure. */
+  def boardLines(results: Seq[(String, Double)], sfDir: String): (String, String) = {
     def shortKey(name: String): String = name.takeWhile(_ != '_')
     // a qNN prefix collision would emit duplicate JSON keys and silently
     // misattribute timings at parse time — fail loudly instead
-    require(results.map(r => shortKey(r._1)).distinct.size == results.size,
-      "duplicate bench short keys: " +
-        results.map(r => shortKey(r._1)).groupBy(identity)
-          .collect { case (k, v) if v.size > 1 => k }.mkString(","))
+    val keys = results.map(r => shortKey(r._1))
+    require(keys.distinct.size == keys.size, "duplicate bench short keys: " +
+      keys.groupBy(identity).collect { case (k, v) if v.size > 1 => k }.mkString(","))
     val total = results.map(_._2).filter(_ >= 0).sum
     def mkJson(entries: Seq[(String, Double)]): String = {
       val qs = entries.map { case (k, v) => "\"" + shortKey(k) + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","full":"BENCH_LOCAL.json"}"""
     }
-    // FULL per-query map → BENCH_LOCAL.json (cwd = repo root under sbt's
-    // forked run; committed each round, the judge reads it from the repo).
-    val fullJson = mkJson(results)
-    try {
-      val w = new java.io.PrintWriter("BENCH_LOCAL.json", "UTF-8")
-      try w.println(fullJson) finally w.close()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}") }
-    // The driver captures only the LAST 2000 chars of stdout and parses the
-    // final line as JSON (BENCH_r12 "parsed": null — the 277-query line was
-    // ~3.5 KB and got cut MID-LINE by the window). The stdout line therefore
-    // carries only as many per-query entries as fit under the window, chosen
-    // by time DESCENDING (slow queries are the informative ones; the dropped
-    // tail is uniformly sub-0.3 s session overhead). Full map: see the file.
-    val tailBudget = 1800
-    // Failures carry the sentinel -1.0: they must sort FIRST (never be
-    // truncated away), so order by (failed-first, time desc, name).
-    val byTime = results.sortBy { case (k, v) => (v >= 0, -v, k) }
-    var keep = byTime
-    while (keep.nonEmpty && mkJson(keep.sortBy(_._1)).length > tailBudget)
-      keep = keep.dropRight(math.max(1, (mkJson(keep).length - tailBudget) / 12))
-    println(mkJson(keep.sortBy(_._1)))
-    System.out.flush()
-    spark.stop()
+    // failures sort FIRST so they are never dropped: (failed-first, time
+    // desc, name)
+    var keep = results.sortBy { case (k, v) => (v >= 0, -v, k) }
+    while (keep.nonEmpty && mkJson(keep.sortBy(_._1)).length > TailBudget)
+      keep = keep.dropRight(math.max(1, (mkJson(keep).length - TailBudget) / 12))
+    (mkJson(results.sortBy(_._1)), mkJson(keep.sortBy(_._1)))
   }
 }

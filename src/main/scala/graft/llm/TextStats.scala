@@ -1136,18 +1136,11 @@ object TextStats {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // pageRank returns an eagerly-materialized frame, so the caches it
     // read from can be released as soon as it returns.
-    // checkpointEvery = iters: the vocab graph is TINY (≤ |V| nodes) and
-    // symmetric (no dangling nodes → single-consumption linear rounds),
-    // so mid-loop checkpoints are pure per-round job-scheduling overhead
-    // here — the opposite regime from the sf-scaled trading graph where
-    // cadence-1 wins on AQE statistics (see pageRank's scaladoc; on a
-    // 3-round loop the lineage stays shallow without them)
-    // the vocab co-occurrence graph is bounded by the (minCount-filtered)
+    // The vocab co-occurrence graph is bounded by the (minCount-filtered)
     // vocabulary — thousands of edges, not corpus-sized — so it fits the
-    // driver limit and pageRank folds it in-core
+    // driver limit and pageRank folds it in-core, with no per-round jobs.
     val ranks = graft.ops.Graph.pageRank(edges, "src", "dst",
-      iters = iters, damp = damp, dedupEdges = false,
-      checkpointEvery = iters)
+      iters = iters, damp = damp, dedupEdges = false)
     val names = vocab.groupBy(col("__id")).agg(min(col("w")).as("token"))
     val out = ranks.join(names, ranks("id") === names("__id"))
       .select(col("token"), col("r").as("rank"))

@@ -69,27 +69,18 @@ object Graph {
     * measured: plan analysis doubles per round once a frame is consumed
     * twice — 60 s/OOM at 6 rounds on a 5-edge toy): each round consumes
     * `ranks` twice (contrib + dangling mass) WHEN dangling nodes exist,
-    * so in that case the rank frame is eagerly localCheckpointed EVERY
-    * round (checkpoint cadence = consumption depth; r14's cadence-5
-    * default never fired at iters=5 and the doubling plan cost a
-    * measured 3.3× at sf0.1). Graphs with NO dangling nodes — an O(1)
-    * pre-check — skip the dangling aggregate entirely (the term is 0L
-    * identically), leaving the single-consumption linear plan where
-    * `checkpointEvery` only bounds analysis depth for deep runs
-    * (iters ≈ 30+).
+    * so the rank frame must be materialized every round. Graphs with NO
+    * dangling nodes — an O(1) pre-check — skip the dangling aggregate
+    * entirely (the term is 0L identically), leaving the
+    * single-consumption linear plan.
     *
-    * CHECKPOINT CADENCE (measured r18, sf0.1 trading graph, min-of-4):
-    * cadence 1 = 5.6 s, cadence 2 = 6.1 s, no mid-loop checkpoint =
-    * 8.2 s — the OPPOSITE of the "checkpoints are pure overhead" prior.
-    * Each checkpoint turns the next round into its own job over
-    * materialized inputs whose sizes AQE knows exactly, so the
-    * rank ⋈ edges join and the dst aggregation get re-planned with real
-    * statistics instead of propagated estimates; with no mid-loop
-    * materialization the 5-round lineage runs as one job on estimate-
-    * based plans and loses more than the checkpoint writes cost. Default
-    * is therefore cadence 1 (also the consumption-depth requirement of
-    * the dangling path, and standard practice for iterative graph
-    * algorithms on a real cluster — lineage stays O(1) deep). The
+    * The rank frame is eagerly localCheckpointed EVERY round, dangling
+    * nodes or not (sf0.1 trading graph, min-of-4: every round 5.6 s,
+    * every second round 6.1 s, no mid-loop checkpoint 8.2 s). Each
+    * checkpoint turns the next round into its own job over materialized
+    * inputs whose sizes AQE knows exactly, so the rank ⋈ edges join and
+    * the dst aggregation get re-planned with real statistics instead of
+    * propagated estimates, and the lineage stays O(1) deep. The
     * persisted edge/node frames use MEMORY_AND_DISK_SER: compact byte
     * buffers per block (equal wall time locally, and serialized blocks
     * evict/spill without re-serialization on a real executor).
@@ -97,9 +88,8 @@ object Graph {
     * one — see build.sbt's -Xmn cap and JITTER.md's r18 addendum. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5, damp: Int = 85,
-               dedupEdges: Boolean = true,
-               checkpointEvery: Int = 1): DataFrame = {
-    require(iters >= 1 && damp >= 0 && damp <= 100 && checkpointEvery >= 1)
+               dedupEdges: Boolean = true): DataFrame = {
+    require(iters >= 1 && damp >= 0 && damp <= 100)
     // dedupEdges=false skips a full edge shuffle when the caller's edge
     // list is already distinct (e.g. tradingPairsGraph); duplicate edges
     // would otherwise act as weighted (parallel) edges.
@@ -170,9 +160,9 @@ object Graph {
     // broadcast — and the double consumption of `ranks` it causes — are
     // skipped outright; the loop is then the single-consumption linear
     // plan. When dangling nodes DO exist, `ranks` is consumed twice per
-    // round, so the frame is localCheckpointed EVERY round (consumption
-    // depth = checkpoint cadence): both consumers read materialized
-    // partitions and nothing is recomputed inside the broadcast subtree.
+    // round; the per-round checkpoint below lets both consumers read
+    // materialized partitions, so nothing is recomputed inside the
+    // broadcast subtree.
     val hasDangling = nodes.filter(col("__dang")).limit(1).count() > 0L
     val r0 = Scale / n
     val base = (100 - damp) * (Scale / n) / 100
@@ -208,8 +198,7 @@ object Graph {
       // (skipping mid-loop checkpoints in broadcast mode was measured
       // SLOWER — q149 4.4→5.6 s, q405 5.1→11.3 s — the nested broadcast
       // chain re-runs analysis/codegen over a growing tree each round)
-      val cadence = if (hasDangling) 1 else checkpointEvery
-      if (i % cadence == 0 && i < iters) {
+      if (i < iters) {
         ranks = ranks.localCheckpoint(true)
         lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
         lastCk = Some(ranks)
@@ -254,13 +243,12 @@ object Graph {
     * co-partitioned join (labels ⋈ edges on b), a keyed count, and a
     * struct-max argmax (max count, min label) — two shuffles per round,
     * O(|E|) rows, no window. Single consumption of the label frame per
-    * round keeps the lazy plan linear; `checkpointEvery` bounds analysis
-    * depth on deep runs (the [[pageRank]] lineage lesson). */
+    * round keeps the lazy plan linear; a checkpoint every second round
+    * bounds analysis depth on deep runs (the [[pageRank]] lineage lesson). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int = 3, checkpointEvery: Int = 2,
-                       assumeSymmetric: Boolean = false)
+                       iters: Int = 3, assumeSymmetric: Boolean = false)
       : DataFrame = {
-    require(iters >= 1 && checkpointEvery >= 1)
+    require(iters >= 1)
     val e0 = edges.select(col(srcCol).cast(LongType).as("a"),
         col(dstCol).cast(LongType).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
@@ -293,12 +281,6 @@ object Graph {
       .select(col("a").as("id"), col("lbl"))
     // superseded-checkpoint tracking, same contract as pageRank's
     var lastCk: Option[org.apache.spark.sql.DataFrame] = None
-    def ck(): Unit = {
-      labels = labels.localCheckpoint(true)
-      lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
-      lastCk = Some(labels)
-    }
-    if (1 % checkpointEvery == 0 && iters > 1) ck()
     for (i <- 2 to iters) {
       val nb = e.join(labels, e("b") === labels("id"))
         .groupBy(col("a"), col("lbl"))
@@ -306,7 +288,11 @@ object Graph {
       labels = nb.groupBy(col("a"))
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("a").as("id"), (-col("m.nl")).as("lbl"))
-      if (i % checkpointEvery == 0 && i < iters) ck()
+      if (i % 2 == 0 && i < iters) {
+        labels = labels.localCheckpoint(true)
+        lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
+        lastCk = Some(labels)
+      }
     }
     // eager-checkpoint the RESULT so the iteration's edge cache can be
     // RELEASED here instead of leaking for the session (each LP call used

@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
-/** Enforced plan invariants for the scale-critical distributed defaults
-  * (round-10 verdict task: PlanCheck was a manual tool; this makes the
-  * guarantees regression-tested). For each guarded query the EXECUTED
+/** Enforced plan invariants for the scale-critical distributed defaults:
+  * a plan dump only shows a shape when someone reads it, so the shapes
+  * that matter at scale are asserted here. For each guarded query the EXECUTED
   * (post-AQE) plan must route data-sized row counts around single-partition
   * chokepoints: any unpartitioned Window or SinglePartition shuffle may
   * only carry O(P) bucket-boundary frames / O(1) fit readouts — asserted

@@ -1215,7 +1215,7 @@ class StatsGraphSpec extends SparkSuite {
 
   test("pageRank: iters=30 on a 50k-node graph is bounded (lineage checkpoints)") {
     // each round consumes the rank frame twice (contrib + dangling mass);
-    // without checkpointEvery the lazy plan doubles per round — kCore
+    // without per-round checkpoints the lazy plan doubles per round — kCore
     // measured 60 s/OOM at depth 6 on a 5-edge toy. 30 rounds must stay
     // linear-time.
     val n = 50000L
