@@ -861,15 +861,12 @@ object Graph {
     val spark = edges.sparkSession
     val eCntPre = ePer.count()
     if (Bounded.fitsDriver(spark, eCntPre)) {
-      import graft.ops.Bounded._
       val arr = GraphLocal.collectEdges(ePer,
         "gated local personalized-pageRank replay")
-      val seedArr = seedIds
-        .join(ePer.select(explode(array(col("src"), col("dst"))).as("id"))
-          .distinct(), Seq("id"), "left_semi")
-        .collectBounded(driverRowBound(spark, 2),
-          "pPR local replay seed set (⊆ node universe ≤ 2·|E|)")
-        .map(_.getLong(0)).toSet
+      val seedArr = GraphLocal.collectColumns(seedIds
+          .join(ePer.select(explode(array(col("src"), col("dst"))).as("id"))
+            .distinct(), Seq("id"), "left_semi"),
+          "pPR local replay seed set (⊆ node universe ≤ 2·|E|)", 2)(0)
       ePer.unpersist()
       return GraphLocal.personalizedPageRank(spark, arr, seedArr, iters,
         damp)
@@ -1214,31 +1211,30 @@ object Graph {
     // same Long counts, same floor-scaled isum(·,9) double sequence
     // ([[GraphLocal]]). LONG-typed columns only, unique label ids only (a
     // duplicated id multiplies the distributed joins — fall through
-    // rather than guess), nonempty labeled-degree mass (the degenerate
-    // empties keep the distributed plan's NULL semantics).
+    // rather than guess), no NULL id, label or endpoint (engine-specific
+    // join/group semantics — keep the distributed plan rather than
+    // replicate), nonempty labeled-degree mass (the degenerate empties
+    // keep the distributed plan's NULL semantics). The label-side
+    // preconditions are checked before the |E| collect, and a NULL stops
+    // each collect inside its tasks.
     if (eCnt > 0L && Bounded.fitsDriver(spark, eCnt) &&
         labN <= 2L * Bounded.driverRowLimit(spark) &&
         e.schema.forall(_.dataType == LongType) &&
         lab.schema.forall(_.dataType == LongType)) {
-      import graft.ops.Bounded._
-      val eRows = e.collectBounded(driverRowBound(spark),
-        "gated local modularity replay (edges)")
-      val labRows = lab.collectBounded(driverRowBound(spark, 2),
-        "gated local modularity replay (labels ≤ 2 × the limit)")
-      // NULL ids/labels have engine-specific join/group semantics — keep
-      // the distributed plan for them rather than replicate
-      if (eRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)) &&
-          labRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        val eArr = eRows.map(r => (r.getLong(0), r.getLong(1)))
-        val labMap = new java.util.HashMap[Long, Long]()
-        labRows.foreach(r => labMap.put(r.getLong(0), r.getLong(1)))
-        if (labMap.size == labRows.length) {
-          val out = GraphLocal.modularity(spark, eArr, labMap)
-          if (out.isDefined) {
-            e.unpersist(); lab.unpersist()
-            return out.get
-          }
+      val out = Bounded.collectLongs(lab, Bounded.driverRowBound(spark, 2),
+          "gated local modularity replay (labels ≤ 2 × the limit)")
+        .flatMap { l =>
+          val lix = new GraphLocal.LongIndex
+          l(0).foreach(lix(_))
+          if (lix.size != l(0).length) None
+          else Bounded.collectLongs(e, Bounded.driverRowBound(spark),
+              "gated local modularity replay (edges)")
+            .flatMap(c => GraphLocal.modularity(spark,
+              new GraphLocal.Edges(c(0), c(1)), lix, l(1)))
         }
+      if (out.isDefined) {
+        e.unpersist(); lab.unpersist()
+        return out.get
       }
     }
     val useBcast = Bounded.fitsDriver(spark, labN)
@@ -1458,12 +1454,10 @@ object Graph {
     // below the driver limit: exact Long min/+ relaxations over the
     // collected min-collapsed edge list ([[GraphLocal]])
     if (Bounded.fitsDriver(spark, eCnt)) {
-      import graft.ops.Bounded._
-      val arr = eBase
-        .collectBounded(driverRowBound(spark), "gated local SSSP replay")
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val c = GraphLocal.collectColumns(eBase, "gated local SSSP replay")
       eBase.unpersist()
-      return GraphLocal.ssspWeighted(spark, arr, sources, rounds)
+      return GraphLocal.ssspWeighted(spark,
+        new GraphLocal.Edges(c(0), c(1)), c(2), sources, rounds)
     }
     val e = eBase.repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

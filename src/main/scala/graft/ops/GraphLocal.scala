@@ -13,117 +13,200 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * whole loop is one bounded collect plus in-core integer arithmetic;
   * above the limit the operator keeps its distributed loop.
   *
-  * Driver memory at the default limit (4M edge rows): the 64 MB of raw
-  * (Long, Long) payload is not the footprint. `Dataset.collect` holds
-  * every decoded `UnsafeRow` while it builds the `Row` array, and
-  * [[collectEdges]] then copies each `Row` into a (Long, Long) tuple.
-  * Measured on JDK 17 (compressed oops, two-long rows): ≈ 85 bytes per
-  * decoded row, ≈ 100 per `Row`, ≈ 45 per tuple. The transient peak is
-  * therefore ≈ 185 bytes per edge, ≈ 0.75 GB for a limit-sized collect.
-  * The replay itself adds 8 bytes per edge (two dense int arrays) and, by
-  * estimate, ≈ 100 per node (the boxed id index). `collectBounded` holds
-  * the collect to the same limit, so an input that outgrows it fails
-  * loudly instead of growing the driver.
+  * Driver memory at the default limit (4M edge rows): every list is
+  * collected by [[Bounded.collectLongs]] as one packed `Array[Long]` per
+  * column — 16 bytes of payload per edge, no decoded `Row`, no tuple —
+  * and node ids are dense-indexed by a primitive open-addressing
+  * [[LongIndex]]. Measured on JDK 17 (local[4], 4M two-long edges over
+  * 16k nodes, heap used after full GCs with the structure held): the
+  * packed columns retain ≈ 16–20 bytes per edge, the dense int endpoints
+  * 8 more, the CSR adjacency 4 more. The collect's transient peak (the
+  * tasks' growing buffers, the serialized task results, the driver-side
+  * concatenation), taken as the tenured-pool peak under SerialGC with a
+  * 64 MB young gen and tenuring threshold 0, is ≈ 80 bytes per edge,
+  * ≈ 0.32 GB for a limit-sized collect; the same measurement gives
+  * ≈ 175 for a `Row` collect plus a `(Long, Long)` tuple copy. The id
+  * index adds 16–24 bytes per node. `collectLongs` holds the collect to
+  * the same limit, so an input that outgrows it fails loudly instead of
+  * growing the driver.
   *
   * The limit only changes WHERE the arithmetic runs: every replay walks
   * the SAME integer / IEEE-double op sequence as the distributed plan
   * (GraphLocalParitySpec runs every operator on each side of the limit;
   * the DuckDB oracle checks the queries at two scale factors).
   */
-private[ops] object GraphLocal {
+private[graft] object GraphLocal {
 
   import graft.ops.Bounded._
 
-  /** Bounded edge collect off an (ideally already-persisted) canonical
-    * edge frame with columns (srcLike, dstLike) castable to long, held to
-    * the driver row limit. */
-  def collectEdges(e: DataFrame, what: String): Array[(Long, Long)] =
-    e.collectBounded(driverRowBound(e.sparkSession), what)
-      .map(r => (r.getLong(0), r.getLong(1)))
-
-  /** Compact id index: node ids → dense ints, preserving first-seen order
-    * (order never matters — every consumer is keyed by the original id). */
-  final class Idx {
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    private val m = new java.util.HashMap[Long, Integer]()
-    def apply(v: Long): Int = {
-      val g = m.get(v)
-      if (g != null) g.intValue()
-      else { m.put(v, ids.length); ids += v; ids.length - 1 }
-    }
-    def size: Int = ids.length
+  /** A collected edge list as two packed columns: edge i is
+    * (src(i), dst(i)). */
+  final class Edges(val src: Array[Long], val dst: Array[Long]) {
+    def length: Int = src.length
   }
 
-  /** Dense-index an edge list: (index, src ints, dst ints). */
-  private def indexed(edges: Array[(Long, Long)])
-      : (Idx, Array[Int], Array[Int]) = {
-    val ix = new Idx
-    val es = new Array[Int](edges.length)
-    val ed = new Array[Int](edges.length)
-    var i = 0
-    while (i < edges.length) {
-      es(i) = ix(edges(i)._1); ed(i) = ix(edges(i)._2); i += 1
+  /** Bounded packed collect ([[Bounded.collectLongs]]) of a NULL-filtered
+    * all-LONG frame, held to `times` × the driver row limit. A NULL here
+    * means the operator's filter was bypassed: fail loudly instead of
+    * reading it as node 0. */
+  def collectColumns(df: DataFrame, what: String,
+                     times: Long = 1L): Array[Array[Long]] =
+    collectLongs(df, driverRowBound(df.sparkSession, times), what)
+      .getOrElse(throw new IllegalStateException(
+        s"$what: NULL in a NULL-filtered frame"))
+
+  /** [[collectColumns]] of an edge frame (srcLike, dstLike). */
+  def collectEdges(e: DataFrame, what: String): Edges = {
+    val c = collectColumns(e, what)
+    new Edges(c(0), c(1))
+  }
+
+  /** Open-addressing `Long → Int` index: ids → dense ints in first-seen
+    * order. Linear probing over an int table that holds dense index + 1
+    * (0 = empty) at a load factor ≤ 1/2; each id is stored once, in
+    * first-seen order, so [[id]] is the dense → id inverse. */
+  final class LongIndex {
+    private var ids = new Array[Long](16)
+    private var slots = new Array[Int](32)
+    private var shift = 64 - 5 // log2(slots.length) high hash bits
+    private var n = 0
+
+    def size: Int = n
+    def id(v: Int): Long = ids(v)
+
+    /** Dense int of `v`, or -1 when absent. */
+    def get(v: Long): Int = slots(probe(v)) - 1
+
+    /** Dense int of `v`, appended when new. */
+    def apply(v: Long): Int = {
+      val s = probe(v)
+      if (slots(s) != 0) return slots(s) - 1
+      if (n == ids.length) ids = java.util.Arrays.copyOf(ids, 2 * n)
+      ids(n) = v
+      slots(s) = n + 1
+      n += 1
+      if (2 * n > slots.length) grow()
+      n - 1
     }
-    (ix, es, ed)
+
+    /** The slot holding `v`, or the empty slot where it would go. */
+    private def probe(v: Long): Int = {
+      var s = slot(v)
+      while (slots(s) != 0 && ids(slots(s) - 1) != v)
+        s = (s + 1) & (slots.length - 1)
+      s
+    }
+
+    private def slot(v: Long): Int =
+      ((v * 0x9E3779B97F4A7C15L) >>> shift).toInt // Fibonacci hashing
+
+    private def grow(): Unit = {
+      slots = new Array[Int](2 * slots.length)
+      shift -= 1
+      var i = 0
+      while (i < n) {
+        var s = slot(ids(i))
+        while (slots(s) != 0) s = (s + 1) & (slots.length - 1)
+        slots(s) = i + 1
+        i += 1
+      }
+    }
+  }
+
+  /** An edge list re-keyed to dense node ints: `src(i)`/`dst(i)` index
+    * `ix`, filled edge by edge, src before dst. */
+  final class Dense(e: Edges) {
+    val ix = new LongIndex
+    val src = new Array[Int](e.length)
+    val dst = new Array[Int](e.length)
+    locally {
+      var i = 0
+      while (i < e.length) { src(i) = ix(e.src(i)); dst(i) = ix(e.dst(i)); i += 1 }
+    }
+    def length: Int = src.length
+    def n: Int = ix.size
+  }
+
+  /** CSR adjacency keyed by `from`: node v's neighbors are
+    * `nbr(off(v) until off(v + 1))`, in edge order. Returns (off, nbr). */
+  private def csr(from: Array[Int], to: Array[Int], n: Int)
+      : (Array[Int], Array[Int]) = {
+    val off = new Array[Int](n + 1)
+    var i = 0
+    while (i < from.length) { off(from(i) + 1) += 1; i += 1 }
+    i = 0
+    while (i < n) { off(i + 1) += off(i); i += 1 }
+    val nbr = new Array[Int](from.length)
+    val fill = java.util.Arrays.copyOf(off, n)
+    i = 0
+    while (i < from.length) {
+      nbr(fill(from(i))) = to(i); fill(from(i)) += 1; i += 1
+    }
+    (off, nbr)
   }
 
   /** [[Graph.labelPropagation]] rounds on the loop-free edge list the
     * distributed loop consumes: round 1 is min neighbor id per `a`; each
-    * later round counts the labels of LABELED neighbors and takes (max
-    * count, then min label) — the same argmax as `max(struct(c, -lbl))`.
-    * A node that never appears as `a`, or whose neighbors all lost their
-    * label, gets no label and is left out — exactly what the distributed
-    * `groupBy(a)` and inner label join do when a caller's
-    * `assumeSymmetric` frame is not symmetric. Returns (id, community). */
-  def labelPropagation(spark: SparkSession, edges: Array[(Long, Long)],
+    * later round gathers the labels of v's LABELED neighbors (CSR keyed
+    * by `a`) into one reused buffer, sorts it and takes the first longest
+    * run. In ascending order that run holds the smallest label among the
+    * most frequent: the (max count, then min label) argmax of
+    * `max(struct(c, -lbl))`. A node that never appears as `a`, or whose
+    * neighbors all lost their label, gets no label and is left out —
+    * exactly what the distributed `groupBy(a)` and inner label join do
+    * when a caller's `assumeSymmetric` frame is not symmetric. Returns
+    * (id, community). */
+  def labelPropagation(spark: SparkSession, edges: Edges,
                        iters: Int): DataFrame = {
     import spark.implicits._
-    if (edges.isEmpty)
+    if (edges.length == 0)
       return Seq.empty[(Long, Long)].toDF("id", "community")
-    val (ix, ea, eb) = indexed(edges)
-    val n = ix.size
+    val g = new Dense(edges)
+    val n = g.n
     // round 1 closed form: groupBy(a).agg(min(b))
     var has = new Array[Boolean](n)
     var lbl = new Array[Long](n)
     var i = 0
-    while (i < edges.length) {
-      val a = ea(i); val b = edges(i)._2
+    while (i < g.length) {
+      val a = g.src(i); val b = edges.dst(i)
       if (!has(a) || b < lbl(a)) { lbl(a) = b; has(a) = true }
       i += 1
     }
+    val (off, nbr) = csr(g.src, g.dst, n)
+    var maxDeg = 0
+    var v = 0
+    while (v < n) { maxDeg = math.max(maxDeg, off(v + 1) - off(v)); v += 1 }
+    val buf = new Array[Long](maxDeg)
     for (_ <- 2 to iters) {
-      // per node: count labels of labeled neighbors, argmax (count, -label)
-      val cnt = new Array[java.util.HashMap[Long, Long]](n)
-      i = 0
-      while (i < edges.length) {
-        val b = eb(i)
-        if (has(b)) {
-          val a = ea(i)
-          if (cnt(a) == null) cnt(a) = new java.util.HashMap[Long, Long]()
-          cnt(a).merge(lbl(b), 1L, (x, y) => x + y)
-        }
-        i += 1
-      }
       val next = new Array[Long](n)
       val nextHas = new Array[Boolean](n)
-      var v = 0
+      v = 0
       while (v < n) {
-        if (cnt(v) != null) {
-          var bestC = -1L; var bestL = Long.MaxValue
-          val it = cnt(v).entrySet().iterator()
-          while (it.hasNext) {
-            val en = it.next()
-            val c = en.getValue.longValue(); val l = en.getKey.longValue()
-            if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
+        var k = 0
+        var j = off(v)
+        while (j < off(v + 1)) {
+          val b = nbr(j)
+          if (has(b)) { buf(k) = lbl(b); k += 1 }
+          j += 1
+        }
+        if (k > 0) {
+          java.util.Arrays.sort(buf, 0, k)
+          var best = buf(0); var bestC = 0
+          var r = 0
+          while (r < k) {
+            var end = r + 1
+            while (end < k && buf(end) == buf(r)) end += 1
+            if (end - r > bestC) { bestC = end - r; best = buf(r) }
+            r = end
           }
-          next(v) = bestL; nextHas(v) = true
+          next(v) = best; nextHas(v) = true
         }
         v += 1
       }
       lbl = next; has = nextHas
     }
-    spark.createDataset(ix.ids.indices.filter(v => has(v))
-        .map(v => (ix.ids(v), lbl(v))))
+    spark.createDataset((0 until n).filter(v => has(v))
+        .map(v => (g.ix.id(v), lbl(v))))
       .toDF("id", "community")
   }
 
@@ -131,14 +214,15 @@ private[ops] object GraphLocal {
     * both the LONG and the DECIMAL(38,0) arithmetic widths exactly (all
     * values non-negative, so truncating div = floor in every engine).
     * Returns (id, hub, auth). */
-  def hits(spark: SparkSession, edges: Array[(Long, Long)],
+  def hits(spark: SparkSession, edges: Edges,
            iters: Int): DataFrame = {
     import spark.implicits._
-    if (edges.isEmpty)
+    if (edges.length == 0)
       return Seq.empty[(Long, Long, Long)].toDF("id", "hub", "auth")
     val scale = BigInt(Graph.Scale)
-    val (ix, es, ed) = indexed(edges)
-    val n = ix.size
+    val g = new Dense(edges)
+    val es = g.src; val ed = g.dst
+    val n = g.n
     def normed(raw: Array[BigInt]): Array[BigInt] = {
       var mx = BigInt(0)
       var v = 0
@@ -184,8 +268,8 @@ private[ops] object GraphLocal {
     }
     val hub = normed(hubRaw)
     val auth = normed(authRaw)
-    spark.createDataset(ix.ids.indices.map { v =>
-      (ix.ids(v),
+    spark.createDataset((0 until n).map { v =>
+      (g.ix.id(v),
         if (hub(v) == null) 0L else hub(v).toLong,
         if (auth(v) == null) 0L else auth(v).toLong)
     }).toDF("id", "hub", "auth")
@@ -195,27 +279,35 @@ private[ops] object GraphLocal {
     * seed. With |S| = n the seed-restricted terms — r₀ = Scale/n,
     * base = (100−damp)·(Scale/n)/100, dangling mass div n — are exactly
     * pageRank's, so one fold serves both operators. Returns (id, r). */
-  def pageRank(spark: SparkSession, edges: Array[(Long, Long)], iters: Int,
+  def pageRank(spark: SparkSession, edges: Edges, iters: Int,
                damp: Int): DataFrame = {
     import spark.implicits._
-    if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("id", "r")
-    else personalizedPageRank(spark, edges, _ => true, iters, damp)
+    if (edges.length == 0) return Seq.empty[(Long, Long)].toDF("id", "r")
+    val g = new Dense(edges)
+    ppr(spark, g, Array.fill(g.n)(true), iters, damp)
   }
 
   /** [[Graph.personalizedPageRank]] rounds on a DEDUPED directed edge
-    * list + seed predicate. Pure Long floor arithmetic (everything
-    * non-negative), identical to the distributed plan. Returns (id, r)
-    * over the full node universe. */
-  def personalizedPageRank(spark: SparkSession, edges: Array[(Long, Long)],
-                           isSeedId: Long => Boolean, iters: Int,
+    * list + seed ids (seeds that are not graph nodes are ignored). Pure
+    * Long floor arithmetic (everything non-negative), identical to the
+    * distributed plan. Returns (id, r) over the full node universe. */
+  def personalizedPageRank(spark: SparkSession, edges: Edges,
+                           seeds: Array[Long], iters: Int,
                            damp: Int): DataFrame = {
+    val g = new Dense(edges)
+    val isSeed = new Array[Boolean](g.n)
+    seeds.foreach { s => val v = g.ix.get(s); if (v >= 0) isSeed(v) = true }
+    ppr(spark, g, isSeed, iters, damp)
+  }
+
+  private def ppr(spark: SparkSession, g: Dense, isSeed: Array[Boolean],
+                  iters: Int, damp: Int): DataFrame = {
     import spark.implicits._
-    val (ix, es, ed) = indexed(edges)
-    val n = ix.size
+    val es = g.src; val ed = g.dst
+    val n = g.n
     val outdeg = new Array[Long](n)
     var i = 0
     while (i < es.length) { outdeg(es(i)) += 1L; i += 1 }
-    val isSeed = Array.tabulate(n)(v => isSeedId(ix.ids(v)))
     val nS = isSeed.count(identity).toLong
     require(nS > 0, "personalizedPageRank: no seed is a graph node")
     val r0 = Graph.Scale / nS
@@ -242,41 +334,41 @@ private[ops] object GraphLocal {
       }
       r = nr
     }
-    spark.createDataset(ix.ids.indices.map(k => (ix.ids(k), r(k))))
+    spark.createDataset((0 until n).map(k => (g.ix.id(k), r(k))))
       .toDF("id", "r")
   }
 
-  /** [[Graph.bfsDistances]] on a DEDUPED directed edge list. Returns
-    * (id, dist:int) for every node reached within maxHops (sources at 0,
-    * whether or not they appear in the graph — the distributed loop's
-    * semantics). */
-  def bfsDistances(spark: SparkSession, edges: Array[(Long, Long)],
+  /** [[Graph.bfsDistances]] on a DEDUPED directed edge list (CSR keyed
+    * by src). Returns (id, dist:int) for every node reached within
+    * maxHops (sources at 0, whether or not they appear in the graph — the
+    * distributed loop's semantics). */
+  def bfsDistances(spark: SparkSession, edges: Edges,
                    sources: Seq[Long], maxHops: Int): DataFrame = {
     import spark.implicits._
-    val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-    edges.foreach { case (s, d) =>
-      var l = adj.get(s)
-      if (l == null) { l = new scala.collection.mutable.ArrayBuffer[Long](); adj.put(s, l) }
-      l += d
-    }
-    val dist = new java.util.HashMap[Long, Int]()
-    var frontier: Seq[Long] = sources.distinct
-    frontier.foreach(s => dist.put(s, 0))
+    val g = new Dense(edges)
+    val (off, nbr) = csr(g.src, g.dst, g.n)
+    val dist = Array.fill(g.n)(-1)
+    val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
+    var frontier = sources.distinct.flatMap { s =>
+      out += ((s, 0))
+      val v = g.ix.get(s)
+      if (v >= 0) { dist(v) = 0; Some(v) } else None
+    }.toArray
     var hop = 1
     while (hop <= maxHops && frontier.nonEmpty) {
-      val next = scala.collection.mutable.LinkedHashSet[Long]()
+      val next = new scala.collection.mutable.ArrayBuilder.ofInt
       frontier.foreach { u =>
-        val l = adj.get(u)
-        if (l != null) l.foreach { d => if (!dist.containsKey(d)) next += d }
+        var j = off(u)
+        while (j < off(u + 1)) {
+          val d = nbr(j)
+          if (dist(d) < 0) {
+            dist(d) = hop; next.addOne(d); out += ((g.ix.id(d), hop))
+          }
+          j += 1
+        }
       }
-      next.foreach(d => dist.put(d, hop))
-      frontier = next.toSeq
+      frontier = next.result()
       hop += 1
-    }
-    val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-    val it = dist.entrySet().iterator()
-    while (it.hasNext) {
-      val en = it.next(); out += ((en.getKey.longValue(), en.getValue.intValue()))
     }
     spark.createDataset(out.toSeq).toDF("id", "dist")
   }
@@ -284,66 +376,75 @@ private[ops] object GraphLocal {
   /** [[Graph.ssspWeighted]] Bellman–Ford rounds on a min-collapsed
     * (src, dst, w) edge list. Exact Long min/+ — identical to the
     * distributed relaxation. Returns (id, dist). */
-  def ssspWeighted(spark: SparkSession, edges: Array[(Long, Long, Long)],
+  def ssspWeighted(spark: SparkSession, edges: Edges, w: Array[Long],
                    sources: Seq[Long], rounds: Int): DataFrame = {
     import spark.implicits._
-    val dist = new java.util.HashMap[Long, Long]()
-    sources.distinct.foreach(s => dist.put(s, 0L))
+    val g = new Dense(edges)
+    val srcs = sources.distinct.map(g.ix(_)) // sources may be non-nodes
+    val n = g.n
+    var dist = new Array[Long](n)
+    var has = new Array[Boolean](n)
+    srcs.foreach(v => has(v) = true)
     for (_ <- 1 to rounds) {
-      val next = new java.util.HashMap[Long, Long](dist)
-      edges.foreach { case (s, d, w) =>
-        if (dist.containsKey(s)) {
-          val cand = dist.get(s) + w
-          if (!next.containsKey(d) || cand < next.get(d)) next.put(d, cand)
+      val nd = dist.clone()
+      val nh = has.clone()
+      var i = 0
+      while (i < g.length) {
+        val s = g.src(i)
+        if (has(s)) {
+          val d = g.dst(i)
+          val cand = dist(s) + w(i)
+          if (!nh(d) || cand < nd(d)) { nd(d) = cand; nh(d) = true }
         }
+        i += 1
       }
-      dist.clear(); dist.putAll(next)
+      dist = nd; has = nh
     }
-    val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val it = dist.entrySet().iterator()
-    while (it.hasNext) {
-      val en = it.next(); out += ((en.getKey.longValue(), en.getValue.longValue()))
-    }
-    spark.createDataset(out.toSeq).toDF("id", "dist")
+    spark.createDataset((0 until n).filter(v => has(v))
+        .map(v => (g.ix.id(v), dist(v))))
+      .toDF("id", "dist")
   }
 
-  /** [[Graph.modularity]] fold: m2 = |e| (duplicates counted), intra =
-    * directed within-community edge count (both endpoints labeled),
-    * d_c = Σ outdeg over labeled srcs per community, expTerm =
-    * isum((d_c/m2)², 9) — Σ floor(x·10⁹) as an exact integer, then
-    * double-divided, the identical op sequence. Returns None for the
-    * degenerate no-labeled-degree-mass case (the distributed plan emits
-    * NULL rows there — keep its exact semantics by falling through). */
-  def modularity(spark: SparkSession, edges: Array[(Long, Long)],
-                 lab: java.util.HashMap[Long, Long]): Option[DataFrame] = {
+  /** [[Graph.modularity]] fold over the edge list and a label table
+    * (`lix` indexes the unique labeled ids, `lab(lix.get(id))` is the
+    * id's label): m2 = |e| (duplicates counted), intra = directed
+    * within-community edge count (both endpoints labeled), d_c = Σ outdeg
+    * over labeled srcs per community, expTerm = isum((d_c/m2)², 9) —
+    * Σ floor(x·10⁹) as an exact integer, then double-divided, the
+    * identical op sequence. Returns None for the degenerate
+    * no-labeled-degree-mass case (the distributed plan emits NULL rows
+    * there — keep its exact semantics by falling through). */
+  def modularity(spark: SparkSession, edges: Edges, lix: LongIndex,
+                 lab: Array[Long]): Option[DataFrame] = {
     import spark.implicits._
     val m2 = edges.length.toLong
+    val cix = new LongIndex
+    val comm = lab.map(cix(_)) // labeled id → dense community
+    val dc = new Array[Long](cix.size)
     var intra = 0L
-    val outdeg = new java.util.HashMap[Long, Long]()
-    edges.foreach { case (s, d) =>
-      val ls = lab.get(s)
-      if (lab.containsKey(s)) {
-        if (lab.containsKey(d) && ls == lab.get(d)) intra += 1L
-        outdeg.merge(s, 1L, (x, y) => x + y)
+    var i = 0
+    while (i < edges.length) {
+      val ls = lix.get(edges.src(i))
+      if (ls >= 0) {
+        val ld = lix.get(edges.dst(i))
+        if (ld >= 0 && comm(ld) == comm(ls)) intra += 1L
+        dc(comm(ls)) += 1L
       }
+      i += 1
     }
-    val dc = new java.util.HashMap[Long, Long]()
-    val dit = outdeg.entrySet().iterator()
-    while (dit.hasNext) {
-      val en = dit.next()
-      dc.merge(lab.get(en.getKey), en.getValue.longValue(), (x, y) => x + y)
-    }
-    if (dc.isEmpty) return None
+    val k = dc.count(_ > 0L)
+    if (k == 0) return None
     val m2D = m2.toDouble
     var acc = BigInt(0)
-    val cit = dc.values().iterator()
-    while (cit.hasNext) {
-      val r = cit.next().longValue().toDouble / m2D
-      acc += BigInt(math.floor(r * r * 1e9).toLong)
+    dc.foreach { c =>
+      if (c > 0L) {
+        val r = c.toDouble / m2D
+        acc += BigInt(math.floor(r * r * 1e9).toLong)
+      }
     }
     val expTerm =
       new java.math.BigDecimal(acc.bigInteger).doubleValue() / 1e9
-    Some(Seq((dc.size.toLong, (m2.toDouble / 2.0).toLong,
+    Some(Seq((k.toLong, (m2.toDouble / 2.0).toLong,
         (intra.toDouble / 2.0).toLong,
         intra.toDouble / m2D - expTerm))
       .toDF("k_communities", "m_edges", "intra_edges", "modularity"))
@@ -388,22 +489,13 @@ private[ops] object GraphLocal {
     * ∪ balls over v's out-neighbors ∪ {v} (the distributed loops add
     * self-loop edges for the own-ball term). Calls `visit(r, balls, est)`
     * after each round including round 0. Node order inside `balls` is the
-    * Idx order; `visit` receives the per-node est array. */
-  private def kmvRounds(edges: Array[(Long, Long)], radius: Int, k: Int)(
-      visit: (Int, Array[Array[Long]], Array[Double]) => Unit): Idx = {
-    val (ix, es, ed) = indexed(edges)
-    val n = ix.size
-    // adjacency: out-neighbors per node (dense int ids)
-    val degOut = new Array[Int](n)
-    var i = 0
-    while (i < es.length) { degOut(es(i)) += 1; i += 1 }
-    val off = new Array[Int](n + 1)
-    i = 0; while (i < n) { off(i + 1) = off(i) + degOut(i); i += 1 }
-    val nbr = new Array[Int](edges.length)
-    val fill = off.clone()
-    i = 0
-    while (i < es.length) { nbr(fill(es(i))) = ed(i); fill(es(i)) += 1; i += 1 }
-    var balls = Array.tabulate(n)(v => Array(h60(ix.ids(v))))
+    * index order; `visit` receives the per-node est array. */
+  private def kmvRounds(edges: Edges, radius: Int, k: Int)(
+      visit: (Int, Array[Array[Long]], Array[Double]) => Unit): LongIndex = {
+    val g = new Dense(edges)
+    val n = g.n
+    val (off, nbr) = csr(g.src, g.dst, n) // out-neighbors per node
+    var balls = Array.tabulate(n)(v => Array(h60(g.ix.id(v))))
     var est = Array.fill(n)(1.0)
     visit(0, balls, est)
     for (r <- 1 to radius) {
@@ -426,16 +518,16 @@ private[ops] object GraphLocal {
       balls = nb; est = ne
       visit(r, balls, est)
     }
-    ix
+    g.ix
   }
 
   /** [[Graph.harmonicCentralityKmv]] replay: harmonic(v) accrues
     * (est_r − est_{r−1}) / r each round — the identical IEEE-double op
     * order. Returns (id, ball_size, harmonic). */
-  def harmonicCentralityKmv(spark: SparkSession, edges: Array[(Long, Long)],
+  def harmonicCentralityKmv(spark: SparkSession, edges: Edges,
                             radius: Int, k: Int): DataFrame = {
     import spark.implicits._
-    if (edges.isEmpty)
+    if (edges.length == 0)
       return Seq.empty[(Long, Double, Double)].toDF("id", "ball_size", "harmonic")
     var prevEst: Array[Double] = null
     var harmonic: Array[Double] = null
@@ -452,15 +544,15 @@ private[ops] object GraphLocal {
       }
       lastEst = est
     }
-    spark.createDataset(ix.ids.indices.map(v =>
-      (ix.ids(v), lastEst(v), harmonic(v))))
+    spark.createDataset((0 until ix.size).map(v =>
+      (ix.id(v), lastEst(v), harmonic(v))))
       .toDF("id", "ball_size", "harmonic")
   }
 
   /** [[Graph.neighborhoodFunction]] replay: the per-round readouts
     * (node count, Σ floor(est·10⁶) as exact decimal). The caller owns the
     * shared coverage/90%-flag tail. */
-  def neighborhoodSums(edges: Array[(Long, Long)], radius: Int, k: Int)
+  def neighborhoodSums(edges: Edges, radius: Int, k: Int)
       : Seq[(Long, java.math.BigDecimal)] = {
     val sums = scala.collection.mutable.ArrayBuffer[(Long, java.math.BigDecimal)]()
     kmvRounds(edges, radius, k) { (_, _, est) =>

@@ -162,4 +162,110 @@ class GraphLocalParitySpec extends SparkSuite {
     val b = atDriverRowLimit(4L)(rowSet(q))
     assert(b == rowSet(q), s"broadcast=$b")
   }
+
+  test("LongIndex: first-seen dense ints, get, growth, extreme ids") {
+    val r = new scala.util.Random(7L)
+    val ids = (Seq(0L, -1L, Long.MinValue, Long.MaxValue, 1L << 40) ++
+      Seq.fill(20000)(r.nextLong() % 5000L) ++ Seq.fill(5000)(r.nextLong()))
+    val ix = new graft.ops.GraphLocal.LongIndex
+    val dense = ids.map(ix(_))
+    val firstSeen = ids.distinct
+    assert(ix.size == firstSeen.size)
+    assert((0 until ix.size).map(ix.id) == firstSeen)
+    val pos = firstSeen.zipWithIndex.toMap
+    assert(dense == ids.map(pos))
+    assert(firstSeen.forall(v => ix.id(ix.get(v)) == v))
+    assert(Seq(5001L, -5001L, 12345678901L).forall(ix.get(_) == -1))
+  }
+
+  // A seeded random, tie-heavy graph (≈2k pairs over 400 nodes): every
+  // node 8..400 links 1–3 of the six anchors 1..6, so round-1 labels
+  // (min neighbor id) come from a small alphabet and later rounds see
+  // many count ties; hub 7 links ~300 nodes; random extra pairs add
+  // duplicates and self-loops. Directed as generated.
+  private val rnd: Seq[(Long, Long)] = {
+    val r = new scala.util.Random(20261018L)
+    val anchors = (1L to 6L).toList
+    val nodes = (8L to 400L).toVector
+    val hub = nodes.filter(_ => r.nextDouble() < 0.75).map(v => (7L, v))
+    val toAnchors = nodes.flatMap(v =>
+      r.shuffle(anchors).take(1 + r.nextInt(3)).map(a => (v, a)))
+    val extra = Seq.fill(900)(
+      (nodes(r.nextInt(nodes.length)), nodes(r.nextInt(nodes.length))))
+    hub ++ toAnchors ++ extra
+  }
+  private def rndDf = rnd.toDF("s", "t")
+
+  test("random tie-heavy graph: round 2 has many count ties") {
+    // the generator's point, checked directly: on the symmetrized
+    // loop-free graph, many nodes' most frequent round-1 neighbor label
+    // is shared by two or more labels
+    val sym = (rnd ++ rnd.map(_.swap)).filter { case (a, b) => a != b }.distinct
+    val nb = sym.groupBy(_._1).map { case (a, es) => a -> es.map(_._2) }
+    val l1 = nb.map { case (a, bs) => a -> bs.min }
+    val ties = nb.count { case (_, bs) =>
+      val c = bs.flatMap(l1.get).groupBy(identity).values.map(_.size).toSeq
+      c.count(_ == c.max) >= 2
+    }
+    assert(sym.size > 3000 && nb.values.map(_.size).max >= 200,
+      s"edges=${sym.size}")
+    assert(ties >= 100, s"only $ties nodes with a count tie")
+  }
+
+  test("labelPropagation parity: random tie-heavy graph, iters 1–5") {
+    for (it <- 1 to 5) {
+      val (d, l) = bothWays(Graph.labelPropagation(rndDf, "s", "t",
+        iters = it))
+      assert(d == l, s"iters=$it dist=$d local=$l")
+    }
+  }
+
+  test("pageRank parity: random tie-heavy graph") {
+    val (d, l) = bothWays(Graph.pageRank(rndDf, "s", "t", iters = 4))
+    assert(d == l, s"dist=$d local=$l")
+  }
+
+  test("personalizedPageRank parity: random tie-heavy graph") {
+    val seeds = Seq(1L, 7L, 50L, 9999L).toDF("seed")
+    val (d, l) = bothWays(Graph.personalizedPageRank(rndDf, "s", "t",
+      seeds, "seed", iters = 4))
+    assert(d == l, s"dist=$d local=$l")
+  }
+
+  test("hits parity: random tie-heavy graph") {
+    val (d, l) = bothWays(Graph.hits(rndDf, "s", "t", iters = 3))
+    assert(d == l, s"dist=$d local=$l")
+  }
+
+  test("harmonicCentralityKmv parity: random tie-heavy graph") {
+    val (d, l) = bothWays(Graph.harmonicCentralityKmv(rndDf, "s", "t",
+      radius = 2, k = 8))
+    assert(d == l, s"dist=$d local=$l")
+  }
+
+  test("neighborhoodFunction parity: random tie-heavy graph") {
+    val (d, l) = bothWays(Graph.neighborhoodFunction(rndDf, "s", "t",
+      radius = 3, k = 16))
+    assert(d == l, s"dist=$d local=$l")
+  }
+
+  test("bfsDistances parity: random tie-heavy graph") {
+    val (d, l) = bothWays(Graph.bfsDistances(rndDf, "s", "t",
+      Seq(9L, 12345L), maxHops = 3))
+    assert(d == l, s"dist=$d local=$l")
+  }
+
+  test("ssspWeighted parity: random tie-heavy graph") {
+    val w = rnd.map { case (s, t) => (s, t, 1L + (s * 31L + t * 17L) % 9L) }
+    val (d, l) = bothWays(Graph.ssspWeighted(w.toDF("s", "t", "w"),
+      "s", "t", "w", Seq(9L), rounds = 4))
+    assert(d == l, s"dist=$d local=$l")
+  }
+
+  test("modularity parity: random tie-heavy graph, partial labeling") {
+    val lbl = (1L to 400L).filter(_ % 5L != 0L).map(v => (v, v % 4L))
+      .toDF("id", "c")
+    val (d, l) = bothWays(Graph.modularity(rndDf, "s", "t", lbl, "id", "c"))
+    assert(d == l, s"dist=$d local=$l")
+  }
 }

@@ -452,6 +452,33 @@ class PlanGuardSpec extends SparkSuite {
         offenders.mkString("\n"))
   }
 
+  test("graph replays collect packed LONG columns, not Row lists") {
+    // the edge, seed and label lists the graph replays fold are
+    // driver-limit-sized: they go through Bounded.collectLongs (one
+    // Array[Long] per column). A Row collect of them — collectBounded at
+    // a driverRowBound, or a Row → tuple copy after a collectBounded —
+    // holds ≈10× the payload on the driver.
+    val rowCollect = ("""collectBounded\(\s*(?:Bounded\.)?driverRowBound|""" +
+      """collectBounded\((?:[^()]|\([^()]*\))*\)\s*\.map\(\s*""" +
+      """(?:\w+\s*=>\s*\(?\s*\w+|_)\.getLong\(""").r
+    val files = mainSourceLines()
+      .filter { case (p, _, _) =>
+        p.getParent.endsWith("ops") &&
+          p.getFileName.toString.matches("Graph.*\\.scala") }
+      .groupBy(_._1)
+    assert(files.size >= 2, s"Graph*.scala not found: ${files.keys}")
+    val offenders = files.toSeq.flatMap { case (p, ls) =>
+      val text = ls.sortBy(_._2).map(_._3).mkString("\n")
+      rowCollect.findAllMatchIn(text).map { m =>
+        s"$p:${text.take(m.start).count(_ == '\n') + 1}: " +
+          m.matched.replaceAll("\\s+", " ")
+      }
+    }
+    assert(offenders.isEmpty,
+      "Row collects of graph lists in ops/Graph*.scala:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("one driver-size knob: src/main reads only spark.graft.driverRowLimit") {
     // every "small enough for the driver?" gate goes through
     // Bounded.fitsDriver; per-operator limits, per-call thresholds and
