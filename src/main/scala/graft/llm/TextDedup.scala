@@ -755,12 +755,7 @@ object TextDedup {
     var prevSum = if (numericIds) gidSum(labels) else null
     var i = 0
     var converged = false
-    // per-round wall timing for jitter forensics (BENCH deltas on this
-    // query are dominated by round count × fixed job cost; the flag shows
-    // which) — stderr only, never in results
-    val timing = sys.env.get("GRAFT_DEDUP_TIMING").contains("1")
     while (i < maxIter && !converged) {
-      val tRound = System.nanoTime()
       val viaEdges = edges
         .join(labels.select(col("id").as("id_b"), col("group_id").as("nb_gid")), "id_b")
         .groupBy(col("id_a")).agg(min(col("nb_gid")).as("min_nb"))
@@ -798,9 +793,6 @@ object TextDedup {
       graft.ops.Checkpoints.releaseLocalCheckpoint(labels)
       labels = next
       i += 1
-      if (timing)
-        System.err.println(f"[graft] dedupGroups round $i%d " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.3f s converged=$converged")
     }
     if (!converged)
       System.err.println(

@@ -540,65 +540,26 @@ object Advanced {
   }
 
   /** The LINEAR-recurrence escape hatch for [[induction]], keyed form:
-    * s_i = a·s_{i−1} + x_i per key, rows ordered by `orderCols` within the
-    * key (zero initial state). One hash shuffle on the keys + an
-    * in-partition sort; the fold streams with O(1) state per task, so any
-    * number of series distribute and a single series only needs its own
-    * rows in one task's SORTED stream (not in memory). The per-key fold is
-    * the IDENTICAL IEEE op sequence (s = a·s + x) a sequential engine —
-    * or a per-key recursive CTE — executes, so results are bit-exact
-    * replayable. `xCol` is cast to double and must be non-null (a null
-    * would silently read as 0.0 through Row.getDouble — we throw instead);
-    * (keyCols ++ orderCols) must be a unique row key for a deterministic
-    * fold order. */
+    * s_i = a·s_{i−1} + b·x_i per key, rows ordered by `orderCols` within
+    * the key (zero initial state; `seedFirst` starts each key at s_1 = x_1).
+    * Runs on the [[Folds.keyed]] kernel (scale and key contract there);
+    * the per-key fold is the IDENTICAL IEEE op sequence (s = a·s + b·x) a
+    * sequential engine — or a per-key recursive CTE — executes, so results
+    * are bit-exact replayable (oracle q99). */
   def linearRecurrenceKeyed(df: DataFrame, keyCols: Seq[String],
                             orderCols: Seq[String], xCol: String,
                             a: Double, out: String,
                             b: Double = 1.0,
-                            seedFirst: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // key-run detection compares key values with Seq equality, which is
-    // REFERENCE equality for array-backed types — a binary/array key would
-    // silently reset the state on every row. Refuse loudly instead, and
-    // recurse through structs: a StructType key containing a nested
-    // binary/array field has the same reference-equality hole.
-    def arrayBacked(dt: DataType): Boolean = dt match {
-      case _: BinaryType | _: ArrayType | _: MapType => true
-      case s: StructType => s.fields.exists(f => arrayBacked(f.dataType))
-      case _ => false
-    }
-    keyCols.foreach { k =>
-      val dt = df.schema(k).dataType
-      require(!arrayBacked(dt),
-        s"linearRecurrenceKeyed: key column '$k' has array-backed type $dt " +
-          "(value equality unsupported, including nested in structs) — " +
-          "cast it to a scalar key first")
-    }
-    val sorted = df.withColumn(xCol, col(xCol).cast(DoubleType))
-      .repartition(parts, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    val schema = sorted.schema.add(out, DoubleType, nullable = false)
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex)
-    val xIdx = sorted.schema.fieldIndex(xCol)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
-      var s = 0.0
-      var first = true
-      it.map { r =>
-        if (r.isNullAt(xIdx))
-          throw new IllegalArgumentException(
-            s"linearRecurrenceKeyed: null $xCol — filter or impute first")
-        val k = keyIdx.map(r.get)
-        if (k != curKey) { curKey = k; s = 0.0; first = true }
-        val x = r.getDouble(xIdx)
+                            seedFirst: Boolean = false): DataFrame =
+    Folds.keyed(df, keyCols, orderCols, xCol, "linearRecurrenceKeyed",
+      Seq(out -> DoubleType)) { () =>
+      var s = 0.0; var first = true
+      x => {
         s = if (first && seedFirst) x else a * s + b * x
         first = false
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ s)
+        Seq(s)
       }
     }
-    spark.createDataFrame(rows, schema)
-  }
 
   /** HOLT LINEAR (double exponential / level+trend) smoothing per key —
     * the next step up from [[ewmaKeyed]] when series have drift:
@@ -606,8 +567,7 @@ object Advanced {
     *   l_t = alpha*x_t + (1-alpha)*(l_{t-1} + b_{t-1})
     *   b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}
     * Emits the smoothed level, trend, and the one-step-ahead forecast
-    * (l + b). Same distributed shape as the keyed fold: one hash shuffle on
-    * the key, in-partition sort, O(1) state per key run; the fixed IEEE op
+    * (l + b). Runs on the [[Folds.keyed]] kernel; the fixed IEEE op
     * sequence replays per key in SQL (oracle q146). */
   def holtKeyed(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
                 xCol: String, alpha: Double, beta: Double,
@@ -615,46 +575,27 @@ object Advanced {
                 forecastOut: String = "forecast"): DataFrame = {
     require(alpha > 0 && alpha <= 1 && beta >= 0 && beta <= 1,
       s"alpha in (0,1], beta in [0,1], got ($alpha, $beta)")
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn(xCol, col(xCol).cast(DoubleType))
-      .repartition(parts, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    val schema = sorted.schema
-      .add(levelOut, DoubleType, nullable = false)
-      .add(trendOut, DoubleType, nullable = false)
-      .add(forecastOut, DoubleType, nullable = false)
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex)
-    val xIdx = sorted.schema.fieldIndex(xCol)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
+    Folds.keyed(df, keyCols, orderCols, xCol, "holtKeyed",
+      Seq(levelOut, trendOut, forecastOut).map(_ -> DoubleType)) { () =>
       var l = 0.0; var b = 0.0; var first = true
-      it.map { r =>
-        if (r.isNullAt(xIdx))
-          throw new IllegalArgumentException(
-            s"holtKeyed: null $xCol — filter or impute first")
-        val k = keyIdx.map(r.get)
-        if (k != curKey) { curKey = k; first = true }
-        val x = r.getDouble(xIdx)
+      x => {
         if (first) { l = x; b = 0.0; first = false }
         else {
           val lPrev = l
           l = alpha * x + (1.0 - alpha) * (lPrev + b)
           b = beta * (l - lPrev) + (1.0 - beta) * b
         }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ l :+ b :+ (l + b))
+        Seq(l, b, l + b)
       }
     }
-    spark.createDataFrame(rows, schema)
   }
 
   /** Exponentially weighted moving average per key (pandas
     * `ewm(alpha, adjust=False).mean()` semantics: s_1 = x_1, then
     * s_t = (1-alpha)*s_{t-1} + alpha*x_t) — the standard smoothing /
-    * anomaly-baseline op, expressed through the same distributed keyed
-    * streaming fold as [[linearRecurrenceKeyed]] (one hash shuffle on the
-    * key, O(1) state per key run, bit-exact sequential replay per key —
-    * oracle q144 replays it with a per-key recursive CTE). */
+    * anomaly-baseline op, expressed through [[linearRecurrenceKeyed]]
+    * (bit-exact sequential replay per key — oracle q144 replays it with a
+    * per-key recursive CTE). */
   def ewmaKeyed(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
                 xCol: String, alpha: Double, out: String): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
@@ -665,42 +606,25 @@ object Advanced {
   /** CLAMPED running sum per key (inventory/stock semantics): the
     * balance accumulates deltas but can never drop below `floor` —
     * s_t = max(floor, s_{t−1} + x_t), with s_0 = floor. Non-linear
-    * (the clamp), so it can't ride [[linearRecurrenceKeyed]]; same keyed
-    * streaming fold shape (one hash shuffle, O(1) state), replayed by a
-    * per-key recursive CTE. Emits `<out>` plus `<out>_lost` — how much
-    * of this delta the clamp swallowed (the unmet-demand signal). */
+    * (the clamp), so it can't ride [[linearRecurrenceKeyed]]; runs on the
+    * [[Folds.keyed]] kernel, replayed by a per-key recursive CTE (oracle
+    * q224). Emits `<out>` plus `<out>_lost` — how much of this delta the
+    * clamp swallowed (the unmet-demand signal). */
   def clampedRunningSumKeyed(df: DataFrame, keyCols: Seq[String],
                              orderCols: Seq[String], xCol: String,
                              floor: Double, out: String = "balance")
-      : DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn(xCol, col(xCol).cast(DoubleType))
-      .repartition(parts, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    val schema = sorted.schema
-      .add(out, DoubleType, nullable = false)
-      .add(s"${out}_lost", DoubleType, nullable = false)
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex)
-    val xIdx = sorted.schema.fieldIndex(xCol)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
+      : DataFrame =
+    Folds.keyed(df, keyCols, orderCols, xCol, "clampedRunningSumKeyed",
+      Seq(out -> DoubleType, s"${out}_lost" -> DoubleType)) { () =>
       var s = floor
-      it.map { r =>
-        if (r.isNullAt(xIdx))
-          throw new IllegalArgumentException(
-            s"clampedRunningSumKeyed: null $xCol — filter or impute first")
-        val k = keyIdx.map(r.get)
-        if (k != curKey) { curKey = k; s = floor }
-        val raw = s + r.getDouble(xIdx)
+      x => {
+        val raw = s + x
         val clamped = math.max(floor, raw)
         val lost = clamped - raw
         s = clamped
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ s :+ lost)
+        Seq(s, lost)
       }
     }
-    spark.createDataFrame(rows, schema)
-  }
 
   /** Exponentially weighted mean AND variance per key (the volatility /
     * adaptive-anomaly-band primitive): the exact coupled recursion
@@ -709,45 +633,26 @@ object Advanced {
     *   m_t = (1−α)·m_{t−1} + α·x_t
     *   v_t = (1−α)·(v_{t−1} + α·d_t²)
     * (West's recursive form — pandas `ewm(adjust=False).var(bias=True)`
-    * family). Same distributed keyed streaming fold as [[holtKeyed]]:
-    * one hash shuffle, in-partition sort, O(1) state per key run, every
-    * value a pure function of its series — the q210 oracle replays the
-    * recursion per key. Emits `<out>_mean`, `<out>_var`, `<out>_std`. */
+    * family). Runs on the [[Folds.keyed]] kernel; every value is a pure
+    * function of its series — the q210 oracle replays the recursion per
+    * key. Emits `<out>_mean`, `<out>_var`, `<out>_std`. */
   def ewmVarKeyed(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
                   xCol: String, alpha: Double, out: String = "ewm")
       : DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn(xCol, col(xCol).cast(DoubleType))
-      .repartition(parts, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    val schema = sorted.schema
-      .add(s"${out}_mean", DoubleType, nullable = false)
-      .add(s"${out}_var", DoubleType, nullable = false)
-      .add(s"${out}_std", DoubleType, nullable = false)
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex)
-    val xIdx = sorted.schema.fieldIndex(xCol)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
+    Folds.keyed(df, keyCols, orderCols, xCol, "ewmVarKeyed",
+      Seq("mean", "var", "std").map(n => s"${out}_$n" -> DoubleType)) { () =>
       var m = 0.0; var v = 0.0; var first = true
-      it.map { r =>
-        if (r.isNullAt(xIdx))
-          throw new IllegalArgumentException(
-            s"ewmVarKeyed: null $xCol — filter or impute first")
-        val k = keyIdx.map(r.get)
-        if (k != curKey) { curKey = k; first = true }
-        val x = r.getDouble(xIdx)
+      x => {
         if (first) { m = x; v = 0.0; first = false }
         else {
           val d = x - m
           m = (1.0 - alpha) * m + alpha * x
           v = (1.0 - alpha) * (v + alpha * d * d)
         }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ m :+ v :+ math.sqrt(v))
+        Seq(m, v, math.sqrt(v))
       }
     }
-    spark.createDataFrame(rows, schema)
   }
 
   /** HOLT-WINTERS additive seasonal smoothing per key (triple
@@ -760,9 +665,8 @@ object Advanced {
     * periods, and the closed init makes every value a pure function of
     * the series, replayable by an engine carrying the last m seasonals as
     * a list in a recursive CTE — oracle q167). Emits level, trend,
-    * seasonal, and the one-step forecast l + b + s_{t+1−m}. Same
-    * distributed shape as [[holtKeyed]]: one hash shuffle on the key,
-    * in-partition sort, O(period) state per key run. */
+    * seasonal, and the one-step forecast l + b + s_{t+1−m}. Runs on the
+    * [[Folds.keyed]] kernel with O(period) state per key run. */
   def holtWintersKeyed(df: DataFrame, keyCols: Seq[String],
                        orderCols: Seq[String], xCol: String,
                        alpha: Double, beta: Double, gamma: Double,
@@ -770,32 +674,11 @@ object Advanced {
     require(alpha > 0 && alpha <= 1 && beta >= 0 && beta <= 1 &&
       gamma >= 0 && gamma <= 1 && period >= 2,
       s"alpha in (0,1], beta/gamma in [0,1], period ≥ 2")
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn(xCol, col(xCol).cast(DoubleType))
-      .repartition(parts, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    val schema = sorted.schema
-      .add("level", DoubleType, nullable = false)
-      .add("trend", DoubleType, nullable = false)
-      .add("seasonal", DoubleType, nullable = false)
-      .add("forecast", DoubleType, nullable = false)
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex)
-    val xIdx = sorted.schema.fieldIndex(xCol)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
+    Folds.keyed(df, keyCols, orderCols, xCol, "holtWintersKeyed",
+      Seq("level", "trend", "seasonal", "forecast").map(_ -> DoubleType)) { () =>
       var l = 0.0; var b = 0.0; var first = true
-      var ring: Array[Double] = null; var pos = 0
-      it.map { r =>
-        if (r.isNullAt(xIdx))
-          throw new IllegalArgumentException(
-            s"holtWintersKeyed: null $xCol — filter or impute first")
-        val k = keyIdx.map(r.get)
-        if (k != curKey) {
-          curKey = k; first = true
-          ring = new Array[Double](period); pos = 0
-        }
-        val x = r.getDouble(xIdx)
+      val ring = new Array[Double](period); var pos = 0
+      x => {
         val sOld = ring(pos) // s_{t−m} (0.0 during the first period)
         if (first) { l = x; b = 0.0; first = false }
         else {
@@ -806,12 +689,9 @@ object Advanced {
         val sNew = gamma * (x - l) + (1.0 - gamma) * sOld
         ring(pos) = sNew
         pos = (pos + 1) % period
-        val forecast = l + b + ring(pos) // next step reads s_{t+1−m}
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq :+ l :+ b :+ sNew :+ forecast)
+        Seq(l, b, sNew, l + b + ring(pos)) // the forecast reads s_{t+1−m}
       }
     }
-    spark.createDataFrame(rows, schema)
   }
 
   /** Two-sided CUSUM changepoint detector per key (Page 1954):
@@ -820,11 +700,11 @@ object Advanced {
     * with alarm when either side exceeds `threshold` — the standard
     * drift/shift monitor for metric series (and for data-quality streams:
     * "did the mean doc quality shift after this crawl snapshot?").
-    * Genuinely non-linear state (the max clamp), so it rides the keyed
-    * streaming fold (one hash shuffle + in-partition sort, O(1) state),
-    * NOT a window function; the fixed IEEE op sequence replays per key in
-    * a recursive CTE (oracle q160). NaN inputs propagate NaN from that
-    * point on (both engines agree); nulls throw — filter or impute first. */
+    * Genuinely non-linear state (the max clamp), so it runs on the
+    * [[Folds.keyed]] kernel, NOT a window function; the fixed IEEE op
+    * sequence replays per key in a recursive CTE (oracle q160). NaN inputs
+    * propagate NaN from that point on (both engines agree); nulls throw —
+    * filter or impute first. */
   def cusumKeyed(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
                  xCol: String, target: Double, slack: Double,
                  threshold: Double, posOut: String = "cusum_pos",
@@ -832,34 +712,16 @@ object Advanced {
       : DataFrame = {
     require(slack >= 0 && threshold > 0,
       s"slack ≥ 0, threshold > 0, got ($slack, $threshold)")
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn(xCol, col(xCol).cast(DoubleType))
-      .repartition(parts, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    val schema = sorted.schema
-      .add(posOut, DoubleType, nullable = false)
-      .add(negOut, DoubleType, nullable = false)
-      .add(alarmOut, BooleanType, nullable = false)
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex)
-    val xIdx = sorted.schema.fieldIndex(xCol)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
+    Folds.keyed(df, keyCols, orderCols, xCol, "cusumKeyed",
+      Seq(posOut -> DoubleType, negOut -> DoubleType,
+        alarmOut -> BooleanType)) { () =>
       var sp = 0.0; var sn = 0.0
-      it.map { r =>
-        if (r.isNullAt(xIdx))
-          throw new IllegalArgumentException(
-            s"cusumKeyed: null $xCol — filter or impute first")
-        val k = keyIdx.map(r.get)
-        if (k != curKey) { curKey = k; sp = 0.0; sn = 0.0 }
-        val x = r.getDouble(xIdx)
+      x => {
         sp = math.max(0.0, sp + ((x - target) - slack))
         sn = math.max(0.0, sn + ((target - x) - slack))
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq :+ sp :+ sn :+ (sp > threshold || sn > threshold))
+        Seq(sp, sn, sp > threshold || sn > threshold)
       }
     }
-    spark.createDataFrame(rows, schema)
   }
 
   /** Keyless (whole-table) linear recurrence via a SEGMENTED scan: range

@@ -97,51 +97,33 @@ object Indicators {
   }
 
   /** MACD (fast EMA − slow EMA, plus the signal EMA of that difference
-    * and the histogram) in ONE keyed streaming fold: the three coupled
-    * recurrences share a single hash shuffle + in-partition sort instead
-    * of chaining [[Advanced.ewmaKeyed]] three times (3 shuffles → 1; at
-    * 100 TB the shuffle is the cost, the per-row arithmetic is free).
-    * Seeds match ewmaKeyed's `seedFirst`: f₁ = s₁ = x₁ (so macd₁ = 0)
-    * and sig₁ = macd₁. Per-row op order is pinned to
-    * a·state + b·x / fast − slow / a·sig + b·macd — the oracle's
-    * recursive CTE replays it with the identical double literals. */
+    * and the histogram) in ONE keyed streaming fold on the [[Folds.keyed]]
+    * kernel: the three coupled recurrences share a single hash shuffle +
+    * in-partition sort instead of chaining [[Advanced.ewmaKeyed]] three
+    * times (3 shuffles → 1; at 100 TB the shuffle is the cost, the per-row
+    * arithmetic is free). Seeds match ewmaKeyed's `seedFirst`:
+    * f₁ = s₁ = x₁ (so macd₁ = 0) and sig₁ = macd₁. Per-row op order is
+    * pinned to a·state + b·x / fast − slow / a·sig + b·macd — the oracle's
+    * recursive CTE (q318) replays it with the identical double literals. */
   def macd(df: DataFrame, keyCols: Seq[String], orderCols: Seq[String],
            valueCol: String, nFast: Int = 12, nSlow: Int = 26,
            nSignal: Int = 9): DataFrame = {
     require(nFast >= 1 && nSlow > nFast && nSignal >= 1,
       s"macd($nFast, $nSlow, $nSignal)")
-    val spark = df.sparkSession
     val (bF, bS, bG) =
       (2.0 / (nFast + 1), 2.0 / (nSlow + 1), 2.0 / (nSignal + 1))
     val (aF, aS, aG) = (1.0 - bF, 1.0 - bS, 1.0 - bG)
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.withColumn(valueCol, col(valueCol).cast(DoubleType))
-      .repartition(parts, keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    val schema = sorted.schema
-      .add("macd", DoubleType, nullable = false)
-      .add("macd_signal", DoubleType, nullable = false)
-      .add("macd_hist", DoubleType, nullable = false)
-    val keyIdx = keyCols.map(sorted.schema.fieldIndex)
-    val xIdx = sorted.schema.fieldIndex(valueCol)
-    val rows = sorted.rdd.mapPartitions { it =>
-      var curKey: Seq[Any] = null
+    Folds.keyed(df, keyCols, orderCols, valueCol, "macd",
+      Seq("macd", "macd_signal", "macd_hist").map(_ -> DoubleType)) { () =>
       var f = 0.0; var s = 0.0; var sig = 0.0; var first = true
-      it.map { r =>
-        if (r.isNullAt(xIdx))
-          throw new IllegalArgumentException(
-            s"macd: null $valueCol — filter or impute first")
-        val k = keyIdx.map(r.get)
-        if (k != curKey) { curKey = k; first = true }
-        val x = r.getDouble(xIdx)
+      x => {
         if (first) { f = x; s = x } else { f = aF * f + bF * x; s = aS * s + bS * x }
         val m = f - s
         sig = if (first) m else aG * sig + bG * m
         first = false
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ m :+ sig :+ (m - sig))
+        Seq(m, sig, m - sig)
       }
     }
-    spark.createDataFrame(rows, schema)
   }
 
   /** Running maximum drawdown per key: peak = running max (exact — no

@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.reflect.ClassTag
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -77,62 +78,44 @@ object Stats {
     * where c1/c2 are cumulative counts at each distinct pooled value —
     * D = d_num / (n1·n2) with one final division. Returns one row
     * (n1, n2, d_num, d, ks_stat) with ks_stat = D·√(n1·n2/(n1+n2)).
-    *
-    * Plan: per-value (c1, c2) counts (one shuffle), range-partitioned sort
-    * of the DISTINCT values, O(partitions) partial totals to the driver,
-    * streaming per-partition cumulate — the briefStats/rank-table shape;
-    * no single-partition window, no O(n) buffer. */
+    * Runs on the [[Folds.twoClass]] cumulate (scale argument there); the
+    * group column is compared to `a`/`b` uncast. */
   def ksTest(df: DataFrame, valueCol: String, groupCol: String,
              a: String, b: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val grouped = df
-      .filter(col(groupCol).isin(a, b) && col(valueCol).isNotNull &&
-        !isnan(col(valueCol).cast(DoubleType)))
-      .select(col(groupCol).as("__g"),
-        col(valueCol).cast(DoubleType).as("__x"))
-      .groupBy(col("__x"))
-      .agg(sum(when(col("__g") === a, 1L).otherwise(0L)).as("__c1"),
-        sum(when(col("__g") === b, 1L).otherwise(0L)).as("__c2"))
-      .as[(Double, Long, Long)]
-      // persisted: the range partitioner SAMPLES its child, and the sorted
-      // frame feeds two passes (totals + cumulate)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = grouped
-      .repartitionByRange(parts, col("__x"))
-      .sortWithinPartitions(col("__x"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partTotals = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s1 = 0L; var s2 = 0L
-      it.foreach { case (_, c1, c2) => s1 += c1; s2 += c2 }
-      Iterator((pid, s1, s2))
-    }.collectBounded(1 << 20, "O(P) partition totals").sortBy(_._1)
-    val off1 = partTotals.map(_._2).scanLeft(0L)(_ + _)
-    val off2 = partTotals.map(_._3).scanLeft(0L)(_ + _)
-    val n1 = partTotals.map(_._2).sum
-    val n2 = partTotals.map(_._3).sum
-    val bc = spark.sparkContext.broadcast((off1, off2))
-    val dNum =
-      if (n1 == 0 || n2 == 0) 0L
-      else sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var c1 = bc.value._1(pid); var c2 = bc.value._2(pid)
+    val (n1, n2, bests) =
+      twoGroups(df, valueCol, groupCol, a, b, castGroup = false) { (p, it) =>
+        var c1 = p.c1; var c2 = p.c2
         var best = 0L
         it.foreach { case (_, d1, d2) =>
           c1 += d1; c2 += d2
-          val diff = math.abs(c1 * n2 - c2 * n1)
+          val diff = math.abs(c1 * p.n2 - c2 * p.n1)
           if (diff > best) best = diff
         }
-        Iterator(best)
-      }.fold(0L)(math.max)
-    sorted.unpersist(); grouped.unpersist()
+        best
+      }
+    val dNum = bests.foldLeft(0L)(math.max)
     val d =
       if (n1 == 0 || n2 == 0) Double.NaN
       else dNum.toDouble / (n1.toDouble * n2.toDouble)
     val ks = if (n1 == 0 || n2 == 0) Double.NaN
       else d * math.sqrt(n1.toDouble * n2.toDouble / (n1.toDouble + n2.toDouble))
     Seq((n1, n2, dNum, d, ks)).toDF("n1", "n2", "d_num", "d", "ks_stat")
+  }
+
+  /** [[Folds.twoClass]] over the rows of `groupCol` equal to `a` (class 1)
+    * or `b` (class 2), the group compared as a string unless `castGroup`
+    * is false; scans only when both groups are non-empty. */
+  private def twoGroups[R: ClassTag](df: DataFrame, valueCol: String,
+                                     groupCol: String, a: String, b: String,
+                                     castGroup: Boolean = true)
+                                    (scan: (Folds.PartStart,
+                                      Iterator[(Double, Long, Long)]) => R)
+      : (Long, Long, Array[R]) = {
+    val g = if (castGroup) col(groupCol).cast(StringType) else col(groupCol)
+    Folds.twoClass(df, col(valueCol), col(groupCol).isin(a, b), g,
+      _ === a, _ === b)((n1, n2) => n1 > 0 && n2 > 0)(scan)
   }
 
   /** Pearson chi-square test of independence between two categorical
@@ -2979,63 +2962,31 @@ object Stats {
     * summed over the pooled observations. Everything inside the sum is
     * EXACT integer arithmetic: per-distinct-value group counts, running
     * cumulative counts c1/c2, diff = c1·m − c2·n (the scaled ECDF gap),
-    * and mult·diff² accumulated in DECIMAL(38,0) — the float appears
-    * only in the one final division, with the denominator's IEEE
-    * product order pinned. The unpartitioned cumulative window runs on
-    * the O(distinct values) frame. Returns (n1, n2, t_stat). */
+    * and mult·diff² accumulated in BigInt (diff² alone overflows LONG
+    * past ~2M pooled rows) — the float appears only in the one final
+    * division, with the denominator's IEEE product order pinned. Runs on
+    * the [[Folds.twoClass]] cumulate. Returns (n1, n2, t_stat). */
   def cramerVonMises(df: DataFrame, valueCol: String, groupCol: String,
                      a: String, b: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val v = col(valueCol).cast(DoubleType)
-    // the ksTest range-partitioned cumulate: per-distinct-value counts,
-    // range-sorted; O(P) partition offsets on the driver; each partition
-    // scans once accumulating the EXACT term sum in BigInt (diff² alone
-    // overflows LONG past ~2M pooled rows) — no single-task sort anywhere
-    val grouped = df
-      .filter(col(groupCol).isin(a, b) && v.isNotNull && !isnan(v))
-      .select(col(groupCol).cast(StringType).as("__g"), v.as("__x"))
-      .groupBy(col("__x"))
-      .agg(sum(when(col("__g") === a, 1L).otherwise(0L)).as("__c1"),
-        sum(when(col("__g") === b, 1L).otherwise(0L)).as("__c2"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = grouped
-      .repartitionByRange(parts, col("__x"))
-      .sortWithinPartitions(col("__x"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partTotals = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s1 = 0L; var s2 = 0L
-      it.foreach { case (_, c1, c2) => s1 += c1; s2 += c2 }
-      Iterator((pid, s1, s2))
-    }.collectBounded(1 << 20, "O(P) partition totals").sortBy(_._1)
-    val off1 = partTotals.map(_._2).scanLeft(0L)(_ + _)
-    val off2 = partTotals.map(_._3).scanLeft(0L)(_ + _)
-    val n1 = partTotals.map(_._2).sum
-    val n2 = partTotals.map(_._3).sum
-    val bc = spark.sparkContext.broadcast((off1, off2))
-    val total: BigInt =
-      if (n1 == 0 || n2 == 0) BigInt(0)
-      else sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var c1 = bc.value._1(pid); var c2 = bc.value._2(pid)
-        var acc = BigInt(0)
-        it.foreach { case (_, d1, d2) =>
-          c1 += d1; c2 += d2
-          val diff = BigInt(c1) * n2 - BigInt(c2) * n1
-          acc += diff * diff * (d1 + d2)
-        }
-        Iterator(acc)
-      }.fold(BigInt(0))(_ + _)
-    sorted.unpersist(); grouped.unpersist()
+    val (n1, n2, sums) = twoGroups(df, valueCol, groupCol, a, b) { (p, it) =>
+      var c1 = p.c1; var c2 = p.c2
+      var acc = BigInt(0)
+      it.foreach { case (_, d1, d2) =>
+        c1 += d1; c2 += d2
+        val diff = BigInt(c1) * p.n2 - BigInt(c2) * p.n1
+        acc += diff * diff * (d1 + d2)
+      }
+      acc
+    }
     val t =
       if (n1 == 0 || n2 == 0) null
       else {
         val s = (n1 + n2).toDouble
         // the pinned denominator order the SQL replays: ((N·N)·n)·m
         java.lang.Double.valueOf(
-          total.toDouble / (s * s * n1.toDouble * n2.toDouble))
+          sums.sum.toDouble / (s * s * n1.toDouble * n2.toDouble))
       }
     Seq((n1, n2)).toDF("n1", "n2")
       .withColumn("t_stat", lit(t).cast(DoubleType))
@@ -3719,71 +3670,35 @@ object Stats {
     * "how sure are we it moved"; W₁ says "by how much") — the metric a
     * training-data pipeline tracks across snapshot mixes.
     *
-    * Plan: the [[cramerVonMises]] range-partitioned cumulate — per-value
-    * count frame, range sort, O(P) partition offsets — with one
-    * addition: each partition's LAST value takes its gap from the next
-    * non-empty partition's first value (collected in the same O(P)
-    * pass). Each term's double product runs in a pinned order and is
-    * floor-scaled at 10⁹ into a LONG accumulator, so the per-partition
-    * sums replay exactly in SQL window cumulates. Returns one row
-    * (n1, n2, w1). */
+    * Runs on the [[Folds.twoClass]] cumulate; each partition's LAST value
+    * takes its gap from the next non-empty partition's first value. Each
+    * term's double product runs in a pinned order and is floor-scaled at
+    * 10⁹ into a LONG accumulator, so the per-partition sums replay
+    * exactly in SQL window cumulates. Returns one row (n1, n2, w1). */
   def wasserstein1(df: DataFrame, valueCol: String, groupCol: String,
                    a: String, b: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val v = col(valueCol).cast(DoubleType)
-    val grouped = df
-      .filter(col(groupCol).isin(a, b) && v.isNotNull && !isnan(v))
-      .select(col(groupCol).cast(StringType).as("__g"), v.as("__x"))
-      .groupBy(col("__x"))
-      .agg(sum(when(col("__g") === a, 1L).otherwise(0L)).as("__c1"),
-        sum(when(col("__g") === b, 1L).otherwise(0L)).as("__c2"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = grouped
-      .repartitionByRange(parts, col("__x"))
-      .sortWithinPartitions(col("__x"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partInfo = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s1 = 0L; var s2 = 0L; var first: Option[Double] = None
-      it.foreach { case (x, c1, c2) =>
-        if (first.isEmpty) first = Some(x); s1 += c1; s2 += c2 }
-      Iterator((pid, s1, s2, first))
-    }.collectBounded(1 << 20, "O(P) partition totals").sortBy(_._1)
-    val off1 = partInfo.map(_._2).scanLeft(0L)(_ + _)
-    val off2 = partInfo.map(_._3).scanLeft(0L)(_ + _)
-    val n1 = partInfo.map(_._2).sum
-    val n2 = partInfo.map(_._3).sum
-    val firsts = partInfo.map(_._4)
-    val nextFirst: Array[Option[Double]] = Array.tabulate(firsts.length) {
-      p => firsts.drop(p + 1).collectFirst { case Some(x) => x } }
-    val bc = spark.sparkContext.broadcast((off1, off2, nextFirst))
-    val n1d = n1.toDouble; val n2d = n2.toDouble
-    val acc: Long =
-      if (n1 == 0 || n2 == 0) 0L
-      else sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var c1 = bc.value._1(pid); var c2 = bc.value._2(pid)
-        var s = 0L
-        def term(gap: Double): Long = {
-          val diff = math.abs(c1 * n2 - c2 * n1)
-          math.floor((diff.toDouble * gap) / (n1d * n2d) * 1e9).toLong
-        }
-        var prevX: java.lang.Double = null
-        it.foreach { case (x, d1, d2) =>
-          if (prevX != null) s += term(x - prevX)
-          c1 += d1; c2 += d2
-          prevX = java.lang.Double.valueOf(x)
-        }
-        if (prevX != null)
-          bc.value._3(pid).foreach(nx => s += term(nx - prevX))
-        Iterator(s)
-      }.fold(0L)(_ + _)
-    sorted.unpersist(); grouped.unpersist()
+    val (n1, n2, sums) = twoGroups(df, valueCol, groupCol, a, b) { (p, it) =>
+      var c1 = p.c1; var c2 = p.c2
+      val n1d = p.n1.toDouble; val n2d = p.n2.toDouble
+      var s = 0L
+      def term(gap: Double): Long = {
+        val diff = math.abs(c1 * p.n2 - c2 * p.n1)
+        math.floor((diff.toDouble * gap) / (n1d * n2d) * 1e9).toLong
+      }
+      var prevX: java.lang.Double = null
+      it.foreach { case (x, d1, d2) =>
+        if (prevX != null) s += term(x - prevX)
+        c1 += d1; c2 += d2
+        prevX = java.lang.Double.valueOf(x)
+      }
+      if (prevX != null) p.nextFirst.foreach(nx => s += term(nx - prevX))
+      s
+    }
     val w1: java.lang.Double =
       if (n1 == 0 || n2 == 0) null
-      else java.lang.Double.valueOf(acc.toDouble / 1e9)
+      else java.lang.Double.valueOf(sums.sum.toDouble / 1e9)
     Seq((n1, n2)).toDF("n1", "n2")
       .withColumn("w1", lit(w1).cast(DoubleType))
   }
@@ -3795,73 +3710,43 @@ object Stats {
     * magnitude. Every expectation is a closed form over the SAME sorted
     * cumulate: E|X−Y| = Σ_k (C1_k(n2−C2_k) + C2_k(n1−C1_k))·gap_k /
     * (n1·n2), and the within-group terms replace the cross counts — so
-    * all three ride ONE range-partitioned scan (the [[wasserstein1]]
-    * plan with three floor-scaled LONG accumulators instead of one).
+    * all three ride ONE [[Folds.twoClass]] scan (the [[wasserstein1]]
+    * gaps with three floor-scaled LONG accumulators instead of one).
     * Returns one row (n1, n2, e_xy, e_xx, e_yy, energy). */
   def energyDistance(df: DataFrame, valueCol: String, groupCol: String,
                      a: String, b: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val v = col(valueCol).cast(DoubleType)
-    val grouped = df
-      .filter(col(groupCol).isin(a, b) && v.isNotNull && !isnan(v))
-      .select(col(groupCol).cast(StringType).as("__g"), v.as("__x"))
-      .groupBy(col("__x"))
-      .agg(sum(when(col("__g") === a, 1L).otherwise(0L)).as("__c1"),
-        sum(when(col("__g") === b, 1L).otherwise(0L)).as("__c2"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = grouped
-      .repartitionByRange(parts, col("__x"))
-      .sortWithinPartitions(col("__x"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partInfo = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s1 = 0L; var s2 = 0L; var first: Option[Double] = None
-      it.foreach { case (x, c1, c2) =>
-        if (first.isEmpty) first = Some(x); s1 += c1; s2 += c2 }
-      Iterator((pid, s1, s2, first))
-    }.collectBounded(1 << 20, "O(P) partition totals").sortBy(_._1)
-    val off1 = partInfo.map(_._2).scanLeft(0L)(_ + _)
-    val off2 = partInfo.map(_._3).scanLeft(0L)(_ + _)
-    val n1 = partInfo.map(_._2).sum
-    val n2 = partInfo.map(_._3).sum
-    val firsts = partInfo.map(_._4)
-    val nextFirst: Array[Option[Double]] = Array.tabulate(firsts.length) {
-      p => firsts.drop(p + 1).collectFirst { case Some(x) => x } }
-    val bc = spark.sparkContext.broadcast((off1, off2, nextFirst))
-    val n1d = n1.toDouble; val n2d = n2.toDouble
-    val sums: (Long, Long, Long) =
-      if (n1 == 0 || n2 == 0) (0L, 0L, 0L)
-      else sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var c1 = bc.value._1(pid); var c2 = bc.value._2(pid)
-        var sxy = 0L; var sxx = 0L; var syy = 0L
-        def add(gap: Double): Unit = {
-          // E|X−Y| integrand F1(1−F2)+F2(1−F1); within-group integrands
-          // are 2F(1−F), hence the doubled coefficients
-          val cxy = c1 * (n2 - c2) + c2 * (n1 - c1)
-          sxy += math.floor((cxy.toDouble * gap) / (n1d * n2d) * 1e9).toLong
-          sxx += math.floor(((2L * c1 * (n1 - c1)).toDouble * gap) /
-            (n1d * n1d) * 1e9).toLong
-          syy += math.floor(((2L * c2 * (n2 - c2)).toDouble * gap) /
-            (n2d * n2d) * 1e9).toLong
-        }
-        var prevX: java.lang.Double = null
-        it.foreach { case (x, d1, d2) =>
-          if (prevX != null) add(x - prevX)
-          c1 += d1; c2 += d2
-          prevX = java.lang.Double.valueOf(x)
-        }
-        if (prevX != null) bc.value._3(pid).foreach(nx => add(nx - prevX))
-        Iterator((sxy, sxx, syy))
-      }.fold((0L, 0L, 0L)) { case ((a1, a2, a3), (b1, b2, b3)) =>
-        (a1 + b1, a2 + b2, a3 + b3) }
-    sorted.unpersist(); grouped.unpersist()
+    val (n1, n2, sums) = twoGroups(df, valueCol, groupCol, a, b) { (p, it) =>
+      var c1 = p.c1; var c2 = p.c2
+      val (n1, n2) = (p.n1, p.n2)
+      val n1d = n1.toDouble; val n2d = n2.toDouble
+      var sxy = 0L; var sxx = 0L; var syy = 0L
+      def add(gap: Double): Unit = {
+        // E|X−Y| integrand F1(1−F2)+F2(1−F1); within-group integrands
+        // are 2F(1−F), hence the doubled coefficients
+        val cxy = c1 * (n2 - c2) + c2 * (n1 - c1)
+        sxy += math.floor((cxy.toDouble * gap) / (n1d * n2d) * 1e9).toLong
+        sxx += math.floor(((2L * c1 * (n1 - c1)).toDouble * gap) /
+          (n1d * n1d) * 1e9).toLong
+        syy += math.floor(((2L * c2 * (n2 - c2)).toDouble * gap) /
+          (n2d * n2d) * 1e9).toLong
+      }
+      var prevX: java.lang.Double = null
+      it.foreach { case (x, d1, d2) =>
+        if (prevX != null) add(x - prevX)
+        c1 += d1; c2 += d2
+        prevX = java.lang.Double.valueOf(x)
+      }
+      if (prevX != null) p.nextFirst.foreach(nx => add(nx - prevX))
+      (sxy, sxx, syy)
+    }
     val degenerate = n1 == 0 || n2 == 0
     def d(s: Long): java.lang.Double =
       if (degenerate) null else java.lang.Double.valueOf(s.toDouble / 1e9)
-    val exy = d(sums._1); val exx = d(sums._2); val eyy = d(sums._3)
+    val exy = d(sums.map(_._1).sum)
+    val exx = d(sums.map(_._2).sum)
+    val eyy = d(sums.map(_._3).sum)
     Seq((n1, n2)).toDF("n1", "n2")
       .withColumn("e_xy", lit(exy).cast(DoubleType))
       .withColumn("e_xx", lit(exx).cast(DoubleType))
@@ -4493,9 +4378,7 @@ object Stats {
     * 1/(B(N−B)) makes it the distribution test that actually sees
     * tail drift.
     *
-    * Same scale machinery as cramerVonMises: per-distinct-value
-    * counts, range-partitioned cumulate with O(P) driver offsets, one
-    * scan per partition — no single-task sort. Each term's numerator
+    * Runs on the [[Folds.twoClass]] cumulate. Each term's numerator
     * N·M − n₁·B is an EXACT Long (bounded by n₁·n₂ < 2⁵³ for doubles'
     * sake — fine to ~50M rows per side); the per-term division is one
     * pinned IEEE expression floored to an integer grid (terms are
@@ -4506,56 +4389,28 @@ object Stats {
                        a: String, b: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val v = col(valueCol).cast(DoubleType)
-    val grouped = df
-      .filter(col(groupCol).isin(a, b) && v.isNotNull && !isnan(v))
-      .select(col(groupCol).cast(StringType).as("__g"), v.as("__x"))
-      .groupBy(col("__x"))
-      .agg(sum(when(col("__g") === a, 1L).otherwise(0L)).as("__c1"),
-        sum(when(col("__g") === b, 1L).otherwise(0L)).as("__c2"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = grouped
-      .repartitionByRange(parts, col("__x"))
-      .sortWithinPartitions(col("__x"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partTotals = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s1 = 0L; var s2 = 0L
-      it.foreach { case (_, c1, c2) => s1 += c1; s2 += c2 }
-      Iterator((pid, s1, s2))
-    }.collectBounded(1 << 20, "O(P) partition totals").sortBy(_._1)
-    val off1 = partTotals.map(_._2).scanLeft(0L)(_ + _)
-    val off2 = partTotals.map(_._3).scanLeft(0L)(_ + _)
-    val n1 = partTotals.map(_._2).sum
-    val n2 = partTotals.map(_._3).sum
-    val nTot = n1 + n2
-    val bc = spark.sparkContext.broadcast((off1, off2))
-    val acc: BigInt =
-      if (n1 == 0 || n2 == 0) BigInt(0)
-      else sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var m = bc.value._1(pid) // sample-1 cumulative
-        var o = bc.value._2(pid)
-        var s = BigInt(0)
-        it.foreach { case (_, d1, d2) =>
-          m += d1; o += d2
-          val bCum = m + o
-          if (bCum < nTot) {
-            // pinned term the SQL replays: (num·num·l)/(B·(N−B))
-            val num = (nTot * m - n1 * bCum).toDouble
-            val t = num * num * (d1 + d2).toDouble /
-              (bCum.toDouble * (nTot - bCum).toDouble)
-            s += BigInt(math.floor(t).toLong)
-          }
+    val (n1, n2, sums) = twoGroups(df, valueCol, groupCol, a, b) { (p, it) =>
+      val nTot = p.n1 + p.n2
+      var m = p.c1 // sample-1 cumulative
+      var o = p.c2
+      var s = BigInt(0)
+      it.foreach { case (_, d1, d2) =>
+        m += d1; o += d2
+        val bCum = m + o
+        if (bCum < nTot) {
+          // pinned term the SQL replays: (num·num·l)/(B·(N−B))
+          val num = (nTot * m - p.n1 * bCum).toDouble
+          val t = num * num * (d1 + d2).toDouble /
+            (bCum.toDouble * (nTot - bCum).toDouble)
+          s += BigInt(math.floor(t).toLong)
         }
-        Iterator(s)
-      }.fold(BigInt(0))(_ + _)
-    sorted.unpersist(); grouped.unpersist()
+      }
+      s
+    }
     val a2 =
       if (n1 == 0 || n2 == 0) null
-      else java.lang.Double.valueOf(acc.toDouble /
-        (n1.toDouble * n2.toDouble * nTot.toDouble))
+      else java.lang.Double.valueOf(sums.sum.toDouble /
+        (n1.toDouble * n2.toDouble * (n1 + n2).toDouble))
     Seq((n1, n2)).toDF("n1", "n2")
       .withColumn("a2_stat", lit(a2).cast(DoubleType))
   }
@@ -4567,11 +4422,10 @@ object Stats {
     * together (the standard step-interpolation; P_j = tp/(tp+fp) at
     * the threshold, ΔR_j = pos_j/P).
     *
-    * Same scale machinery as [[andersonDarling2]]: per-distinct-score
-    * (pos, neg) counts, range-partitioned DESCENDING cumulate with
-    * O(P) driver offsets — no single-task sort, no global window.
-    * Each term pos_j·(tp/(tp+fp)) is one pinned IEEE expression of
-    * exact Longs, floor-scaled at 10⁶ and BigInt-summed
+    * Runs on the [[Folds.twoClass]] cumulate, DESCENDING, over
+    * per-distinct-score (pos, neg) counts; a row whose `labelPos` is null
+    * counts as negative. Each term pos_j·(tp/(tp+fp)) is one pinned IEEE
+    * expression of exact Longs, floor-scaled at 10⁶ and BigInt-summed
     * (reduce-order-free; the SQL mirror replays with a HUGEINT sum);
     * the final /P division is pinned. Returns one row
     * (n_pos, n_neg, average_precision). */
@@ -4579,54 +4433,39 @@ object Stats {
                        labelPos: Column): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val v = col(scoreCol).cast(DoubleType)
-    val grouped = df
-      .filter(v.isNotNull && !isnan(v))
-      .select(v.as("__x"), when(labelPos, 1L).otherwise(0L).as("__y"))
-      .groupBy(col("__x"))
-      .agg(sum(col("__y")).as("__p"),
-        sum(lit(1L) - col("__y")).as("__q"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = grouped
-      .repartitionByRange(parts, col("__x").desc)
-      .sortWithinPartitions(col("__x").desc)
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partTotals = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s1 = 0L; var s2 = 0L
-      it.foreach { case (_, p, q) => s1 += p; s2 += q }
-      Iterator((pid, s1, s2))
-    }.collectBounded(1 << 20, "O(P) partition totals").sortBy(_._1)
-    val offP = partTotals.map(_._2).scanLeft(0L)(_ + _)
-    val offQ = partTotals.map(_._3).scanLeft(0L)(_ + _)
-    val nPos = partTotals.map(_._2).sum
-    val nNeg = partTotals.map(_._3).sum
-    val bc = spark.sparkContext.broadcast((offP, offQ))
-    val acc: BigInt =
-      if (nPos == 0L) BigInt(0)
-      else sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var tp = bc.value._1(pid); var fp = bc.value._2(pid)
-        var s = BigInt(0)
-        it.foreach { case (_, p, q) =>
-          tp += p; fp += q
-          if (p > 0L) {
-            // pinned term the SQL replays: pos·(tp/(tp+fp))
-            val t = p.toDouble * (tp.toDouble / (tp + fp).toDouble)
-            s += BigInt(math.floor(t * 1e6).toLong)
-          }
+    val (nPos, nNeg, sums) = scoreSweep(df, scoreCol, labelPos)(
+      (nPos, _) => nPos > 0L) { (st, it) =>
+      var tp = st.c1; var fp = st.c2
+      var s = BigInt(0)
+      it.foreach { case (_, p, q) =>
+        tp += p; fp += q
+        if (p > 0L) {
+          // pinned term the SQL replays: pos·(tp/(tp+fp))
+          val t = p.toDouble * (tp.toDouble / (tp + fp).toDouble)
+          s += BigInt(math.floor(t * 1e6).toLong)
         }
-        Iterator(s)
-      }.fold(BigInt(0))(_ + _)
-    sorted.unpersist(); grouped.unpersist()
+      }
+      s
+    }
     val ap =
       if (nPos == 0L) null
       else java.lang.Double.valueOf(
-        acc.toDouble / 1e6 / nPos.toDouble)
+        sums.sum.toDouble / 1e6 / nPos.toDouble)
     Seq((nPos, nNeg)).toDF("n_pos", "n_neg")
       .withColumn("average_precision", lit(ap).cast(DoubleType))
   }
+
+  /** [[Folds.twoClass]] over scores, highest first: class 1 = `labelPos`,
+    * class 2 = every other row (a null label counts as negative). */
+  private def scoreSweep[R: ClassTag](df: DataFrame, scoreCol: String,
+                                      labelPos: Column)
+                                     (scanWhen: (Long, Long) => Boolean)
+                                     (scan: (Folds.PartStart,
+                                       Iterator[(Double, Long, Long)]) => R)
+      : (Long, Long, Array[R]) =
+    Folds.twoClass(df, col(scoreCol), lit(true),
+      coalesce(labelPos, lit(false)), pos => pos, pos => !pos,
+      descending = true)(scanWhen)(scan)
 
   /** JONCKHEERE–TERPSTRA ORDERED-TREND TEST — does the value shift
     * monotonically across ORDERED groups (dose-response where
@@ -5233,68 +5072,39 @@ object Stats {
     * engines; ties break to the HIGHEST threshold (the more conservative
     * classifier). J itself is one pinned division at the end.
     *
-    * Plan (the [[andersonDarling2]] shape): one keyed reduction to the
-    * per-distinct-score (pos, neg) frame, a DESCENDING range-partitioned
-    * cumulate with O(P) partition offsets — no single-task sort — and a
-    * per-partition best folded over O(P) candidates on the driver
-    * (BigInt cross-products, so counts past 3·10⁹ stay exact). Returns
-    * one row: (n_pos, n_neg, threshold, tp, fp, fn, tn, sensitivity,
-    * specificity, youden_j); nulls when a class is empty. */
+    * Runs on the [[Folds.twoClass]] cumulate, DESCENDING, over
+    * per-distinct-score (pos, neg) counts, with a per-partition best
+    * folded over O(P) candidates on the driver (BigInt cross-products, so
+    * counts past 3·10⁹ stay exact). Returns one row: (n_pos, n_neg,
+    * threshold, tp, fp, fn, tn, sensitivity, specificity, youden_j);
+    * nulls when a class is empty. */
   def youdenThreshold(df: DataFrame, scoreCol: String,
                       labelPos: Column): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val v = col(scoreCol).cast(DoubleType)
-    val grouped = df
-      .filter(v.isNotNull && !isnan(v))
-      .select(v.as("__x"), when(labelPos, 1L).otherwise(0L).as("__y"))
-      .groupBy(col("__x"))
-      .agg(sum(col("__y")).as("__p"), sum(lit(1L) - col("__y")).as("__q"))
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = grouped
-      .repartitionByRange(parts, col("__x").desc)
-      .sortWithinPartitions(col("__x").desc)
-      .as[(Double, Long, Long)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partTotals = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s1 = 0L; var s2 = 0L
-      it.foreach { case (_, p, q) => s1 += p; s2 += q }
-      Iterator((pid, s1, s2))
-    }.collectBounded(1 << 20, "O(P) partition totals").sortBy(_._1)
-    val offP = partTotals.map(_._2).scanLeft(0L)(_ + _)
-    val offQ = partTotals.map(_._3).scanLeft(0L)(_ + _)
-    val nPos = partTotals.map(_._2).sum
-    val nNeg = partTotals.map(_._3).sum
-    val out: Option[(Double, Long, Long)] =
-      if (nPos == 0L || nNeg == 0L) None
-      else {
-        val bc = spark.sparkContext.broadcast((offP, offQ))
-        val bP = BigInt(nPos); val bN = BigInt(nNeg)
-        // per-partition best: scanning thresholds DESCENDING, strict >
-        // keeps the first (= highest-threshold) maximizer
-        val bests = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-          var tp = bc.value._1(pid); var fp = bc.value._2(pid)
-          var bestJ: BigInt = null
-          var bestV = 0.0; var bestTp = 0L; var bestFp = 0L
-          it.foreach { case (x, p, q) =>
-            tp += p; fp += q
-            val j = BigInt(tp) * bN - BigInt(fp) * bP
-            if (bestJ == null || j > bestJ) {
-              bestJ = j; bestV = x; bestTp = tp; bestFp = fp
-            }
-          }
-          if (bestJ == null) Iterator.empty
-          else Iterator((pid, bestJ, bestV, bestTp, bestFp))
-        }.collectBounded(1 << 20, "O(P) per-partition maxima").sortBy(_._1)
-        // pid order = threshold-descending order: strict > keeps the
-        // highest-threshold global maximizer on ties
-        var g: (Int, BigInt, Double, Long, Long) = null
-        bests.foreach { b => if (g == null || b._2 > g._2) g = b }
-        Some((g._3, g._4, g._5))
+    // per-partition best: scanning thresholds DESCENDING, strict >
+    // keeps the first (= highest-threshold) maximizer
+    val (nPos, nNeg, bests) = scoreSweep(df, scoreCol, labelPos)(
+      (nPos, nNeg) => nPos > 0L && nNeg > 0L) { (st, it) =>
+      val bP = BigInt(st.n1); val bN = BigInt(st.n2)
+      var tp = st.c1; var fp = st.c2
+      var bestJ: BigInt = null
+      var bestV = 0.0; var bestTp = 0L; var bestFp = 0L
+      it.foreach { case (x, p, q) =>
+        tp += p; fp += q
+        val j = BigInt(tp) * bN - BigInt(fp) * bP
+        if (bestJ == null || j > bestJ) {
+          bestJ = j; bestV = x; bestTp = tp; bestFp = fp
+        }
       }
-    sorted.unpersist(); grouped.unpersist()
+      Option(bestJ).map(j => (j, bestV, bestTp, bestFp))
+    }
+    // partition order = threshold-descending order: strict > keeps the
+    // highest-threshold global maximizer on ties
+    val out: Option[(Double, Long, Long)] = bests.flatten
+      .foldLeft(Option.empty[(BigInt, Double, Long, Long)]) { (g, b) =>
+        if (g.isEmpty || b._1 > g.get._1) Some(b) else g }
+      .map { case (_, v, tp, fp) => (v, tp, fp) }
     def jl(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
     def jd(x: Double): java.lang.Double = java.lang.Double.valueOf(x)
     val (thr, tp, fp) = out match {
@@ -5356,57 +5166,73 @@ object Stats {
         fs(col("__x") * col("__x") * col("__x"), 4).as("__s3"),
         fs(col("__x") * col("__x") * col("__x") * col("__x"), quarticDigits)
           .as("__s4"))
-    val nD = col("n").cast(DoubleType)
-    val mu = col("__s1") / nD
-    val m2 = col("__s2") / nD - mu * mu
-    val m3 = col("__s3") / nD - lit(3.0) * mu * (col("__s2") / nD) +
-      lit(2.0) * mu * mu * mu
-    val m4 = col("__s4") / nD - lit(4.0) * mu * (col("__s3") / nD) +
-      lit(6.0) * mu * mu * (col("__s2") / nD) - lit(3.0) * mu * mu * mu * mu
-    val g1 = m3 / (m2 * sqrt(m2))
-    val b2 = m4 / (m2 * m2)
-    // --- skewness transform (D'Agostino 1970) ---
-    val yS = g1 * sqrt((nD + lit(1.0)) * (nD + lit(3.0)) /
-      (lit(6.0) * (nD - lit(2.0))))
-    val beta2 = lit(3.0) * (nD * nD + lit(27.0) * nD - lit(70.0)) *
-      (nD + lit(1.0)) * (nD + lit(3.0)) /
-      ((nD - lit(2.0)) * (nD + lit(5.0)) * (nD + lit(7.0)) *
-        (nD + lit(9.0)))
-    val w2 = sqrt(lit(2.0) * (beta2 - lit(1.0))) - lit(1.0)
-    val deltaS = lit(1.0) / sqrt(log(sqrt(w2)))
-    val alphaS = sqrt(lit(2.0) / (w2 - lit(1.0)))
-    val ya = yS / alphaS
-    val zSkew = deltaS * log(ya + sqrt(ya * ya + lit(1.0)))
-    // --- kurtosis transform (Anscombe–Glynn 1983) ---
-    val eb2 = lit(3.0) * (nD - lit(1.0)) / (nD + lit(1.0))
-    val vb2 = lit(24.0) * nD * (nD - lit(2.0)) * (nD - lit(3.0)) /
-      ((nD + lit(1.0)) * (nD + lit(1.0)) * (nD + lit(3.0)) *
-        (nD + lit(5.0)))
-    val xStd = (b2 - eb2) / sqrt(vb2)
-    val sqB1 = lit(6.0) * (nD * nD - lit(5.0) * nD + lit(2.0)) /
-      ((nD + lit(7.0)) * (nD + lit(9.0))) *
-      sqrt(lit(6.0) * (nD + lit(3.0)) * (nD + lit(5.0)) /
-        (nD * (nD - lit(2.0)) * (nD - lit(3.0))))
-    val aG = lit(6.0) + lit(8.0) / sqB1 *
-      (lit(2.0) / sqB1 + sqrt(lit(1.0) + lit(4.0) / (sqB1 * sqB1)))
-    val tCb = (lit(1.0) - lit(2.0) / aG) /
-      (lit(1.0) + xStd * sqrt(lit(2.0) / (aG - lit(4.0))))
-    // pinned cube root: sign(t)·exp(ln(|t|)/3); t = 0 → 0
-    val cb = when(tCb === 0.0, lit(0.0)).otherwise(
-      signum(tCb) * exp(log(abs(tCb)) / lit(3.0)))
-    val zKurt = ((lit(1.0) - lit(2.0) / (lit(9.0) * aG)) - cb) /
-      sqrt(lit(2.0) / (lit(9.0) * aG))
-    // both z's ride through exp/ln, whose last ulp is NOT pinned across
-    // engine libms (measured: z_kurt off by 1 ulp at sf0.01) — settle
-    // each on a 10⁻⁹ grid before the squares, the floor-scale doctrine
-    val zS = floor(zSkew * lit(1e9)) / lit(1e9)
-    val zK = floor(zKurt * lit(1e9)) / lit(1e9)
+    // One Project per dependency level: a non-cheap value read more than
+    // once further down is a column of the next level, so CollapseProject
+    // keeps it computed once instead of inlining its tree into every
+    // reader (fully inlined, the aggregate's generated class did not
+    // compile and whole-stage codegen fell back to interpreted). The
+    // arithmetic per value is unchanged.
+    val (nD, mu) = (col("__nD"), col("__mu"))
+    val (e2, e3, e4) = (col("__e2"), col("__e3"), col("__e4"))
+    val (m2, m3, m4) = (col("__m2"), col("__m3"), col("__m4"))
+    val (g1, b2) = (col("__g1"), col("__b2"))
+    val (beta2, eb2, vb2, sqB1) =
+      (col("__beta2"), col("__eb2"), col("__vb2"), col("__sqB1"))
+    val (w2, aG, ya, tCb, cb) =
+      (col("__w2"), col("__aG"), col("__ya"), col("__tCb"), col("__cb"))
+    val (zS, zK) = (col("__zS"), col("__zK"))
     val gate = col("n") >= 20L && m2 > 0.0
-    agg.select(col(groupCol), col("n"),
-      when(gate, g1).as("skewness"),
-      when(gate, b2).as("kurtosis"),
-      when(gate, zS).as("z_skew"),
-      when(gate, zK).as("z_kurt"),
-      when(gate, zS * zS + zK * zK).as("k2"))
+    val out = Seq(
+      Seq("__nD" -> col("n").cast(DoubleType)),
+      Seq("__mu" -> col("__s1") / nD, "__e2" -> col("__s2") / nD,
+        "__e3" -> col("__s3") / nD, "__e4" -> col("__s4") / nD),
+      Seq("__m2" -> (e2 - mu * mu),
+        "__m3" -> (e3 - lit(3.0) * mu * e2 + lit(2.0) * mu * mu * mu),
+        "__m4" -> (e4 - lit(4.0) * mu * e3 + lit(6.0) * mu * mu * e2 -
+          lit(3.0) * mu * mu * mu * mu)),
+      // gated at n ≥ 20 and m2 > 0: below the gate the transforms' own
+      // preconditions fail (a zero divisor throws under ANSI), so a gated
+      // group carries nulls from here on and every output is null
+      Seq("__nD", "__m2", "__m3", "__m4").map(k => k -> when(gate, col(k))),
+      Seq("__g1" -> m3 / (m2 * sqrt(m2)), "__b2" -> m4 / (m2 * m2),
+        // --- skewness transform (D'Agostino 1970), n-only terms ---
+        "__beta2" -> lit(3.0) * (nD * nD + lit(27.0) * nD - lit(70.0)) *
+          (nD + lit(1.0)) * (nD + lit(3.0)) /
+          ((nD - lit(2.0)) * (nD + lit(5.0)) * (nD + lit(7.0)) *
+            (nD + lit(9.0))),
+        // --- kurtosis transform (Anscombe–Glynn 1983), n-only terms ---
+        "__eb2" -> lit(3.0) * (nD - lit(1.0)) / (nD + lit(1.0)),
+        "__vb2" -> lit(24.0) * nD * (nD - lit(2.0)) * (nD - lit(3.0)) /
+          ((nD + lit(1.0)) * (nD + lit(1.0)) * (nD + lit(3.0)) *
+            (nD + lit(5.0))),
+        "__sqB1" -> lit(6.0) * (nD * nD - lit(5.0) * nD + lit(2.0)) /
+          ((nD + lit(7.0)) * (nD + lit(9.0))) *
+          sqrt(lit(6.0) * (nD + lit(3.0)) * (nD + lit(5.0)) /
+            (nD * (nD - lit(2.0)) * (nD - lit(3.0))))),
+      Seq("__yS" -> g1 * sqrt((nD + lit(1.0)) * (nD + lit(3.0)) /
+          (lit(6.0) * (nD - lit(2.0)))),
+        "__w2" -> (sqrt(lit(2.0) * (beta2 - lit(1.0))) - lit(1.0)),
+        "__xStd" -> (b2 - eb2) / sqrt(vb2),
+        "__aG" -> (lit(6.0) + lit(8.0) / sqB1 *
+          (lit(2.0) / sqB1 + sqrt(lit(1.0) + lit(4.0) / (sqB1 * sqB1))))),
+      // ya = yS / alphaS
+      Seq("__ya" -> col("__yS") / sqrt(lit(2.0) / (w2 - lit(1.0))),
+        "__tCb" -> (lit(1.0) - lit(2.0) / aG) /
+          (lit(1.0) + col("__xStd") * sqrt(lit(2.0) / (aG - lit(4.0))))),
+      // pinned cube root: sign(t)·exp(ln(|t|)/3); t = 0 → 0
+      Seq("__cb" -> when(tCb === 0.0, lit(0.0)).otherwise(
+          signum(tCb) * exp(log(abs(tCb)) / lit(3.0)))),
+      // both z's ride through exp/ln, whose last ulp is NOT pinned across
+      // engine libms (measured: z_kurt off by 1 ulp at sf0.01) — settle
+      // each on a 10⁻⁹ grid before the squares, the floor-scale doctrine;
+      // z_skew = deltaS·ln(ya + √(ya² + 1)) with deltaS = 1/√ln√w2
+      Seq("__zS" -> floor(lit(1.0) / sqrt(log(sqrt(w2))) *
+          log(ya + sqrt(ya * ya + lit(1.0))) * lit(1e9)) / lit(1e9),
+        "__zK" -> floor(((lit(1.0) - lit(2.0) / (lit(9.0) * aG)) - cb) /
+          sqrt(lit(2.0) / (lit(9.0) * aG)) * lit(1e9)) / lit(1e9))
+    ).foldLeft(agg)((df, level) => df.withColumns(level.toMap))
+    out.select(col(groupCol), col("n"), g1.as("skewness"),
+      b2.as("kurtosis"), zS.as("z_skew"), zK.as("z_kurt"),
+      (zS * zS + zK * zK).as("k2"))
   }
 }

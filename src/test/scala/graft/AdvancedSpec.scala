@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Advanced
@@ -484,20 +485,42 @@ class AdvancedSpec extends SparkSuite {
     assert(e.getMessage.contains("overflowed"))
   }
 
-  test("linearRecurrenceKeyed: struct key with nested array refuses") {
-    val df = Seq((Seq(1, 2), "a", 1L, 1.0), (Seq(1, 2), "a", 2L, 2.0))
+  test("keyed folds: struct key with nested array or binary key refuses") {
+    // key runs are detected by Seq equality, which compares array-backed
+    // values by reference: such a key would restart the state on every
+    // row, so every operator on the keyed fold kernel refuses it
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "linearRecurrenceKeyed" -> (df =>
+        Advanced.linearRecurrenceKeyed(df, Seq("k"), Seq("id"), "x", 0.5, "out")),
+      "holtKeyed" -> (df =>
+        Advanced.holtKeyed(df, Seq("k"), Seq("id"), "x", 0.5, 0.5)),
+      "clampedRunningSumKeyed" -> (df =>
+        Advanced.clampedRunningSumKeyed(df, Seq("k"), Seq("id"), "x", 0.0)),
+      "ewmVarKeyed" -> (df =>
+        Advanced.ewmVarKeyed(df, Seq("k"), Seq("id"), "x", 0.5)),
+      "holtWintersKeyed" -> (df =>
+        Advanced.holtWintersKeyed(df, Seq("k"), Seq("id"), "x", 0.5, 0.5, 0.5, 2)),
+      "cusumKeyed" -> (df =>
+        Advanced.cusumKeyed(df, Seq("k"), Seq("id"), "x", 0.0, 0.0, 1.0)),
+      "macd" -> (df =>
+        graft.ops.Indicators.macd(df, Seq("k"), Seq("id"), "x")))
+    val base = Seq((Seq(1, 2), "a", 1L, 1.0), (Seq(1, 2), "a", 2L, 2.0))
       .toDF("arr", "s", "id", "x")
-      .select(struct(col("arr"), col("s")).as("k"), col("id"), col("x"))
-    val e = intercept[IllegalArgumentException] {
-      Advanced.linearRecurrenceKeyed(df, Seq("k"), Seq("id"), "x", 0.5, "out")
+    val badKeys = Seq(
+      "struct<array>" -> base.select(struct(col("arr"), col("s")).as("k"),
+        col("id"), col("x")),
+      "binary" -> base.select(col("s").cast("binary").as("k"), col("id"),
+        col("x")))
+    for ((name, op) <- ops; (kind, df) <- badKeys) {
+      val e = intercept[IllegalArgumentException](op(df))
+      assert(e.getMessage.contains(s"$name: key column 'k'") &&
+        e.getMessage.contains("array-backed"), s"$name/$kind: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("array-backed"))
     // struct of scalars is fine
     val ok = Seq(("a", 1, 1L, 1.0), ("a", 1, 2L, 2.0))
       .toDF("s", "i", "id", "x")
       .select(struct(col("s"), col("i")).as("k"), col("id"), col("x"))
-    assert(Advanced.linearRecurrenceKeyed(ok, Seq("k"), Seq("id"), "x", 0.5, "out")
-      .count() == 2)
+    for ((name, op) <- ops) assert(op(ok).count() == 2, name)
   }
 
   test("loessSmooth: series above maxGroupRows refuses loudly") {

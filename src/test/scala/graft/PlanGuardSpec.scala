@@ -500,6 +500,28 @@ class PlanGuardSpec extends SparkSuite {
       case (p, i, l) if banned.exists(l.contains) => s"$p:$i: ${l.trim}"
     }
     assert(offenders.isEmpty, "retired gate knobs:\n" + offenders.mkString("\n"))
+    // the engine reads no environment: only the harness mains do
+    val engine = Set("ops", "llm", "functions", "plans", "sources",
+      "streaming", "japi")
+    val envReads = hits.collect {
+      case (p, i, l) if engine.exists(d => p.toString.contains(s"/graft/$d/")) &&
+        (l.contains("sys.env") || l.contains("System.getenv")) =>
+        s"$p:$i: ${l.trim}"
+    }
+    assert(envReads.isEmpty, "env reads in the engine:\n" + envReads.mkString("\n"))
+  }
+
+  test("streamed folds: one kernel per shape") {
+    // the keyed fold's key-run loop and the two-class cumulate's count
+    // frame live in graft.ops.Folds only; operators call the kernels
+    val hits = mainSourceLines()
+    for (pattern <- Seq("var curKey", ".as[(Double, Long, Long)]")) {
+      val at = hits.collect {
+        case (p, i, l) if l.contains(pattern) => s"${p.getFileName}:$i"
+      }
+      assert(at.size == 1 && at.head.startsWith("Folds.scala:"),
+        s"'$pattern' outside its kernel: ${at.mkString(", ")}")
+    }
   }
 
   test("funnel: executed stages grow LINEARLY in stage count " +
@@ -644,12 +666,13 @@ class PlanGuardSpec extends SparkSuite {
     guard("q410_mood_median", Bound))
   test("q411 grubbs: one moment row only")(guard("q411_grubbs", Bound))
   // (q412 anderson-darling is deliberately absent: its cumulate is the
-  // cramerVonMises RDD range-partition machinery — no Window/SinglePartition
-  // node exists to guard; the no-single-task-sort property is structural.)
+  // Folds.twoClass kernel's RDD range-partition scan — no Window/
+  // SinglePartition node exists to guard; the no-single-task-sort
+  // property is structural.)
   test("q413 jonckheere: value-grid windows + O(grid·k) pair frame")(
     guard("q413_jonckheere", Bound))
   // (q414 average precision is deliberately absent: like q412, its
-  // cumulate is the range-partitioned RDD machinery — structural.)
+  // cumulate is the Folds.twoClass kernel's RDD scan — structural.)
   test("q415 seasonal strength: keyed decompose + broadcast mean frame")(
     guard("q415_seasonal_strength", Bound))
   test("q416 bipartite projection: keyed wedge join + bounded top-k")(
@@ -663,7 +686,7 @@ class PlanGuardSpec extends SparkSuite {
   test("q420 theil decomposition: O(groups) frame through the window")(
     guard("q420_theil_decomposition", Bound))
   // (q421 youden threshold is deliberately absent: like q412/q414, its
-  // cumulate is the range-partitioned RDD machinery — structural.)
+  // cumulate is the Folds.twoClass kernel's RDD scan — structural.)
   test("q422 target encode: keyed moments + 1-row broadcast global")(
     guard("q422_target_encode", Bound))
   test("q423 dagostino k2: one keyed moment pass only")(

@@ -147,4 +147,33 @@ class StatsTier21Spec extends SparkSuite {
     val r = Stats.dagostinoK2(df, "v", "g").collect()(0)
     assert(r.getLong(1) == 19L && r.isNullAt(4) && r.isNullAt(6))
   }
+
+  test("dagostinoK2: a constant group (m2 = 0) gates to null, no zero divide") {
+    import spark.implicits._
+    val df = ((1 to 25).map(_ => ("flat", 5.0)) ++
+      (1 to 25).map(i => ("ramp", i.toDouble))).toDF("g", "v")
+    val out = Stats.dagostinoK2(df, "v", "g").collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert((2 to 6).forall(out("flat").isNullAt), out("flat"))
+    assert((2 to 6).forall(i => !out("ramp").isNullAt(i)), out("ramp"))
+  }
+
+  test("dagostinoK2 runs under whole-stage codegen with no fallback") {
+    // with the fallback off, a generated class that does not compile
+    // throws instead of running the plan interpreted
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val df = (1 to 200).map(i => (s"g${i % 4}", rnd.nextGaussian()))
+      .toDF("g", "v")
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val out = Stats.dagostinoK2(df, "v", "g").collect()
+      assert(out.length == 4 && out.forall(r => !r.isNullAt(6)))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
