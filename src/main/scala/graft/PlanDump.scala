@@ -1,8 +1,9 @@
 package graft
 import java.io.{File, PrintWriter}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{Observation, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftSqlInternal, Observation, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable
@@ -15,8 +16,12 @@ import scala.collection.mutable
   *  - the executed plan of every inner SQL action: operators that
   *    materialize eagerly (persist counts, bounded readouts, checkpointed
   *    rounds) hide their real plans behind a Scan ExistingRDD at the top;
-  *  - one row per Spark job: id, wall, `stage#tasks`, first `graft.` call
-  *    site, so an eager multi-job operator's expensive phase is attributable;
+  *  - one row per Spark job: id, wall, its SQL execution id and the
+  *    action that execution belongs to (an inner action's number, the
+  *    final write, or the execution's description), the first `graft.`
+  *    call site — the job's own, or for jobs AQE submits from its own
+  *    threads the one the action was called from — and `stage#tasks`, so
+  *    an eager multi-job operator's expensive phase is attributable;
   * and prints one summary line (rows, wall, jobs) per query.
   *
   *   sbt "runMain graft.PlanDump q149_pagerank,q332_hits before [sfDir]"
@@ -75,7 +80,8 @@ object PlanDump {
             w.println(s"\n# == inner action $i: $what ==")
             w.println(plan)
           }
-          w.println(s"\n# == jobs (${jobs.size}): id, wall, stage#tasks, call site ==")
+          w.println(s"\n# == jobs (${jobs.size}): id, wall, execution, action, " +
+            "call site, stage#tasks ==")
           jobs.foreach(j => w.println(j))
         } finally w.close()
         spark.catalog.clearCache()
@@ -86,15 +92,31 @@ object PlanDump {
 
   private val DrainProp = "graft.plandump.drain"
 
+  /** The first `graft.` frame of a call-site dump, "" when none. */
+  private def graftSite(details: String): String =
+    details.linesIterator
+      .find(l => l.contains("graft.") && !l.contains("graft.PlanDump"))
+      .map(_.trim.stripPrefix("at ")).getOrElse("")
+
+  /** A SQL execution as its start event describes it. */
+  private final case class Exec(root: Option[Long], description: String,
+                                site: String)
+
+  /** A job as its start event describes it. */
+  private final case class Job(start: Long, exec: Option[Long],
+                               stages: String, site: String)
+
   /** SQL actions (name, executed plan) and job rows delivered by the
     * listener bus since the last [[take]]. */
   private final class Recorder(spark: SparkSession)
       extends SparkListener with QueryExecutionListener {
     private val sc = spark.sparkContext
     private val lock = new Object
-    private val actions = mutable.ArrayBuffer[(String, String)]()
-    private val jobs = mutable.LinkedHashMap[Int, (Long, String)]()
-    private val ends = mutable.Map[Int, Long]()
+    private val actions = mutable.ArrayBuffer[(QueryExecution, String, String)]()
+    private val execs = mutable.Map[Long, Exec]()
+    private val execQe = mutable.Map[Long, QueryExecution]()
+    private val jobs = mutable.LinkedHashMap[Int, Job]()
+    private val jobEnds = mutable.Map[Int, Long]()
     private var posted = 0L
     private var drained = 0L
     sc.addSparkListener(this)
@@ -102,13 +124,25 @@ object PlanDump {
 
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
       val plan = qe.executedPlan.toString
-      lock.synchronized(actions += (s"$funcName ${durationNs / 1000000}ms" -> plan))
+      lock.synchronized(actions += ((qe, s"$funcName ${durationNs / 1000000}ms", plan)))
     }
 
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
 
+    override def onOtherEvent(ev: SparkListenerEvent): Unit = ev match {
+      case s: SparkListenerSQLExecutionStart => lock.synchronized {
+        execs(s.executionId) = Exec(s.rootExecutionId.filter(_ != s.executionId),
+          s.description, graftSite(s.details))
+      }
+      case e: SparkListenerSQLExecutionEnd =>
+        Option(GraftSqlInternal.executionEndQe(e))
+          .foreach(qe => lock.synchronized(execQe(e.executionId) = qe))
+      case _ => ()
+    }
+
     override def onJobStart(js: SparkListenerJobStart): Unit = lock.synchronized {
-      Option(js.properties).flatMap(p => Option(p.getProperty(DrainProp))) match {
+      val props = Option(js.properties)
+      props.flatMap(p => Option(p.getProperty(DrainProp))) match {
         case Some(id) =>
           drained = math.max(drained, id.toLong)
           lock.notifyAll()
@@ -117,15 +151,16 @@ object PlanDump {
             .map(si => s"${si.name.takeWhile(_ != ' ')}#${si.numTasks}").mkString(",")
           // first graft frame of the terminal stage's call site = the
           // operator line that scheduled the job
-          val site = js.stageInfos.lastOption.flatMap(_.details.linesIterator
-              .find(l => l.contains("graft.") && !l.contains("graft.PlanDump")))
-            .map(_.trim.stripPrefix("at ")).getOrElse("")
-          jobs(js.jobId) = (js.time, s"[$stages] $site")
+          val site = js.stageInfos.lastOption.map(si => graftSite(si.details))
+            .getOrElse("")
+          val exec = props.flatMap(p =>
+            Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+          jobs(js.jobId) = Job(js.time, exec, stages, site)
       }
     }
 
     override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      lock.synchronized(if (jobs.contains(je.jobId)) ends(je.jobId) = je.time)
+      lock.synchronized(if (jobs.contains(je.jobId)) jobEnds(je.jobId) = je.time)
 
     /** Returns once the bus has delivered every event posted so far. A job
       * over zero partitions posts its start without running anything, and
@@ -144,14 +179,28 @@ object PlanDump {
       }
     }
 
-    /** The recorded actions and formatted job rows; clears both. */
+    /** The recorded actions and formatted job rows; clears both. A job
+      * belongs to the action its SQL execution ran, else to the action
+      * of that execution's root (a nested execution). */
     def take(): (Seq[(String, String)], Seq[String]) = lock.synchronized {
-      val rows = jobs.toSeq.map { case (id, (t0, what)) =>
-        val wall = ends.get(id).map(t1 => (t1 - t0) / 1e3).getOrElse(-1.0)
-        f"  job $id%4d $wall%7.2fs  ${what.take(140)}"
+      val actionOf = execQe.flatMap { case (id, qe) =>
+        Some(actions.indexWhere(_._1 eq qe)).filter(_ >= 0).map(id -> _)
       }
-      val out = (actions.toSeq, rows)
-      actions.clear(); jobs.clear(); ends.clear()
+      def action(id: Long): String =
+        actionOf.get(id).orElse(execs.get(id).flatMap(_.root).flatMap(actionOf.get)) match {
+          case Some(i) if i == actions.size - 1 => "final write"
+          case Some(i) => s"inner action $i"
+          case None => execs.get(id).map(_.description).getOrElse("unknown")
+        }
+      val rows = jobs.toSeq.map { case (id, j) =>
+        val wall = jobEnds.get(id).map(t1 => (t1 - j.start) / 1e3).getOrElse(-1.0)
+        val owner = j.exec.fold("no SQL execution")(e => s"exec $e, ${action(e)}")
+        val site = Some(j.site).filter(_.nonEmpty)
+          .orElse(j.exec.flatMap(execs.get).map(_.site)).getOrElse("")
+        f"  job $id%4d $wall%7.2fs  $owner%-28s $site  [${j.stages.take(100)}]"
+      }
+      val out = (actions.toSeq.map(a => (a._2, a._3)), rows)
+      actions.clear(); execs.clear(); execQe.clear(); jobs.clear(); jobEnds.clear()
       out
     }
 

@@ -36,21 +36,41 @@ object Tables {
     tRaw(spark, dir, name)
   }
 
-  /** Footer-schema cache (r20, guide §1/§6): every bare
-    * `spark.read.parquet(path)` re-infers the schema — a driver-side
-    * footer read plus, for multi-file tables, a small inference job —
-    * on EVERY query construction, including each of the bench's three
-    * runs. The schema of an immutable table file is session-invariant
-    * metadata (the same class of cache as Spark's own FileStatusCache
-    * and the janino codegen cache — no data or results are cached), so
-    * infer once per (path) and hand the reader an explicit schema
-    * afterwards. At scale the win is the same: an explicit schema skips
-    * a footer-listing pass per query over thousands of files. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  /** Footer-schema cache: every bare `spark.read.parquet(path)`
+    * re-infers the schema — a driver-side footer read plus, for
+    * multi-file tables, a small inference job — on EVERY query
+    * construction, including each of the bench's runs. The schema is
+    * metadata of the files as they are (the same class of cache as
+    * Spark's own FileStatusCache and the janino codegen cache — no data
+    * or results are cached), so it is inferred once per (path,
+    * modification time, length) and the reader gets it as an explicit
+    * schema afterwards. A table rewritten at the same path changes its
+    * stamp and is inferred again. At scale the win is the same: an
+    * explicit schema skips a footer-listing pass per query over
+    * thousands of files, and the stamp costs one status call per path
+    * (one listing for a directory). */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
+
+  /** (modification time, length) of a parquet file; for a directory the
+    * latest modification time of it and its direct children and their
+    * summed length, so adding, replacing or removing a part file moves
+    * the stamp. */
+  private def stamp(spark: SparkSession, path: String): (Long, Long) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) (st.getModificationTime, st.getLen)
+    else {
+      val kids = fs.listStatus(p)
+      ((st +: kids).map(_.getModificationTime).max, kids.map(_.getLen).sum)
+    }
+  }
+
   private def readCached(spark: SparkSession, path: String): DataFrame = {
-    val s = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val (mtime, len) = stamp(spark, path)
+    val s = schemaCache.computeIfAbsent((path, mtime, len),
+      k => spark.read.parquet(k._1).schema)
     spark.read.schema(s).parquet(path)
   }
 

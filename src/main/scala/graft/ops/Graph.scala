@@ -234,17 +234,24 @@ object Graph {
     * distinct pairs emitted in both directions over disjoint even/odd
     * node spaces).
     *
-    * Plan at scale: the symmetric edge frame is hash-partitioned on the
-    * neighbor key and persisted ONCE. Round 1 is computed in CLOSED FORM:
-    * every node starts as its own label, so each neighbor contributes a
-    * distinct label with count 1 and the max-count/min-label argmax
-    * collapses to min(neighbor id) — one keyed aggregation, no join, and
-    * the node-set distinct falls away entirely. Each later round is one
-    * co-partitioned join (labels ⋈ edges on b), a keyed count, and a
-    * struct-max argmax (max count, min label) — two shuffles per round,
-    * O(|E|) rows, no window. Single consumption of the label frame per
-    * round keeps the lazy plan linear; a checkpoint every second round
-    * bounds analysis depth on deep runs (the [[pageRank]] lineage lesson). */
+    * Plan at scale: the symmetric edge frame is persisted ONCE. Round 1
+    * is computed in CLOSED FORM off it: every node starts as its own
+    * label, so each neighbor contributes a distinct label with count 1
+    * and the max-count/min-label argmax collapses to min(neighbor id) —
+    * one keyed aggregation, no join, and the node-set distinct falls away
+    * entirely. Round 1 is checkpointed eagerly; its row count is |V|,
+    * and it picks the shape of every later round, each one labels ⋈
+    * edges on b, a keyed count and a struct-max argmax (max count, min
+    * label), O(|E|) rows, no window:
+    *  - |V| within [[Bounded.fitsDriver]]: the label frame is broadcast
+    *    against the persisted edge frame itself, so the join needs no
+    *    exchange and the edge cache is never shuffled or copied;
+    *  - otherwise: a second edge cache keyed by b, built once, makes each
+    *    round a co-partitioned sort-merge join that shuffles only the
+    *    node-sized label frame.
+    * Single consumption of the label frame per round keeps the lazy plan
+    * linear; a checkpoint every second round bounds analysis depth on
+    * deep runs (the [[pageRank]] lineage lesson). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 3, assumeSymmetric: Boolean = false)
       : DataFrame = {
@@ -269,20 +276,28 @@ object Graph {
       ePre.unpersist()
       return GraphLocal.labelPropagation(spark, arr, iters)
     }
-    // above it: edges keyed by the join key b, so each round's
-    // labels ⋈ edges join is co-partitioned with the cache
-    val e = ePre.repartition(col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count() // materialize off the warm ePre cache, then release it
-    ePre.unpersist()
     // round 1 in closed form (see scaladoc): min neighbor id
-    var labels = e.groupBy(col("a"))
+    var labels = ePre.groupBy(col("a"))
       .agg(min(col("b")).as("lbl"))
       .select(col("a").as("id"), col("lbl"))
+      .localCheckpoint(true)
     // superseded-checkpoint tracking, same contract as pageRank's
-    var lastCk: Option[org.apache.spark.sql.DataFrame] = None
+    var lastCk: Option[org.apache.spark.sql.DataFrame] = Some(labels)
+    // |V| decides the later rounds' join (see scaladoc); a single round
+    // needs neither
+    val sortMerge = iters > 1 && !Bounded.fitsDriver(spark, labels.count())
+    val e =
+      if (!sortMerge) ePre
+      else {
+        val byB = ePre.repartition(col("b"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        byB.count() // materialize off the warm ePre cache, then release it
+        ePre.unpersist()
+        byB
+      }
     for (i <- 2 to iters) {
-      val nb = e.join(labels, e("b") === labels("id"))
+      val lj = if (sortMerge) labels else broadcast(labels)
+      val nb = e.join(lj, e("b") === lj("id"))
         .groupBy(col("a"), col("lbl"))
         .agg(count(lit(1)).as("c"))
       labels = nb.groupBy(col("a"))

@@ -78,14 +78,13 @@ object Stats {
     * where c1/c2 are cumulative counts at each distinct pooled value —
     * D = d_num / (n1·n2) with one final division. Returns one row
     * (n1, n2, d_num, d, ks_stat) with ks_stat = D·√(n1·n2/(n1+n2)).
-    * Runs on the [[Folds.twoClass]] cumulate (scale argument there); the
-    * group column is compared to `a`/`b` uncast. */
+    * Runs on the [[Folds.twoClass]] cumulate (scale argument there). */
   def ksTest(df: DataFrame, valueCol: String, groupCol: String,
              a: String, b: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val (n1, n2, bests) =
-      twoGroups(df, valueCol, groupCol, a, b, castGroup = false) { (p, it) =>
+      twoGroups(df, valueCol, groupCol, a, b) { (p, it) =>
         var c1 = p.c1; var c2 = p.c2
         var best = 0L
         it.foreach { case (_, d1, d2) =>
@@ -105,18 +104,17 @@ object Stats {
   }
 
   /** [[Folds.twoClass]] over the rows of `groupCol` equal to `a` (class 1)
-    * or `b` (class 2), the group compared as a string unless `castGroup`
-    * is false; scans only when both groups are non-empty. */
+    * or `b` (class 2); scans only when both groups are non-empty. Each
+    * class predicate is the row filter's own `isin` on one label, so a
+    * row the filter admits lands in its class under the same coercion
+    * (a numeric group matches "1" as 1.0). */
   private def twoGroups[R: ClassTag](df: DataFrame, valueCol: String,
-                                     groupCol: String, a: String, b: String,
-                                     castGroup: Boolean = true)
+                                     groupCol: String, a: String, b: String)
                                     (scan: (Folds.PartStart,
                                       Iterator[(Double, Long, Long)]) => R)
-      : (Long, Long, Array[R]) = {
-    val g = if (castGroup) col(groupCol).cast(StringType) else col(groupCol)
-    Folds.twoClass(df, col(valueCol), col(groupCol).isin(a, b), g,
-      _ === a, _ === b)((n1, n2) => n1 > 0 && n2 > 0)(scan)
-  }
+      : (Long, Long, Array[R]) =
+    Folds.twoClass(df, col(valueCol), col(groupCol).isin(a, b),
+      col(groupCol), _.isin(a), _.isin(b))((n1, n2) => n1 > 0 && n2 > 0)(scan)
 
   /** Pearson chi-square test of independence between two categorical
     * columns. Returns one row (n_cells, dof, chi2) where chi2 is the

@@ -38,4 +38,10 @@ object GraftSqlInternal {
     if (!exp.extraStrategies.contains(s))
       exp.extraStrategies = exp.extraStrategies :+ s
   }
+
+  /** The finished execution an end event reports (null when the
+    * execution posted none) — lets a listener match the end event's
+    * execution id to a QueryExecutionListener callback. */
+  def executionEndQe(e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : org.apache.spark.sql.execution.QueryExecution = e.qe
 }

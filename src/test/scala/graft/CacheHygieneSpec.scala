@@ -93,4 +93,25 @@ class CacheHygieneSpec extends SparkSuite {
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet
       .intersect(left).isEmpty)
   }
+
+  test("labelPropagation above the edge gate: broadcast and sort-merge " +
+    "legs leave no Dataset cache, only the readable result") {
+    import graft.ops.Graph
+    val sym = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (2L, 5L))
+      .flatMap(e => Seq(e, e.swap)).toDF("s", "t")
+    def lp = Graph.labelPropagation(sym, "s", "t", iters = 3,
+      assumeSymmetric = true)
+    val local = rowSet(lp)
+    // 5 nodes, 10 edge rows: limit 5 broadcasts the labels, 0 sort-merges
+    for (limit <- Seq(5L, 0L)) {
+      spark.catalog.clearCache()
+      var out: org.apache.spark.sql.DataFrame = null
+      val left = newCaches { out = atDriverRowLimit(limit)(lp) }
+      assert(spark.sharedState.cacheManager.isEmpty, s"limit=$limit")
+      // the result's own checkpoint is all that stays; every round's
+      // checkpoint and both edge caches are released
+      assert(left.size == 1, s"limit=$limit left=$left")
+      assert(rowSet(out) == local, s"limit=$limit")
+    }
+  }
 }

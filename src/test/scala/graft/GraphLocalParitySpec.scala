@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Graph
+import scala.jdk.CollectionConverters._
 
 /** The driver-local replays ([[graft.ops.GraphLocal]]) must be
   * BIT-IDENTICAL to the distributed loops — same integer floor-div /
@@ -8,7 +9,8 @@ import graft.ops.Graph
   * dangling and duplicate-edge graph shapes. Each case runs the operator
   * on every leg [[graft.ops.Bounded.fitsDriver]] can select: the local
   * replay (default limit), the distributed sort-merge loop (limit 0) and,
-  * for the operators that broadcast a node-sized frame, the broadcast
+  * for the operators that broadcast a node-sized frame (pageRank,
+  * personalizedPageRank, modularity, labelPropagation), the broadcast
   * loop (a limit between the node and the edge count). */
 class GraphLocalParitySpec extends SparkSuite {
   init()
@@ -22,12 +24,25 @@ class GraphLocalParitySpec extends SparkSuite {
   private val sym = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L),
     (3L, 4L), (4L, 3L), (1L, 4L), (4L, 1L), (2L, 5L), (5L, 2L))
 
+  /** labelPropagation's three legs: the sort-merge loop (limit 0), the
+    * broadcast loop (`bcastLimit`, at least the node count and below the
+    * edge count) and the local replay (default limit). Each must give
+    * the same rows. */
+  private def lpThreeWays(bcastLimit: Long, what: String)
+                         (f: => org.apache.spark.sql.DataFrame)
+      : Set[Seq[Any]] = {
+    val (d, l) = bothWays(f)
+    val b = atDriverRowLimit(bcastLimit)(rowSet(f))
+    assert(d == l && b == l, s"$what sort-merge=$d broadcast=$b local=$l")
+    l
+  }
+
+  // `sym` has 10 edge rows over 5 nodes: a limit of 5 broadcasts the
+  // label frame and keeps the edges distributed
   test("labelPropagation parity: symmetric graph, several iters") {
-    for (it <- Seq(1, 2, 3, 5)) {
-      val (d, l) = bothWays(Graph.labelPropagation(sym.toDF("s", "t"),
-        "s", "t", iters = it, assumeSymmetric = true))
-      assert(d == l, s"iters=$it dist=$d local=$l")
-    }
+    for (it <- Seq(1, 2, 3, 5))
+      lpThreeWays(5L, s"iters=$it")(Graph.labelPropagation(
+        sym.toDF("s", "t"), "s", "t", iters = it, assumeSymmetric = true))
   }
 
   test("labelPropagation parity: directed frame passed as symmetric") {
@@ -35,17 +50,57 @@ class GraphLocalParitySpec extends SparkSuite {
     // the distributed loop leaves it out — the replay must too (no
     // Long.MaxValue label, no NPE on later rounds)
     for (it <- 1 to 3) {
-      val (d, l) = bothWays(Graph.labelPropagation(directed.toDF("s", "t"),
-        "s", "t", iters = it, assumeSymmetric = true))
-      assert(d == l, s"iters=$it dist=$d local=$l")
+      val l = lpThreeWays(5L, s"iters=$it")(Graph.labelPropagation(
+        directed.toDF("s", "t"), "s", "t", iters = it,
+        assumeSymmetric = true))
       assert(!l.exists(_.head == 5L), s"iters=$it local=$l")
     }
   }
 
   test("labelPropagation parity: asymmetric input through symmetrization") {
-    val (d, l) = bothWays(Graph.labelPropagation(
+    lpThreeWays(5L, "iters=3")(Graph.labelPropagation(
       directed.toDF("s", "t"), "s", "t", iters = 3))
-    assert(d == l, s"dist=$d local=$l")
+  }
+
+  /** Executed plans of the SQL actions `body` runs, in completion
+    * order. A marker action run after `body` is awaited, so every
+    * earlier action's callback has been delivered. */
+  private def actionPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (QueryExecution, String)]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe -> qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      val marker = spark.range(1)
+      marker.collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def arrived = seen.asScala.exists(_._1 eq marker.queryExecution)
+      while (!arrived && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(arrived, "listener bus did not deliver the marker in 30 s")
+    } finally spark.listenerManager.unregister(l)
+    seen.asScala.toSeq.map(_._2)
+  }
+
+  test("labelPropagation legs: broadcast labels over the one edge cache, " +
+    "or a sort-merge join on a second cache keyed by b") {
+    def lp = Graph.labelPropagation(sym.toDF("s", "t"), "s", "t",
+      iters = 3, assumeSymmetric = true).collect()
+    val rekey = "REPARTITION_BY_COL"
+    val b = atDriverRowLimit(5L)(actionPlans(lp))
+    assert(b.exists(_.contains("BroadcastHashJoin")), b.mkString("\n"))
+    assert(!b.exists(p => p.contains("SortMergeJoin") || p.contains(rekey)),
+      b.mkString("\n"))
+    val s = atDriverRowLimit(0L)(actionPlans(lp))
+    assert(s.exists(_.contains("SortMergeJoin")) && s.exists(_.contains(rekey)),
+      s.mkString("\n"))
+    assert(!s.exists(_.contains("BroadcastHashJoin")), s.mkString("\n"))
   }
 
   test("hits parity: directed graph with sink, several iters") {
@@ -212,12 +267,12 @@ class GraphLocalParitySpec extends SparkSuite {
     assert(ties >= 100, s"only $ties nodes with a count tie")
   }
 
+  // at most 400 nodes and over 3000 symmetric edge rows: a limit of 1000
+  // broadcasts the label frame only
   test("labelPropagation parity: random tie-heavy graph, iters 1–5") {
-    for (it <- 1 to 5) {
-      val (d, l) = bothWays(Graph.labelPropagation(rndDf, "s", "t",
-        iters = it))
-      assert(d == l, s"iters=$it dist=$d local=$l")
-    }
+    for (it <- 1 to 5)
+      lpThreeWays(1000L, s"iters=$it")(Graph.labelPropagation(rndDf,
+        "s", "t", iters = it))
   }
 
   test("pageRank parity: random tie-heavy graph") {

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 /** [[PlanDump.dump]]: the final-plan section shows the finished adaptive
-  * plan, the job table is filled in, and an unknown name fails before
-  * anything is written. */
+  * plan, the job table is filled in and attributes every job, and an
+  * unknown name fails before anything is written. */
 class PlanDumpSpec extends SparkSuite {
   init()
 
@@ -38,6 +38,32 @@ class PlanDumpSpec extends SparkSuite {
       assert(jobs.nonEmpty, lines.mkString("\n"))
       // every job finished before the drain, so every row has its wall time
       assert(!jobs.exists(_.contains(" -1.00s")), jobs.mkString("\n"))
+    } finally deleteAll(dir)
+  }
+
+  test("q287 distributed: every job row names its execution, action and site") {
+    val dir = tempDir()
+    try {
+      // limit 0 runs the distributed loop: inner actions whose shuffle
+      // stages AQE submits from its own threads
+      atDriverRowLimit(0L)(PlanDump.dump(spark,
+        Seq("q287_label_propagation"), sfDir, dir, "t"))
+      val lines = Files.readAllLines(
+        new File(dir, "q287_label_propagation_t.txt").toPath).asScala.toSeq
+      val inner = lines.count(_.startsWith("# == inner action "))
+      val jobs = section(lines, "# == jobs").filter(_.trim.startsWith("job "))
+      // outside any SQL execution: only a cold schema inference job
+      val row = ("""\s*job\s+\d+\s+\S+s\s+(?:exec \d+, """ +
+        """(?:inner action (\d+)|final write)|no SQL execution)\s+(.*?)\s*\[.*\]""").r
+      val parsed = jobs.map {
+        case row(i, site) => (Option(i).map(_.toInt), site)
+        case j => fail(s"unattributed job row: $j\n" + jobs.mkString("\n"))
+      }
+      assert(parsed.flatMap(_._1).forall(i => i >= 0 && i < inner) &&
+        parsed.exists(_._1.nonEmpty) && jobs.exists(_.contains("final write")),
+        jobs.mkString("\n"))
+      // every job is traced to a graft line, also those AQE submitted
+      assert(parsed.forall(_._2.contains("graft.")), jobs.mkString("\n"))
     } finally deleteAll(dir)
   }
 

@@ -66,24 +66,37 @@ class TwoClassCumulateSpec extends SparkSuite {
     }
   }
 
-  test("ksTest matches a DoubleType group to a = \"1\"; the four " +
-    "string-cast tests do not") {
-    // ksTest compares the group column uncast ("1" is read as 1.0); the
-    // others compare its string form ("1.0"), so neither group matches
+  test("a DoubleType group matches a = \"1\" in all five two-group tests") {
+    // the row filter and both class predicates compare the group column
+    // under the same coercion ("1" is read as 1.0), so every admitted row
+    // lands in its class
     val df = Seq((1.0, 0.5), (1.0, 1.5), (1.0, 2.5), (2.0, 1.0), (2.0, 3.0))
       .toDF("g", "v")
     val ks = Stats.ksTest(df, "v", "g", "1", "2").collect()(0)
     // cumulative (c1, c2): (1,0) (1,1) (2,1) (3,1) (3,2); max |2·c1 − 3·c2| = 3
     assert((ks.getLong(0), ks.getLong(1), ks.getLong(2)) == ((3L, 2L, 3L)))
     assert(ks.getDouble(3) == 0.5)
-    for ((name, out) <- Seq(
-        "cramerVonMises" -> Stats.cramerVonMises(df, "v", "g", "1", "2"),
-        "wasserstein1" -> Stats.wasserstein1(df, "v", "g", "1", "2"),
-        "energyDistance" -> Stats.energyDistance(df, "v", "g", "1", "2"),
-        "andersonDarling2" -> Stats.andersonDarling2(df, "v", "g", "1", "2"))) {
+    // by hand over the same cumulates, gaps 0.5 0.5 1.0 0.5:
+    //  cramerVonMises Σ mult·(2·c1 − 3·c2)² = 4+1+1+9+0 = 15, / (5·5·3·2)
+    //  wasserstein1 ⌊10⁹·|2·c1 − 3·c2|·gap/6⌋ = 166666666 + 83333333
+    //    + 166666666 + 250000000
+    //  energyDistance e_xy 166666666 + 250000000 + 500000000 + 250000000,
+    //    e_xx 222222222 + 222222222 + 444444444, e_yy 0.25 + 0.5 + 0.25
+    //  andersonDarling2 ⌊num²·l/(B·(5−B))⌋ = 1 + 0 + 0 + 2, / (3·2·5)
+    val expect = Seq(
+      "cramerVonMises" -> (Stats.cramerVonMises(df, "v", "g", "1", "2"),
+        Seq(0.1)),
+      "wasserstein1" -> (Stats.wasserstein1(df, "v", "g", "1", "2"),
+        Seq(0.666666665)),
+      "energyDistance" -> (Stats.energyDistance(df, "v", "g", "1", "2"),
+        Seq(1.166666666, 0.888888888, 1.0,
+          2.0 * 1.166666666 - 0.888888888 - 1.0)),
+      "andersonDarling2" -> (Stats.andersonDarling2(df, "v", "g", "1", "2"),
+        Seq(0.1)))
+    for ((name, (out, stats)) <- expect) {
       val r = out.collect()(0)
-      assert(r.getLong(0) == 0L && r.getLong(1) == 0L && r.isNullAt(2),
-        s"$name: $r")
+      assert(r.getLong(0) == 3L && r.getLong(1) == 2L, s"$name: $r")
+      assert(stats.indices.map(i => r.getDouble(2 + i)) == stats, s"$name: $r")
     }
   }
 }
