@@ -948,24 +948,24 @@ object Advanced {
     * Returns (item_a, item_b, n_pairs, n_a, n_b, conf_ab, conf_ba, lift)
     * with item_a < item_b.
     *
-    * Plan (r20, guide §2.4 remove shuffles outright): ONE keyed
-    * aggregation builds each basket's SORTED distinct item array
-    * (collect_set dedups duplicate lines; sort_array pins the binary
-    * string order the old `item_a < item_b` self-join filter used), and
-    * pairs are generated in-place by a position explode against the
-    * array's tail — no basket-keyed self-join, no separate per-basket
-    * distinct, no basket-keyed cache (the r19 re-keyed cache's inflated
-    * size statistics flipped downstream joins to SortMergeJoin and
-    * anti-scaled with core count: driver-measured 19.1 s @32c vs 1.4 s
-    * @8c vs 2.6 s isolated — VERDICT r19 item 1). The pair frame is
-    * still bounded by Σ_b k_b² over per-basket item counts — baskets are
-    * small by nature (an order has a handful of brands), but a
+    * Plan: ONE keyed aggregation builds each basket's SORTED distinct
+    * item array (collect_set dedups duplicate lines; sort_array pins the
+    * binary string order that decides `item_a < item_b`), and pairs are
+    * generated in place by a position explode against the array's
+    * tail — no basket-keyed self-join, no separate per-basket distinct,
+    * no basket-keyed cache (a re-keyed basket cache's inflated size
+    * statistics flipped downstream joins to SortMergeJoin and got slower
+    * as cores were added: 19.1 s on 32 cores vs 1.4 s on 8). The pair
+    * frame is bounded by Σ_b k_b² over per-basket item counts — baskets
+    * are small by nature (an order has a handful of brands), but a
     * degenerate giant basket (a reseller account, a crawler cart) makes
-    * one basket contribute k² pairs (and an O(k_b) array) on its own:
-    * pass `maxBasketSize` to EXCLUDE such baskets up front (now a plain
-    * size(items) filter; the dropped-basket count is logged). Capped
-    * baskets leave the support denominator too, keeping confidences
-    * consistent. */
+    * one basket contribute k² pairs on its own: pass `maxBasketSize` to
+    * EXCLUDE such baskets (a plain size(items) filter; the dropped-basket
+    * count is logged). Capped baskets leave the support denominator too,
+    * keeping confidences consistent. The cap bounds the pair blow-up
+    * only: it filters on the finished array, so a giant basket's
+    * `collect_set` array, O(k_b) in one aggregation buffer, is still
+    * built once before it is dropped. */
   def assocRules(df: org.apache.spark.sql.DataFrame, basketCol: String,
                  itemCol: String, minSupportPct: Int,
                  maxBasketSize: Option[Int] = None)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -85,7 +86,7 @@ object Graph {
     * buffers per block (equal wall time locally, and serialized blocks
     * evict/spill without re-serialization on a real executor).
     * Heap-insensitivity itself is a HARNESS property, not an operator
-    * one — see build.sbt's -Xmn cap and JITTER.md's r18 addendum. */
+    * one — see the young-gen cap in build.sbt and its note in JITTER.md. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5, damp: Int = 85,
                dedupEdges: Boolean = true): DataFrame = {
@@ -101,7 +102,7 @@ object Graph {
     // node-universe branches, edged). Un-persisted, each re-derives the
     // caller's upstream plan (for the trading graph: the orders⋈lineitem
     // join + distinct) from parquet — measured ~1–2 s per re-derivation
-    // at sf0.1 (guide §5: cache exactly the frame that is re-used).
+    // at sf0.1 (cache exactly the frame that is re-used).
     // Persisted here, released as soon as `edged` is materialized.
     val ePer = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val eCnt = ePer.count()
@@ -117,7 +118,7 @@ object Graph {
       return GraphLocal.pageRank(spark, arr, iters, damp)
     }
     val deg = ePer.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // JOIN STRATEGY (guide §3.1): the per-round join carries a
+    // JOIN STRATEGY: the per-round join carries a
     // NODE-sized rank frame against the persisted EDGE frame. A
     // localCheckpointed rank frame has no size statistics, so unhinted
     // the planner picks a co-partitioned SortMergeJoin that RE-SORTS the
@@ -234,24 +235,34 @@ object Graph {
     * distinct pairs emitted in both directions over disjoint even/odd
     * node spaces).
     *
-    * Plan at scale: the symmetric edge frame is persisted ONCE. Round 1
-    * is computed in CLOSED FORM off it: every node starts as its own
-    * label, so each neighbor contributes a distinct label with count 1
-    * and the max-count/min-label argmax collapses to min(neighbor id) —
-    * one keyed aggregation, no join, and the node-set distinct falls away
-    * entirely. Round 1 is checkpointed eagerly; its row count is |V|,
-    * and it picks the shape of every later round, each one labels ⋈
-    * edges on b, a keyed count and a struct-max argmax (max count, min
-    * label), O(|E|) rows, no window:
-    *  - |V| within [[Bounded.fitsDriver]]: the label frame is broadcast
-    *    against the persisted edge frame itself, so the join needs no
-    *    exchange and the edge cache is never shuffled or copied;
-    *  - otherwise: a second edge cache keyed by b, built once, makes each
-    *    round a co-partitioned sort-merge join that shuffles only the
-    *    node-sized label frame.
-    * Single consumption of the label frame per round keeps the lazy plan
-    * linear; a checkpoint every second round bounds analysis depth on
-    * deep runs (the [[pageRank]] lineage lesson). */
+    * Round 1 is closed form on every leg: every node starts as its own
+    * label, so each neighbor counts once and the argmax is the min
+    * neighbor id. Later rounds take, per node, the most frequent label
+    * among its labeled neighbors, the smallest on a tie. The symmetric
+    * edge frame is persisted once and its size picks one of three legs:
+    *  - |E| within [[Bounded.fitsDriver]]: the driver replay
+    *    ([[GraphLocal.labelPropagation]]) runs every round in-core off one
+    *    bounded packed collect.
+    *  - |E| above it: the edge frame is repartitioned by `a` once and each
+    *    partition packed into one [[GraphLocal.LpAdjacency]] (a primitive
+    *    CSR), cached on the executors. The node count |V| is the sum of
+    *    their row counts. Within the gate the hybrid leg
+    *    ([[GraphLocal.labelPropagationHybrid]]) keeps the labels on the
+    *    driver, at most about 60 bytes per node, and runs each later
+    *    round as one map-only job over the cached adjacencies against
+    *    broadcast labels.
+    *  - |V| above the gate as well: the adjacencies are dropped and the
+    *    sort-merge loop runs. A second edge cache keyed by b, built once,
+    *    makes each round a co-partitioned join that shuffles only the
+    *    node-sized label frame, then a keyed count and a struct-max
+    *    argmax `max(struct(c, ~lbl))`: bitwise NOT reverses the label
+    *    order without the overflow negation hits at `Long.MinValue`.
+    *    Single consumption of the label frame per round keeps its lazy
+    *    plan linear; a checkpoint every second round bounds analysis
+    *    depth on deep runs (the [[pageRank]] lineage lesson).
+    * The replay and the hybrid tasks share one round kernel
+    * ([[GraphLocal.LpAdjacency.round]], whose mode is sort, then the
+    * first longest run), so all three legs give the same rows. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 3, assumeSymmetric: Boolean = false)
       : DataFrame = {
@@ -276,18 +287,43 @@ object Graph {
       ePre.unpersist()
       return GraphLocal.labelPropagation(spark, arr, iters)
     }
-    // round 1 in closed form (see scaladoc): min neighbor id
+    // above the edge gate: the a-keyed adjacencies, built once, count
+    // |V|, which picks the hybrid or the sort-merge leg (see scaladoc).
+    // All of the hybrid leg's jobs run in the one SQL execution of the
+    // repartition they read.
+    val byA = ePre.repartition(col("a")).queryExecution
+    val hybrid = SQLExecution.withNewExecutionId(byA,
+        Some("labelPropagation")) {
+      val adj = byA.toRdd.mapPartitions { it =>
+        val c = Bounded.packLongs(it, 2, Int.MaxValue).get // a, b: not NULL
+        Iterator(GraphLocal.LpAdjacency(c(0), c(1)))
+      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val nV = spark.sparkContext.runJob(adj,
+          (it: Iterator[GraphLocal.LpAdjacency]) => it.next().nOut.toLong).sum
+        if (!Bounded.fitsDriver(spark, nV)) None
+        else {
+          ePre.unpersist()
+          Some(GraphLocal.labelPropagationHybrid(spark, adj, nV.toInt, iters))
+        }
+      } finally adj.unpersist()
+    }
+    hybrid.getOrElse(sortMergeLabelPropagation(ePre, iters))
+  }
+
+  /** [[labelPropagation]]'s sort-merge leg over the persisted symmetric
+    * edge frame `ePre`, which it releases. */
+  private def sortMergeLabelPropagation(ePre: DataFrame, iters: Int)
+      : DataFrame = {
+    // round 1 in closed form: min neighbor id
     var labels = ePre.groupBy(col("a"))
       .agg(min(col("b")).as("lbl"))
       .select(col("a").as("id"), col("lbl"))
       .localCheckpoint(true)
     // superseded-checkpoint tracking, same contract as pageRank's
     var lastCk: Option[org.apache.spark.sql.DataFrame] = Some(labels)
-    // |V| decides the later rounds' join (see scaladoc); a single round
-    // needs neither
-    val sortMerge = iters > 1 && !Bounded.fitsDriver(spark, labels.count())
     val e =
-      if (!sortMerge) ePre
+      if (iters == 1) ePre
       else {
         val byB = ePre.repartition(col("b"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -296,13 +332,12 @@ object Graph {
         byB
       }
     for (i <- 2 to iters) {
-      val lj = if (sortMerge) labels else broadcast(labels)
-      val nb = e.join(lj, e("b") === lj("id"))
+      val nb = e.join(labels, e("b") === labels("id"))
         .groupBy(col("a"), col("lbl"))
         .agg(count(lit(1)).as("c"))
       labels = nb.groupBy(col("a"))
-        .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-        .select(col("a").as("id"), (-col("m.nl")).as("lbl"))
+        .agg(max(struct(col("c"), bitwise_not(col("lbl")).as("nl"))).as("m"))
+        .select(col("a").as("id"), bitwise_not(col("m.nl")).as("lbl"))
       if (i % 2 == 0 && i < iters) {
         labels = labels.localCheckpoint(true)
         lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
@@ -347,7 +382,7 @@ object Graph {
         col("a") =!= col("b"))
       .distinct(), maxDegree, "triangleCount")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count() // r19: materialize before the multi-consumer readout (see adamicAdar)
+    und.count() // materialize before the multi-consumer readout (see adamicAdar)
     val wedges = und.select(col("a").as("x"), col("b").as("y"))
       .join(und.select(col("a").as("y"), col("b").as("z")), "y")
     val tris = wedges.join(
@@ -383,7 +418,7 @@ object Graph {
         col("a") =!= col("b"))
       .distinct(), maxDegree, "localClustering")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count() // r19: materialize before the multi-consumer readout (see adamicAdar)
+    und.count() // materialize before the multi-consumer readout (see adamicAdar)
     val deg = und.select(col("a").as("id"))
       .unionByName(und.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("degree"))
@@ -425,13 +460,13 @@ object Graph {
     * [[graft.functions.Kmv.KmvSketchAgg]] (`kmv_sketch(h, k)`) — a
     * TypedImperativeAggregate whose buffer is an O(k) TreeSet, so BOTH
     * the map-side partials and the shuffle rows carry at most k hashes
-    * per node. (r18 used `slice(sort_array(collect_set(h)), 1, k)`:
-    * the final slice is O(k) but collect_set's partial/final buffers
+    * per node. (The obvious `slice(sort_array(collect_set(h)), 1, k)`
+    * is O(k) only in its final slice: collect_set's partial/final buffers
     * grow with the ball's full distinct count — on a hub-heavy graph a
     * radius-3 ball saturates toward n and one node's buffer becomes
     * O(n), an executor-OOM scale-killer. kmv_sketch computes the same
     * min-k-of-distinct value — the DuckDB oracle replay and all hashes
-    * are unchanged — with a hard O(k) bound; an r18 A/B had already
+    * are unchanged — with a hard O(k) bound; an A/B had also
     * shown the one-aggregation shape beats distinct + rank-window
     * 28.6 → 12.4 s at sf1.0.)
     * Each round's frame is eagerly checkpointed (consumed by the union
@@ -691,7 +726,7 @@ object Graph {
         col("a") =!= col("b"))
       .distinct(), maxDegree, "jaccardLinks")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count() // r19: materialize before the multi-consumer readout (see adamicAdar)
+    und.count() // materialize before the multi-consumer readout (see adamicAdar)
     val nbrs = und.select(col("a").as("id"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("id"), col("a").as("nbr")))
     val deg = nbrs.groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -732,7 +767,7 @@ object Graph {
                           rightCol: String, topK: Int = 50,
                           maxLeftDegree: Option[Long] = None): DataFrame = {
     require(topK >= 1, s"topK=$topK")
-    // r19: materialize the cache once before the multi-consumer readout
+    // materialize the cache once before the multi-consumer readout
     // (see adamicAdar). A repartition-by-l was A/B'd and reverted: the
     // wedge self-join's two sides share ONE ReusedExchange already, so
     // pre-keying only re-paid that exchange at persist time (q416
@@ -984,7 +1019,7 @@ object Graph {
         col("a") =!= col("b"))
       .distinct(), maxDegree, "adamicAdar")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r19: materialize the cache ONCE before the many-consumer readout —
+    // materialize the cache ONCE before the many-consumer readout —
     // un-materialized, every concurrent broadcast subquery of the final
     // count re-derived the caller's upstream (measured q402: nine ~0.5 s
     // jobs re-running the 4-table strong-trade-graph build)
@@ -1025,10 +1060,10 @@ object Graph {
       .select((col("o_custkey") * 2).as("cnode"),
         (col("l_suppkey") * 2 + 1).as("snode"))
       .distinct()
-    // r20 (guide §2.4): emit both directions by EXPLODING each distinct
-    // pair — the former self-union evaluated the orders⋈lineitem join +
-    // distinct once PER BRANCH in every consuming pass (the frame is
-    // lazy; most callers don't persist it). Same row set, one derivation.
+    // emit both directions by EXPLODING each distinct pair — a
+    // self-union would evaluate the orders⋈lineitem join + distinct once
+    // PER BRANCH in every consuming pass (the frame is lazy; most callers
+    // don't persist it). Same row set, one derivation.
     pairs.select(explode(array(
         struct(col("cnode").as("src"), col("snode").as("dst")),
         struct(col("snode").as("src"), col("cnode").as("dst")))).as("e"))
@@ -1069,7 +1104,7 @@ object Graph {
     import spark.implicits._
     // gate BEFORE the src re-key: the local path reads the frame once —
     // paying the repartition exchange inside its collect lineage would
-    // buy nothing (guide §2.4)
+    // buy nothing
     val eBase = edges.select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -1175,9 +1210,9 @@ object Graph {
       val nEdges = e.count() // also materializes the cache for the aggs below
       val nNodes = e.select(explode(array(col("src"), col("dst"))).as("id"))
         .distinct().count()
-      // r19 (guide §2.4 remove shuffles outright): the reverse-edge check
-      // was a self-join shuffling the |E| cache twice (measured 3.4 s at
-      // sf0.1). Over a DISTINCT loop-free edge list, an edge (u,v) is
+      // no self-join for the reverse-edge check: one shuffles the |E|
+      // cache twice (measured 3.4 s at sf0.1). Over a DISTINCT loop-free
+      // edge list, an edge (u,v) is
       // reciprocal iff its canonical pair {u,v} occurs twice — one keyed
       // count with map-side partial aggregation, no join, same integer.
       val nRecip = e
@@ -1294,9 +1329,9 @@ object Graph {
     * src nodes, authorities on dst nodes; the final frame unions both
     * node sets with 0 for the missing side.
     *
-    * RENORMALIZATION SCHEDULE (r18 — verdict task: q332's wall was ~21
-    * scheduled jobs on milliseconds of data): hubs renormalize ONCE PER
-    * ROUND, authorities only at output —
+    * RENORMALIZATION SCHEDULE (renormalizing both halves of every round
+    * made q332 ~21 scheduled jobs on milliseconds of data): hubs
+    * renormalize ONCE PER ROUND, authorities only at output —
     *   a_raw_t(v) = Σ_{u→v} h_{t−1}(u)          (h normalized, ≤ Scale)
     *   h_raw_t(u) = Σ_{u→v} a_raw_t(v)          (UNnormalized a)
     *   h_t = h_raw_t · Scale div max(h_raw_t)
@@ -1307,10 +1342,10 @@ object Graph {
     * materialization (the h_raw checkpoint; the a_raw join+aggregate
     * rides inside its lineage as a single-consumer lazy stage) plus one
     * 1-ROW driver readout of the round max (the fit-side pattern),
-    * inlined as an exact literal into the next round's plan. The r17
-    * per-half-round renorm needed two checkpoints + a readout per round;
+    * inlined as an exact literal into the next round's plan. A
+    * per-half-round renorm needs two checkpoints + a readout per round;
     * A/B alternatives measured at sf0.1: lazy nested-broadcast maxima
-    * were SLOWER than r17 (each consumer re-schedules two chained
+    * were SLOWER still (each consumer re-schedules two chained
     * broadcast exchanges); this shape is the fastest and the oracle
     * mirror replays it in lockstep (re-pinned in the same commit).
     *
@@ -1341,8 +1376,8 @@ object Graph {
     // shuffles: dedup rides the src-hash exchange for free (hash(src)
     // partitioning satisfies the (src,dst) clustering the aggregate
     // needs), and the dst copy re-shuffles the already-deduped frame —
-    // the r17 shape (separate distinct + two repartitions off a third
-    // persisted frame) paid one more full-|E| shuffle and one more
+    // a separate distinct + two repartitions off a third persisted
+    // frame would pay one more full-|E| shuffle and one more
     // materialized copy for nothing.
     val eSrc = e0.repartition(col("src")).dropDuplicates("src", "dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1369,7 +1404,7 @@ object Graph {
       .collectBounded(1, "hits: 1-row degree-maxima readout").head
     // degenerate input: zero edges ⇒ the max() readout is a 1-row NULL
     // (max over zero groups) — return the empty (id, hub, auth) frame
-    // instead of NPE'ing on getLong (r18 regression vs the r17 shape)
+    // instead of NPE'ing on getLong
     if (degRow.isNullAt(0) || degRow.isNullAt(1)) {
       eSrc.unpersist(); eDst.unpersist()
       return edges.sparkSession.emptyDataFrame
@@ -1422,8 +1457,7 @@ object Graph {
     // key (each edge's dst matched a_raw, so each src aggregated) and
     // every dst node an authRaw key (symmetric argument) — a FULL OUTER
     // join of the two node-sized score frames covers every endpoint
-    // without re-scanning |E| rows (the r17 shape paid a 2|E|-row
-    // union+distinct here)
+    // without re-scanning |E| rows (a 2|E|-row union+distinct)
     val out = normed(hubRaw, "src", "h")
       .join(normed(authRaw, "__aid", "a"), Seq("id"), "full")
       .select(col("id"), coalesce(col("h"), lit(0L)).as("hub"),
@@ -1457,7 +1491,7 @@ object Graph {
     import spark.implicits._
     // gate BEFORE the src re-key: the local path reads the frame once —
     // paying the repartition exchange inside its collect lineage would
-    // buy nothing (guide §2.4)
+    // buy nothing
     val eBase = edges.select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"),
         col(weightCol).cast(LongType).as("w"))

@@ -30,6 +30,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the same limit, so an input that outgrows it fails loudly instead of
   * growing the driver.
   *
+  * Label propagation has three legs. Below the edge limit it replays
+  * here like the others. Above it, [[Graph.labelPropagation]] caches
+  * its edges on the executors as one [[LpAdjacency]] (a primitive CSR)
+  * per a-partition. When the node count |V| is within the limit, the
+  * hybrid leg ([[labelPropagationHybrid]]) keeps the labels on the
+  * driver and runs each round as one map-only job; a larger node set
+  * takes the sort-merge loop. The replay and the hybrid tasks run the
+  * same round ([[LpAdjacency.round]], whose mode is [[modeOf]]: sort,
+  * then the first longest run). By count of its arrays, the hybrid leg
+  * holds at most about 60 bytes per node on the driver: the sorted ids
+  * and their broadcast copy (16), two generations of labels and
+  * has-label flags (18), the broadcast copy of one generation (9) and
+  * one round's returned (id, label) arrays (16); the broadcast copies
+  * are compressed, and between rounds about 35 bytes stay. At a |V| of
+  * 4M that is under 0.25 GB.
+  *
   * The limit only changes WHERE the arithmetic runs: every replay walks
   * the SAME integer / IEEE-double op sequence as the distributed plan
   * (GraphLocalParitySpec runs every operator on each side of the limit;
@@ -145,69 +161,175 @@ private[graft] object GraphLocal {
     (off, nbr)
   }
 
-  /** [[Graph.labelPropagation]] rounds on the loop-free edge list the
-    * distributed loop consumes: round 1 is min neighbor id per `a`; each
-    * later round gathers the labels of v's LABELED neighbors (CSR keyed
-    * by `a`) into one reused buffer, sorts it and takes the first longest
-    * run. In ascending order that run holds the smallest label among the
-    * most frequent: the (max count, then min label) argmax of
-    * `max(struct(c, -lbl))`. A node that never appears as `a`, or whose
-    * neighbors all lost their label, gets no label and is left out —
-    * exactly what the distributed `groupBy(a)` and inner label join do
-    * when a caller's `assumeSymmetric` frame is not symmetric. Returns
-    * (id, community). */
-  def labelPropagation(spark: SparkSession, edges: Edges,
-                       iters: Int): DataFrame = {
-    import spark.implicits._
-    if (edges.length == 0)
-      return Seq.empty[(Long, Long)].toDF("id", "community")
-    val g = new Dense(edges)
-    val n = g.n
-    // round 1 closed form: groupBy(a).agg(min(b))
-    var has = new Array[Boolean](n)
-    var lbl = new Array[Long](n)
-    var i = 0
-    while (i < g.length) {
-      val a = g.src(i); val b = edges.dst(i)
-      if (!has(a) || b < lbl(a)) { lbl(a) = b; has(a) = true }
-      i += 1
+  /** The mode kernel of label propagation's later rounds, shared by the
+    * driver replay and the hybrid leg's tasks: sorts `buf(0 until k)`
+    * (k ≥ 1) and returns the value of its first longest run. In ascending
+    * order that run holds the smallest label among the most frequent:
+    * the (max count, then min label) argmax of the sort-merge loop. */
+  def modeOf(buf: Array[Long], k: Int): Long = {
+    java.util.Arrays.sort(buf, 0, k)
+    var best = buf(0); var bestC = 0
+    var r = 0
+    while (r < k) {
+      var end = r + 1
+      while (end < k && buf(end) == buf(r)) end += 1
+      if (end - r > bestC) { bestC = end - r; best = buf(r) }
+      r = end
     }
-    val (off, nbr) = csr(g.src, g.dst, n)
-    var maxDeg = 0
-    var v = 0
-    while (v < n) { maxDeg = math.max(maxDeg, off(v + 1) - off(v)); v += 1 }
-    val buf = new Array[Long](maxDeg)
-    for (_ <- 2 to iters) {
-      val next = new Array[Long](n)
-      val nextHas = new Array[Boolean](n)
+    best
+  }
+
+  /** Label propagation's adjacency: a CSR keyed by `a` over local node
+    * ints. The first `nOut` ints are the distinct `a` ids, the rows that
+    * can take a label; `ids(u)` is the id behind int u. The driver replay
+    * builds one over the whole edge list, the hybrid leg one per
+    * a-partition, cached on the executors. */
+  final class LpAdjacency private (val ids: Array[Long], val nOut: Int,
+      off: Array[Int], nbr: Array[Int]) extends Serializable {
+
+    /** Round 1 in closed form: every node starts as its own label, so
+      * each neighbor counts once and the argmax is the min neighbor id. */
+    def minNeighbor: Array[Long] = Array.tabulate(nOut) { v =>
+      var m = Long.MaxValue
+      var j = off(v)
+      while (j < off(v + 1)) { m = math.min(m, ids(nbr(j))); j += 1 }
+      m
+    }
+
+    /** One later round: row v takes the [[modeOf]] its LABELED
+      * neighbors' labels, where neighbor int u reads slot `slot(u)` of
+      * `lbl`/`has` (−1 = no label). A row whose neighbors all lack a
+      * label gets none — what the sort-merge loop's inner label join
+      * does. Returns the rows' (label, has). */
+    def round(slot: Array[Int], lbl: Array[Long], has: Array[Boolean])
+        : (Array[Long], Array[Boolean]) = {
+      var maxDeg = 0
+      var v = 0
+      while (v < nOut) { maxDeg = math.max(maxDeg, off(v + 1) - off(v)); v += 1 }
+      val buf = new Array[Long](maxDeg)
+      val next = new Array[Long](nOut)
+      val nextHas = new Array[Boolean](nOut)
       v = 0
-      while (v < n) {
+      while (v < nOut) {
         var k = 0
         var j = off(v)
         while (j < off(v + 1)) {
-          val b = nbr(j)
-          if (has(b)) { buf(k) = lbl(b); k += 1 }
+          val s = slot(nbr(j))
+          if (s >= 0 && has(s)) { buf(k) = lbl(s); k += 1 }
           j += 1
         }
-        if (k > 0) {
-          java.util.Arrays.sort(buf, 0, k)
-          var best = buf(0); var bestC = 0
-          var r = 0
-          while (r < k) {
-            var end = r + 1
-            while (end < k && buf(end) == buf(r)) end += 1
-            if (end - r > bestC) { bestC = end - r; best = buf(r) }
-            r = end
-          }
-          next(v) = best; nextHas(v) = true
-        }
+        if (k > 0) { next(v) = modeOf(buf, k); nextHas(v) = true }
         v += 1
       }
-      lbl = next; has = nextHas
+      (next, nextHas)
     }
-    spark.createDataset((0 until n).filter(v => has(v))
-        .map(v => (g.ix.id(v), lbl(v))))
+  }
+
+  object LpAdjacency {
+    /** The adjacency of edges (a(i), b(i)): every `a` id is indexed
+      * before any `b` id, so the labeled rows come first. */
+    def apply(a: Array[Long], b: Array[Long]): LpAdjacency = {
+      val ix = new LongIndex
+      val from = new Array[Int](a.length)
+      var i = 0
+      while (i < a.length) { from(i) = ix(a(i)); i += 1 }
+      val nOut = ix.size
+      val to = new Array[Int](b.length)
+      i = 0
+      while (i < b.length) { to(i) = ix(b(i)); i += 1 }
+      val (off, nbr) = csr(from, to, nOut)
+      new LpAdjacency(Array.tabulate(ix.size)(ix.id), nOut, off, nbr)
+    }
+  }
+
+  /** The (id, community) frame of the labeled rows of `ids`. */
+  private def lpResult(spark: SparkSession, ids: Array[Long],
+                       lbl: Array[Long], has: Array[Boolean]): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(lbl.indices.filter(has).map(v => (ids(v), lbl(v))))
       .toDF("id", "community")
+  }
+
+  /** [[Graph.labelPropagation]]'s driver replay on the loop-free edge
+    * list the distributed legs consume: round 1 is min neighbor id per
+    * `a`, each later round one [[LpAdjacency.round]] over the whole list.
+    * A node that never appears as `a`, or whose neighbors all lost their
+    * label, gets no label and is left out — what the sort-merge loop's
+    * `groupBy(a)` and inner label join do when a caller's
+    * `assumeSymmetric` frame is not symmetric. Returns (id, community). */
+  def labelPropagation(spark: SparkSession, edges: Edges,
+                       iters: Int): DataFrame = {
+    val g = LpAdjacency(edges.src, edges.dst)
+    // a labeled row's slot is its own int; b-only ints never hold one
+    val slot = Array.tabulate(g.ids.length)(u => if (u < g.nOut) u else -1)
+    var lbl = g.minNeighbor
+    var has = Array.fill(g.nOut)(true)
+    for (_ <- 2 to iters) {
+      val (l, h) = g.round(slot, lbl, has)
+      lbl = l; has = h
+    }
+    lpResult(spark, g.ids, lbl, has)
+  }
+
+  /** [[Graph.labelPropagation]]'s hybrid leg: the edges stay on the
+    * executors as `adj`, one cached [[LpAdjacency]] per a-partition, whose
+    * labeled rows are disjoint and number `nV` in all; the labels live on
+    * the driver, indexed by the rank of their id among the `nV` sorted
+    * ids. Round 1 collects each partition's (id, min neighbor) arrays;
+    * the sorted id array is broadcast once. Each later round is one
+    * map-only job over the cached adjacencies: a task reads the broadcast
+    * labels and has-label flags, finds its neighbors' slots by binary
+    * search, runs [[LpAdjacency.round]] and returns its labeled
+    * (id, label) arrays. The caller runs this inside a SQL execution and
+    * owns `adj`; every broadcast is destroyed here. */
+  def labelPropagationHybrid(spark: SparkSession,
+                             adj: org.apache.spark.rdd.RDD[LpAdjacency],
+                             nV: Int, iters: Int): DataFrame = {
+    val sc = spark.sparkContext
+    val round1 = sc.runJob(adj, (it: Iterator[LpAdjacency]) => {
+      val g = it.next()
+      (java.util.Arrays.copyOf(g.ids, g.nOut), g.minNeighbor)
+    })
+    val ids = new Array[Long](nV)
+    var at = 0
+    round1.foreach { case (p, _) =>
+      require(at + p.length <= nV, s"labelPropagation: more than $nV rows")
+      System.arraycopy(p, 0, ids, at, p.length); at += p.length
+    }
+    java.util.Arrays.sort(ids)
+    require(at == nV && (1 until nV).forall(i => ids(i - 1) != ids(i)),
+      s"labelPropagation: the a-partitions' rows are not $nV distinct ids")
+    var lbl = new Array[Long](nV)
+    var has = Array.fill(nV)(true)
+    def fill(parts: Array[(Array[Long], Array[Long])]): Unit =
+      parts.foreach { case (p, l) =>
+        var j = 0
+        while (j < p.length) {
+          val s = java.util.Arrays.binarySearch(ids, p(j))
+          lbl(s) = l(j); has(s) = true; j += 1
+        }
+      }
+    fill(round1)
+    val idsB = sc.broadcast(ids)
+    try for (_ <- 2 to iters) {
+      val stateB = sc.broadcast((lbl, has))
+      try {
+        val parts = sc.runJob(adj, (it: Iterator[LpAdjacency]) => {
+          val g = it.next()
+          val all = idsB.value
+          val slot = g.ids.map(id => math.max(-1,
+            java.util.Arrays.binarySearch(all, id)))
+          val (l, h) = stateB.value
+          val (nl, nh) = g.round(slot, l, h)
+          val keep = Array.range(0, nh.length).filter(nh)
+          (keep.map(g.ids), keep.map(nl))
+        })
+        lbl = new Array[Long](nV)
+        has = new Array[Boolean](nV)
+        fill(parts)
+      } finally stateB.destroy()
+    } finally idsB.destroy()
+    lpResult(spark, ids, lbl, has)
   }
 
   /** [[Graph.hits]] rounds on a DEDUPED directed edge list. BigInt replays

@@ -94,23 +94,36 @@ class CacheHygieneSpec extends SparkSuite {
       .intersect(left).isEmpty)
   }
 
-  test("labelPropagation above the edge gate: broadcast and sort-merge " +
-    "legs leave no Dataset cache, only the readable result") {
+  test("labelPropagation above the edge gate: the hybrid leg leaves no " +
+    "cache, persistent RDD or broadcast; the sort-merge leg only the result") {
     import graft.ops.Graph
+    import org.apache.spark.BroadcastProbe
     val sym = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (2L, 5L))
       .flatMap(e => Seq(e, e.swap)).toDF("s", "t")
     def lp = Graph.labelPropagation(sym, "s", "t", iters = 3,
       assumeSymmetric = true)
     val local = rowSet(lp)
-    // 5 nodes, 10 edge rows: limit 5 broadcasts the labels, 0 sort-merges
+    // 5 nodes, 10 edge rows: limit 5 runs the hybrid leg, 0 sort-merges
     for (limit <- Seq(5L, 0L)) {
       spark.catalog.clearCache()
+      val held = BroadcastProbe.heldValues(spark.sparkContext)
       var out: org.apache.spark.sql.DataFrame = null
       val left = newCaches { out = atDriverRowLimit(limit)(lp) }
       assert(spark.sharedState.cacheManager.isEmpty, s"limit=$limit")
-      // the result's own checkpoint is all that stays; every round's
-      // checkpoint and both edge caches are released
-      assert(left.size == 1, s"limit=$limit left=$left")
+      if (limit > 0L) {
+        // the result is built from driver arrays: the adjacency cache is
+        // released, and every broadcast is destroyed (its removal from
+        // the block manager is asynchronous)
+        assert(left.isEmpty, s"limit=$limit left=$left")
+        def extra = BroadcastProbe.heldValues(spark.sparkContext) -- held
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (extra.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(extra.isEmpty, s"broadcasts left: $extra")
+      } else {
+        // the result's own checkpoint is all that stays; every round's
+        // checkpoint and both edge caches are released
+        assert(left.size == 1, s"limit=$limit left=$left")
+      }
       assert(rowSet(out) == local, s"limit=$limit")
     }
   }

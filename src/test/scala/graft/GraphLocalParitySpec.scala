@@ -9,9 +9,10 @@ import scala.jdk.CollectionConverters._
   * dangling and duplicate-edge graph shapes. Each case runs the operator
   * on every leg [[graft.ops.Bounded.fitsDriver]] can select: the local
   * replay (default limit), the distributed sort-merge loop (limit 0) and,
-  * for the operators that broadcast a node-sized frame (pageRank,
-  * personalizedPageRank, modularity, labelPropagation), the broadcast
-  * loop (a limit between the node and the edge count). */
+  * for the operators that keep a node-sized frame off the edge side
+  * (pageRank, personalizedPageRank and modularity broadcast it,
+  * labelPropagation holds it on the driver), that leg (a limit between
+  * the node and the edge count). */
 class GraphLocalParitySpec extends SparkSuite {
   init()
   import spark.implicits._
@@ -25,24 +26,37 @@ class GraphLocalParitySpec extends SparkSuite {
     (3L, 4L), (4L, 3L), (1L, 4L), (4L, 1L), (2L, 5L), (5L, 2L))
 
   /** labelPropagation's three legs: the sort-merge loop (limit 0), the
-    * broadcast loop (`bcastLimit`, at least the node count and below the
-    * edge count) and the local replay (default limit). Each must give
-    * the same rows. */
-  private def lpThreeWays(bcastLimit: Long, what: String)
+    * hybrid leg (`hybridLimit`, at least the node count and below the
+    * edge count: labels on the driver, edges on the executors) and the
+    * local replay (default limit). Each must give the same rows. */
+  private def lpThreeWays(hybridLimit: Long, what: String)
                          (f: => org.apache.spark.sql.DataFrame)
       : Set[Seq[Any]] = {
     val (d, l) = bothWays(f)
-    val b = atDriverRowLimit(bcastLimit)(rowSet(f))
-    assert(d == l && b == l, s"$what sort-merge=$d broadcast=$b local=$l")
+    val h = atDriverRowLimit(hybridLimit)(rowSet(f))
+    assert(d == l && h == l, s"$what sort-merge=$d hybrid=$h local=$l")
     l
   }
 
-  // `sym` has 10 edge rows over 5 nodes: a limit of 5 broadcasts the
-  // label frame and keeps the edges distributed
+  // `sym` has 10 edge rows over 5 nodes: a limit of 5 keeps the labels
+  // on the driver and the edges distributed
   test("labelPropagation parity: symmetric graph, several iters") {
     for (it <- Seq(1, 2, 3, 5))
       lpThreeWays(5L, s"iters=$it")(Graph.labelPropagation(
         sym.toDF("s", "t"), "s", "t", iters = it, assumeSymmetric = true))
+  }
+
+  test("labelPropagation parity: ids at the ends of the LONG range") {
+    // round 1 hands Long.MinValue to -1 and 0, so later rounds' argmax
+    // must order it without negating it (4 nodes, 8 edge rows)
+    val lo = Long.MinValue; val hi = Long.MaxValue
+    val ends = Seq((lo, -1L), (lo, 0L), (-1L, 0L), (0L, hi)).toDF("s", "t")
+    for (it <- 1 to 3) {
+      val l = lpThreeWays(4L, s"iters=$it")(Graph.labelPropagation(
+        ends, "s", "t", iters = it))
+      assert(l.size == 4, s"iters=$it local=$l")
+      if (it > 1) assert(l.forall(_(1) == lo), s"iters=$it local=$l")
+    }
   }
 
   test("labelPropagation parity: directed frame passed as symmetric") {
@@ -88,15 +102,18 @@ class GraphLocalParitySpec extends SparkSuite {
     seen.asScala.toSeq.map(_._2)
   }
 
-  test("labelPropagation legs: broadcast labels over the one edge cache, " +
-    "or a sort-merge join on a second cache keyed by b") {
+  test("labelPropagation legs: the hybrid leg repartitions by a once and " +
+    "joins nothing; the sort-merge leg joins on a second cache keyed by b") {
     def lp = Graph.labelPropagation(sym.toDF("s", "t"), "s", "t",
       iters = 3, assumeSymmetric = true).collect()
     val rekey = "REPARTITION_BY_COL"
-    val b = atDriverRowLimit(5L)(actionPlans(lp))
-    assert(b.exists(_.contains("BroadcastHashJoin")), b.mkString("\n"))
-    assert(!b.exists(p => p.contains("SortMergeJoin") || p.contains(rekey)),
-      b.mkString("\n"))
+    val h = atDriverRowLimit(5L)(actionPlans(lp))
+    assert(!h.exists(_.contains("Join")), h.mkString("\n"))
+    val rekeyed = h.filter(_.contains(rekey))
+    assert(rekeyed.size == 1, h.mkString("\n"))
+    val keys = raw"hashpartitioning\((\w+)#\d+L?, \d+\), REPARTITION_BY_COL".r
+      .findAllMatchIn(rekeyed.head).map(_.group(1)).toSet
+    assert(keys == Set("a"), rekeyed.head)
     val s = atDriverRowLimit(0L)(actionPlans(lp))
     assert(s.exists(_.contains("SortMergeJoin")) && s.exists(_.contains(rekey)),
       s.mkString("\n"))
@@ -268,11 +285,18 @@ class GraphLocalParitySpec extends SparkSuite {
   }
 
   // at most 400 nodes and over 3000 symmetric edge rows: a limit of 1000
-  // broadcasts the label frame only
+  // runs the hybrid leg. Without partition coalescing its a-repartition
+  // keeps all 4 shuffle partitions, so each round gathers labels across
+  // partitions.
   test("labelPropagation parity: random tie-heavy graph, iters 1–5") {
-    for (it <- 1 to 5)
-      lpThreeWays(1000L, s"iters=$it")(Graph.labelPropagation(rndDf,
-        "s", "t", iters = it))
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    for (coalesce <- Seq("true", "false")) {
+      spark.conf.set(key, coalesce)
+      try for (it <- 1 to 5)
+        lpThreeWays(1000L, s"coalesce=$coalesce iters=$it")(
+          Graph.labelPropagation(rndDf, "s", "t", iters = it))
+      finally spark.conf.unset(key)
+    }
   }
 
   test("pageRank parity: random tie-heavy graph") {
