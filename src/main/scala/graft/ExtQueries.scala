@@ -928,11 +928,12 @@ object ExtQueries {
 
     // Label-propagation communities over the trading graph (deterministic
     // min-label tie-break, 3 synchronous rounds — a pure function of the
-    // edge set, replayed round by round in SQL).
+    // edge set). The raw one-direction trading pairs go in: the operator
+    // mirrors them and folds repeats inside its one a-keyed shuffle.
     "q287_label_propagation" -> { (s, dir) =>
       Graph.labelPropagation(
-        Graph.tradingPairsGraph(t(s, dir, "orders"), t(s, dir, "lineitem")),
-        "src", "dst", iters = 3, assumeSymmetric = true)
+        Graph.tradingPairs(t(s, dir, "orders"), t(s, dir, "lineitem")),
+        "cnode", "snode", iters = 3)
         .orderBy(col("id"))
     },
 
@@ -1022,10 +1023,11 @@ object ExtQueries {
     // Newman modularity of the 3-round label-propagation partition over
     // the trading graph — "was the community detection any good".
     "q298_modularity" -> { (s, dir) =>
-      // the graph feeds BOTH consumers below, and each persists only its
-      // own derivative — persist the shared parent so the orders⋈lineitem
-      // build runs once, released after modularity materializes (it
-      // counts its one-row result before returning).
+      // the graph feeds BOTH consumers below: labelPropagation persists
+      // no frame (only its own adjacencies) and modularity only its own
+      // projection — persist the shared, already mirrored parent so the
+      // orders⋈lineitem build runs once, released after modularity
+      // materializes (it counts its one-row result before returning).
       val g = Graph.tradingPairsGraph(t(s, dir, "orders"),
           t(s, dir, "lineitem"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

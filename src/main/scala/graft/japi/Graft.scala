@@ -217,8 +217,9 @@ object Graft {
                        iters: Int): DataFrame =
     graft.ops.Graph.labelPropagation(edges, src, dst, iters)
 
-  /** Label propagation over an ALREADY-SYMMETRIC deduped loop-free edge
-    * frame — skips the re-symmetrization shuffle (see Graph scaladoc). */
+  /** Label propagation over an edge frame that already holds both
+    * directions of every edge — skips only the mirroring; duplicate rows
+    * fold either way (see Graph scaladoc). */
   def labelPropagationSymmetric(edges: DataFrame, src: String, dst: String,
                                 iters: Int): DataFrame =
     graft.ops.Graph.labelPropagation(edges, src, dst, iters,

@@ -227,41 +227,41 @@ object Graph {
     * frontier is how web-scale corpus curation groups mutually-linked
     * site clusters without an O(n²) similarity pass.
     *
-    * Input edge list is symmetrized (both directions), deduped, and
-    * self-loops dropped — unless `assumeSymmetric` is set, which skips
-    * the union+distinct re-symmetrization (one full-|E| shuffle) for
-    * callers whose edge frame ALREADY holds exactly one row per directed
-    * edge of a loop-free symmetric graph ([[tradingPairsGraph]] does:
-    * distinct pairs emitted in both directions over disjoint even/odd
-    * node spaces).
+    * The edge list is taken as undirected: rows with a NULL endpoint and
+    * self-loops are dropped, each row is mirrored, and duplicate rows
+    * fold. `assumeSymmetric` skips only the mirroring, for callers whose
+    * frame already holds both directions of every edge (duplicates still
+    * fold); a missing direction is then a missing edge.
     *
     * Round 1 is closed form on every leg: every node starts as its own
     * label, so each neighbor counts once and the argmax is the min
     * neighbor id. Later rounds take, per node, the most frequent label
-    * among its labeled neighbors, the smallest on a tie. The symmetric
-    * edge frame is persisted once and its size picks one of three legs:
-    *  - |E| within [[Bounded.fitsDriver]]: the driver replay
-    *    ([[GraphLocal.labelPropagation]]) runs every round in-core off one
-    *    bounded packed collect.
-    *  - |E| above it: the edge frame is repartitioned by `a` once and each
-    *    partition packed into one [[GraphLocal.LpAdjacency]] (a primitive
-    *    CSR), cached on the executors. The node count |V| is the sum of
-    *    their row counts. Within the gate the hybrid leg
-    *    ([[GraphLocal.labelPropagationHybrid]]) keeps the labels on the
-    *    driver, at most about 60 bytes per node, and runs each later
-    *    round as one map-only job over the cached adjacencies against
+    * among its labeled neighbors, the smallest on a tie. Every leg starts
+    * from one a-keyed repartition of the mirrored rows: each partition is
+    * packed into one [[GraphLocal.LpAdjacency]] (a primitive CSR whose
+    * neighbor slices are sorted and distinct, so duplicate rows fold
+    * without another shuffle), persisted on the executors, and one job
+    * over them counts the distinct edges |E| and nodes |V|, which pick
+    * the leg:
+    *  - |E| within [[Bounded.fitsDriver]]: the driver leg collects the
+    *    adjacencies and runs the round loop ([[GraphLocal.lpRounds]]) in
+    *    process.
+    *  - |V| within it: the hybrid leg runs the same loop with the labels
+    *    on the driver, at most about 60 bytes per node, and each later
+    *    round one map-only job over the cached adjacencies against
     *    broadcast labels.
-    *  - |V| above the gate as well: the adjacencies are dropped and the
-    *    sort-merge loop runs. A second edge cache keyed by b, built once,
-    *    makes each round a co-partitioned join that shuffles only the
-    *    node-sized label frame, then a keyed count and a struct-max
-    *    argmax `max(struct(c, ~lbl))`: bitwise NOT reverses the label
-    *    order without the overflow negation hits at `Long.MinValue`.
-    *    Single consumption of the label frame per round keeps its lazy
-    *    plan linear; a checkpoint every second round bounds analysis
-    *    depth on deep runs (the [[pageRank]] lineage lesson).
-    * The replay and the hybrid tasks share one round kernel
-    * ([[GraphLocal.LpAdjacency.round]], whose mode is sort, then the
+    *  - |V| above it as well: the adjacencies are dropped and the
+    *    sort-merge loop runs over a persisted distinct edge frame. A
+    *    second edge cache keyed by b, built once, makes each round a
+    *    co-partitioned join that shuffles only the node-sized label
+    *    frame, then a keyed count and a struct-max argmax
+    *    `max(struct(c, ~lbl))`: bitwise NOT reverses the label order
+    *    without the overflow negation hits at `Long.MinValue`. Single
+    *    consumption of the label frame per round keeps its lazy plan
+    *    linear; a checkpoint every second round bounds analysis depth on
+    *    deep runs (the [[pageRank]] lineage lesson).
+    * The driver and hybrid legs share one round kernel
+    * ([[GraphLocal.LpAdjacency.laterRound]], whose mode is sort, then the
     * first longest run), so all three legs give the same rows. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 3, assumeSymmetric: Boolean = false)
@@ -273,48 +273,56 @@ object Graph {
         col("a") =!= col("b"))
     val e1 =
       if (assumeSymmetric) e0
-      else e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-        .distinct()
+      else e0.select(explode(array(struct(col("a"), col("b")),
+          struct(col("b").as("a"), col("a").as("b")))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"))
     val spark = edges.sparkSession
-    val ePre = e1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eCnt = ePre.count()
-    // Below the driver limit the round loop is job scheduling for
-    // milliseconds of arithmetic: it runs in-core off one bounded collect
-    // of the warm cache, same min-label/argmax integers ([[GraphLocal]]).
-    if (Bounded.fitsDriver(spark, eCnt)) {
-      val arr = GraphLocal.collectEdges(ePre,
-        "gated local labelPropagation replay")
-      ePre.unpersist()
-      return GraphLocal.labelPropagation(spark, arr, iters)
-    }
-    // above the edge gate: the a-keyed adjacencies, built once, count
-    // |V|, which picks the hybrid or the sort-merge leg (see scaladoc).
-    // All of the hybrid leg's jobs run in the one SQL execution of the
-    // repartition they read.
-    val byA = ePre.repartition(col("a")).queryExecution
-    val hybrid = SQLExecution.withNewExecutionId(byA,
+    val sc = spark.sparkContext
+    // All of the driver and hybrid legs' jobs run in the one SQL
+    // execution of the repartition they read.
+    val byA = e1.repartition(col("a")).queryExecution
+    val driverLabels = SQLExecution.withNewExecutionId(byA,
         Some("labelPropagation")) {
       val adj = byA.toRdd.mapPartitions { it =>
         val c = Bounded.packLongs(it, 2, Int.MaxValue).get // a, b: not NULL
         Iterator(GraphLocal.LpAdjacency(c(0), c(1)))
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val nV = spark.sparkContext.runJob(adj,
-          (it: Iterator[GraphLocal.LpAdjacency]) => it.next().nOut.toLong).sum
-        if (!Bounded.fitsDriver(spark, nV)) None
-        else {
-          ePre.unpersist()
-          Some(GraphLocal.labelPropagationHybrid(spark, adj, nV.toInt, iters))
-        }
+        val sizes = sc.runJob(adj, (it: Iterator[GraphLocal.LpAdjacency]) => {
+          val g = it.next(); (g.nEdges.toLong, g.nOut.toLong)
+        })
+        val nV = sizes.map(_._2).sum
+        if (Bounded.fitsDriver(spark, sizes.map(_._1).sum)) {
+          val gs = sc.runJob(adj, (it: Iterator[GraphLocal.LpAdjacency]) =>
+            it.next())
+          adj.unpersist() // the loop reads only the collected copies
+          Some(GraphLocal.lpRounds(spark, nV.toInt, iters,
+              gs.map(_.firstRound)) { (ids, lbl, has) =>
+            gs.map(_.laterRound(ids, lbl, has))
+          })
+        } else if (Bounded.fitsDriver(spark, nV)) {
+          val round1 = sc.runJob(adj,
+            (it: Iterator[GraphLocal.LpAdjacency]) => it.next().firstRound)
+          Some(GraphLocal.lpRounds(spark, nV.toInt, iters, round1) {
+            (ids, lbl, has) =>
+              val b = sc.broadcast((ids, lbl, has))
+              try sc.runJob(adj, (it: Iterator[GraphLocal.LpAdjacency]) => {
+                val (i, l, h) = b.value
+                it.next().laterRound(i, l, h)
+              }) finally b.destroy()
+          })
+        } else None
       } finally adj.unpersist()
     }
-    hybrid.getOrElse(sortMergeLabelPropagation(ePre, iters))
+    driverLabels.getOrElse(sortMergeLabelPropagation(e1, iters))
   }
 
-  /** [[labelPropagation]]'s sort-merge leg over the persisted symmetric
-    * edge frame `ePre`, which it releases. */
-  private def sortMergeLabelPropagation(ePre: DataFrame, iters: Int)
+  /** [[labelPropagation]]'s sort-merge leg over the mirrored edge rows
+    * `e1`, deduped into one persisted frame that it releases. */
+  private def sortMergeLabelPropagation(e1: DataFrame, iters: Int)
       : DataFrame = {
+    val ePre = e1.distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // round 1 in closed form: min neighbor id
     var labels = ePre.groupBy(col("a"))
       .agg(min(col("b")).as("lbl"))
@@ -1049,17 +1057,22 @@ object Graph {
     out
   }
 
-  /** The TPC-H trading graph: an undirected customer↔supplier edge for
-    * every distinct pair that traded (orders ⋈ lineitem), encoded into one
-    * node space (customer c → 2c, supplier s → 2s+1) and emitted in both
-    * directions so every node has out-edges. */
-  def tradingPairsGraph(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val pairs = orders.select(col("o_orderkey"), col("o_custkey"))
+  /** The TPC-H trading pairs: one (cnode, snode) row per orders ⋈
+    * lineitem match, customer c encoded as node 2c and supplier s as
+    * 2s+1, so the two node spaces are disjoint. A pair that traded more
+    * than once repeats. */
+  def tradingPairs(orders: DataFrame, lineitem: DataFrame): DataFrame =
+    orders.select(col("o_orderkey"), col("o_custkey"))
       .join(lineitem.select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("cnode"),
         (col("l_suppkey") * 2 + 1).as("snode"))
-      .distinct()
+
+  /** The TPC-H trading graph: an undirected customer↔supplier edge for
+    * every distinct [[tradingPairs]] pair, emitted in both directions so
+    * every node has out-edges. */
+  def tradingPairsGraph(orders: DataFrame, lineitem: DataFrame): DataFrame = {
+    val pairs = tradingPairs(orders, lineitem).distinct()
     // emit both directions by EXPLODING each distinct pair — a
     // self-union would evaluate the orders⋈lineitem join + distinct once
     // PER BRANCH in every consuming pass (the frame is lazy; most callers

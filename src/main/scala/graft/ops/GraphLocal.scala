@@ -30,21 +30,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the same limit, so an input that outgrows it fails loudly instead of
   * growing the driver.
   *
-  * Label propagation has three legs. Below the edge limit it replays
-  * here like the others. Above it, [[Graph.labelPropagation]] caches
-  * its edges on the executors as one [[LpAdjacency]] (a primitive CSR)
-  * per a-partition. When the node count |V| is within the limit, the
-  * hybrid leg ([[labelPropagationHybrid]]) keeps the labels on the
-  * driver and runs each round as one map-only job; a larger node set
-  * takes the sort-merge loop. The replay and the hybrid tasks run the
-  * same round ([[LpAdjacency.round]], whose mode is [[modeOf]]: sort,
-  * then the first longest run). By count of its arrays, the hybrid leg
-  * holds at most about 60 bytes per node on the driver: the sorted ids
-  * and their broadcast copy (16), two generations of labels and
-  * has-label flags (18), the broadcast copy of one generation (9) and
-  * one round's returned (id, label) arrays (16); the broadcast copies
-  * are compressed, and between rounds about 35 bytes stay. At a |V| of
-  * 4M that is under 0.25 GB.
+  * Label propagation has three legs, all fed by one a-keyed shuffle in
+  * [[Graph.labelPropagation]] that packs each partition into one
+  * [[LpAdjacency]] (a primitive CSR, duplicate edges folded) persisted on
+  * the executors. With the distinct edge count |E| within the limit the
+  * driver leg collects the adjacencies and runs the round loop
+  * ([[lpRounds]]) in process; with only the node count |V| within it the
+  * hybrid leg runs the same loop with the labels on the driver and each
+  * round as one map-only job; a larger node set takes the sort-merge
+  * loop. Both loops run the same round ([[LpAdjacency.laterRound]], whose
+  * mode is [[modeOf]]: sort, then the first longest run). By count of
+  * its arrays, the driver leg's collect holds 4 bytes per distinct
+  * directed edge (the CSR's neighbor ints) plus the 4 of the serialized
+  * task result they arrive in, where the packed edge collect held 16 of
+  * payload and peaked near 80; per node each adjacency adds its
+  * offsets (4) and the ids it has seen (8, at most one per edge). The
+  * loop holds at most about 60 bytes per node on either leg: the sorted
+  * ids and, on the hybrid leg, their broadcast copy (16), two
+  * generations of labels and has-label flags (18), the broadcast copy
+  * of one generation (9) and one round's returned (id, label) arrays
+  * (16); the broadcast copies are compressed, and between rounds the
+  * ids and one generation stay, 17 bytes. At a |V| of 4M that is under
+  * 0.25 GB.
   *
   * The limit only changes WHERE the arithmetic runs: every replay walks
   * the SAME integer / IEEE-double op sequence as the distributed plan
@@ -180,35 +187,42 @@ private[graft] object GraphLocal {
   }
 
   /** Label propagation's adjacency: a CSR keyed by `a` over local node
-    * ints. The first `nOut` ints are the distinct `a` ids, the rows that
-    * can take a label; `ids(u)` is the id behind int u. The driver replay
-    * builds one over the whole edge list, the hybrid leg one per
-    * a-partition, cached on the executors. */
+    * ints, each node's neighbors sorted and distinct. The first `nOut`
+    * ints are the distinct `a` ids, the rows that can take a label;
+    * `ids(u)` is the id behind int u. [[Graph.labelPropagation]] packs one
+    * per a-partition, so a duplicate edge row folds where it lands. */
   final class LpAdjacency private (val ids: Array[Long], val nOut: Int,
       off: Array[Int], nbr: Array[Int]) extends Serializable {
 
-    /** Round 1 in closed form: every node starts as its own label, so
-      * each neighbor counts once and the argmax is the min neighbor id. */
-    def minNeighbor: Array[Long] = Array.tabulate(nOut) { v =>
-      var m = Long.MaxValue
-      var j = off(v)
-      while (j < off(v + 1)) { m = math.min(m, ids(nbr(j))); j += 1 }
-      m
-    }
+    /** The distinct edges. */
+    def nEdges: Int = off(nOut)
 
-    /** One later round: row v takes the [[modeOf]] its LABELED
-      * neighbors' labels, where neighbor int u reads slot `slot(u)` of
-      * `lbl`/`has` (−1 = no label). A row whose neighbors all lack a
-      * label gets none — what the sort-merge loop's inner label join
-      * does. Returns the rows' (label, has). */
-    def round(slot: Array[Int], lbl: Array[Long], has: Array[Boolean])
-        : (Array[Long], Array[Boolean]) = {
+    /** Round 1 in closed form: every node starts as its own label, so
+      * each neighbor counts once and the argmax is the min neighbor id.
+      * Returns the labeled rows' (id, label). */
+    def firstRound: (Array[Long], Array[Long]) =
+      (java.util.Arrays.copyOf(ids, nOut), Array.tabulate(nOut) { v =>
+        var m = Long.MaxValue
+        var j = off(v)
+        while (j < off(v + 1)) { m = math.min(m, ids(nbr(j))); j += 1 }
+        m
+      })
+
+    /** One later round against the labels of the sorted ids `all`:
+      * `lbl`/`has` hold id `all(s)`'s label at slot s. Row v takes the
+      * [[modeOf]] its LABELED neighbors' labels; a row whose neighbors
+      * all lack a label gets none — what the sort-merge loop's inner
+      * label join does. Returns the labeled rows' (id, label). */
+    def laterRound(all: Array[Long], lbl: Array[Long], has: Array[Boolean])
+        : (Array[Long], Array[Long]) = {
+      // a neighbor's slot, or −1 for an id that holds no label
+      val slot = ids.map(id => math.max(-1, java.util.Arrays.binarySearch(all, id)))
       var maxDeg = 0
       var v = 0
       while (v < nOut) { maxDeg = math.max(maxDeg, off(v + 1) - off(v)); v += 1 }
       val buf = new Array[Long](maxDeg)
-      val next = new Array[Long](nOut)
-      val nextHas = new Array[Boolean](nOut)
+      val outIds = new scala.collection.mutable.ArrayBuilder.ofLong
+      val outLbl = new scala.collection.mutable.ArrayBuilder.ofLong
       v = 0
       while (v < nOut) {
         var k = 0
@@ -218,16 +232,17 @@ private[graft] object GraphLocal {
           if (s >= 0 && has(s)) { buf(k) = lbl(s); k += 1 }
           j += 1
         }
-        if (k > 0) { next(v) = modeOf(buf, k); nextHas(v) = true }
+        if (k > 0) { outIds.addOne(ids(v)); outLbl.addOne(modeOf(buf, k)) }
         v += 1
       }
-      (next, nextHas)
+      (outIds.result(), outLbl.result())
     }
   }
 
   object LpAdjacency {
     /** The adjacency of edges (a(i), b(i)): every `a` id is indexed
-      * before any `b` id, so the labeled rows come first. */
+      * before any `b` id, so the labeled rows come first; each node's
+      * neighbor slice is sorted and its repeats dropped. */
     def apply(a: Array[Long], b: Array[Long]): LpAdjacency = {
       val ix = new LongIndex
       val from = new Array[Int](a.length)
@@ -238,58 +253,40 @@ private[graft] object GraphLocal {
       i = 0
       while (i < b.length) { to(i) = ix(b(i)); i += 1 }
       val (off, nbr) = csr(from, to, nOut)
-      new LpAdjacency(Array.tabulate(ix.size)(ix.id), nOut, off, nbr)
+      // compact in place: slice v moves down to start at off(v) = w
+      var w = 0
+      var v = 0
+      while (v < nOut) {
+        val lo = off(v); val hi = off(v + 1)
+        java.util.Arrays.sort(nbr, lo, hi)
+        off(v) = w
+        var j = lo
+        while (j < hi) {
+          if (w == off(v) || nbr(j) != nbr(w - 1)) { nbr(w) = nbr(j); w += 1 }
+          j += 1
+        }
+        v += 1
+      }
+      off(nOut) = w
+      new LpAdjacency(Array.tabulate(ix.size)(ix.id), nOut, off,
+        if (w == nbr.length) nbr else java.util.Arrays.copyOf(nbr, w))
     }
   }
 
-  /** The (id, community) frame of the labeled rows of `ids`. */
-  private def lpResult(spark: SparkSession, ids: Array[Long],
-                       lbl: Array[Long], has: Array[Boolean]): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(lbl.indices.filter(has).map(v => (ids(v), lbl(v))))
-      .toDF("id", "community")
-  }
-
-  /** [[Graph.labelPropagation]]'s driver replay on the loop-free edge
-    * list the distributed legs consume: round 1 is min neighbor id per
-    * `a`, each later round one [[LpAdjacency.round]] over the whole list.
-    * A node that never appears as `a`, or whose neighbors all lost their
-    * label, gets no label and is left out — what the sort-merge loop's
-    * `groupBy(a)` and inner label join do when a caller's
-    * `assumeSymmetric` frame is not symmetric. Returns (id, community). */
-  def labelPropagation(spark: SparkSession, edges: Edges,
-                       iters: Int): DataFrame = {
-    val g = LpAdjacency(edges.src, edges.dst)
-    // a labeled row's slot is its own int; b-only ints never hold one
-    val slot = Array.tabulate(g.ids.length)(u => if (u < g.nOut) u else -1)
-    var lbl = g.minNeighbor
-    var has = Array.fill(g.nOut)(true)
-    for (_ <- 2 to iters) {
-      val (l, h) = g.round(slot, lbl, has)
-      lbl = l; has = h
-    }
-    lpResult(spark, g.ids, lbl, has)
-  }
-
-  /** [[Graph.labelPropagation]]'s hybrid leg: the edges stay on the
-    * executors as `adj`, one cached [[LpAdjacency]] per a-partition, whose
-    * labeled rows are disjoint and number `nV` in all; the labels live on
-    * the driver, indexed by the rank of their id among the `nV` sorted
-    * ids. Round 1 collects each partition's (id, min neighbor) arrays;
-    * the sorted id array is broadcast once. Each later round is one
-    * map-only job over the cached adjacencies: a task reads the broadcast
-    * labels and has-label flags, finds its neighbors' slots by binary
-    * search, runs [[LpAdjacency.round]] and returns its labeled
-    * (id, label) arrays. The caller runs this inside a SQL execution and
-    * owns `adj`; every broadcast is destroyed here. */
-  def labelPropagationHybrid(spark: SparkSession,
-                             adj: org.apache.spark.rdd.RDD[LpAdjacency],
-                             nV: Int, iters: Int): DataFrame = {
-    val sc = spark.sparkContext
-    val round1 = sc.runJob(adj, (it: Iterator[LpAdjacency]) => {
-      val g = it.next()
-      (java.util.Arrays.copyOf(g.ids, g.nOut), g.minNeighbor)
-    })
+  /** [[Graph.labelPropagation]]'s round loop, shared by its driver and
+    * hybrid legs. The labels live here, indexed by the rank of their id
+    * among the `nV` sorted ids of the adjacencies' labeled rows, which
+    * are disjoint. `round1` holds each adjacency's
+    * [[LpAdjacency.firstRound]]; `later(ids, lbl, has)` runs
+    * [[LpAdjacency.laterRound]] on every adjacency: in process on the
+    * driver leg, as one map-only job on the hybrid leg. A node that never
+    * appears as `a`, or whose neighbors all lost their label, gets no
+    * label and is left out — what the sort-merge loop's `groupBy(a)` and
+    * inner label join do. Returns (id, community). */
+  def lpRounds(spark: SparkSession, nV: Int, iters: Int,
+               round1: Array[(Array[Long], Array[Long])])(
+      later: (Array[Long], Array[Long], Array[Boolean]) =>
+        Array[(Array[Long], Array[Long])]): DataFrame = {
     val ids = new Array[Long](nV)
     var at = 0
     round1.foreach { case (p, _) =>
@@ -298,9 +295,9 @@ private[graft] object GraphLocal {
     }
     java.util.Arrays.sort(ids)
     require(at == nV && (1 until nV).forall(i => ids(i - 1) != ids(i)),
-      s"labelPropagation: the a-partitions' rows are not $nV distinct ids")
+      s"labelPropagation: the adjacencies' rows are not $nV distinct ids")
     var lbl = new Array[Long](nV)
-    var has = Array.fill(nV)(true)
+    var has = new Array[Boolean](nV)
     def fill(parts: Array[(Array[Long], Array[Long])]): Unit =
       parts.foreach { case (p, l) =>
         var j = 0
@@ -310,26 +307,15 @@ private[graft] object GraphLocal {
         }
       }
     fill(round1)
-    val idsB = sc.broadcast(ids)
-    try for (_ <- 2 to iters) {
-      val stateB = sc.broadcast((lbl, has))
-      try {
-        val parts = sc.runJob(adj, (it: Iterator[LpAdjacency]) => {
-          val g = it.next()
-          val all = idsB.value
-          val slot = g.ids.map(id => math.max(-1,
-            java.util.Arrays.binarySearch(all, id)))
-          val (l, h) = stateB.value
-          val (nl, nh) = g.round(slot, l, h)
-          val keep = Array.range(0, nh.length).filter(nh)
-          (keep.map(g.ids), keep.map(nl))
-        })
-        lbl = new Array[Long](nV)
-        has = new Array[Boolean](nV)
-        fill(parts)
-      } finally stateB.destroy()
-    } finally idsB.destroy()
-    lpResult(spark, ids, lbl, has)
+    for (_ <- 2 to iters) {
+      val parts = later(ids, lbl, has)
+      lbl = new Array[Long](nV)
+      has = new Array[Boolean](nV)
+      fill(parts)
+    }
+    import spark.implicits._
+    spark.createDataset(lbl.indices.filter(has).map(v => (ids(v), lbl(v))))
+      .toDF("id", "community")
   }
 
   /** [[Graph.hits]] rounds on a DEDUPED directed edge list. BigInt replays

@@ -94,8 +94,8 @@ class CacheHygieneSpec extends SparkSuite {
       .intersect(left).isEmpty)
   }
 
-  test("labelPropagation above the edge gate: the hybrid leg leaves no " +
-    "cache, persistent RDD or broadcast; the sort-merge leg only the result") {
+  test("labelPropagation: the driver and hybrid legs leave no cache, " +
+    "persistent RDD or broadcast; the sort-merge leg only the result") {
     import graft.ops.Graph
     import org.apache.spark.BroadcastProbe
     val sym = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (2L, 5L))
@@ -103,14 +103,15 @@ class CacheHygieneSpec extends SparkSuite {
     def lp = Graph.labelPropagation(sym, "s", "t", iters = 3,
       assumeSymmetric = true)
     val local = rowSet(lp)
-    // 5 nodes, 10 edge rows: limit 5 runs the hybrid leg, 0 sort-merges
-    for (limit <- Seq(5L, 0L)) {
+    // 5 nodes, 10 edge rows: the default limit runs the driver leg, 5 the
+    // hybrid leg, 0 sort-merges
+    for (limit <- Seq(None, Some(5L), Some(0L))) {
       spark.catalog.clearCache()
       val held = BroadcastProbe.heldValues(spark.sparkContext)
       var out: org.apache.spark.sql.DataFrame = null
-      val left = newCaches { out = atDriverRowLimit(limit)(lp) }
+      val left = newCaches { out = limit.fold(lp)(atDriverRowLimit(_)(lp)) }
       assert(spark.sharedState.cacheManager.isEmpty, s"limit=$limit")
-      if (limit > 0L) {
+      if (!limit.contains(0L)) {
         // the result is built from driver arrays: the adjacency cache is
         // released, and every broadcast is destroyed (its removal from
         // the block manager is asynchronous)
@@ -118,7 +119,7 @@ class CacheHygieneSpec extends SparkSuite {
         def extra = BroadcastProbe.heldValues(spark.sparkContext) -- held
         val deadline = System.nanoTime() + 30L * 1000000000L
         while (extra.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(extra.isEmpty, s"broadcasts left: $extra")
+        assert(extra.isEmpty, s"limit=$limit broadcasts left: $extra")
       } else {
         // the result's own checkpoint is all that stays; every round's
         // checkpoint and both edge caches are released

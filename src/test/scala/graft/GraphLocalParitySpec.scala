@@ -76,6 +76,39 @@ class GraphLocalParitySpec extends SparkSuite {
       directed.toDF("s", "t"), "s", "t", iters = 3))
   }
 
+  // round 2 turns on edge multiplicity here: node 5 sees labels 5, 5, 3
+  // from 1, 2, 6 and node 6 sees 6, 6, 1 from 3, 4, 5, so one more
+  // (5, 6) or (6, 5) row would tie them and hand either the smaller label
+  private val clean = Seq((1L, 5L), (2L, 5L), (3L, 6L), (4L, 6L), (5L, 6L))
+    .flatMap(e => Seq(e, e.swap))
+
+  test("labelPropagation parity: raw rows mirror and fold like the clean " +
+    "symmetric frame; repeated symmetric rows fold") {
+    val raw = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(5L)), (Some(5L), Some(1L)), // both orientations
+      (Some(2L), Some(5L)), (Some(2L), Some(5L)), // a repeated row
+      (Some(3L), Some(6L)), (Some(6L), Some(4L)),
+      (Some(5L), Some(6L)), (Some(6L), Some(5L)),
+      (Some(3L), Some(3L)), // a self-loop
+      (Some(4L), None), (None, Some(1L))) // NULL endpoints
+      .toDF("s", "t")
+    val repeated = (clean ++ Seq((5L, 6L), (6L, 5L), (1L, 5L))).toDF("s", "t")
+    // 6 nodes, 10 distinct edge rows: a limit of 6 runs the hybrid leg
+    for (it <- 1 to 3) {
+      val want = lpThreeWays(6L, s"clean iters=$it")(Graph.labelPropagation(
+        clean.toDF("s", "t"), "s", "t", iters = it, assumeSymmetric = true))
+      if (it == 2)
+        assert(want.contains(Seq(5L, 5L)) && want.contains(Seq(6L, 6L)), want)
+      val fromRaw = lpThreeWays(6L, s"raw iters=$it")(Graph.labelPropagation(
+        raw, "s", "t", iters = it))
+      assert(fromRaw == want, s"iters=$it raw=$fromRaw clean=$want")
+      val folded = lpThreeWays(6L, s"repeated iters=$it")(
+        Graph.labelPropagation(repeated, "s", "t", iters = it,
+          assumeSymmetric = true))
+      assert(folded == want, s"iters=$it repeated=$folded clean=$want")
+    }
+  }
+
   /** Executed plans of the SQL actions `body` runs, in completion
     * order. A marker action run after `body` is awaited, so every
     * earlier action's callback has been delivered. */
@@ -102,19 +135,29 @@ class GraphLocalParitySpec extends SparkSuite {
     seen.asScala.toSeq.map(_._2)
   }
 
-  test("labelPropagation legs: the hybrid leg repartitions by a once and " +
-    "joins nothing; the sort-merge leg joins on a second cache keyed by b") {
-    def lp = Graph.labelPropagation(sym.toDF("s", "t"), "s", "t",
-      iters = 3, assumeSymmetric = true).collect()
+  test("labelPropagation legs: the driver and hybrid legs repartition by a " +
+    "once and join or aggregate nothing; the sort-merge leg joins on a " +
+    "second cache keyed by b") {
+    def lp(in: Seq[(Long, Long)], symmetric: Boolean) = Graph.labelPropagation(
+      in.toDF("s", "t"), "s", "t", iters = 3,
+      assumeSymmetric = symmetric).collect()
     val rekey = "REPARTITION_BY_COL"
-    val h = atDriverRowLimit(5L)(actionPlans(lp))
-    assert(!h.exists(_.contains("Join")), h.mkString("\n"))
-    val rekeyed = h.filter(_.contains(rekey))
-    assert(rekeyed.size == 1, h.mkString("\n"))
-    val keys = raw"hashpartitioning\((\w+)#\d+L?, \d+\), REPARTITION_BY_COL".r
-      .findAllMatchIn(rekeyed.head).map(_.group(1)).toSet
-    assert(keys == Set("a"), rekeyed.head)
-    val s = atDriverRowLimit(0L)(actionPlans(lp))
+    // both inputs have 5 nodes and at least 10 distinct edge rows: the
+    // default limit runs the driver leg, a limit of 5 the hybrid leg
+    for ((in, symmetric) <- Seq(sym -> true, directed -> false);
+         limit <- Seq(None, Some(5L))) {
+      val what = s"symmetric=$symmetric limit=$limit"
+      val h = limit.fold(actionPlans(lp(in, symmetric)))(
+        atDriverRowLimit(_)(actionPlans(lp(in, symmetric))))
+      assert(!h.exists(p => p.contains("Join") || p.contains("HashAggregate")),
+        s"$what\n" + h.mkString("\n"))
+      val rekeyed = h.filter(_.contains(rekey))
+      assert(rekeyed.size == 1, s"$what\n" + h.mkString("\n"))
+      val keys = raw"hashpartitioning\((\w+)#\d+L?, \d+\), REPARTITION_BY_COL".r
+        .findAllMatchIn(rekeyed.head).map(_.group(1)).toSet
+      assert(keys == Set("a"), s"$what\n" + rekeyed.head)
+    }
+    val s = atDriverRowLimit(0L)(actionPlans(lp(sym, true)))
     assert(s.exists(_.contains("SortMergeJoin")) && s.exists(_.contains(rekey)),
       s.mkString("\n"))
     assert(!s.exists(_.contains("BroadcastHashJoin")), s.mkString("\n"))
