@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Link-graph operators for corpus curation. Web-scale pretraining
   * pipelines score pages by link structure (PageRank/harmonic centrality
@@ -47,31 +48,101 @@ object Graph {
 
   /** PageRank with damping d = damp/100 (integer percent) for `iters`
     * rounds over a directed edge list (srcCol, dstCol) — duplicate edges
-    * are collapsed first. Node set = every edge endpoint.
+    * are collapsed first. Node set = every edge endpoint; an empty edge
+    * list gives an empty (id, r) frame.
     *
     * Per iteration: share = r div outdeg per out-edge (truncating), then
     * r' = base + (damp·(Σ_in share + D div N)) div 100 with
     * base = (100−damp)·(Scale div N) div 100 and D = Σ rank over DANGLING
-    * nodes (no out-edges) — the standard redistribution term, so rank
-    * mass no longer drains on graphs with sinks (both-directions graphs
-    * like [[tradingPairsGraph]] have D = 0 identically and are
-    * bit-unchanged). All BIGINT; Σ share + D ≤ Scale total so damp·Σ
-    * never overflows. Nodes with no in-edges keep contributing (the rank
-    * frame is rebuilt over the FULL node universe each round, not just
-    * the aggregation's dst keys).
+    * nodes (no out-edges) — the standard redistribution term, which keeps
+    * rank mass from draining through sinks (both-directions graphs like
+    * [[tradingPairsGraph]] have D = 0 identically). All BIGINT; Σ share
+    * + D ≤ Scale total so damp·Σ never overflows. Nodes with no in-edges
+    * keep contributing (the rank frame is rebuilt over the FULL node
+    * universe each round, not just the aggregation's dst keys).
     *
-    * Plan at scale: the degree-annotated edge list is hash-partitioned on
-    * src and persisted ONCE; each iteration is one shuffle join
-    * (ranks ⋈ edges on src — co-partitioned after the first round), one
-    * keyed aggregation on dst, one co-partitioned join back to the node
-    * universe, and a 1-ROW broadcast dangling-mass frame (never a driver
-    * action — the whole run stays lazy between checkpoints). Rank frames
-    * are O(N) rows. ITERATIVE-LINEAGE HYGIENE (the lesson [[kCore]]
-    * measured: plan analysis doubles per round once a frame is consumed
-    * twice — 60 s/OOM at 6 rounds on a 5-edge toy): each round consumes
-    * `ranks` twice (contrib + dangling mass) WHEN dangling nodes exist,
-    * so the rank frame must be materialized every round. Graphs with NO
-    * dangling nodes — an O(1) pre-check — skip the dangling aggregate
+    * This is [[personalizedPageRank]] with every node a seed: with
+    * |S| = N its seed-gated terms are the integers above, so both run
+    * [[rank]], pageRank without a seed frame or seed join (plan in
+    * [[rankLoop]]). */
+  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
+               iters: Int = 5, damp: Int = 85,
+               dedupEdges: Boolean = true): DataFrame =
+    rank(edges, srcCol, dstCol, None, iters, damp, dedupEdges)
+
+  /** The edge intake of the gated graph operators: `e`, the operator's
+    * NULL-free all-LONG edge frame, is persisted at `level` and counted.
+    * Within [[Bounded.fitsDriver]] its columns are collected, then the
+    * one column of `seeds` when given (personalizedPageRank's seed ids
+    * within the node universe, so at most 2 × the limit, read off the
+    * warm cache); the cache is released and `local` runs the driver
+    * replay on those columns. Above the limit it returns None and leaves
+    * `e` persisted and counted for the distributed loop, which releases
+    * it. */
+  private def intake(e: DataFrame, level: StorageLevel, what: String,
+                     seeds: Option[DataFrame] = None)(
+      local: Array[Array[Long]] => DataFrame): Option[DataFrame] = {
+    e.persist(level)
+    if (!Bounded.fitsDriver(e.sparkSession, e.count())) None
+    else {
+      val c = GraphLocal.collectColumns(e, what) ++ seeds.map(s =>
+        GraphLocal.collectColumns(s, s"$what seed set (⊆ node universe)", 2)(0))
+      e.unpersist()
+      Some(local(c))
+    }
+  }
+
+  /** [[pageRank]] and [[personalizedPageRank]]: one edge intake, then the
+    * driver replay ([[GraphLocal.pageRank]]) or [[rankLoop]]. `seeds`
+    * (LONG `id`) restricts the teleport and the dangling mass to the
+    * seeds; None makes every node a seed. Seeds that are not graph nodes
+    * are ignored. */
+  private def rank(edges: DataFrame, srcCol: String, dstCol: String,
+                   seeds: Option[DataFrame], iters: Int, damp: Int,
+                   dedupEdges: Boolean): DataFrame = {
+    require(iters >= 1 && damp >= 0 && damp <= 100)
+    // dedupEdges=false skips a full edge shuffle when the caller's edge
+    // list is already distinct (e.g. tradingPairsGraph); duplicate edges
+    // would otherwise act as weighted (parallel) edges.
+    val e0 = edges.select(col(srcCol).cast(LongType).as("src"),
+        col(dstCol).cast(LongType).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    val e = if (dedupEdges) e0.distinct() else e0
+    // The edge list feeds FOUR derivations at build time (deg, the two
+    // node-universe branches, edged). Un-persisted, each re-derives the
+    // caller's upstream plan (for the trading graph: the orders⋈lineitem
+    // join + distinct) from parquet — measured ~1–2 s per re-derivation
+    // at sf0.1 — so the loop reads the intake's cache. Below the driver
+    // limit the distributed loop is pure job scheduling — each of its
+    // ~3·iters tiny-stage jobs costs more wall than the whole computation
+    // — so the collected edge list is folded in-core with the same floor
+    // divisions in the same order ([[GraphLocal]]; bit-identical,
+    // PageRankLocalParitySpec).
+    val seedNodes = seeds.map(_.join(e.select(explode(array(col("src"),
+      col("dst"))).as("id")).distinct(), Seq("id"), "left_semi"))
+    val what = "gated local " +
+      seeds.fold("pageRank")(_ => "personalized-pageRank") + " replay"
+    intake(e, StorageLevel.MEMORY_AND_DISK_SER, what, seedNodes) { c =>
+      GraphLocal.pageRank(edges.sparkSession,
+        new GraphLocal.Edges(c(0), c(1)), seeds.map(_ => c(2)), iters, damp)
+    }.getOrElse(rankLoop(e, seeds, iters, damp))
+  }
+
+  /** The distributed rounds of [[rank]] over its persisted, counted edge
+    * cache `ePer` (src, dst), which is released here.
+    *
+    * Plan at scale: the degree-annotated edge list is persisted ONCE;
+    * each iteration is one join of the rank frame with the edges on src,
+    * one keyed aggregation on dst, one join back to the node universe,
+    * and, when some node dangles, a 1-ROW broadcast dangling-mass frame.
+    * One crossed readout at build places the integer literals: the node
+    * count N, the seed count |S| (N for pageRank) and whether any node
+    * dangles. Rank frames are O(N) rows. ITERATIVE-LINEAGE HYGIENE (the
+    * lesson [[kCore]] measured: plan analysis doubles per round once a
+    * frame is consumed twice — 60 s/OOM at 6 rounds on a 5-edge toy):
+    * each round consumes `ranks` twice (contrib + dangling mass) WHEN
+    * dangling nodes exist, so the rank frame must be materialized every
+    * round. Graphs with NO dangling nodes skip the dangling aggregate
     * entirely (the term is 0L identically), leaving the
     * single-consumption linear plan.
     *
@@ -87,36 +158,9 @@ object Graph {
     * evict/spill without re-serialization on a real executor).
     * Heap-insensitivity itself is a HARNESS property, not an operator
     * one — see the young-gen cap in build.sbt and its note in JITTER.md. */
-  def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 5, damp: Int = 85,
-               dedupEdges: Boolean = true): DataFrame = {
-    require(iters >= 1 && damp >= 0 && damp <= 100)
-    // dedupEdges=false skips a full edge shuffle when the caller's edge
-    // list is already distinct (e.g. tradingPairsGraph); duplicate edges
-    // would otherwise act as weighted (parallel) edges.
-    val e0 = edges.select(col(srcCol).cast(LongType).as("src"),
-        col(dstCol).cast(LongType).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = if (dedupEdges) e0.distinct() else e0
-    // The edge list feeds FOUR derivations at build time (deg, the two
-    // node-universe branches, edged). Un-persisted, each re-derives the
-    // caller's upstream plan (for the trading graph: the orders⋈lineitem
-    // join + distinct) from parquet — measured ~1–2 s per re-derivation
-    // at sf0.1 (cache exactly the frame that is re-used).
-    // Persisted here, released as soon as `edged` is materialized.
-    val ePer = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val eCnt = ePer.count()
-    // Below the driver limit the distributed rank loop is pure job
-    // scheduling — each of its ~3·iters tiny-stage jobs costs more wall
-    // than the whole computation — so the collected edge list is folded
-    // in-core with the same floor divisions in the same order
-    // ([[GraphLocal]]; bit-identical, PageRankLocalParitySpec).
-    val spark = edges.sparkSession
-    if (Bounded.fitsDriver(spark, eCnt)) {
-      val arr = GraphLocal.collectEdges(ePer, "gated local pageRank replay")
-      ePer.unpersist()
-      return GraphLocal.pageRank(spark, arr, iters, damp)
-    }
+  private def rankLoop(ePer: DataFrame, seeds: Option[DataFrame],
+                       iters: Int, damp: Int): DataFrame = {
+    val spark = ePer.sparkSession
     val deg = ePer.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // JOIN STRATEGY: the per-round join carries a
     // NODE-sized rank frame against the persisted EDGE frame. A
@@ -136,43 +180,63 @@ object Graph {
     // as src. Partial aggregation collapses the exploded rows map-side,
     // and the agg output is already hash(id)-partitioned for the round
     // joins.
-    val nodes = ePer.select(explode(array(
+    val universe = ePer.select(explode(array(
         struct(col("src").as("id"), lit(1).as("__o")),
         struct(col("dst").as("id"), lit(0).as("__o")))).as("n"))
       .groupBy(col("n.id").as("id"))
       .agg((max(col("n.__o")) === 0).as("__dang"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // N: one O(1) driver readout (the fit-side pattern) — needed to place
-    // the integer literals r0/base into the plan
-    val n = nodes.count()
+    val nodes = seeds.fold(universe)(s => universe
+        .join(s.select(col("id"), lit(true).as("__seed")), Seq("id"), "left")
+        .select(col("id"), col("__dang"),
+          coalesce(col("__seed"), lit(false)).as("__seed")))
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    // the one crossed readout: N, |S| and "some node dangles". Its sums
+    // are coalesced, so an empty node set reads (0, 0, false) and ends
+    // as the driver replay does.
+    val (n, nS, hasDangling) = {
+      import graft.ops.Bounded._
+      val row = nodes.agg(count(lit(1)),
+          if (seeds.isEmpty) count(lit(1))
+          else coalesce(sum(when(col("__seed"), 1L).otherwise(0L)), lit(0L)),
+          coalesce(max(col("__dang")), lit(false)))
+        .collectBounded(1, "O(1) node/seed/dangling readout").head
+      (row.getLong(0), row.getLong(1), row.getBoolean(2))
+    }
+    if (nS == 0L) {
+      nodes.unpersist(); ePer.unpersist()
+      require(seeds.isEmpty, "personalizedPageRank: no seed is a graph node")
+      import spark.implicits._
+      return Seq.empty[(Long, Long)].toDF("id", "r")
+    }
     val useBcast = Bounded.fitsDriver(spark, n)
     val edged = {
       val degJ = if (useBcast) broadcast(deg) else deg
       val j = ePer.join(degJ, "src")
       if (useBcast) j.repartition(col("dst"))
       else j.repartition(col("src")).sortWithinPartitions(col("src"))
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    }.persist(StorageLevel.MEMORY_AND_DISK_SER)
     edged.count() // materialize off the warm ePer cache, then release it
     ePer.unpersist()
-    // Dangling-node existence is an O(1) readout off the persisted node
-    // frame. When the graph has NO dangling nodes (e.g. both-directions
-    // graphs like tradingPairsGraph) the redistribution term is 0L every
-    // round identically, so the per-round dangling aggregate + 1-row
-    // broadcast — and the double consumption of `ranks` it causes — are
-    // skipped outright; the loop is then the single-consumption linear
-    // plan. When dangling nodes DO exist, `ranks` is consumed twice per
-    // round; the per-round checkpoint below lets both consumers read
-    // materialized partitions, so nothing is recomputed inside the
-    // broadcast subtree.
-    val hasDangling = nodes.filter(col("__dang")).limit(1).count() > 0L
-    val r0 = Scale / n
-    val base = (100 - damp) * (Scale / n) / 100
-    var ranks = nodes.select(col("id"), col("__dang"), lit(r0).as("r"))
+    // r₀, the base term and the dangling share go to the seeds only:
+    // every node for pageRank
+    def seeded(v: String) =
+      if (seeds.isEmpty) v else s"(case when __seed then $v else 0L end)"
+    val r0 = seeded(s"${Scale / nS}L")
+    val base = seeded(s"${(100 - damp) * (Scale / nS) / 100}L")
+    // With no dangling node (e.g. both-directions graphs like
+    // tradingPairsGraph) the redistribution term is 0L every round, so
+    // the per-round dangling aggregate + 1-row broadcast — and the double
+    // consumption of `ranks` it causes — are skipped outright. When
+    // dangling nodes DO exist, the per-round checkpoint below lets both
+    // consumers read materialized partitions, so nothing is recomputed
+    // inside the broadcast subtree.
+    val dmass = if (hasDangling) " + " + seeded(s"__dmass div ${nS}L") else ""
+    var ranks = nodes.select(col("id"), col("__dang"), expr(r0).as("r"))
     // the most recent round's eager checkpoint: released only once a NEWER
     // checkpoint has materialized from it (never the frame the caller's
     // final action will read — a local checkpoint has no lineage to
     // recompute from, see [[Checkpoints]])
-    var lastCk: Option[org.apache.spark.sql.DataFrame] = None
+    var lastCk: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val ranksJ = if (useBcast) broadcast(ranks) else ranks
       val contrib0 = edged.join(ranksJ, edged("src") === ranksJ("id"))
@@ -180,22 +244,12 @@ object Graph {
         .groupBy(col("dst"))
         .agg(sum(col("share")).as("s"))
       val contrib = if (useBcast) broadcast(contrib0) else contrib0
-      ranks =
-        if (!hasDangling)
-          nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-            .select(nodes("id"), nodes("__dang"),
-              (lit(base) +
-                expr(s"(${damp}L * coalesce(s, 0L)) div 100")).as("r"))
-        else {
-          val dang = ranks.filter(col("__dang"))
-            .agg(coalesce(sum(col("r")), lit(0L)).as("__dmass"))
-          nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-            .crossJoin(broadcast(dang))
-            .select(nodes("id"), nodes("__dang"),
-              (lit(base) + expr(
-                s"(${damp}L * (coalesce(s, 0L) + __dmass div ${n}L)) div 100"))
-                .as("r"))
-        }
+      val joined = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+      ranks = (if (!hasDangling) joined
+        else joined.crossJoin(broadcast(ranks.filter(col("__dang"))
+          .agg(coalesce(sum(col("r")), lit(0L)).as("__dmass")))))
+        .select(nodes("id"), nodes("__dang"),
+          expr(s"$base + (${damp}L * (coalesce(s, 0L)$dmass)) div 100").as("r"))
       // (skipping mid-loop checkpoints in broadcast mode was measured
       // SLOWER — q149 4.4→5.6 s, q405 5.1→11.3 s — the nested broadcast
       // chain re-runs analysis/codegen over a growing tree each round)
@@ -463,55 +517,79 @@ object Graph {
     * falls back to the true size); the (k−1)·2⁶⁰/h_(k) KMV estimate
     * otherwise.
     *
-    * Plan per round: balls ⋈ pre-partitioned edges (dst side), explode
-    * to (node, hash), then ONE keyed aggregation through
-    * [[graft.functions.Kmv.KmvSketchAgg]] (`kmv_sketch(h, k)`) — a
-    * TypedImperativeAggregate whose buffer is an O(k) TreeSet, so BOTH
-    * the map-side partials and the shuffle rows carry at most k hashes
-    * per node. (The obvious `slice(sort_array(collect_set(h)), 1, k)`
-    * is O(k) only in its final slice: collect_set's partial/final buffers
-    * grow with the ball's full distinct count — on a hub-heavy graph a
-    * radius-3 ball saturates toward n and one node's buffer becomes
-    * O(n), an executor-OOM scale-killer. kmv_sketch computes the same
-    * min-k-of-distinct value — the DuckDB oracle replay and all hashes
-    * are unchanged — with a hard O(k) bound; an A/B had also
-    * shown the one-aggregation shape beats distinct + rank-window
-    * 28.6 → 12.4 s at sf1.0.)
-    * Each round's frame is eagerly checkpointed (consumed by the union
-    * AND the next join, the [[pageRank]] doctrine) with superseded
-    * blocks released; the harmonic sum is carried along the frame
-    * (ascending-r fold). Returns (id, ball_size_r<R>, harmonic). */
+    * The rounds are [[kmvRounds]], shared with [[neighborhoodFunction]];
+    * the harmonic sum is carried along each round's frame (ascending-r
+    * fold). Below the driver limit they replay in-core off one bounded
+    * collect ([[GraphLocal]]), where the distributed form is
+    * job-scheduling-bound. Returns (id, ball_size_r<R>, harmonic). */
   def harmonicCentralityKmv(edges: DataFrame, srcCol: String,
                             dstCol: String, radius: Int = 3,
                             k: Int = 16): DataFrame = {
     require(radius >= 1 && radius <= 8, s"radius=$radius")
     require(k >= 4 && k <= 256, s"k=$k")
-    graft.functions.Kmv.register(edges.sparkSession)
-    // Round shape: SELF-LOOP rows (v,v) are added to the persisted edge
-    // frame, so the join itself emits each node's own ball — one join +
-    // one aggregation per round, no union branch. kmv_sketch is
-    // set-based (min-k of DISTINCT hashes), so the same multiset of
-    // (id, hash) rows arrives as with a separate own-ball union. The
-    // edge cache is keyed by dst, the join key, so the balls ⋈ edges
-    // join is co-partitioned with it.
-    val ePre = edges.select(col(srcCol).cast(LongType).as("src"),
+    val e = kmvEdges(edges, srcCol, dstCol)
+    intake(e, StorageLevel.MEMORY_AND_DISK_SER,
+        "gated local harmonic-centrality replay") { c =>
+      GraphLocal.harmonicCentralityKmv(edges.sparkSession,
+        new GraphLocal.Edges(c(0), c(1)), radius, k)
+    }.getOrElse {
+      val last = kmvRounds(e, radius, k, carry = (r, balls, prev) =>
+        if (r == 0) balls.withColumn("harmonic", lit(0.0))
+        else balls.join(prev.select(col("id"), col("est").as("__ep"),
+            col("harmonic").as("__hp")), Seq("id"))
+          .select(col("id"), col("ball"), col("est"), (col("__hp") +
+            (col("est") - col("__ep")) / lit(r.toDouble)).as("harmonic")))
+      val out = last.select(col("id"), col("est").as("ball_size"),
+        col("harmonic")).localCheckpoint(true)
+      Checkpoints.releaseLocalCheckpoint(last)
+      out
+    }
+  }
+
+  /** The distinct loop-free (src, dst) edge frame the KMV operators take
+    * in. */
+  private def kmvEdges(edges: DataFrame, srcCol: String,
+                       dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast(LongType).as("src"),
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val eCnt = ePre.count()
-    // Below the driver limit the per-round kmv fold's distributed form is
-    // job-scheduling-bound: the same md5 min-k sketch rounds and
-    // IEEE-double estimator sequence run in-core off one bounded collect
-    // ([[GraphLocal]]).
-    if (Bounded.fitsDriver(edges.sparkSession, eCnt)) {
-      val arr = GraphLocal.collectEdges(ePre,
-        "gated local harmonic-centrality replay")
-      ePre.unpersist()
-      return GraphLocal.harmonicCentralityKmv(edges.sparkSession, arr,
-        radius, k)
-    }
+
+  /** The distributed ball rounds of [[harmonicCentralityKmv]] and
+    * [[neighborhoodFunction]], the split of [[GraphLocal]]'s replay.
+    * `ePre` is the intake's persisted [[kmvEdges]] cache, released here.
+    * Round 0 gives every node the ball of its own hash; round r merges,
+    * per node, its own ball and those of its out-neighbors into their k
+    * smallest distinct hashes. Each round's (id, ball, est) frame goes
+    * through `carry(r, balls, prev)` (`prev` is the previous round's
+    * checkpoint, `balls` itself at r = 0), is eagerly checkpointed and
+    * handed to `visit`; superseded checkpoints are released. Returns the
+    * last round's checkpoint, which the caller releases once read.
+    *
+    * Round shape: SELF-LOOP rows (v,v) are added to the persisted edge
+    * frame, so the join itself emits each node's own ball — one join +
+    * one aggregation per round, no union branch. The aggregation is
+    * [[graft.functions.Kmv.KmvSketchAgg]] (`kmv_sketch_arr`), a
+    * TypedImperativeAggregate whose buffer is an O(k) TreeSet, so BOTH
+    * the map-side partials and the shuffle rows carry at most k hashes
+    * per node; it is set-based (min-k of DISTINCT hashes), so the
+    * self-loop rows give the same multiset of (id, hash) rows as a
+    * separate own-ball union. (The obvious
+    * `slice(sort_array(collect_set(h)), 1, k)` is O(k) only in its final
+    * slice: collect_set's buffers grow with the ball's full distinct
+    * count — on a hub-heavy graph a radius-3 ball saturates toward n and
+    * one node's buffer becomes O(n), an executor-OOM scale-killer. The
+    * one-aggregation shape also beat distinct + rank-window 28.6 → 12.4 s
+    * at sf1.0.) The edge cache is keyed by dst, the join key, so the
+    * balls ⋈ edges join is co-partitioned with it. Each round's frame is
+    * consumed by the next join and the caller's carry or readout, hence
+    * the eager checkpoints (the [[rankLoop]] doctrine). */
+  private def kmvRounds(ePre: DataFrame, radius: Int, k: Int,
+                        carry: (Int, DataFrame, DataFrame) => DataFrame =
+                          (_, balls, _) => balls,
+                        visit: DataFrame => Unit = _ => ()): DataFrame = {
+    graft.functions.Kmv.register(ePre.sparkSession)
     val nodes = ePre.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct()
     val e = ePre
@@ -522,7 +600,7 @@ object Graph {
       // serializing the sketch work — pin the session's shuffle width
       .repartition(ePre.sparkSession.sessionState.conf.numShufflePartitions,
         col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
     e.count() // materialize off the warm ePre cache, then release it
     ePre.unpersist()
     val hOf = (c: Column) =>
@@ -534,32 +612,23 @@ object Graph {
       when(size(ball) < k, size(ball).cast(DoubleType))
         .otherwise(lit((k - 1).toDouble) * lit(math.pow(2, 60)) /
           element_at(ball, k).cast(DoubleType))
-    var balls = nodes.select(col("id"), array(hOf(col("id"))).as("ball"),
-        lit(1.0).as("est"), lit(0.0).as("harmonic"))
-      .localCheckpoint(true)
-    var lastCk: Option[DataFrame] = Some(balls)
+    val zero = nodes.select(col("id"), array(hOf(col("id"))).as("ball"),
+      lit(1.0).as("est"))
+    var balls = carry(0, zero, zero).localCheckpoint(true)
+    visit(balls)
     for (r <- 1 to radius) {
       val merged = e.join(balls, e("dst") === balls("id"))
         .select(e("src").as("id"), col("ball").as("__b"))
         .groupBy(col("id"))
         .agg(expr(s"kmv_sketch_arr(__b, $k)").as("ball"))
-      val carry = balls.select(col("id"), col("est").as("__ep"),
-        col("harmonic").as("__hp"))
-      val next = merged.join(carry, Seq("id"))
-        .select(col("id"), col("ball"), estOf(col("ball")).as("est"),
-          (col("__hp") +
-            (estOf(col("ball")) - col("__ep")) / lit(r.toDouble))
-            .as("harmonic"))
-        .localCheckpoint(true)
-      lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
-      lastCk = Some(next)
+        .select(col("id"), col("ball"), estOf(col("ball")).as("est"))
+      val next = carry(r, merged, balls).localCheckpoint(true)
+      Checkpoints.releaseLocalCheckpoint(balls)
       balls = next
+      visit(balls)
     }
-    val out = balls.select(col("id"), col("est").as("ball_size"),
-      col("harmonic")).localCheckpoint(true)
-    lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
     e.unpersist()
-    out
+    balls
   }
 
   /** HyperANF-style NEIGHBORHOOD FUNCTION (Boldi/Rosa/Vigna 2011): per
@@ -568,30 +637,21 @@ object Graph {
     * is within r hops"), plus per-row coverage vs the largest measured
     * radius and the HyperANF effective-diameter flag (the smallest r
     * whose mass reaches 90% of N(R), decided by EXACT scaled-integer
-    * compare `10·s_r ≥ 9·s_R` — no FP threshold to drift). Reuses
-    * [[harmonicCentralityKmv]]'s round machinery: portable md5 min-k
-    * sketches, one `kmv_sketch` O(k)-buffer aggregation per round, the
-    * (k−1)·2⁶⁰/h_k estimator — every round and every readout replays
+    * compare `10·s_r ≥ 9·s_R` — no FP threshold to drift). Runs
+    * [[harmonicCentralityKmv]]'s rounds ([[kmvRounds]]): portable md5
+    * min-k sketches, one `kmv_sketch` O(k)-buffer aggregation per round,
+    * the (k−1)·2⁶⁰/h_k estimator — every round and every readout replays
     * bit-exactly in SQL. Ball-mass sums fold through floor-scaled
     * exact decimal sums (the isum convention) so the Σ over nodes is
-    * reduce-order-independent. Returns (r, n_nodes, sum_ball,
-    * coverage, reaches_90pct) for r = 0..radius. */
+    * reduce-order-independent. An edge list with no edge between two
+    * distinct nodes gives rows (r, 0, 0.0, NaN, true). Returns (r,
+    * n_nodes, sum_ball, coverage, reaches_90pct) for r = 0..radius. */
   def neighborhoodFunction(edges: DataFrame, srcCol: String,
                            dstCol: String, radius: Int = 2,
                            k: Int = 16): DataFrame = {
     require(radius >= 1 && radius <= 8, s"radius=$radius")
     require(k >= 4 && k <= 256, s"k=$k")
-    graft.functions.Kmv.register(edges.sparkSession)
     import graft.ops.Bounded._
-    // same self-loop round shape as [[harmonicCentralityKmv]] (see the
-    // comment there) — one join and one kmv aggregation per round
-    val ePre = edges.select(col(srcCol).cast(LongType).as("src"),
-        col(dstCol).cast(LongType).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val eCnt = ePre.count()
     // shared readout tail: coverage + effective-diameter flag off the
     // per-round (n, Σ floor(est·10⁶)) sums — identical for the local and
     // distributed round machinery
@@ -606,63 +666,28 @@ object Graph {
             .compareTo(sMax.multiply(new java.math.BigDecimal(9))) >= 0)
       }.toDF("r", "n_nodes", "sum_ball", "coverage", "reaches_90pct")
     }
+    val e = kmvEdges(edges, srcCol, dstCol)
     // below the driver limit: the same sketch rounds and floor-scaled
     // exact-decimal sums in-core ([[GraphLocal]])
-    if (Bounded.fitsDriver(edges.sparkSession, eCnt)) {
-      val arr = GraphLocal.collectEdges(ePre,
-        "gated local neighborhood-function replay")
-      ePre.unpersist()
-      return finish(GraphLocal.neighborhoodSums(arr, radius, k))
+    intake(e, StorageLevel.MEMORY_AND_DISK_SER,
+        "gated local neighborhood-function replay") { c =>
+      finish(GraphLocal.neighborhoodSums(new GraphLocal.Edges(c(0), c(1)),
+        radius, k))
+    }.getOrElse {
+      // O(1) per-round readout: node count + EXACT decimal sum of the
+      // floor-scaled ball estimates (native decimal sum — exact integer
+      // accumulation, order-independent), 0 over no node
+      val sums = scala.collection.mutable.ArrayBuffer[(Long, java.math.BigDecimal)]()
+      val last = kmvRounds(e, radius, k, visit = balls => {
+        val row = balls.agg(count(lit(1)).as("n"), coalesce(
+            sum(floor(col("est") * lit(1e6)).cast(DecimalType(38, 0))),
+            lit(0).cast(DecimalType(38, 0))).as("s"))
+          .collectBounded(1, "O(1) neighborhood-function round readout").head
+        sums += ((row.getLong(0), row.getDecimal(1)))
+      })
+      Checkpoints.releaseLocalCheckpoint(last)
+      finish(sums.toSeq)
     }
-    val nodes = ePre.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-    val e = ePre
-      .unionByName(nodes.select(col("id").as("src"), col("id").as("dst")))
-      // explicit width: the per-round kmv fold is CPU-bound, and AQE's
-      // byte-based coalescing of an unsized repartition was measured to
-      // shrink this cache to ~10 partitions at sf0.1 (15 MB of edges),
-      // serializing the sketch work — pin the session's shuffle width
-      .repartition(ePre.sparkSession.sessionState.conf.numShufflePartitions,
-        col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    e.count() // materialize off the warm ePre cache, then release it
-    ePre.unpersist()
-    val hOf = (c: Column) =>
-      conv(substring(md5(c.cast(StringType)), 1, 15), 16, 10).cast(LongType)
-    val estOf = (ball: Column) =>
-      when(size(ball) < k, size(ball).cast(DoubleType))
-        .otherwise(lit((k - 1).toDouble) * lit(math.pow(2, 60)) /
-          element_at(ball, k).cast(DoubleType))
-    // O(1) per-round readout: node count + EXACT decimal sum of the
-    // floor-scaled ball estimates (native decimal sum — exact integer
-    // accumulation, order-independent)
-    def readout(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val row = df.agg(count(lit(1)).as("n"),
-          sum(floor(col("est") * lit(1e6)).cast(DecimalType(38, 0)))
-            .as("s"))
-        .collectBounded(1, "O(1) neighborhood-function round readout").head
-      (row.getLong(0), row.getDecimal(1))
-    }
-    var balls = nodes.select(col("id"), array(hOf(col("id"))).as("ball"),
-        lit(1.0).as("est"))
-      .localCheckpoint(true)
-    var lastCk: Option[DataFrame] = Some(balls)
-    val sums = scala.collection.mutable.ArrayBuffer(readout(balls))
-    for (r <- 1 to radius) {
-      val next = e.join(balls, e("dst") === balls("id"))
-        .select(e("src").as("id"), col("ball").as("__b"))
-        .groupBy(col("id"))
-        .agg(expr(s"kmv_sketch_arr(__b, $k)").as("ball"))
-        .select(col("id"), col("ball"), estOf(col("ball")).as("est"))
-        .localCheckpoint(true)
-      lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
-      lastCk = Some(next)
-      balls = next
-      sums += readout(balls)
-    }
-    lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
-    e.unpersist()
-    finish(sums.toSeq)
   }
 
   /** k-core decomposition by iterative peeling: repeatedly drop nodes
@@ -889,118 +914,18 @@ object Graph {
     * the seeds (dmass div |S|, again integer). Every op is a Long
     * floor-div/add — the DuckDB oracle replays rounds bit-for-bit.
     * Seeds not present in the graph are ignored (inner-join semantics);
-    * requires ≥ 1 surviving seed. Per-round eager checkpoint + release,
-    * edge/node caches released at exit — the pageRank doctrine.
-    * Returns (id, r) over the full node universe. */
+    * requires ≥ 1 surviving seed, so an empty edge list fails. Runs the
+    * same intake, replay and distributed loop as pageRank ([[rank]],
+    * [[rankLoop]]), with the seed frame. Returns (id, r) over the full
+    * node universe. */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
                            seedCol: String, iters: Int = 5,
                            damp: Int = 85,
-                           dedupEdges: Boolean = true): DataFrame = {
-    require(iters >= 1 && damp >= 0 && damp <= 100)
-    val e0 = edges.select(col(srcCol).cast(LongType).as("src"),
-        col(dstCol).cast(LongType).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = if (dedupEdges) e0.distinct() else e0
-    // Same build/round shape as [[pageRank]] (see the join-strategy
-    // comment there): edge frame persisted once for the four build
-    // derivations, node universe + dangling flag in ONE exchange,
-    // rank/contrib frames broadcast when the node count fits the driver
-    // limit, with the edge cache keyed by the aggregation key (dst) so
-    // rounds are exchange-free.
-    val ePer = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val seedIds = seeds
-      .select(col(seedCol).cast(LongType).as("id")).distinct()
-    // Below the driver limit the rounds are job scheduling for
-    // milliseconds of arithmetic: the same Long floor arithmetic runs
-    // in-core ([[GraphLocal]]). Seeds are first intersected with the node
-    // universe (the operator ignores non-graph seeds anyway), so the seed
-    // collect is bounded by 2·|E| ≤ 2 × the limit.
-    val spark = edges.sparkSession
-    val eCntPre = ePer.count()
-    if (Bounded.fitsDriver(spark, eCntPre)) {
-      val arr = GraphLocal.collectEdges(ePer,
-        "gated local personalized-pageRank replay")
-      val seedArr = GraphLocal.collectColumns(seedIds
-          .join(ePer.select(explode(array(col("src"), col("dst"))).as("id"))
-            .distinct(), Seq("id"), "left_semi"),
-          "pPR local replay seed set (⊆ node universe ≤ 2·|E|)", 2)(0)
-      ePer.unpersist()
-      return GraphLocal.personalizedPageRank(spark, arr, seedArr, iters,
-        damp)
-    }
-    val deg = ePer.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val nodes = ePer.select(explode(array(
-        struct(col("src").as("id"), lit(1).as("__o")),
-        struct(col("dst").as("id"), lit(0).as("__o")))).as("n"))
-      .groupBy(col("n.id").as("id"))
-      .agg((max(col("n.__o")) === 0).as("__dang"))
-      .join(seedIds.select(col("id"), lit(true).as("__seed")),
-        Seq("id"), "left")
-      .select(col("id"), col("__dang"),
-        coalesce(col("__seed"), lit(false)).as("__seed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // one crossed readout: total node count (broadcast gate) and seed
-    // count in a single cached-frame job
-    val cntRow = {
-      import graft.ops.Bounded._
-      nodes.agg(count(lit(1)).as("n"),
-          sum(when(col("__seed"), 1L).otherwise(0L)).as("ns"))
-        .collectBounded(1, "O(1) node/seed count readout").head
-    }
-    val nS = cntRow.getLong(1)
-    require(nS > 0, "personalizedPageRank: no seed is a graph node")
-    val useBcast = Bounded.fitsDriver(spark, cntRow.getLong(0))
-    val edged = {
-      val degJ = if (useBcast) broadcast(deg) else deg
-      val j = ePer.join(degJ, "src")
-      if (useBcast) j.repartition(col("dst"))
-      else j.repartition(col("src")).sortWithinPartitions(col("src"))
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    edged.count() // materialize off the warm ePer cache, then release it
-    ePer.unpersist()
-    val hasDangling = nodes.filter(col("__dang")).limit(1).count() > 0L
-    val r0 = Scale / nS
-    val base = (100 - damp) * (Scale / nS) / 100
-    var ranks = nodes.select(col("id"), col("__dang"), col("__seed"),
-      when(col("__seed"), lit(r0)).otherwise(lit(0L)).as("r"))
-    var lastCk: Option[org.apache.spark.sql.DataFrame] = None
-    for (i <- 1 to iters) {
-      val ranksJ = if (useBcast) broadcast(ranks) else ranks
-      val contrib0 = edged.join(ranksJ, edged("src") === ranksJ("id"))
-        .select(col("dst"), expr("r div outdeg").as("share"))
-        .groupBy(col("dst"))
-        .agg(sum(col("share")).as("s"))
-      val contrib = if (useBcast) broadcast(contrib0) else contrib0
-      ranks =
-        if (!hasDangling)
-          nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-            .select(nodes("id"), nodes("__dang"), nodes("__seed"),
-              (when(nodes("__seed"), lit(base)).otherwise(lit(0L)) +
-                expr(s"(${damp}L * coalesce(s, 0L)) div 100")).as("r"))
-        else {
-          val dang = ranks.filter(col("__dang"))
-            .agg(coalesce(sum(col("r")), lit(0L)).as("__dmass"))
-          nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-            .crossJoin(broadcast(dang))
-            .select(nodes("id"), nodes("__dang"), nodes("__seed"),
-              (when(nodes("__seed"), lit(base)).otherwise(lit(0L)) +
-                expr(s"(${damp}L * (coalesce(s, 0L) + (case when __seed " +
-                  s"then __dmass div ${nS}L else 0L end))) div 100"))
-                .as("r"))
-        }
-      if (i < iters) {
-        ranks = ranks.localCheckpoint(true)
-        lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
-        lastCk = Some(ranks)
-      }
-    }
-    val out = ranks.select(col("id"), col("r")).localCheckpoint(true)
-    lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
-    edged.unpersist()
-    nodes.unpersist()
-    out
-  }
+                           dedupEdges: Boolean = true): DataFrame =
+    rank(edges, srcCol, dstCol,
+      Some(seeds.select(col(seedCol).cast(LongType).as("id")).distinct()),
+      iters, damp, dedupEdges)
 
   /** ADAMIC–ADAR LINK PREDICTION — the degree-aware sibling of
     * [[jaccardLinks]]: for every non-adjacent pair with ≥ `minCommon`
@@ -1122,16 +1047,15 @@ object Graph {
         col(dstCol).cast(LongType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eCnt = eBase.count()
     // below the driver limit: plain BFS over the collected edge list —
     // hop tags and early exit replay the distributed loop exactly
     // ([[GraphLocal]])
-    if (Bounded.fitsDriver(spark, eCnt)) {
-      val arr = GraphLocal.collectEdges(eBase, "gated local BFS replay")
-      eBase.unpersist()
-      return GraphLocal.bfsDistances(spark, arr, sources, maxHops)
+    val replay = intake(eBase, StorageLevel.MEMORY_AND_DISK,
+        "gated local BFS replay") { c =>
+      GraphLocal.bfsDistances(spark, new GraphLocal.Edges(c(0), c(1)),
+        sources, maxHops)
     }
+    if (replay.isDefined) return replay.get
     val e = eBase.repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     e.count() // materialize off the warm eBase cache, then release it
@@ -1393,17 +1317,16 @@ object Graph {
     // frame would pay one more full-|E| shuffle and one more
     // materialized copy for nothing.
     val eSrc = e0.repartition(col("src")).dropDuplicates("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = eSrc.count()
     // Below the driver limit the per-round max readout + checkpoint cycle
     // is job-scheduling-bound: BigInt walks the identical integer
     // sequence of both the LONG and DECIMAL(38,0) widths in-core
     // ([[GraphLocal]]).
-    if (Bounded.fitsDriver(edges.sparkSession, nEdges)) {
-      val arr = GraphLocal.collectEdges(eSrc, "gated local HITS replay")
-      eSrc.unpersist()
-      return GraphLocal.hits(edges.sparkSession, arr, iters)
+    val replay = intake(eSrc, StorageLevel.MEMORY_AND_DISK,
+        "gated local HITS replay") { c =>
+      GraphLocal.hits(edges.sparkSession, new GraphLocal.Edges(c(0), c(1)),
+        iters)
     }
+    if (replay.isDefined) return replay.get
     val eDst = eSrc.repartition(col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     eDst.count() // materializes off the warm eSrc cache
@@ -1511,16 +1434,14 @@ object Graph {
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("w").isNotNull)
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eCnt = eBase.count()
     // below the driver limit: exact Long min/+ relaxations over the
     // collected min-collapsed edge list ([[GraphLocal]])
-    if (Bounded.fitsDriver(spark, eCnt)) {
-      val c = GraphLocal.collectColumns(eBase, "gated local SSSP replay")
-      eBase.unpersist()
-      return GraphLocal.ssspWeighted(spark,
-        new GraphLocal.Edges(c(0), c(1)), c(2), sources, rounds)
+    val replay = intake(eBase, StorageLevel.MEMORY_AND_DISK,
+        "gated local SSSP replay") { c =>
+      GraphLocal.ssspWeighted(spark, new GraphLocal.Edges(c(0), c(1)), c(2),
+        sources, rounds)
     }
+    if (replay.isDefined) return replay.get
     val e = eBase.repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     e.count() // materialize off the warm eBase cache, then release it

@@ -78,12 +78,6 @@ private[graft] object GraphLocal {
       .getOrElse(throw new IllegalStateException(
         s"$what: NULL in a NULL-filtered frame"))
 
-  /** [[collectColumns]] of an edge frame (srcLike, dstLike). */
-  def collectEdges(e: DataFrame, what: String): Edges = {
-    val c = collectColumns(e, what)
-    new Edges(c(0), c(1))
-  }
-
   /** Open-addressing `Long → Int` index: ids → dense ints in first-seen
     * order. Linear probing over an int table that holds dense index + 1
     * (0 = empty) at a load factor ≤ 1/2; each id is stored once, in
@@ -383,34 +377,26 @@ private[graft] object GraphLocal {
     }).toDF("id", "hub", "auth")
   }
 
-  /** [[Graph.pageRank]] rounds: personalized PageRank with every node a
-    * seed. With |S| = n the seed-restricted terms — r₀ = Scale/n,
+  /** [[Graph.pageRank]] and [[Graph.personalizedPageRank]] rounds on a
+    * DEDUPED directed edge list and the seed ids (seeds that are not
+    * graph nodes are ignored). `seeds` None makes every node a seed, which
+    * is pageRank: with |S| = n the seed-restricted terms — r₀ = Scale/n,
     * base = (100−damp)·(Scale/n)/100, dangling mass div n — are exactly
-    * pageRank's, so one fold serves both operators. Returns (id, r). */
-  def pageRank(spark: SparkSession, edges: Edges, iters: Int,
-               damp: Int): DataFrame = {
-    import spark.implicits._
-    if (edges.length == 0) return Seq.empty[(Long, Long)].toDF("id", "r")
-    val g = new Dense(edges)
-    ppr(spark, g, Array.fill(g.n)(true), iters, damp)
-  }
-
-  /** [[Graph.personalizedPageRank]] rounds on a DEDUPED directed edge
-    * list + seed ids (seeds that are not graph nodes are ignored). Pure
-    * Long floor arithmetic (everything non-negative), identical to the
+    * pageRank's, and an empty edge list gives an empty frame. Pure Long
+    * floor arithmetic (everything non-negative), identical to the
     * distributed plan. Returns (id, r) over the full node universe. */
-  def personalizedPageRank(spark: SparkSession, edges: Edges,
-                           seeds: Array[Long], iters: Int,
-                           damp: Int): DataFrame = {
+  def pageRank(spark: SparkSession, edges: Edges, seeds: Option[Array[Long]],
+               iters: Int, damp: Int): DataFrame = {
+    import spark.implicits._
+    if (edges.length == 0 && seeds.isEmpty)
+      return Seq.empty[(Long, Long)].toDF("id", "r")
     val g = new Dense(edges)
     val isSeed = new Array[Boolean](g.n)
-    seeds.foreach { s => val v = g.ix.get(s); if (v >= 0) isSeed(v) = true }
-    ppr(spark, g, isSeed, iters, damp)
-  }
-
-  private def ppr(spark: SparkSession, g: Dense, isSeed: Array[Boolean],
-                  iters: Int, damp: Int): DataFrame = {
-    import spark.implicits._
+    seeds match {
+      case None => java.util.Arrays.fill(isSeed, true)
+      case Some(s) =>
+        s.foreach { id => val v = g.ix.get(id); if (v >= 0) isSeed(v) = true }
+    }
     val es = g.src; val ed = g.dst
     val n = g.n
     val outdeg = new Array[Long](n)

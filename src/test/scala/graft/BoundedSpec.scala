@@ -89,7 +89,7 @@ class BoundedSpec extends SparkSuite {
 
   test("collectLongs: a NULL endpoint fails loudly on the replay path") {
     val e = intercept[IllegalStateException](
-      GraphLocal.collectEdges(withNull, "replay-edge-collect"))
+      GraphLocal.collectColumns(withNull, "replay-edge-collect"))
     assert(e.getMessage.contains("replay-edge-collect"), e.getMessage)
     // the operators filter NULL endpoints before collecting: no node 0
     val (dl, ll) = bothWays(Graph.labelPropagation(withNull, "s", "d", iters = 2))

@@ -232,6 +232,68 @@ class GraphLocalParitySpec extends SparkSuite {
     }
   }
 
+  test("pageRank equals personalizedPageRank seeded with every node") {
+    // the identity the shared rank loop rests on, on every leg: the
+    // sort-merge loop (limit 0), the broadcast node frame (limit 5: 5
+    // nodes, at least 8 edges) and the local replay
+    for ((name, g) <- Seq("directed" -> directed, "sym" -> sym);
+         limit <- Seq(Some(0L), Some(5L), None)) {
+      def leg(f: => Set[Seq[Any]]) = limit.fold(f)(atDriverRowLimit(_)(f))
+      val all = g.flatMap(e => Seq(e._1, e._2)).distinct.toDF("seed")
+      val pr = leg(rowSet(Graph.pageRank(g.toDF("s", "t"), "s", "t",
+        iters = 4)))
+      val ppr = leg(rowSet(Graph.personalizedPageRank(g.toDF("s", "t"),
+        "s", "t", all, "seed", iters = 4)))
+      assert(pr.size == 5 && pr == ppr, s"$name limit=$limit pr=$pr ppr=$ppr")
+    }
+  }
+
+  private val noEdges = Seq.empty[(Long, Long)].toDF("s", "t")
+
+  test("neighborhoodFunction parity: no edge between two distinct nodes") {
+    // NaN != NaN, so compare the rows through their strings
+    def rows(f: => org.apache.spark.sql.DataFrame) = {
+      val (d, l) = bothWays(f)
+      (d.map(_.mkString(",")), l.map(_.mkString(",")))
+    }
+    val loops = Seq((1L, 1L), (2L, 2L)).toDF("s", "t")
+    for (in <- Seq(noEdges, loops)) {
+      val (d, l) = rows(Graph.neighborhoodFunction(in, "s", "t", radius = 2))
+      assert(d == l && l == (0 to 2).map(r => s"$r,0,0.0,NaN,true").toSet,
+        s"dist=$d local=$l")
+    }
+  }
+
+  test("personalizedPageRank: an empty edge list fails alike on both legs") {
+    def ppr = Graph.personalizedPageRank(noEdges, "s", "t",
+      Seq(1L).toDF("seed"), "seed")
+    val legs = Seq[(String, () => Any)](
+      "sort-merge" -> (() => atDriverRowLimit(0L)(rowSet(ppr))),
+      "local" -> (() => rowSet(ppr)))
+    for ((leg, run) <- legs) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage ==
+        "requirement failed: personalizedPageRank: no seed is a graph node",
+        s"$leg: ${e.getMessage}")
+    }
+  }
+
+  test("empty edge list: the other gated operators agree on both legs") {
+    val noWeighted = Seq.empty[(Long, Long, Long)].toDF("s", "t", "w")
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "harmonicCentralityKmv" -> (() =>
+        Graph.harmonicCentralityKmv(noEdges, "s", "t")),
+      "hits" -> (() => Graph.hits(noEdges, "s", "t")),
+      "bfsDistances" -> (() =>
+        Graph.bfsDistances(noEdges, "s", "t", Seq(1L), maxHops = 2)),
+      "ssspWeighted" -> (() =>
+        Graph.ssspWeighted(noWeighted, "s", "t", "w", Seq(1L), rounds = 2)))
+    for ((name, f) <- cases) {
+      val (d, l) = bothWays(f())
+      assert(d == l, s"$name dist=$d local=$l")
+    }
+  }
+
   test("modularity parity: partial labeling, duplicate edges in m2") {
     // duplicate edge rows count in m2 (modularity does NOT dedup);
     // node 5 is unlabeled — excluded from intra and degree mass

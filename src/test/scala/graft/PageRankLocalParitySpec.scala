@@ -38,8 +38,11 @@ class PageRankLocalParitySpec extends SparkSuite {
   }
 
   test("local path: empty edges give an empty (id, r) frame") {
-    val r = Graph.pageRank(Seq.empty[(Long, Long)].toDF("s", "d"), "s", "d")
-    assert(r.columns.toSeq == Seq("id", "r") && r.count() == 0L)
+    def pr = Graph.pageRank(Seq.empty[(Long, Long)].toDF("s", "d"), "s", "d")
+    val (d, l) = bothWays(pr)
+    assert(d.isEmpty && l.isEmpty, s"dist=$d local=$l")
+    assert(atDriverRowLimit(0L)(pr.columns.toSeq) == Seq("id", "r"))
+    assert(pr.columns.toSeq == Seq("id", "r"))
   }
 
   test("star graph with hub: hub collects damped mass, spokes equal") {

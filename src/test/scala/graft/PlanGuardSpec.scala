@@ -524,6 +524,39 @@ class PlanGuardSpec extends SparkSuite {
     }
   }
 
+  test("graph loops: one rank loop, one KMV ball loop, one edge intake") {
+    // pageRank and personalizedPageRank run one distributed rank loop,
+    // harmonicCentralityKmv and neighborhoodFunction one ball loop, and
+    // the gated graph operators collect their edges in one intake helper
+    val code = mainSourceLines().filterNot { case (_, _, l) =>
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }
+    for (pattern <- Seq("r div outdeg", "kmv_sketch_arr(")) {
+      val at = code.collect {
+        case (p, i, l) if l.contains(pattern) => s"${p.getFileName}:$i"
+      }
+      assert(at.size == 1 && at.head.startsWith("Graph.scala:"),
+        s"'$pattern' outside its loop: ${at.mkString(", ")}")
+    }
+    val graph = code.filter(_._1.endsWith("ops/Graph.scala"))
+    val intake = graph.collectFirst {
+      case (_, i, l) if l.contains("private def intake(") => i
+    }
+    assert(intake.isDefined, "no intake helper in ops/Graph.scala")
+    // the helper's body ends where the next member of object Graph starts
+    val end = graph.collect {
+      case (_, i, l) if i > intake.get && l.matches("  (private )?def .*") => i
+    }.minOption.getOrElse(Int.MaxValue)
+    val collects = graph.collect {
+      case (_, i, l) if l.contains("GraphLocal.collectEdges(") ||
+        l.contains("GraphLocal.collectColumns(") => i
+    }
+    val outside = collects.filterNot(i => i > intake.get && i < end)
+    assert(collects.nonEmpty && outside.isEmpty,
+      s"edge collects outside the intake at Graph.scala:${outside.mkString(", ")}")
+  }
+
   test("funnel: executed stages grow LINEARLY in stage count " +
        "(survivor chain is checkpointed, no O(k²) recompute)") {
     // Without the per-stage localCheckpoint, stage i's count() re-executes
