@@ -1092,8 +1092,8 @@ object TextStats {
     * deterministic either way, and the oracle replays the same hashes).
     * Plan: one tokenize pass for counts, one for adjacent pairs (both
     * spread-guarded), vocab-filtered hash join, distinct symmetric edge
-    * set, then the pageRank machinery (pre-partitioned edges, per-round
-    * checkpoints, cache release at exit). Returns (token, rank). */
+    * set, then pageRank (one keyed shuffle of the edges, the rounds on
+    * the leg its sizes pick). Returns (token, rank). */
   def textRankKeywords(df: DataFrame, textCol: String, minCount: Long = 5L,
                        iters: Int = 3, damp: Int = 85): DataFrame = {
     // ONE tokenize pass over the corpus: per-doc token arrays are
@@ -1127,25 +1127,21 @@ object TextStats {
       .join(vocab.select(col("w").as("w1"), col("__id").as("__a")), "w1")
       .join(vocab.select(col("w").as("w2"), col("__id").as("__b")), "w2")
       .select(col("__a"), col("__b")).distinct()
-    // persist the vocab-sized edge frame: pageRank consumes its input
-    // through TWO lineages (degree-annotated edges + the node universe)
-    // and each would otherwise replay the corpus tokenize+join pipeline
-    val edges = bi.select(col("__a").as("src"), col("__b").as("dst"))
-      .unionByName(bi.select(col("__b").as("src"), col("__a").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // pageRank returns an eagerly-materialized frame, so the caches it
-    // read from can be released as soon as it returns.
+    // pageRank reads its input through one shuffle and returns an
+    // eagerly-materialized frame, so the edge frame needs no cache and
+    // the caches it reads from can be released as soon as it returns.
     // The vocab co-occurrence graph is bounded by the (minCount-filtered)
     // vocabulary — thousands of edges, not corpus-sized — so it fits the
     // driver limit and pageRank folds it in-core, with no per-round jobs.
+    val edges = bi.select(col("__a").as("src"), col("__b").as("dst"))
+      .unionByName(bi.select(col("__b").as("src"), col("__a").as("dst")))
+      .distinct()
     val ranks = graft.ops.Graph.pageRank(edges, "src", "dst",
       iters = iters, damp = damp, dedupEdges = false)
     val names = vocab.groupBy(col("__id")).agg(min(col("w")).as("token"))
     val out = ranks.join(names, ranks("id") === names("__id"))
       .select(col("token"), col("r").as("rank"))
       .localCheckpoint(true)
-    edges.unpersist()
     vocab.unpersist()
     base.unpersist()
     out

@@ -10,8 +10,7 @@ import org.apache.spark.sql.types.LongType
   * Every `.collect()` in `src/main` routes through [[Bounded.BoundedOps
   * .collectBounded]], or through [[Bounded.collectLongs]] for the
   * data-sized LONG lists the graph replays fold (grep-guarded by
-  * `PlanGuardSpec`; the one exception is `OutOfCoreCheck`'s NEGATIVE
-  * control, whose entire job is to OOM).
+  * `PlanGuardSpec`).
   * Each call site has always carried a documented O(1)/O(k)/O(P)/
   * O(groups) bound argument in its scaladoc — this helper makes the
   * bound REAL: `limit(maxRows + 1)` caps what can ever reach the driver

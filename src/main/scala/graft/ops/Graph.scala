@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -63,8 +66,7 @@ object Graph {
     *
     * This is [[personalizedPageRank]] with every node a seed: with
     * |S| = N its seed-gated terms are the integers above, so both run
-    * [[rank]], pageRank without a seed frame or seed join (plan in
-    * [[rankLoop]]). */
+    * [[rank]]. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5, damp: Int = 85,
                dedupEdges: Boolean = true): DataFrame =
@@ -72,201 +74,171 @@ object Graph {
 
   /** The edge intake of the gated graph operators: `e`, the operator's
     * NULL-free all-LONG edge frame, is persisted at `level` and counted.
-    * Within [[Bounded.fitsDriver]] its columns are collected, then the
-    * one column of `seeds` when given (personalizedPageRank's seed ids
-    * within the node universe, so at most 2 × the limit, read off the
-    * warm cache); the cache is released and `local` runs the driver
-    * replay on those columns. Above the limit it returns None and leaves
-    * `e` persisted and counted for the distributed loop, which releases
-    * it. */
-  private def intake(e: DataFrame, level: StorageLevel, what: String,
-                     seeds: Option[DataFrame] = None)(
+    * Within [[Bounded.fitsDriver]] its columns are collected, the cache
+    * is released and `local` runs the driver replay on those columns.
+    * Above the limit it returns None and leaves `e` persisted and counted
+    * for the distributed loop, which releases it. */
+  private def intake(e: DataFrame, level: StorageLevel, what: String)(
       local: Array[Array[Long]] => DataFrame): Option[DataFrame] = {
     e.persist(level)
     if (!Bounded.fitsDriver(e.sparkSession, e.count())) None
     else {
-      val c = GraphLocal.collectColumns(e, what) ++ seeds.map(s =>
-        GraphLocal.collectColumns(s, s"$what seed set (⊆ node universe)", 2)(0))
+      val c = GraphLocal.collectColumns(e, what)
       e.unpersist()
       Some(local(c))
     }
   }
 
-  /** [[pageRank]] and [[personalizedPageRank]]: one edge intake, then the
-    * driver replay ([[GraphLocal.pageRank]]) or [[rankLoop]]. `seeds`
-    * (LONG `id`) restricts the teleport and the dangling mass to the
-    * seeds; None makes every node a seed. Seeds that are not graph nodes
-    * are ignored. */
+  /** The legs of the vertex loops ([[labelPropagation]], [[rank]]).
+    * `keyed`'s rows, all LONG and NULL-free with the receiving endpoint
+    * first, are repartitioned once by that key, each partition is packed
+    * into one adjacency persisted on the executors, and one job sums
+    * their [[GraphLocal.Adjacency.counts]] into `total(i)`, which picks
+    * the leg:
+    *  - the edges total(0) within [[Bounded.fitsDriver]]: the driver leg
+    *    collects the adjacencies and `rounds` runs in process;
+    *  - the nodes total(1) within it: the hybrid leg, where `rounds`
+    *    keeps the state on the driver and runs each round as one map-only
+    *    job over the cached adjacencies against broadcast state;
+    *  - otherwise `sortMerge` runs its SQL loop off the adjacencies.
+    * All of the driver and hybrid legs' jobs run in the one SQL execution
+    * of the repartition they read. The adjacencies are released before
+    * this returns. */
+  private def vertexLoop[A <: GraphLocal.Adjacency : ClassTag](
+      keyed: DataFrame, what: String)(pack: Array[Array[Long]] => A)(
+      rounds: (Int => Long, GraphLocal.Partitions[A]) => DataFrame,
+      sortMerge: (Int => Long, RDD[A]) => DataFrame): DataFrame = {
+    val spark = keyed.sparkSession
+    val nCols = keyed.columns.length
+    val byKey = keyed.repartition(col(keyed.columns.head)).queryExecution
+    var adj: RDD[A] = null
+    try {
+      SQLExecution.withNewExecutionId(byKey, Some(what)) {
+        adj = byKey.toRdd.mapPartitions { it =>
+          Iterator(pack(Bounded.packLongs(it, nCols, Int.MaxValue).get))
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+        val cached = new GraphLocal.Partitions(adj, None)
+        val per = cached.each(_.counts)
+        val total = (i: Int) => per.map(_(i)).sum
+        if (Bounded.fitsDriver(spark, total(0))) {
+          val gs = cached.each(identity)
+          adj.unpersist() // the loop reads only the collected copies
+          Right(rounds(total, new GraphLocal.Partitions(adj, Some(gs))))
+        } else if (Bounded.fitsDriver(spark, total(1)))
+          Right(rounds(total, cached))
+        else Left(total)
+      }.fold(sortMerge(_, adj), identity)
+    } finally if (adj != null) adj.unpersist()
+  }
+
+  /** [[pageRank]] and [[personalizedPageRank]] on [[vertexLoop]]: each
+    * edge row goes to both endpoints, as an in-edge of its dst and an
+    * out-edge of its src, and each seed row (LONG `id`) to its seed, so a
+    * node's partition holds its in-neighbors, out-degree and seed flag
+    * ([[GraphLocal.RankAdjacency]]; `dedupEdges` = false keeps duplicate
+    * edges as parallel edges). `seeds` None makes every node a seed;
+    * seeds that are not graph nodes are ignored. */
   private def rank(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: Option[DataFrame], iters: Int, damp: Int,
                    dedupEdges: Boolean): DataFrame = {
     require(iters >= 1 && damp >= 0 && damp <= 100)
-    // dedupEdges=false skips a full edge shuffle when the caller's edge
-    // list is already distinct (e.g. tradingPairsGraph); duplicate edges
-    // would otherwise act as weighted (parallel) edges.
-    val e0 = edges.select(col(srcCol).cast(LongType).as("src"),
-        col(dstCol).cast(LongType).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-    val e = if (dedupEdges) e0.distinct() else e0
-    // The edge list feeds FOUR derivations at build time (deg, the two
-    // node-universe branches, edged). Un-persisted, each re-derives the
-    // caller's upstream plan (for the trading graph: the orders⋈lineitem
-    // join + distinct) from parquet — measured ~1–2 s per re-derivation
-    // at sf0.1 — so the loop reads the intake's cache. Below the driver
-    // limit the distributed loop is pure job scheduling — each of its
-    // ~3·iters tiny-stage jobs costs more wall than the whole computation
-    // — so the collected edge list is folded in-core with the same floor
-    // divisions in the same order ([[GraphLocal]]; bit-identical,
-    // PageRankLocalParitySpec).
-    val seedNodes = seeds.map(_.join(e.select(explode(array(col("src"),
-      col("dst"))).as("id")).distinct(), Seq("id"), "left_semi"))
-    val what = "gated local " +
-      seeds.fold("pageRank")(_ => "personalized-pageRank") + " replay"
-    intake(e, StorageLevel.MEMORY_AND_DISK_SER, what, seedNodes) { c =>
-      GraphLocal.pageRank(edges.sparkSession,
-        new GraphLocal.Edges(c(0), c(1)), seeds.map(_ => c(2)), iters, damp)
-    }.getOrElse(rankLoop(e, seeds, iters, damp))
+    import GraphLocal.RankAdjacency.{InEdge, OutEdge, Seed}
+    val spark = edges.sparkSession
+    val rows = edges.select(col(srcCol).cast(LongType).as("s"),
+        col(dstCol).cast(LongType).as("d"))
+      .filter(col("s").isNotNull && col("d").isNotNull)
+      .select(explode(array(
+        struct(col("d").as("k"), col("s").as("o"), lit(InEdge).as("t")),
+        struct(col("s").as("k"), col("d").as("o"), lit(OutEdge).as("t"))))
+        .as("r"))
+      .select(col("r.k").as("k"), col("r.o").as("o"), col("r.t").as("t"))
+    val keyed = seeds.fold(rows)(s => rows.unionByName(s
+      .filter(col("id").isNotNull)
+      .select(col("id").as("k"), lit(0L).as("o"), lit(Seed).as("t"))))
+    val allSeeds = seeds.isEmpty
+    def ranked(total: Int => Long)(run: => DataFrame): DataFrame = {
+      require(allSeeds || total(2) > 0L,
+        "personalizedPageRank: no seed is a graph node")
+      if (total(1) > 0L) run
+      else { import spark.implicits._; Seq.empty[(Long, Long)].toDF("id", "r") }
+    }
+    vertexLoop(keyed, if (allSeeds) "pageRank" else "personalizedPageRank")(
+        c => GraphLocal.RankAdjacency(c(0), c(1), c(2), allSeeds, dedupEdges))(
+      (total, parts) => ranked(total)(GraphLocal.rankRounds(spark, total(2),
+          iters, damp, parts.each(_.nodes)) { (all, share) =>
+        parts.round((all, share)) { case (g, (a, sh)) => g.inSums(a, sh) }
+      }),
+      (total, adj) => ranked(total)(
+        rankLoop(spark, adj, total(2), total(3) > 0L, iters, damp)))
   }
 
-  /** The distributed rounds of [[rank]] over its persisted, counted edge
-    * cache `ePer` (src, dst), which is released here.
-    *
-    * Plan at scale: the degree-annotated edge list is persisted ONCE;
-    * each iteration is one join of the rank frame with the edges on src,
-    * one keyed aggregation on dst, one join back to the node universe,
-    * and, when some node dangles, a 1-ROW broadcast dangling-mass frame.
-    * One crossed readout at build places the integer literals: the node
-    * count N, the seed count |S| (N for pageRank) and whether any node
-    * dangles. Rank frames are O(N) rows. ITERATIVE-LINEAGE HYGIENE (the
-    * lesson [[kCore]] measured: plan analysis doubles per round once a
-    * frame is consumed twice — 60 s/OOM at 6 rounds on a 5-edge toy):
-    * each round consumes `ranks` twice (contrib + dangling mass) WHEN
-    * dangling nodes exist, so the rank frame must be materialized every
-    * round. Graphs with NO dangling nodes skip the dangling aggregate
-    * entirely (the term is 0L identically), leaving the
-    * single-consumption linear plan.
-    *
-    * The rank frame is eagerly localCheckpointed EVERY round, dangling
-    * nodes or not (sf0.1 trading graph, min-of-4: every round 5.6 s,
-    * every second round 6.1 s, no mid-loop checkpoint 8.2 s). Each
-    * checkpoint turns the next round into its own job over materialized
-    * inputs whose sizes AQE knows exactly, so the rank ⋈ edges join and
-    * the dst aggregation get re-planned with real statistics instead of
-    * propagated estimates, and the lineage stays O(1) deep. The
-    * persisted edge/node frames use MEMORY_AND_DISK_SER: compact byte
-    * buffers per block (equal wall time locally, and serialized blocks
-    * evict/spill without re-serialization on a real executor).
-    * Heap-insensitivity itself is a HARNESS property, not an operator
-    * one — see the young-gen cap in build.sbt and its note in JITTER.md. */
-  private def rankLoop(ePer: DataFrame, seeds: Option[DataFrame],
-                       iters: Int, damp: Int): DataFrame = {
-    val spark = ePer.sparkSession
-    val deg = ePer.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // JOIN STRATEGY: the per-round join carries a
-    // NODE-sized rank frame against the persisted EDGE frame. A
-    // localCheckpointed rank frame has no size statistics, so unhinted
-    // the planner picks a co-partitioned SortMergeJoin that RE-SORTS the
-    // whole |E| cache every round (measured sf0.1: 1.7 s per round on
-    // 1.17M edges for milliseconds of arithmetic). When the node count
-    // fits the driver limit, the rank frame is broadcast instead and the
-    // edge cache keyed by DST — the aggregation key — so each round is
-    // ONE exchange-free cached map stage. A node frame too big for that
-    // keeps the co-partitioned SMJ, with the edge cache sorted by src at
-    // build so the per-round merge re-sorts only the node frame, never
-    // |E|. Both shapes compute identical integers.
-    // node universe: every endpoint, annotated dangling when no out-edge,
-    // in ONE exchange: explode each edge into (src,1),(dst,0) endpoint
-    // rows, then a single keyed max — dangling ⇔ the node never appears
-    // as src. Partial aggregation collapses the exploded rows map-side,
-    // and the agg output is already hash(id)-partitioned for the round
-    // joins.
-    val universe = ePer.select(explode(array(
-        struct(col("src").as("id"), lit(1).as("__o")),
-        struct(col("dst").as("id"), lit(0).as("__o")))).as("n"))
-      .groupBy(col("n.id").as("id"))
-      .agg((max(col("n.__o")) === 0).as("__dang"))
-    val nodes = seeds.fold(universe)(s => universe
-        .join(s.select(col("id"), lit(true).as("__seed")), Seq("id"), "left")
-        .select(col("id"), col("__dang"),
-          coalesce(col("__seed"), lit(false)).as("__seed")))
+  /** The sort-merge rounds of [[rank]], for a node count above the
+    * driver limit, off the persisted adjacencies `adj`, `nS` of whose
+    * nodes are seeds. The in-edges are persisted ONCE as a (src, dst)
+    * frame keyed and sorted by src (MEMORY_AND_DISK_SER: compact blocks
+    * that evict without re-serialization); each round joins it with the
+    * node-sized share frame on src, so the merge re-sorts only the share
+    * frame, aggregates on dst, joins back to the rank frame, which
+    * carries each node's outdeg and seed flag, and, when some node
+    * dangles, crosses a 1-row dangling-mass frame. A round reads `ranks`
+    * two or three times, and plan analysis doubles per round once a frame
+    * is read twice (the [[kCore]] lesson: 60 s/OOM at 6 rounds on a
+    * 5-edge toy), so the rank frame is eagerly localCheckpointed every
+    * round (sf0.1 trading graph, min-of-4: every round 5.6 s, every
+    * second round 6.1 s, none 8.2 s): the next round is planned on
+    * materialized inputs whose sizes AQE knows, and the lineage stays
+    * O(1) deep. */
+  private def rankLoop(spark: SparkSession,
+                       adj: RDD[GraphLocal.RankAdjacency], nS: Long,
+                       hasDangling: Boolean, iters: Int, damp: Int)
+      : DataFrame = {
+    import spark.implicits._
+    val edged = adj.flatMap(_.edgeRows).toDF("src", "dst")
+      .repartition(col("src")).sortWithinPartitions(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    // the one crossed readout: N, |S| and "some node dangles". Its sums
-    // are coalesced, so an empty node set reads (0, 0, false) and ends
-    // as the driver replay does.
-    val (n, nS, hasDangling) = {
-      import graft.ops.Bounded._
-      val row = nodes.agg(count(lit(1)),
-          if (seeds.isEmpty) count(lit(1))
-          else coalesce(sum(when(col("__seed"), 1L).otherwise(0L)), lit(0L)),
-          coalesce(max(col("__dang")), lit(false)))
-        .collectBounded(1, "O(1) node/seed/dangling readout").head
-      (row.getLong(0), row.getLong(1), row.getBoolean(2))
-    }
-    if (nS == 0L) {
-      nodes.unpersist(); ePer.unpersist()
-      require(seeds.isEmpty, "personalizedPageRank: no seed is a graph node")
-      import spark.implicits._
-      return Seq.empty[(Long, Long)].toDF("id", "r")
-    }
-    val useBcast = Bounded.fitsDriver(spark, n)
-    val edged = {
-      val degJ = if (useBcast) broadcast(deg) else deg
-      val j = ePer.join(degJ, "src")
-      if (useBcast) j.repartition(col("dst"))
-      else j.repartition(col("src")).sortWithinPartitions(col("src"))
-    }.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    edged.count() // materialize off the warm ePer cache, then release it
-    ePer.unpersist()
     // r₀, the base term and the dangling share go to the seeds only:
     // every node for pageRank
-    def seeded(v: String) =
-      if (seeds.isEmpty) v else s"(case when __seed then $v else 0L end)"
-    val r0 = seeded(s"${Scale / nS}L")
+    def seeded(v: String) = s"(case when __seed then $v else 0L end)"
     val base = seeded(s"${(100 - damp) * (Scale / nS) / 100}L")
     // With no dangling node (e.g. both-directions graphs like
     // tradingPairsGraph) the redistribution term is 0L every round, so
-    // the per-round dangling aggregate + 1-row broadcast — and the double
-    // consumption of `ranks` it causes — are skipped outright. When
-    // dangling nodes DO exist, the per-round checkpoint below lets both
-    // consumers read materialized partitions, so nothing is recomputed
-    // inside the broadcast subtree.
+    // the per-round dangling aggregate is skipped outright.
     val dmass = if (hasDangling) " + " + seeded(s"__dmass div ${nS}L") else ""
-    var ranks = nodes.select(col("id"), col("__dang"), expr(r0).as("r"))
+    var ranks = adj.flatMap { g =>
+        val (ids, outdeg, seed) = g.nodes
+        ids.indices.map(v => (ids(v), outdeg(v), seed(v)))
+      }.toDF("id", "outdeg", "__seed")
+      .withColumn("r", expr(seeded(s"${Scale / nS}L")))
     // the most recent round's eager checkpoint: released only once a NEWER
     // checkpoint has materialized from it (never the frame the caller's
     // final action will read — a local checkpoint has no lineage to
     // recompute from, see [[Checkpoints]])
     var lastCk: Option[DataFrame] = None
     for (i <- 1 to iters) {
-      val ranksJ = if (useBcast) broadcast(ranks) else ranks
-      val contrib0 = edged.join(ranksJ, edged("src") === ranksJ("id"))
-        .select(col("dst"), expr("r div outdeg").as("share"))
+      val contrib = edged
+        .join(ranks.filter(col("outdeg") > 0L)
+          .select(col("id").as("src"), expr("r div outdeg").as("share")), "src")
         .groupBy(col("dst"))
         .agg(sum(col("share")).as("s"))
-      val contrib = if (useBcast) broadcast(contrib0) else contrib0
-      val joined = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+      val joined = ranks.join(contrib, col("id") === col("dst"), "left")
       ranks = (if (!hasDangling) joined
-        else joined.crossJoin(broadcast(ranks.filter(col("__dang"))
-          .agg(coalesce(sum(col("r")), lit(0L)).as("__dmass")))))
-        .select(nodes("id"), nodes("__dang"),
+        else joined.crossJoin(ranks.filter(col("outdeg") === 0L)
+          .agg(coalesce(sum(col("r")), lit(0L)).as("__dmass"))))
+        .select(col("id"), col("outdeg"), col("__seed"),
           expr(s"$base + (${damp}L * (coalesce(s, 0L)$dmass)) div 100").as("r"))
-      // (skipping mid-loop checkpoints in broadcast mode was measured
-      // SLOWER — q149 4.4→5.6 s, q405 5.1→11.3 s — the nested broadcast
-      // chain re-runs analysis/codegen over a growing tree each round)
       if (i < iters) {
         ranks = ranks.localCheckpoint(true)
         lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
         lastCk = Some(ranks)
       }
     }
-    // Eager-checkpoint the RESULT (node-sized blocks) so the iteration's
-    // edge/node caches can be RELEASED here instead of leaking for the
-    // session — the labelPropagation pattern. Downstream consumers read
-    // O(N) materialized blocks; no round is ever replayed lazily.
+    // Eager-checkpoint the RESULT (node-sized blocks) so the edge cache
+    // and the adjacencies can be RELEASED instead of leaking for the
+    // session. Downstream consumers read O(N) materialized blocks; no
+    // round is ever replayed lazily.
     val out = ranks.select(col("id"), col("r")).localCheckpoint(true)
     lastCk.foreach(Checkpoints.releaseLocalCheckpoint)
     edged.unpersist()
-    nodes.unpersist()
     out
   }
 
@@ -291,32 +263,22 @@ object Graph {
     * label, so each neighbor counts once and the argmax is the min
     * neighbor id. Later rounds take, per node, the most frequent label
     * among its labeled neighbors, the smallest on a tie. Every leg starts
-    * from one a-keyed repartition of the mirrored rows: each partition is
-    * packed into one [[GraphLocal.LpAdjacency]] (a primitive CSR whose
+    * from [[vertexLoop]] over the mirrored rows, keyed by a, with one
+    * [[GraphLocal.LpAdjacency]] per partition (a primitive CSR whose
     * neighbor slices are sorted and distinct, so duplicate rows fold
-    * without another shuffle), persisted on the executors, and one job
-    * over them counts the distinct edges |E| and nodes |V|, which pick
-    * the leg:
-    *  - |E| within [[Bounded.fitsDriver]]: the driver leg collects the
-    *    adjacencies and runs the round loop ([[GraphLocal.lpRounds]]) in
-    *    process.
-    *  - |V| within it: the hybrid leg runs the same loop with the labels
-    *    on the driver, at most about 60 bytes per node, and each later
-    *    round one map-only job over the cached adjacencies against
-    *    broadcast labels.
-    *  - |V| above it as well: the adjacencies are dropped and the
-    *    sort-merge loop runs over a persisted distinct edge frame. A
-    *    second edge cache keyed by b, built once, makes each round a
-    *    co-partitioned join that shuffles only the node-sized label
-    *    frame, then a keyed count and a struct-max argmax
-    *    `max(struct(c, ~lbl))`: bitwise NOT reverses the label order
-    *    without the overflow negation hits at `Long.MinValue`. Single
-    *    consumption of the label frame per round keeps its lazy plan
-    *    linear; a checkpoint every second round bounds analysis depth on
-    *    deep runs (the [[pageRank]] lineage lesson).
-    * The driver and hybrid legs share one round kernel
+    * without another shuffle). The driver and hybrid legs run
+    * [[GraphLocal.lpRounds]] with the labels on the driver, at most about
+    * 60 bytes per node, and share one round kernel
     * ([[GraphLocal.LpAdjacency.laterRound]], whose mode is sort, then the
-    * first longest run), so all three legs give the same rows. */
+    * first longest run). The sort-merge leg persists the adjacencies'
+    * edges once keyed by b, so each round is a co-partitioned join that
+    * shuffles only the node-sized label frame, then a keyed count and a
+    * struct-max argmax `max(struct(c, ~lbl))`: bitwise NOT reverses the
+    * label order without the overflow negation hits at `Long.MinValue`.
+    * Single consumption of the label frame per round keeps its lazy plan
+    * linear; a checkpoint every second round bounds analysis depth on
+    * deep runs (the [[rankLoop]] lineage lesson). All three legs give the
+    * same rows. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 3, assumeSymmetric: Boolean = false)
       : DataFrame = {
@@ -330,69 +292,28 @@ object Graph {
       else e0.select(explode(array(struct(col("a"), col("b")),
           struct(col("b").as("a"), col("a").as("b")))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    // All of the driver and hybrid legs' jobs run in the one SQL
-    // execution of the repartition they read.
-    val byA = e1.repartition(col("a")).queryExecution
-    val driverLabels = SQLExecution.withNewExecutionId(byA,
-        Some("labelPropagation")) {
-      val adj = byA.toRdd.mapPartitions { it =>
-        val c = Bounded.packLongs(it, 2, Int.MaxValue).get // a, b: not NULL
-        Iterator(GraphLocal.LpAdjacency(c(0), c(1)))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val sizes = sc.runJob(adj, (it: Iterator[GraphLocal.LpAdjacency]) => {
-          val g = it.next(); (g.nEdges.toLong, g.nOut.toLong)
-        })
-        val nV = sizes.map(_._2).sum
-        if (Bounded.fitsDriver(spark, sizes.map(_._1).sum)) {
-          val gs = sc.runJob(adj, (it: Iterator[GraphLocal.LpAdjacency]) =>
-            it.next())
-          adj.unpersist() // the loop reads only the collected copies
-          Some(GraphLocal.lpRounds(spark, nV.toInt, iters,
-              gs.map(_.firstRound)) { (ids, lbl, has) =>
-            gs.map(_.laterRound(ids, lbl, has))
-          })
-        } else if (Bounded.fitsDriver(spark, nV)) {
-          val round1 = sc.runJob(adj,
-            (it: Iterator[GraphLocal.LpAdjacency]) => it.next().firstRound)
-          Some(GraphLocal.lpRounds(spark, nV.toInt, iters, round1) {
-            (ids, lbl, has) =>
-              val b = sc.broadcast((ids, lbl, has))
-              try sc.runJob(adj, (it: Iterator[GraphLocal.LpAdjacency]) => {
-                val (i, l, h) = b.value
-                it.next().laterRound(i, l, h)
-              }) finally b.destroy()
-          })
-        } else None
-      } finally adj.unpersist()
-    }
-    driverLabels.getOrElse(sortMergeLabelPropagation(e1, iters))
+    vertexLoop(e1, "labelPropagation")(c => GraphLocal.LpAdjacency(c(0), c(1)))(
+      (total, parts) => GraphLocal.lpRounds(edges.sparkSession,
+          total(1).toInt, iters, parts.each(_.firstRound)) { (ids, lbl, has) =>
+        parts.round((ids, lbl, has)) { case (g, (i, l, h)) => g.laterRound(i, l, h) }
+      },
+      (_, adj) => sortMergeLabelPropagation(edges.sparkSession, adj, iters))
   }
 
-  /** [[labelPropagation]]'s sort-merge leg over the mirrored edge rows
-    * `e1`, deduped into one persisted frame that it releases. */
-  private def sortMergeLabelPropagation(e1: DataFrame, iters: Int)
-      : DataFrame = {
-    val ePre = e1.distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // round 1 in closed form: min neighbor id
-    var labels = ePre.groupBy(col("a"))
-      .agg(min(col("b")).as("lbl"))
-      .select(col("a").as("id"), col("lbl"))
+  /** [[labelPropagation]]'s sort-merge leg off the persisted adjacencies
+    * `adj`. */
+  private def sortMergeLabelPropagation(spark: SparkSession,
+      adj: RDD[GraphLocal.LpAdjacency], iters: Int): DataFrame = {
+    import spark.implicits._
+    var labels = adj.flatMap { g =>
+        val (ids, lbl) = g.firstRound
+        ids.iterator.zip(lbl.iterator)
+      }.toDF("id", "lbl")
       .localCheckpoint(true)
-    // superseded-checkpoint tracking, same contract as pageRank's
-    var lastCk: Option[org.apache.spark.sql.DataFrame] = Some(labels)
-    val e =
-      if (iters == 1) ePre
-      else {
-        val byB = ePre.repartition(col("b"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        byB.count() // materialize off the warm ePre cache, then release it
-        ePre.unpersist()
-        byB
-      }
+    // superseded-checkpoint tracking, same contract as rankLoop's
+    var lastCk: Option[DataFrame] = Some(labels)
+    val e = adj.flatMap(_.edgeRows).toDF("a", "b").repartition(col("b"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     for (i <- 2 to iters) {
       val nb = e.join(labels, e("b") === labels("id"))
         .groupBy(col("a"), col("lbl"))
@@ -406,10 +327,9 @@ object Graph {
         lastCk = Some(labels)
       }
     }
-    // eager-checkpoint the RESULT so the iteration's edge cache can be
-    // RELEASED here instead of leaking for the session (each LP call used
-    // to pin its symmetric edge frame in storage forever); also makes
-    // every downstream consumer read node-sized blocks, not replay rounds
+    // eager-checkpoint the RESULT so the edge cache can be RELEASED here
+    // instead of leaking for the session; also makes every downstream
+    // consumer read node-sized blocks, not replay rounds
     val out = labels.select(col("id"), col("lbl").as("community"))
       .localCheckpoint(true)
     e.unpersist()
@@ -915,16 +835,15 @@ object Graph {
     * floor-div/add — the DuckDB oracle replays rounds bit-for-bit.
     * Seeds not present in the graph are ignored (inner-join semantics);
     * requires ≥ 1 surviving seed, so an empty edge list fails. Runs the
-    * same intake, replay and distributed loop as pageRank ([[rank]],
-    * [[rankLoop]]), with the seed frame. Returns (id, r) over the full
-    * node universe. */
+    * same legs as pageRank ([[rank]]), with the seed rows, whose repeats
+    * fold. Returns (id, r) over the full node universe. */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
                            seedCol: String, iters: Int = 5,
                            damp: Int = 85,
                            dedupEdges: Boolean = true): DataFrame =
     rank(edges, srcCol, dstCol,
-      Some(seeds.select(col(seedCol).cast(LongType).as("id")).distinct()),
+      Some(seeds.select(col(seedCol).cast(LongType).as("id"))),
       iters, damp, dedupEdges)
 
   /** ADAMIC–ADAR LINK PREDICTION — the degree-aware sibling of
@@ -1008,23 +927,6 @@ object Graph {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
   }
 
-  /** NEWMAN MODULARITY of a node partition — the "was this community
-    * detection any good" scalar (Q > 0.3 ≈ real structure; Q ≈ 0 ≈ a
-    * random split): over a SYMMETRIC directed edge list (both directions
-    * present, the [[labelPropagation]]/[[tradingPairsGraph]] convention),
-    *   Q = intra/M2 − Σ_c (d_c / M2)²
-    * with M2 the directed edge count (= 2m), intra the directed count of
-    * within-community edges, d_c the summed out-degrees of community c.
-    * Nodes missing from `labels` are excluded from BOTH the intra count
-    * and the Σ(d_c/M2)² degree-mass term (the label joins are inner),
-    * while M2 still counts every edge — i.e. a partial labeling is
-    * scored as if unlabeled nodes formed no community at all. Pass a
-    * complete labeling (LP emits one) for textbook Q.
-    * Returns one row (k_communities, m_edges, intra_edges, modularity).
-    *
-    * Plan: two label joins on the edge frame (keyed; the label frame is
-    * node-sized), one degree aggregation, one O(communities) term frame
-    * with the Σ floor-scaled (10⁹) — no densification, no driver data. */
   /** BOUNDED-HOP BFS distances from a source set over a directed edge
     * list (pass a symmetric list for undirected semantics): frontier
     * expansion with a fixed hop cap — round h joins the pre-partitioned
@@ -1171,6 +1073,23 @@ object Graph {
     } finally { e.unpersist(); () }
   }
 
+  /** NEWMAN MODULARITY of a node partition — the "was this community
+    * detection any good" scalar (Q > 0.3 ≈ real structure; Q ≈ 0 ≈ a
+    * random split): over a SYMMETRIC directed edge list (both directions
+    * present, the [[labelPropagation]]/[[tradingPairsGraph]] convention),
+    *   Q = intra/M2 − Σ_c (d_c / M2)²
+    * with M2 the directed edge count (= 2m), intra the directed count of
+    * within-community edges, d_c the summed out-degrees of community c.
+    * Nodes missing from `labels` are excluded from BOTH the intra count
+    * and the Σ(d_c/M2)² degree-mass term (the label joins are inner),
+    * while M2 still counts every edge — i.e. a partial labeling is
+    * scored as if unlabeled nodes formed no community at all. Pass a
+    * complete labeling (LP emits one) for textbook Q.
+    * Returns one row (k_communities, m_edges, intra_edges, modularity).
+    *
+    * Plan: two label joins on the edge frame (keyed; the label frame is
+    * node-sized), one degree aggregation, one O(communities) term frame
+    * with the Σ floor-scaled (10⁹) — no densification, no driver data. */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  labels: DataFrame, idCol: String, labelCol: String)
       : DataFrame = {

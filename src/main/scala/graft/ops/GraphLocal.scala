@@ -1,5 +1,8 @@
 package graft.ops
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-local replays of the iterative graph operators.
@@ -30,28 +33,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the same limit, so an input that outgrows it fails loudly instead of
   * growing the driver.
   *
-  * Label propagation has three legs, all fed by one a-keyed shuffle in
-  * [[Graph.labelPropagation]] that packs each partition into one
-  * [[LpAdjacency]] (a primitive CSR, duplicate edges folded) persisted on
-  * the executors. With the distinct edge count |E| within the limit the
-  * driver leg collects the adjacencies and runs the round loop
-  * ([[lpRounds]]) in process; with only the node count |V| within it the
-  * hybrid leg runs the same loop with the labels on the driver and each
-  * round as one map-only job; a larger node set takes the sort-merge
-  * loop. Both loops run the same round ([[LpAdjacency.laterRound]], whose
-  * mode is [[modeOf]]: sort, then the first longest run). By count of
-  * its arrays, the driver leg's collect holds 4 bytes per distinct
-  * directed edge (the CSR's neighbor ints) plus the 4 of the serialized
-  * task result they arrive in, where the packed edge collect held 16 of
-  * payload and peaked near 80; per node each adjacency adds its
-  * offsets (4) and the ids it has seen (8, at most one per edge). The
-  * loop holds at most about 60 bytes per node on either leg: the sorted
-  * ids and, on the hybrid leg, their broadcast copy (16), two
-  * generations of labels and has-label flags (18), the broadcast copy
-  * of one generation (9) and one round's returned (id, label) arrays
-  * (16); the broadcast copies are compressed, and between rounds the
-  * ids and one generation stay, 17 bytes. At a |V| of 4M that is under
-  * 0.25 GB.
+  * Label propagation, pageRank and personalizedPageRank have three legs,
+  * picked in [[Graph.vertexLoop]] from one shuffle keyed by the receiving
+  * endpoint, each partition packed into one adjacency ([[LpAdjacency]],
+  * [[RankAdjacency]]: a primitive CSR, duplicate edges folded) persisted
+  * on the executors: the driver leg collects the adjacencies and runs
+  * the round loop ([[lpRounds]], [[rankRounds]]) in process, the hybrid
+  * leg runs it with the state on the driver and each round as one
+  * map-only job, and a node set above the limit takes the sort-merge
+  * loop. By count of its arrays, the driver leg's collect holds 4 bytes
+  * per distinct directed edge (the CSR's neighbor ints) plus the 4 of the
+  * serialized task result they arrive in, where the packed edge collect
+  * held 16 of payload and peaked near 80; per node each adjacency adds
+  * its offsets (4) and the ids it has seen (8, at most one per edge),
+  * and a rank adjacency its out-degree and seed flag (9). Label
+  * propagation's loop holds at most about 60 bytes per node on either
+  * leg: the sorted ids and, on the hybrid leg, their broadcast copy (16),
+  * two generations of labels and has-label flags (18), the broadcast
+  * copy of one generation (9) and one round's returned (id, label)
+  * arrays (16); the broadcast copies are compressed, and between rounds
+  * the ids and one generation stay, 17 bytes. The rank loop holds at
+  * most about 100 bytes per node on the hybrid leg: the id index and its
+  * broadcast copy (at most 48), the out-degrees and seed flags (9), two
+  * generations of ranks (16), the shares and their broadcast copy (16)
+  * and one round's returned sums (8); the collected (id, outdeg, seed)
+  * triples add 17 while it sets up. At a |V| of 4M that is under 0.25 GB
+  * for label propagation and 0.5 GB for the rank family.
   *
   * The limit only changes WHERE the arithmetic runs: every replay walks
   * the SAME integer / IEEE-double op sequence as the distributed plan
@@ -69,12 +76,11 @@ private[graft] object GraphLocal {
   }
 
   /** Bounded packed collect ([[Bounded.collectLongs]]) of a NULL-filtered
-    * all-LONG frame, held to `times` × the driver row limit. A NULL here
-    * means the operator's filter was bypassed: fail loudly instead of
-    * reading it as node 0. */
-  def collectColumns(df: DataFrame, what: String,
-                     times: Long = 1L): Array[Array[Long]] =
-    collectLongs(df, driverRowBound(df.sparkSession, times), what)
+    * all-LONG frame, held to the driver row limit. A NULL here means the
+    * operator's filter was bypassed: fail loudly instead of reading it as
+    * node 0. */
+  def collectColumns(df: DataFrame, what: String): Array[Array[Long]] =
+    collectLongs(df, driverRowBound(df.sparkSession), what)
       .getOrElse(throw new IllegalStateException(
         s"$what: NULL in a NULL-filtered frame"))
 
@@ -82,7 +88,7 @@ private[graft] object GraphLocal {
     * order. Linear probing over an int table that holds dense index + 1
     * (0 = empty) at a load factor ≤ 1/2; each id is stored once, in
     * first-seen order, so [[id]] is the dense → id inverse. */
-  final class LongIndex {
+  final class LongIndex extends Serializable {
     private var ids = new Array[Long](16)
     private var slots = new Array[Int](32)
     private var shift = 64 - 5 // log2(slots.length) high hash bits
@@ -145,9 +151,10 @@ private[graft] object GraphLocal {
   }
 
   /** CSR adjacency keyed by `from`: node v's neighbors are
-    * `nbr(off(v) until off(v + 1))`, in edge order. Returns (off, nbr). */
-  private def csr(from: Array[Int], to: Array[Int], n: Int)
-      : (Array[Int], Array[Int]) = {
+    * `nbr(off(v) until off(v + 1))`, in edge order, or sorted with their
+    * repeats dropped when `fold`. Returns (off, nbr). */
+  private def csr(from: Array[Int], to: Array[Int], n: Int,
+                  fold: Boolean = false): (Array[Int], Array[Int]) = {
     val off = new Array[Int](n + 1)
     var i = 0
     while (i < from.length) { off(from(i) + 1) += 1; i += 1 }
@@ -159,7 +166,23 @@ private[graft] object GraphLocal {
     while (i < from.length) {
       nbr(fill(from(i))) = to(i); fill(from(i)) += 1; i += 1
     }
-    (off, nbr)
+    if (!fold) return (off, nbr)
+    // compact in place: slice v moves down to start at off(v) = w
+    var w = 0
+    var v = 0
+    while (v < n) {
+      val lo = off(v); val hi = off(v + 1)
+      java.util.Arrays.sort(nbr, lo, hi)
+      off(v) = w
+      var j = lo
+      while (j < hi) {
+        if (w == off(v) || nbr(j) != nbr(w - 1)) { nbr(w) = nbr(j); w += 1 }
+        j += 1
+      }
+      v += 1
+    }
+    off(n) = w
+    (off, if (w == nbr.length) nbr else java.util.Arrays.copyOf(nbr, w))
   }
 
   /** The mode kernel of label propagation's later rounds, shared by the
@@ -180,16 +203,45 @@ private[graft] object GraphLocal {
     best
   }
 
+  /** One partition of a vertex loop's edges, packed by [[Graph]]'s leg
+    * picker. `counts` are its (|E|, |V|, …): the edges the driver leg
+    * would collect, the nodes whose state the hybrid leg keeps on the
+    * driver, then the operator's own counts. */
+  trait Adjacency extends Serializable {
+    def counts: Array[Long]
+  }
+
+  /** The adjacencies a vertex loop runs its rounds on: on the driver leg
+    * the `collected` copies, on the hybrid leg the executors' cached `adj`. */
+  final class Partitions[A](adj: RDD[A], collected: Option[Array[A]]) {
+    /** `f` of every adjacency, in partition order. */
+    def each[T: ClassTag](f: A => T): Array[T] = collected.fold(
+      adj.sparkContext.runJob(adj, (it: Iterator[A]) => f(it.next())))(_.map(f))
+
+    /** `f(adjacency, state)` of every adjacency, in partition order; on
+      * the executors one map-only job against broadcast `state`. */
+    def round[S: ClassTag, T: ClassTag](state: S)(f: (A, S) => T): Array[T] =
+      collected.fold {
+        val b = adj.sparkContext.broadcast(state)
+        try adj.sparkContext.runJob(adj, (it: Iterator[A]) => f(it.next(), b.value))
+        finally b.destroy()
+      }(_.map(f(_, state)))
+  }
+
   /** Label propagation's adjacency: a CSR keyed by `a` over local node
     * ints, each node's neighbors sorted and distinct. The first `nOut`
     * ints are the distinct `a` ids, the rows that can take a label;
     * `ids(u)` is the id behind int u. [[Graph.labelPropagation]] packs one
     * per a-partition, so a duplicate edge row folds where it lands. */
   final class LpAdjacency private (val ids: Array[Long], val nOut: Int,
-      off: Array[Int], nbr: Array[Int]) extends Serializable {
+      off: Array[Int], nbr: Array[Int]) extends Adjacency {
 
-    /** The distinct edges. */
-    def nEdges: Int = off(nOut)
+    /** The distinct edges and the labeled rows. */
+    def counts: Array[Long] = Array(off(nOut).toLong, nOut.toLong)
+
+    /** The distinct edges as (a, b) rows, for the sort-merge loop. */
+    def edgeRows: Iterator[(Long, Long)] = Iterator.range(0, nOut).flatMap(v =>
+      Iterator.range(off(v), off(v + 1)).map(j => (ids(v), ids(nbr(j)))))
 
     /** Round 1 in closed form: every node starts as its own label, so
       * each neighbor counts once and the argmax is the min neighbor id.
@@ -246,24 +298,8 @@ private[graft] object GraphLocal {
       val to = new Array[Int](b.length)
       i = 0
       while (i < b.length) { to(i) = ix(b(i)); i += 1 }
-      val (off, nbr) = csr(from, to, nOut)
-      // compact in place: slice v moves down to start at off(v) = w
-      var w = 0
-      var v = 0
-      while (v < nOut) {
-        val lo = off(v); val hi = off(v + 1)
-        java.util.Arrays.sort(nbr, lo, hi)
-        off(v) = w
-        var j = lo
-        while (j < hi) {
-          if (w == off(v) || nbr(j) != nbr(w - 1)) { nbr(w) = nbr(j); w += 1 }
-          j += 1
-        }
-        v += 1
-      }
-      off(nOut) = w
-      new LpAdjacency(Array.tabulate(ix.size)(ix.id), nOut, off,
-        if (w == nbr.length) nbr else java.util.Arrays.copyOf(nbr, w))
+      val (off, nbr) = csr(from, to, nOut, fold = true)
+      new LpAdjacency(Array.tabulate(ix.size)(ix.id), nOut, off, nbr)
     }
   }
 
@@ -377,59 +413,102 @@ private[graft] object GraphLocal {
     }).toDF("id", "hub", "auth")
   }
 
-  /** [[Graph.pageRank]] and [[Graph.personalizedPageRank]] rounds on a
-    * DEDUPED directed edge list and the seed ids (seeds that are not
-    * graph nodes are ignored). `seeds` None makes every node a seed, which
-    * is pageRank: with |S| = n the seed-restricted terms — r₀ = Scale/n,
-    * base = (100−damp)·(Scale/n)/100, dangling mass div n — are exactly
-    * pageRank's, and an empty edge list gives an empty frame. Pure Long
-    * floor arithmetic (everything non-negative), identical to the
-    * distributed plan. Returns (id, r) over the full node universe. */
-  def pageRank(spark: SparkSession, edges: Edges, seeds: Option[Array[Long]],
-               iters: Int, damp: Int): DataFrame = {
-    import spark.implicits._
-    if (edges.length == 0 && seeds.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("id", "r")
-    val g = new Dense(edges)
-    val isSeed = new Array[Boolean](g.n)
-    seeds match {
-      case None => java.util.Arrays.fill(isSeed, true)
-      case Some(s) =>
-        s.foreach { id => val v = g.ix.get(id); if (v >= 0) isSeed(v) = true }
+  /** The rank family's adjacency: a CSR keyed by the receiving endpoint
+    * over local node ints. The first `n` ints are the nodes this
+    * partition owns, each with its in-neighbors (sorted and distinct when
+    * `fold`, else one per edge row), its out-degree, counted the same
+    * way, and its seed flag; `ids(u)` is the id behind int u. */
+  final class RankAdjacency private (ids: Array[Long], n: Int,
+      outdeg: Array[Long], seed: Array[Boolean], off: Array[Int],
+      nbr: Array[Int]) extends Adjacency {
+
+    /** The in-edges, the nodes, the seeds and the dangling nodes. */
+    def counts: Array[Long] = Array(off(n).toLong, n.toLong,
+      seed.count(identity).toLong, outdeg.count(_ == 0L).toLong)
+
+    /** The owned nodes' (ids, out-degrees, seed flags). */
+    def nodes: (Array[Long], Array[Long], Array[Boolean]) =
+      (java.util.Arrays.copyOf(ids, n), outdeg, seed)
+
+    /** One round: Σ share over each owned node's in-edges, where
+      * `share(ix.get(id))` is the share of node `id`. */
+    def inSums(ix: LongIndex, share: Array[Long]): Array[Long] = {
+      val slot = ids.map(ix.get)
+      Array.tabulate(n) { v =>
+        var s = 0L
+        var j = off(v)
+        while (j < off(v + 1)) { s += share(slot(nbr(j))); j += 1 }
+        s
+      }
     }
-    val es = g.src; val ed = g.dst
-    val n = g.n
-    val outdeg = new Array[Long](n)
-    var i = 0
-    while (i < es.length) { outdeg(es(i)) += 1L; i += 1 }
-    val nS = isSeed.count(identity).toLong
-    require(nS > 0, "personalizedPageRank: no seed is a graph node")
+
+    /** The in-edges as (src, dst) rows, for the sort-merge loop. */
+    def edgeRows: Iterator[(Long, Long)] = Iterator.range(0, n).flatMap(v =>
+      Iterator.range(off(v), off(v + 1)).map(j => (ids(nbr(j)), ids(v))))
+  }
+
+  object RankAdjacency {
+    /** The tags of the (key, other, tag) rows: an edge (s, d) is the
+      * in-edge row (d, s) and the out-edge row (s, d); a seed s is (s, 0). */
+    val InEdge = 0L; val OutEdge = 1L; val Seed = 2L
+
+    /** The adjacency of rows (key(i), other(i), tag(i)). Every key of an
+      * edge row is a node; a seed row whose key is none is ignored, and
+      * `allSeeds` makes every node a seed. */
+    def apply(key: Array[Long], other: Array[Long], tag: Array[Long],
+              allSeeds: Boolean, fold: Boolean): RankAdjacency = {
+      val ix = new LongIndex
+      var i = 0
+      while (i < key.length) { if (tag(i) != Seed) ix(key(i)); i += 1 }
+      val n = ix.size
+      val seed = Array.fill(n)(allSeeds)
+      val outIx = new LongIndex // out-neighbors are only counted
+      val inF, inT, outF, outT = new scala.collection.mutable.ArrayBuilder.ofInt
+      i = 0
+      while (i < key.length) {
+        val v = ix.get(key(i))
+        if (tag(i) == InEdge) { inF.addOne(v); inT.addOne(ix(other(i))) }
+        else if (tag(i) == OutEdge) { outF.addOne(v); outT.addOne(outIx(other(i))) }
+        else if (v >= 0) seed(v) = true
+        i += 1
+      }
+      val (off, nbr) = csr(inF.result(), inT.result(), n, fold)
+      val (outOff, _) = csr(outF.result(), outT.result(), n, fold)
+      new RankAdjacency(Array.tabulate(ix.size)(ix.id), n,
+        Array.tabulate(n)(v => (outOff(v + 1) - outOff(v)).toLong), seed, off, nbr)
+    }
+  }
+
+  /** [[Graph.pageRank]]'s and [[Graph.personalizedPageRank]]'s round
+    * loop, shared by their driver and hybrid legs: the ranks live here,
+    * indexed by an id index over the adjacencies' disjoint
+    * [[RankAdjacency.nodes]], and `sums(ix, share)` runs
+    * [[RankAdjacency.inSums]] on every adjacency. The Long ops, in order,
+    * are the sort-merge loop's ([[Graph.pageRank]] gives them). Returns
+    * (id, r). */
+  def rankRounds(spark: SparkSession, nS: Long, iters: Int, damp: Int,
+                 nodes: Array[(Array[Long], Array[Long], Array[Boolean])])(
+      sums: (LongIndex, Array[Long]) => Array[Array[Long]]): DataFrame = {
+    val ix = new LongIndex // slot v: the v-th node in partition order
+    nodes.foreach(_._1.foreach(ix(_)))
+    val outdeg = nodes.flatMap(_._2)
+    val seed = nodes.flatMap(_._3)
+    val n = outdeg.length
+    require(ix.size == n, "pageRank: the adjacencies' nodes are not distinct")
     val r0 = Graph.Scale / nS
     val base = (100 - damp) * (Graph.Scale / nS) / 100
     val hasDangling = outdeg.contains(0L)
-    var r = Array.tabulate(n)(v => if (isSeed(v)) r0 else 0L)
+    var r = Array.tabulate(n)(v => if (seed(v)) r0 else 0L)
     for (_ <- 1 to iters) {
-      val s = new Array[Long](n)
-      var j = 0
-      while (j < es.length) { s(ed(j)) += r(es(j)) / outdeg(es(j)); j += 1 }
-      val dm =
-        if (!hasDangling) 0L
-        else {
-          var d = 0L; var k = 0
-          while (k < n) { if (outdeg(k) == 0L) d += r(k); k += 1 }
-          d / nS
-        }
-      val nr = new Array[Long](n)
-      var k = 0
-      while (k < n) {
-        nr(k) = (if (isSeed(k)) base else 0L) +
-          damp.toLong * (s(k) + (if (isSeed(k)) dm else 0L)) / 100
-        k += 1
-      }
-      r = nr
+      val share = Array.tabulate(n)(v => if (outdeg(v) == 0L) 0L else r(v) / outdeg(v))
+      val dm = if (!hasDangling) 0L else
+        (0 until n).foldLeft(0L)((d, v) => if (outdeg(v) == 0L) d + r(v) else d) / nS
+      val s = sums(ix, share).flatten
+      r = Array.tabulate(n)(v => (if (seed(v)) base else 0L) +
+        damp.toLong * (s(v) + (if (seed(v)) dm else 0L)) / 100)
     }
-    spark.createDataset((0 until n).map(k => (g.ix.id(k), r(k))))
-      .toDF("id", "r")
+    import spark.implicits._
+    spark.createDataset((0 until n).map(v => (ix.id(v), r(v)))).toDF("id", "r")
   }
 
   /** [[Graph.bfsDistances]] on a DEDUPED directed edge list (CSR keyed

@@ -2822,9 +2822,8 @@ object Stats {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val k = srcTot.count()
     require(k >= 1, "markovStationary: no transitions")
-    // r19 GATED LOCAL FAST PATH (the pageRankLocal / dedupGroupsLocal
-    // convention): the state space of a Markov chain over a categorical
-    // column is tiny (k = 4 event types at every SF here), yet the
+    // Gated local fast path: the state space of a Markov chain over a
+    // categorical column is tiny (k = 4 event types at every SF here), yet the
     // distributed power iteration scheduled ~40 sub-second jobs per call
     // — pure driver/job overhead. For k ≤ 256 the O(k²) transition matrix
     // is collected (bounded) and the SAME integer arithmetic replayed

@@ -94,22 +94,19 @@ class CacheHygieneSpec extends SparkSuite {
       .intersect(left).isEmpty)
   }
 
-  test("labelPropagation: the driver and hybrid legs leave no cache, " +
-    "persistent RDD or broadcast; the sort-merge leg only the result") {
-    import graft.ops.Graph
+  /** Runs `op` on its driver leg (default limit), hybrid leg
+    * (`hybridLimit`) and sort-merge leg (limit 0): the driver and hybrid
+    * legs leave no cache, persistent RDD or broadcast, the sort-merge leg
+    * only the result's own checkpoint, and every leg gives the same rows. */
+  private def legsLeaveNoCache(hybridLimit: Long)(
+      op: => org.apache.spark.sql.DataFrame): Unit = {
     import org.apache.spark.BroadcastProbe
-    val sym = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (2L, 5L))
-      .flatMap(e => Seq(e, e.swap)).toDF("s", "t")
-    def lp = Graph.labelPropagation(sym, "s", "t", iters = 3,
-      assumeSymmetric = true)
-    val local = rowSet(lp)
-    // 5 nodes, 10 edge rows: the default limit runs the driver leg, 5 the
-    // hybrid leg, 0 sort-merges
-    for (limit <- Seq(None, Some(5L), Some(0L))) {
+    val local = rowSet(op)
+    for (limit <- Seq(None, Some(hybridLimit), Some(0L))) {
       spark.catalog.clearCache()
       val held = BroadcastProbe.heldValues(spark.sparkContext)
       var out: org.apache.spark.sql.DataFrame = null
-      val left = newCaches { out = limit.fold(lp)(atDriverRowLimit(_)(lp)) }
+      val left = newCaches { out = limit.fold(op)(atDriverRowLimit(_)(op)) }
       assert(spark.sharedState.cacheManager.isEmpty, s"limit=$limit")
       if (!limit.contains(0L)) {
         // the result is built from driver arrays: the adjacency cache is
@@ -122,10 +119,29 @@ class CacheHygieneSpec extends SparkSuite {
         assert(extra.isEmpty, s"limit=$limit broadcasts left: $extra")
       } else {
         // the result's own checkpoint is all that stays; every round's
-        // checkpoint and both edge caches are released
+        // checkpoint, the edge cache and the adjacencies are released
         assert(left.size == 1, s"limit=$limit left=$left")
       }
       assert(rowSet(out) == local, s"limit=$limit")
     }
+  }
+
+  test("labelPropagation: the driver and hybrid legs leave no cache, " +
+    "persistent RDD or broadcast; the sort-merge leg only the result") {
+    val sym = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (2L, 5L))
+      .flatMap(e => Seq(e, e.swap)).toDF("s", "t")
+    // 5 nodes, 10 edge rows: the default limit runs the driver leg, 5 the
+    // hybrid leg, 0 sort-merges
+    legsLeaveNoCache(5L)(graft.ops.Graph.labelPropagation(sym, "s", "t",
+      iters = 3, assumeSymmetric = true))
+  }
+
+  test("pageRank: the driver and hybrid legs leave no cache, persistent " +
+    "RDD or broadcast; the sort-merge leg only the result") {
+    // 5 nodes, 7 edges, node 5 dangling: the default limit runs the
+    // driver leg, 5 the hybrid leg, 0 sort-merges
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 3L), (2L, 5L), (1L, 4L),
+      (3L, 4L)).toDF("s", "t")
+    legsLeaveNoCache(5L)(graft.ops.Graph.pageRank(g, "s", "t", iters = 3))
   }
 }

@@ -10,9 +10,10 @@ import scala.jdk.CollectionConverters._
   * on every leg [[graft.ops.Bounded.fitsDriver]] can select: the local
   * replay (default limit), the distributed sort-merge loop (limit 0) and,
   * for the operators that keep a node-sized frame off the edge side
-  * (pageRank, personalizedPageRank and modularity broadcast it,
-  * labelPropagation holds it on the driver), that leg (a limit between
-  * the node and the edge count). */
+  * (modularity broadcasts it; labelPropagation, pageRank and
+  * personalizedPageRank hold it on the driver and run each round as one
+  * map-only job, the hybrid leg), that leg (a limit between the node and
+  * the edge count). */
 class GraphLocalParitySpec extends SparkSuite {
   init()
   import spark.implicits._
@@ -25,11 +26,12 @@ class GraphLocalParitySpec extends SparkSuite {
   private val sym = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L),
     (3L, 4L), (4L, 3L), (1L, 4L), (4L, 1L), (2L, 5L), (5L, 2L))
 
-  /** labelPropagation's three legs: the sort-merge loop (limit 0), the
-    * hybrid leg (`hybridLimit`, at least the node count and below the
-    * edge count: labels on the driver, edges on the executors) and the
-    * local replay (default limit). Each must give the same rows. */
-  private def lpThreeWays(hybridLimit: Long, what: String)
+  /** The three legs of a vertex loop (labelPropagation, pageRank,
+    * personalizedPageRank): the sort-merge loop (limit 0), the hybrid leg
+    * (`hybridLimit`, at least the node count and below the edge count:
+    * state on the driver, edges on the executors) and the local replay
+    * (default limit). Each must give the same rows. */
+  private def threeWays(hybridLimit: Long, what: String)
                          (f: => org.apache.spark.sql.DataFrame)
       : Set[Seq[Any]] = {
     val (d, l) = bothWays(f)
@@ -42,7 +44,7 @@ class GraphLocalParitySpec extends SparkSuite {
   // on the driver and the edges distributed
   test("labelPropagation parity: symmetric graph, several iters") {
     for (it <- Seq(1, 2, 3, 5))
-      lpThreeWays(5L, s"iters=$it")(Graph.labelPropagation(
+      threeWays(5L, s"iters=$it")(Graph.labelPropagation(
         sym.toDF("s", "t"), "s", "t", iters = it, assumeSymmetric = true))
   }
 
@@ -52,7 +54,7 @@ class GraphLocalParitySpec extends SparkSuite {
     val lo = Long.MinValue; val hi = Long.MaxValue
     val ends = Seq((lo, -1L), (lo, 0L), (-1L, 0L), (0L, hi)).toDF("s", "t")
     for (it <- 1 to 3) {
-      val l = lpThreeWays(4L, s"iters=$it")(Graph.labelPropagation(
+      val l = threeWays(4L, s"iters=$it")(Graph.labelPropagation(
         ends, "s", "t", iters = it))
       assert(l.size == 4, s"iters=$it local=$l")
       if (it > 1) assert(l.forall(_(1) == lo), s"iters=$it local=$l")
@@ -64,7 +66,7 @@ class GraphLocalParitySpec extends SparkSuite {
     // the distributed loop leaves it out — the replay must too (no
     // Long.MaxValue label, no NPE on later rounds)
     for (it <- 1 to 3) {
-      val l = lpThreeWays(5L, s"iters=$it")(Graph.labelPropagation(
+      val l = threeWays(5L, s"iters=$it")(Graph.labelPropagation(
         directed.toDF("s", "t"), "s", "t", iters = it,
         assumeSymmetric = true))
       assert(!l.exists(_.head == 5L), s"iters=$it local=$l")
@@ -72,7 +74,7 @@ class GraphLocalParitySpec extends SparkSuite {
   }
 
   test("labelPropagation parity: asymmetric input through symmetrization") {
-    lpThreeWays(5L, "iters=3")(Graph.labelPropagation(
+    threeWays(5L, "iters=3")(Graph.labelPropagation(
       directed.toDF("s", "t"), "s", "t", iters = 3))
   }
 
@@ -95,14 +97,14 @@ class GraphLocalParitySpec extends SparkSuite {
     val repeated = (clean ++ Seq((5L, 6L), (6L, 5L), (1L, 5L))).toDF("s", "t")
     // 6 nodes, 10 distinct edge rows: a limit of 6 runs the hybrid leg
     for (it <- 1 to 3) {
-      val want = lpThreeWays(6L, s"clean iters=$it")(Graph.labelPropagation(
+      val want = threeWays(6L, s"clean iters=$it")(Graph.labelPropagation(
         clean.toDF("s", "t"), "s", "t", iters = it, assumeSymmetric = true))
       if (it == 2)
         assert(want.contains(Seq(5L, 5L)) && want.contains(Seq(6L, 6L)), want)
-      val fromRaw = lpThreeWays(6L, s"raw iters=$it")(Graph.labelPropagation(
+      val fromRaw = threeWays(6L, s"raw iters=$it")(Graph.labelPropagation(
         raw, "s", "t", iters = it))
       assert(fromRaw == want, s"iters=$it raw=$fromRaw clean=$want")
-      val folded = lpThreeWays(6L, s"repeated iters=$it")(
+      val folded = threeWays(6L, s"repeated iters=$it")(
         Graph.labelPropagation(repeated, "s", "t", iters = it,
           assumeSymmetric = true))
       assert(folded == want, s"iters=$it repeated=$folded clean=$want")
@@ -234,8 +236,8 @@ class GraphLocalParitySpec extends SparkSuite {
 
   test("pageRank equals personalizedPageRank seeded with every node") {
     // the identity the shared rank loop rests on, on every leg: the
-    // sort-merge loop (limit 0), the broadcast node frame (limit 5: 5
-    // nodes, at least 8 edges) and the local replay
+    // sort-merge loop (limit 0), the hybrid leg (limit 5: 5 nodes, at
+    // least 8 edges) and the local replay
     for ((name, g) <- Seq("directed" -> directed, "sym" -> sym);
          limit <- Seq(Some(0L), Some(5L), None)) {
       def leg(f: => Set[Seq[Any]]) = limit.fold(f)(atDriverRowLimit(_)(f))
@@ -317,18 +319,60 @@ class GraphLocalParitySpec extends SparkSuite {
   }
 
   // `directed` has 8 edges over 5 nodes: a limit of 5 keeps the edges
-  // distributed and broadcasts the node-sized frames
-  test("pageRank parity: broadcast node frame") {
+  // distributed and the ranks on the driver
+  test("pageRank parity: hybrid leg") {
     def pr = Graph.pageRank(directed.toDF("s", "t"), "s", "t", iters = 4)
-    val b = atDriverRowLimit(5L)(rowSet(pr))
-    assert(b == rowSet(pr), s"broadcast=$b")
+    val h = atDriverRowLimit(5L)(rowSet(pr))
+    assert(h == rowSet(pr), s"hybrid=$h")
   }
 
-  test("personalizedPageRank parity: broadcast node frame") {
+  test("personalizedPageRank parity: hybrid leg") {
     def ppr = Graph.personalizedPageRank(directed.toDF("s", "t"), "s", "t",
       Seq(1L, 3L).toDF("seed"), "seed", iters = 4)
-    val b = atDriverRowLimit(5L)(rowSet(ppr))
-    assert(b == rowSet(ppr), s"broadcast=$b")
+    val h = atDriverRowLimit(5L)(rowSet(ppr))
+    assert(h == rowSet(ppr), s"hybrid=$h")
+  }
+
+  /** Jobs that `body` starts. A marker job run after `body` is awaited on
+    * the listener bus, so every earlier job's start has been delivered. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = "GraphLocalParitySpec job-count marker"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(String.valueOf(j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(marker), "listener bus did not deliver the marker in 30 s")
+    } finally sc.removeSparkListener(l)
+    started.size - 1
+  }
+
+  test("hybrid legs: each later round is one job") {
+    // 5 nodes and 8 (directed) or 10 (sym) edges: a limit of 5 runs the
+    // hybrid leg, where four more rounds must cost four more jobs
+    val seeds = Seq(1L, 3L).toDF("seed")
+    val ops = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (it => Graph.pageRank(directed.toDF("s", "t"), "s", "t",
+        iters = it)),
+      "personalizedPageRank" -> (it => Graph.personalizedPageRank(
+        directed.toDF("s", "t"), "s", "t", seeds, "seed", iters = it)),
+      "labelPropagation" -> (it => Graph.labelPropagation(sym.toDF("s", "t"),
+        "s", "t", iters = it, assumeSymmetric = true)))
+    for ((name, op) <- ops) {
+      def jobs(it: Int) = atDriverRowLimit(5L)(jobsOf(op(it).collect()))
+      val (one, five) = (jobs(1), jobs(5))
+      assert(five - one == 4, s"$name: iters=1 took $one jobs, iters=5 $five")
+    }
   }
 
   test("modularity parity: broadcast label frame") {
@@ -389,31 +433,44 @@ class GraphLocalParitySpec extends SparkSuite {
     assert(ties >= 100, s"only $ties nodes with a count tie")
   }
 
-  // at most 400 nodes and over 3000 symmetric edge rows: a limit of 1000
-  // runs the hybrid leg. Without partition coalescing its a-repartition
-  // keeps all 4 shuffle partitions, so each round gathers labels across
-  // partitions.
-  test("labelPropagation parity: random tie-heavy graph, iters 1–5") {
+  /** `f` on the random graph with AQE's partition coalescing on and off:
+    * off, the hybrid leg keeps all 4 shuffle partitions, so each round
+    * gathers across partitions. */
+  private def bothCoalesce(f: String => Unit): Unit = {
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     for (coalesce <- Seq("true", "false")) {
       spark.conf.set(key, coalesce)
-      try for (it <- 1 to 5)
-        lpThreeWays(1000L, s"coalesce=$coalesce iters=$it")(
-          Graph.labelPropagation(rndDf, "s", "t", iters = it))
-      finally spark.conf.unset(key)
+      try f(s"coalesce=$coalesce") finally spark.conf.unset(key)
     }
   }
 
+  // at most 400 nodes and over 3000 symmetric edge rows: a limit of 1000
+  // runs the hybrid leg
+  test("labelPropagation parity: random tie-heavy graph, iters 1–5") {
+    bothCoalesce { what =>
+      for (it <- 1 to 5)
+        threeWays(1000L, s"$what iters=$it")(
+          Graph.labelPropagation(rndDf, "s", "t", iters = it))
+    }
+  }
+
+  // at most 400 nodes and over 1000 distinct edges: a limit of 1000 runs
+  // the hybrid leg; dedupEdges = false keeps the random duplicates as
+  // parallel edges on every leg
   test("pageRank parity: random tie-heavy graph") {
-    val (d, l) = bothWays(Graph.pageRank(rndDf, "s", "t", iters = 4))
-    assert(d == l, s"dist=$d local=$l")
+    bothCoalesce { what =>
+      for (dedup <- Seq(true, false))
+        threeWays(1000L, s"$what dedup=$dedup")(Graph.pageRank(rndDf, "s", "t",
+          iters = 4, dedupEdges = dedup))
+    }
   }
 
   test("personalizedPageRank parity: random tie-heavy graph") {
-    val seeds = Seq(1L, 7L, 50L, 9999L).toDF("seed")
-    val (d, l) = bothWays(Graph.personalizedPageRank(rndDf, "s", "t",
-      seeds, "seed", iters = 4))
-    assert(d == l, s"dist=$d local=$l")
+    val seeds = Seq(1L, 7L, 50L, 9999L, 7L).toDF("seed")
+    bothCoalesce { what =>
+      threeWays(1000L, what)(Graph.personalizedPageRank(rndDf, "s", "t",
+        seeds, "seed", iters = 4))
+    }
   }
 
   test("hits parity: random tie-heavy graph") {

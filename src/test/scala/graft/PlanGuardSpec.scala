@@ -432,12 +432,10 @@ class PlanGuardSpec extends SparkSuite {
 
   test("no raw .collect() in src/main — everything routes through collectBounded") {
     // graft.ops.Bounded is the only sanctioned driver-side
-    // materialization (plan-level limit cap + loud bound assertion);
-    // allowlist: Bounded.scala itself and OutOfCoreCheck's NEGATIVE
-    // control, whose entire job is to OOM on an unbounded collect.
+    // materialization (plan-level limit cap + loud bound assertion), and
+    // Bounded.scala itself the only file allowed a raw collect
     val offenders = mainSourceLines()
-      .filterNot { case (p, _, _) => p.toString.endsWith("ops/Bounded.scala") ||
-        p.toString.endsWith("OutOfCoreCheck.scala") }
+      .filterNot { case (p, _, _) => p.toString.endsWith("ops/Bounded.scala") }
       // .head()/.first() (paren forms — unambiguous Dataset actions;
       // bare .head on Scala collections stays allowed) are raw 1-row
       // driver readouts outside the fence unless the line routes
@@ -448,7 +446,7 @@ class PlanGuardSpec extends SparkSuite {
           l.contains(".first()")) && !l.contains("collectBounded") }
       .map { case (p, i, l) => s"$p:$i: ${l.trim}" }
     assert(offenders.isEmpty,
-      "raw .collect()/.head()/.first() outside Bounded/OutOfCoreCheck:\n" +
+      "raw .collect()/.head()/.first() outside Bounded:\n" +
         offenders.mkString("\n"))
   }
 
@@ -528,10 +526,7 @@ class PlanGuardSpec extends SparkSuite {
     // pageRank and personalizedPageRank run one distributed rank loop,
     // harmonicCentralityKmv and neighborhoodFunction one ball loop, and
     // the gated graph operators collect their edges in one intake helper
-    val code = mainSourceLines().filterNot { case (_, _, l) =>
-      val t = l.trim
-      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
-    }
+    val code = mainCodeLines()
     for (pattern <- Seq("r div outdeg", "kmv_sketch_arr(")) {
       val at = code.collect {
         case (p, i, l) if l.contains(pattern) => s"${p.getFileName}:$i"
@@ -540,21 +535,57 @@ class PlanGuardSpec extends SparkSuite {
         s"'$pattern' outside its loop: ${at.mkString(", ")}")
     }
     val graph = code.filter(_._1.endsWith("ops/Graph.scala"))
-    val intake = graph.collectFirst {
-      case (_, i, l) if l.contains("private def intake(") => i
-    }
-    assert(intake.isDefined, "no intake helper in ops/Graph.scala")
-    // the helper's body ends where the next member of object Graph starts
-    val end = graph.collect {
-      case (_, i, l) if i > intake.get && l.matches("  (private )?def .*") => i
-    }.minOption.getOrElse(Int.MaxValue)
+    val intake = graphMember(graph, "private def intake(")
     val collects = graph.collect {
       case (_, i, l) if l.contains("GraphLocal.collectEdges(") ||
         l.contains("GraphLocal.collectColumns(") => i
     }
-    val outside = collects.filterNot(i => i > intake.get && i < end)
+    val outside = collects.filterNot(intake.contains)
     assert(collects.nonEmpty && outside.isEmpty,
       s"edge collects outside the intake at Graph.scala:${outside.mkString(", ")}")
+  }
+
+  /** The lines of src/main without comment lines. */
+  private def mainCodeLines() = mainSourceLines().filterNot { case (_, _, l) =>
+    val t = l.trim
+    t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+  }
+
+  /** The line numbers of the member of object Graph declared by `decl`:
+    * its body ends where the next member starts. */
+  private def graphMember(graph: List[(java.nio.file.Path, Int, String)],
+                          decl: String): Range = {
+    val start = graph.collectFirst { case (_, i, l) if l.contains(decl) => i }
+    assert(start.isDefined, s"no '$decl' in ops/Graph.scala")
+    val end = graph.collect {
+      case (_, i, l) if i > start.get && l.matches("  (private )?def .*") => i
+    }.minOption.getOrElse(Int.MaxValue)
+    start.get until end
+  }
+
+  test("vertex loops: no broadcast in rankLoop, one per-round broadcast " +
+    "and runJob dispatch") {
+    // the rank family's sort-merge loop broadcasts no node frame (the
+    // driver and hybrid legs hold that frame on the driver), and every
+    // vertex loop's per-round broadcast + runJob goes through one dispatch
+    val code = mainCodeLines()
+    val graph = code.filter(_._1.endsWith("ops/Graph.scala"))
+    val rankLoop = graphMember(graph, "private def rankLoop(")
+    val bcast = graph.collect {
+      case (_, i, l) if rankLoop.contains(i) && l.contains("broadcast(") => i
+    }
+    assert(bcast.isEmpty, s"broadcast in rankLoop at Graph.scala:${bcast.mkString(", ")}")
+    val jobs = code.collect { case (p, i, l) if l.contains("runJob(") => (p, i) }
+    val dispatch = jobs.filter { case (p, i) =>
+      code.exists { case (q, j, l) => q == p && j >= i - 2 && j <= i &&
+        l.contains("broadcast(") }
+    }
+    assert(dispatch.size == 1 && dispatch.head._1.endsWith("ops/GraphLocal.scala"),
+      s"per-round broadcast + runJob at ${dispatch.mkString(", ")}")
+    val elsewhere = jobs.filterNot { case (p, _) =>
+      p.toString.endsWith("ops/Bounded.scala") ||
+        p.toString.endsWith("ops/GraphLocal.scala") }
+    assert(elsewhere.isEmpty, s"runJob outside Bounded and GraphLocal: $elsewhere")
   }
 
   test("funnel: executed stages grow LINEARLY in stage count " +

@@ -105,7 +105,6 @@ class StreamingSpec extends SparkSuite {
     // every stateful stream starts under withRocksDbState; the proof is
     // in the progress events — RocksDB's state-store custom metrics
     // (rocksdb*-prefixed) only appear when that provider actually ran.
-    // (State scale under a capped heap: graft.StreamStateCheck.)
     import org.apache.spark.sql.streaming.StreamingQueryListener
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new StreamingQueryListener {
