@@ -91,9 +91,9 @@ object Bounded {
     })
   }
 
-  /** One task's side of [[collectLongs]] (and of labelPropagation's
-    * adjacency build): at most `cap` rows, None at the first NULL slot. */
-  private[ops] def packLongs(it: Iterator[InternalRow], nCols: Int, cap: Int)
+  /** One task's side of [[collectLongs]]: at most `cap` rows, None at the
+    * first NULL slot. */
+  private def packLongs(it: Iterator[InternalRow], nCols: Int, cap: Int)
       : Option[Array[Array[Long]]] = {
     val bufs = Array.fill(nCols)(new scala.collection.mutable.ArrayBuilder.ofLong)
     var n = 0

@@ -4,6 +4,7 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -90,11 +91,14 @@ object Graph {
   }
 
   /** The legs of the vertex loops ([[labelPropagation]], [[rank]]).
-    * `keyed`'s rows, all LONG and NULL-free with the receiving endpoint
-    * first, are repartitioned once by that key, each partition is packed
-    * into one adjacency persisted on the executors, and one job sums
-    * their [[GraphLocal.Adjacency.counts]] into `total(i)`, which picks
-    * the leg:
+    * `rows`, the operator's NULL-filtered all-LONG rows, are taken in
+    * through one shuffle ([[GraphLocal.packByKey]]): on the map side
+    * `route` turns each row into records of `width` LONGs keyed by their
+    * receiving endpoint, packed into primitive blocks per destination
+    * partition, and on the reduce side `pack` builds one adjacency per
+    * partition from its records' columns, persisted on the executors. One
+    * job, from the input's last stage to the adjacencies, sums their
+    * [[GraphLocal.Adjacency.counts]] into `total(i)`, which picks the leg:
     *  - the edges total(0) within [[Bounded.fitsDriver]]: the driver leg
     *    collects the adjacencies and `rounds` runs in process;
     *  - the nodes total(1) within it: the hybrid leg, where `rounds`
@@ -102,59 +106,58 @@ object Graph {
     *    job over the cached adjacencies against broadcast state;
     *  - otherwise `sortMerge` runs its SQL loop off the adjacencies.
     * All of the driver and hybrid legs' jobs run in the one SQL execution
-    * of the repartition they read. The adjacencies are released before
-    * this returns. */
+    * of `rows`. The adjacencies and the legs' broadcasts are released
+    * before this returns. */
   private def vertexLoop[A <: GraphLocal.Adjacency : ClassTag](
-      keyed: DataFrame, what: String)(pack: Array[Array[Long]] => A)(
+      rows: DataFrame, width: Int, what: String)(
+      route: (InternalRow, GraphLocal.Blocks) => Unit)(
+      pack: Array[Array[Long]] => A)(
       rounds: (Int => Long, GraphLocal.Partitions[A]) => DataFrame,
       sortMerge: (Int => Long, RDD[A]) => DataFrame): DataFrame = {
-    val spark = keyed.sparkSession
-    val nCols = keyed.columns.length
-    val byKey = keyed.repartition(col(keyed.columns.head)).queryExecution
+    val spark = rows.sparkSession
     var adj: RDD[A] = null
+    var parts: GraphLocal.Partitions[A] = null
     try {
-      SQLExecution.withNewExecutionId(byKey, Some(what)) {
-        adj = byKey.toRdd.mapPartitions { it =>
-          Iterator(pack(Bounded.packLongs(it, nCols, Int.MaxValue).get))
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        val cached = new GraphLocal.Partitions(adj, None)
-        val per = cached.each(_.counts)
+      SQLExecution.withNewExecutionId(rows.queryExecution, Some(what)) {
+        adj = GraphLocal.packByKey(rows, width, what)(route)(pack)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        parts = new GraphLocal.Partitions(adj, None)
+        val per = parts.each(_.counts)
         val total = (i: Int) => per.map(_(i)).sum
         if (Bounded.fitsDriver(spark, total(0))) {
-          val gs = cached.each(identity)
+          parts = new GraphLocal.Partitions(adj, Some(parts.each(identity)))
           adj.unpersist() // the loop reads only the collected copies
-          Right(rounds(total, new GraphLocal.Partitions(adj, Some(gs))))
+          Right(rounds(total, parts))
         } else if (Bounded.fitsDriver(spark, total(1)))
-          Right(rounds(total, cached))
+          Right(rounds(total, parts))
         else Left(total)
       }.fold(sortMerge(_, adj), identity)
-    } finally if (adj != null) adj.unpersist()
+    } finally {
+      if (parts != null) parts.release()
+      if (adj != null) adj.unpersist()
+    }
   }
 
-  /** [[pageRank]] and [[personalizedPageRank]] on [[vertexLoop]]: each
-    * edge row goes to both endpoints, as an in-edge of its dst and an
-    * out-edge of its src, and each seed row (LONG `id`) to its seed, so a
-    * node's partition holds its in-neighbors, out-degree and seed flag
-    * ([[GraphLocal.RankAdjacency]]; `dedupEdges` = false keeps duplicate
-    * edges as parallel edges). `seeds` None makes every node a seed;
-    * seeds that are not graph nodes are ignored. */
+  /** [[pageRank]] and [[personalizedPageRank]] on [[vertexLoop]]. The
+    * route sends each edge row (s, d) to both endpoints, as the in-edge
+    * record (d, s) to d and the out-edge record (s, d) to s, and each seed
+    * row to its own id, so a node's partition holds its in-neighbors,
+    * out-degree and seed flag ([[GraphLocal.RankAdjacency]]; `dedupEdges`
+    * = false keeps duplicate edges as parallel edges). `seeds` None makes
+    * every node a seed; seeds that are not graph nodes are ignored. */
   private def rank(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: Option[DataFrame], iters: Int, damp: Int,
                    dedupEdges: Boolean): DataFrame = {
     require(iters >= 1 && damp >= 0 && damp <= 100)
     import GraphLocal.RankAdjacency.{InEdge, OutEdge, Seed}
     val spark = edges.sparkSession
-    val rows = edges.select(col(srcCol).cast(LongType).as("s"),
+    val es = edges.select(col(srcCol).cast(LongType).as("s"),
         col(dstCol).cast(LongType).as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull)
-      .select(explode(array(
-        struct(col("d").as("k"), col("s").as("o"), lit(InEdge).as("t")),
-        struct(col("s").as("k"), col("d").as("o"), lit(OutEdge).as("t"))))
-        .as("r"))
-      .select(col("r.k").as("k"), col("r.o").as("o"), col("r.t").as("t"))
-    val keyed = seeds.fold(rows)(s => rows.unionByName(s
-      .filter(col("id").isNotNull)
-      .select(col("id").as("k"), lit(0L).as("o"), lit(Seed).as("t"))))
+    // with seeds, edge rows are (s, d, OutEdge) and seed rows (id, 0, Seed)
+    val rows = seeds.fold(es)(s => es.withColumn("t", lit(OutEdge))
+      .unionByName(s.filter(col("id").isNotNull)
+        .select(col("id").as("s"), lit(0L).as("d"), lit(Seed).as("t"))))
     val allSeeds = seeds.isEmpty
     def ranked(total: Int => Long)(run: => DataFrame): DataFrame = {
       require(allSeeds || total(2) > 0L,
@@ -162,12 +165,17 @@ object Graph {
       if (total(1) > 0L) run
       else { import spark.implicits._; Seq.empty[(Long, Long)].toDF("id", "r") }
     }
-    vertexLoop(keyed, if (allSeeds) "pageRank" else "personalizedPageRank")(
-        c => GraphLocal.RankAdjacency(c(0), c(1), c(2), allSeeds, dedupEdges))(
+    vertexLoop(rows, 3, if (allSeeds) "pageRank" else "personalizedPageRank") {
+        (r, to) =>
+          if (r.numFields == 3 && r.getLong(2) == Seed) to.put(r.getLong(0), 0L, Seed)
+          else {
+            val s = r.getLong(0); val d = r.getLong(1)
+            to.put(d, s, InEdge); to.put(s, d, OutEdge)
+          }
+      }(c => GraphLocal.RankAdjacency(c(0), c(1), c(2), allSeeds, dedupEdges))(
       (total, parts) => ranked(total)(GraphLocal.rankRounds(spark, total(2),
-          iters, damp, parts.each(_.nodes)) { (all, share) =>
-        parts.round((all, share)) { case (g, (a, sh)) => g.inSums(a, sh) }
-      }),
+          iters, damp, parts.each(_.nodes))(
+        parts.rounds(_)((g, ix, share: Array[Long]) => g.inSums(ix, share)))),
       (total, adj) => ranked(total)(
         rankLoop(spark, adj, total(2), total(3) > 0L, iters, damp)))
   }
@@ -263,8 +271,9 @@ object Graph {
     * label, so each neighbor counts once and the argmax is the min
     * neighbor id. Later rounds take, per node, the most frequent label
     * among its labeled neighbors, the smallest on a tie. Every leg starts
-    * from [[vertexLoop]] over the mirrored rows, keyed by a, with one
-    * [[GraphLocal.LpAdjacency]] per partition (a primitive CSR whose
+    * from [[vertexLoop]], whose route mirrors each row on the map side,
+    * (a, b) to a and (b, a) to b, only (a, b) when `assumeSymmetric`, with
+    * one [[GraphLocal.LpAdjacency]] per a-partition (a primitive CSR whose
     * neighbor slices are sorted and distinct, so duplicate rows fold
     * without another shuffle). The driver and hybrid legs run
     * [[GraphLocal.lpRounds]] with the labels on the driver, at most about
@@ -283,20 +292,20 @@ object Graph {
                        iters: Int = 3, assumeSymmetric: Boolean = false)
       : DataFrame = {
     require(iters >= 1)
-    val e0 = edges.select(col(srcCol).cast(LongType).as("a"),
+    val rows = edges.select(col(srcCol).cast(LongType).as("a"),
         col(dstCol).cast(LongType).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
-    val e1 =
-      if (assumeSymmetric) e0
-      else e0.select(explode(array(struct(col("a"), col("b")),
-          struct(col("b").as("a"), col("a").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-    vertexLoop(e1, "labelPropagation")(c => GraphLocal.LpAdjacency(c(0), c(1)))(
+    vertexLoop(rows, 2, "labelPropagation") { (r, to) =>
+        val a = r.getLong(0); val b = r.getLong(1)
+        to.put(a, b)
+        if (!assumeSymmetric) to.put(b, a)
+      }(c => GraphLocal.LpAdjacency(c(0), c(1)))(
       (total, parts) => GraphLocal.lpRounds(edges.sparkSession,
-          total(1).toInt, iters, parts.each(_.firstRound)) { (ids, lbl, has) =>
-        parts.round((ids, lbl, has)) { case (g, (i, l, h)) => g.laterRound(i, l, h) }
-      },
+          total(1).toInt, iters, parts.each(_.firstRound))(
+        parts.rounds(_) { (g, ids, s: (Array[Long], Array[Boolean])) =>
+          g.laterRound(ids, s._1, s._2)
+        }),
       (_, adj) => sortMergeLabelPropagation(edges.sparkSession, adj, iters))
   }
 

@@ -2,8 +2,11 @@ package graft.ops
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Driver-local replays of the iterative graph operators.
   *
@@ -35,30 +38,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Label propagation, pageRank and personalizedPageRank have three legs,
   * picked in [[Graph.vertexLoop]] from one shuffle keyed by the receiving
-  * endpoint, each partition packed into one adjacency ([[LpAdjacency]],
-  * [[RankAdjacency]]: a primitive CSR, duplicate edges folded) persisted
-  * on the executors: the driver leg collects the adjacencies and runs
-  * the round loop ([[lpRounds]], [[rankRounds]]) in process, the hybrid
-  * leg runs it with the state on the driver and each round as one
-  * map-only job, and a node set above the limit takes the sort-merge
-  * loop. By count of its arrays, the driver leg's collect holds 4 bytes
-  * per distinct directed edge (the CSR's neighbor ints) plus the 4 of the
-  * serialized task result they arrive in, where the packed edge collect
-  * held 16 of payload and peaked near 80; per node each adjacency adds
-  * its offsets (4) and the ids it has seen (8, at most one per edge),
-  * and a rank adjacency its out-degree and seed flag (9). Label
-  * propagation's loop holds at most about 60 bytes per node on either
-  * leg: the sorted ids and, on the hybrid leg, their broadcast copy (16),
-  * two generations of labels and has-label flags (18), the broadcast
-  * copy of one generation (9) and one round's returned (id, label)
-  * arrays (16); the broadcast copies are compressed, and between rounds
-  * the ids and one generation stay, 17 bytes. The rank loop holds at
-  * most about 100 bytes per node on the hybrid leg: the id index and its
-  * broadcast copy (at most 48), the out-degrees and seed flags (9), two
-  * generations of ranks (16), the shares and their broadcast copy (16)
-  * and one round's returned sums (8); the collected (id, outdeg, seed)
-  * triples add 17 while it sets up. At a |V| of 4M that is under 0.25 GB
-  * for label propagation and 0.5 GB for the rank family.
+  * endpoint ([[packByKey]]), each partition packed into one adjacency
+  * ([[LpAdjacency]], [[RankAdjacency]]: a primitive CSR, duplicate edges
+  * folded) persisted on the executors: the driver leg collects the
+  * adjacencies and runs the round loop ([[lpRounds]], [[rankRounds]]) in
+  * process, the hybrid leg runs it with the state on the driver and each
+  * round as one map-only job, and a node set above the limit takes the
+  * sort-merge loop. The shuffle carries primitive LONG blocks: a map task
+  * holds at most one open block of [[BlockLongs]] LONGs (32 KB) per
+  * destination partition, whatever its input's size, and a reduce task
+  * appends its blocks one at a time to the packed columns its adjacency is
+  * built from ([[LongColumn]]), never holding all it received: at most
+  * twice its records' LONGs, while the columns are copied out. By count of
+  * its arrays, the driver leg's collect holds 4 bytes per distinct directed
+  * edge (the CSR's neighbor ints) plus the 4 of the serialized task result
+  * they arrive in, where the packed edge collect held 16 of payload and
+  * peaked near 80; per node each adjacency adds its offsets (4) and the ids it has seen (8, at
+  * most one per edge), and a rank adjacency its out-degree and seed flag
+  * (9). Label propagation's loop holds at most about 60 bytes per node on
+  * either leg: the sorted ids and, on the hybrid leg, their broadcast copy
+  * (16), two generations of labels and has-label flags (18), the broadcast
+  * copy of one generation (9) and one round's returned (id, label) arrays
+  * (16); the broadcast copies are compressed, the ids' is made once per
+  * loop, and between rounds the ids, their broadcast copy and one
+  * generation stay, at most 25 bytes. The rank loop holds at most about 100
+  * bytes per node on the hybrid leg: the id index and its broadcast copy,
+  * made once per loop (at most 48), the out-degrees and seed flags (9), two
+  * generations of ranks (16), the shares and their broadcast copy (16) and
+  * one round's returned sums (8); the collected (id, outdeg, seed) triples
+  * add 17 while it sets up. At a |V| of 4M that is under 0.25 GB for label
+  * propagation and 0.5 GB for the rank family.
   *
   * The limit only changes WHERE the arithmetic runs: every replay walks
   * the SAME integer / IEEE-double op sequence as the distributed plan
@@ -214,18 +223,166 @@ private[graft] object GraphLocal {
   /** The adjacencies a vertex loop runs its rounds on: on the driver leg
     * the `collected` copies, on the hybrid leg the executors' cached `adj`. */
   final class Partitions[A](adj: RDD[A], collected: Option[Array[A]]) {
+    private val held = scala.collection.mutable.ArrayBuffer[Broadcast[_]]()
+
     /** `f` of every adjacency, in partition order. */
     def each[T: ClassTag](f: A => T): Array[T] = collected.fold(
       adj.sparkContext.runJob(adj, (it: Iterator[A]) => f(it.next())))(_.map(f))
 
-    /** `f(adjacency, state)` of every adjacency, in partition order; on
-      * the executors one map-only job against broadcast `state`. */
-    def round[S: ClassTag, T: ClassTag](state: S)(f: (A, S) => T): Array[T] =
-      collected.fold {
-        val b = adj.sparkContext.broadcast(state)
-        try adj.sparkContext.runJob(adj, (it: Iterator[A]) => f(it.next(), b.value))
-        finally b.destroy()
-      }(_.map(f(_, state)))
+    /** The round function of a loop whose rounds share `fixed` (the node
+      * ids): `f(adjacency, fixed, state)` of every adjacency, in partition
+      * order. On the executors `fixed` is broadcast once, here, and held
+      * until [[release]], and each round is one map-only job against
+      * broadcast `state`. */
+    def rounds[F: ClassTag, S: ClassTag, T: ClassTag](fixed: F)(
+        f: (A, F, S) => T): S => Array[T] = collected match {
+      case Some(gs) => s => gs.map(f(_, fixed, s))
+      case None =>
+        val sc = adj.sparkContext
+        val fb = sc.broadcast(fixed)
+        held += fb
+        s => {
+          val b = sc.broadcast(s)
+          try sc.runJob(adj, (it: Iterator[A]) => f(it.next(), fb.value, b.value))
+          finally b.destroy()
+        }
+    }
+
+    /** Destroys the broadcasts of [[rounds]]. */
+    def release(): Unit = { held.foreach(_.destroy()); held.clear() }
+  }
+
+  /** LONGs per block of [[packByKey]]. */
+  private[graft] val BlockLongs = 1 << 12
+
+  /** The map side of [[packByKey]]: each record of `width` LONGs, its
+    * receiving endpoint first, goes into the open block of its
+    * destination partition, so a map task holds at most one block per
+    * destination. A block is column-major, field c of its j-th record at
+    * c·cap + j, so the reduce side copies each column in one piece; a full
+    * block moves to `ready`, and [[flush]] moves the open ones, trimmed. */
+  final class Blocks private[GraphLocal] (width: Int, nParts: Int) {
+    private val cap = BlockLongs / width
+    private val open = new Array[Array[Long]](nParts)
+    private val fill = new Array[Int](nParts)
+    private[GraphLocal] val ready = new java.util.ArrayDeque[(Int, Array[Long])]()
+
+    /** A (key, other) record, for `width` 2. */
+    def put(k: Long, x: Long): Unit = {
+      val p = dest(k)
+      open(p)(cap + fill(p)) = x
+      advance(p, k)
+    }
+
+    /** A (key, other, tag) record, for `width` 3. */
+    def put(k: Long, x: Long, t: Long): Unit = {
+      val p = dest(k)
+      open(p)(cap + fill(p)) = x
+      open(p)(2 * cap + fill(p)) = t
+      advance(p, k)
+    }
+
+    /** Key `k`'s partition (a Fibonacci hash), its open block allocated. */
+    private def dest(k: Long): Int = {
+      val p = (((k * 0x9E3779B97F4A7C15L) >>> 32) % nParts).toInt
+      if (open(p) == null) open(p) = new Array[Long](width * cap)
+      p
+    }
+
+    private def advance(p: Int, k: Long): Unit = {
+      open(p)(fill(p)) = k
+      fill(p) += 1
+      if (fill(p) == cap) { ready.add((p, open(p))); open(p) = null; fill(p) = 0 }
+    }
+
+    def flush(): Unit = for (p <- 0 until nParts if fill(p) > 0) {
+      val n = fill(p)
+      val b = new Array[Long](width * n)
+      for (c <- 0 until width) System.arraycopy(open(p), c * cap, b, c * n, n)
+      ready.add((p, b)); open(p) = null; fill(p) = 0
+    }
+  }
+
+  /** A packed LONG column of [[packByKey]]'s reduce side: blocks' column
+    * slices are appended to chunks of 2^15 LONGs (256 KB), and [[result]]
+    * copies them once into an exact array, dropping each chunk as it is
+    * copied. A doubling builder instead leaves up to half its array empty,
+    * copies it again to trim it, and allocates each doubled array as one
+    * large object: on heavy-sf0.4 those allocations set off a GC in the
+    * middle of every reduce, with every task's arrays live. */
+  private final class LongColumn {
+    private val Chunk = 1 << 15
+    private val chunks = new java.util.ArrayList[Array[Long]]()
+    private var fill = Chunk // of the last chunk
+    private var size = 0
+
+    def addAll(b: Array[Long], from: Int, n: Int): Unit = {
+      var i = 0
+      while (i < n) {
+        if (fill == Chunk) { chunks.add(new Array[Long](Chunk)); fill = 0 }
+        val k = math.min(n - i, Chunk - fill)
+        System.arraycopy(b, from + i, chunks.get(chunks.size - 1), fill, k)
+        fill += k
+        i += k
+      }
+      size += n
+    }
+
+    def result(): Array[Long] = {
+      val out = new Array[Long](size)
+      for (j <- 0 until chunks.size)
+        System.arraycopy(chunks.set(j, null), 0, out, j * Chunk,
+          math.min(Chunk, size - j * Chunk))
+      out
+    }
+  }
+
+  /** The intake of [[Graph.vertexLoop]]: one shuffle of `rows`, a
+    * NULL-filtered all-LONG frame, whose records `route` makes on the map
+    * side, and `pack` of each partition's records as `width` packed
+    * columns. Each map task reads its rows off `queryExecution.toRdd` and
+    * hands each one to `route`, which puts its records, keyed by their
+    * receiving endpoint, into [[Blocks]]; the blocks cross one
+    * HashPartitioner shuffle over the session's shuffle-partition count,
+    * and each reduce task appends them one at a time to its columns. A
+    * NULL here means the operator's filter was bypassed: fail loudly
+    * instead of reading it as node 0. Runs no job; call it inside the SQL
+    * execution of `rows`. */
+  def packByKey[A: ClassTag](rows: DataFrame, width: Int, what: String)(
+      route: (InternalRow, Blocks) => Unit)(
+      pack: Array[Array[Long]] => A): RDD[A] = {
+    val nCols = rows.columns.length
+    val nParts = rows.sparkSession.sessionState.conf.numShufflePartitions
+    val blocks = rows.queryExecution.toRdd.mapPartitions { it =>
+      val out = new Blocks(width, nParts)
+      new Iterator[(Int, Array[Long])] {
+        def hasNext: Boolean = {
+          while (out.ready.isEmpty && it.hasNext) {
+            val r = it.next()
+            var c = 0
+            while (c < nCols) {
+              if (r.isNullAt(c)) throw new IllegalStateException(
+                s"$what: NULL in a NULL-filtered frame")
+              c += 1
+            }
+            route(r, out)
+          }
+          if (out.ready.isEmpty) out.flush()
+          !out.ready.isEmpty
+        }
+        def next(): (Int, Array[Long]) =
+          if (hasNext) out.ready.poll() else Iterator.empty.next()
+      }
+    }
+    new ShuffledRDD[Int, Array[Long], Array[Long]](blocks, new HashPartitioner(nParts))
+      .mapPartitions { it =>
+        val cols = Array.fill(width)(new LongColumn)
+        it.foreach { case (_, b) =>
+          val n = b.length / width
+          for (c <- 0 until width) cols(c).addAll(b, c * n, n)
+        }
+        Iterator(pack(cols.map(_.result())))
+      }
   }
 
   /** Label propagation's adjacency: a CSR keyed by `a` over local node
@@ -307,15 +464,16 @@ private[graft] object GraphLocal {
     * hybrid legs. The labels live here, indexed by the rank of their id
     * among the `nV` sorted ids of the adjacencies' labeled rows, which
     * are disjoint. `round1` holds each adjacency's
-    * [[LpAdjacency.firstRound]]; `later(ids, lbl, has)` runs
-    * [[LpAdjacency.laterRound]] on every adjacency: in process on the
-    * driver leg, as one map-only job on the hybrid leg. A node that never
+    * [[LpAdjacency.firstRound]]; `later(ids)` is the round function,
+    * which runs [[LpAdjacency.laterRound]] against the sorted `ids` and a
+    * round's `(lbl, has)` on every adjacency: in process on the driver
+    * leg, as one map-only job on the hybrid leg. A node that never
     * appears as `a`, or whose neighbors all lost their label, gets no
     * label and is left out — what the sort-merge loop's `groupBy(a)` and
     * inner label join do. Returns (id, community). */
   def lpRounds(spark: SparkSession, nV: Int, iters: Int,
                round1: Array[(Array[Long], Array[Long])])(
-      later: (Array[Long], Array[Long], Array[Boolean]) =>
+      later: Array[Long] => ((Array[Long], Array[Boolean])) =>
         Array[(Array[Long], Array[Long])]): DataFrame = {
     val ids = new Array[Long](nV)
     var at = 0
@@ -337,8 +495,9 @@ private[graft] object GraphLocal {
         }
       }
     fill(round1)
+    lazy val round = later(ids)
     for (_ <- 2 to iters) {
-      val parts = later(ids, lbl, has)
+      val parts = round((lbl, has))
       lbl = new Array[Long](nV)
       has = new Array[Boolean](nV)
       fill(parts)
@@ -482,13 +641,14 @@ private[graft] object GraphLocal {
   /** [[Graph.pageRank]]'s and [[Graph.personalizedPageRank]]'s round
     * loop, shared by their driver and hybrid legs: the ranks live here,
     * indexed by an id index over the adjacencies' disjoint
-    * [[RankAdjacency.nodes]], and `sums(ix, share)` runs
-    * [[RankAdjacency.inSums]] on every adjacency. The Long ops, in order,
+    * [[RankAdjacency.nodes]], and `sums(ix)` is the round function,
+    * which runs [[RankAdjacency.inSums]] against `ix` and a round's shares
+    * on every adjacency. The Long ops, in order,
     * are the sort-merge loop's ([[Graph.pageRank]] gives them). Returns
     * (id, r). */
   def rankRounds(spark: SparkSession, nS: Long, iters: Int, damp: Int,
                  nodes: Array[(Array[Long], Array[Long], Array[Boolean])])(
-      sums: (LongIndex, Array[Long]) => Array[Array[Long]]): DataFrame = {
+      sums: LongIndex => Array[Long] => Array[Array[Long]]): DataFrame = {
     val ix = new LongIndex // slot v: the v-th node in partition order
     nodes.foreach(_._1.foreach(ix(_)))
     val outdeg = nodes.flatMap(_._2)
@@ -499,11 +659,12 @@ private[graft] object GraphLocal {
     val base = (100 - damp) * (Graph.Scale / nS) / 100
     val hasDangling = outdeg.contains(0L)
     var r = Array.tabulate(n)(v => if (seed(v)) r0 else 0L)
+    val round = sums(ix)
     for (_ <- 1 to iters) {
       val share = Array.tabulate(n)(v => if (outdeg(v) == 0L) 0L else r(v) / outdeg(v))
       val dm = if (!hasDangling) 0L else
         (0 until n).foldLeft(0L)((d, v) => if (outdeg(v) == 0L) d + r(v) else d) / nS
-      val s = sums(ix, share).flatten
+      val s = round(share).flatten
       r = Array.tabulate(n)(v => (if (seed(v)) base else 0L) +
         damp.toLong * (s(v) + (if (seed(v)) dm else 0L)) / 100)
     }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Graph
+import org.apache.spark.sql.functions.col
 import scala.jdk.CollectionConverters._
 
 /** The driver-local replays ([[graft.ops.GraphLocal]]) must be
@@ -143,25 +144,24 @@ class GraphLocalParitySpec extends SparkSuite {
     def lp(in: Seq[(Long, Long)], symmetric: Boolean) = Graph.labelPropagation(
       in.toDF("s", "t"), "s", "t", iters = 3,
       assumeSymmetric = symmetric).collect()
-    val rekey = "REPARTITION_BY_COL"
     // both inputs have 5 nodes and at least 10 distinct edge rows: the
-    // default limit runs the driver leg, a limit of 5 the hybrid leg
+    // default limit runs the driver leg, a limit of 5 the hybrid leg. The
+    // SQL plans read the un-mirrored rows: the mirroring and the a-keyed
+    // repartition are the intake's one shuffle-map stage (a node whose
+    // rows landed in two partitions would fail lpRounds' distinct-id check)
     for ((in, symmetric) <- Seq(sym -> true, directed -> false);
          limit <- Seq(None, Some(5L))) {
       val what = s"symmetric=$symmetric limit=$limit"
-      val h = limit.fold(actionPlans(lp(in, symmetric)))(
-        atDriverRowLimit(_)(actionPlans(lp(in, symmetric))))
-      assert(!h.exists(p => p.contains("Join") || p.contains("HashAggregate")),
-        s"$what\n" + h.mkString("\n"))
-      val rekeyed = h.filter(_.contains(rekey))
-      assert(rekeyed.size == 1, s"$what\n" + h.mkString("\n"))
-      val keys = raw"hashpartitioning\((\w+)#\d+L?, \d+\), REPARTITION_BY_COL".r
-        .findAllMatchIn(rekeyed.head).map(_.group(1)).toSet
-      assert(keys == Set("a"), s"$what\n" + rekeyed.head)
+      var h = Seq.empty[String]
+      def run() = ran { h = actionPlans(lp(in, symmetric)) }
+      val r = limit.fold(run())(atDriverRowLimit(_)(run()))
+      assert(!h.exists(p => Seq("Join", "HashAggregate", "Exchange", "Generate")
+        .exists(p.contains)), s"$what\n" + h.mkString("\n"))
+      assert(r.shuffleStages == 1, s"$what $r")
     }
     val s = atDriverRowLimit(0L)(actionPlans(lp(sym, true)))
-    assert(s.exists(_.contains("SortMergeJoin")) && s.exists(_.contains(rekey)),
-      s.mkString("\n"))
+    assert(s.exists(_.contains("SortMergeJoin")) &&
+      s.exists(_.contains("REPARTITION_BY_COL")), s.mkString("\n"))
     assert(!s.exists(_.contains("BroadcastHashJoin")), s.mkString("\n"))
   }
 
@@ -333,45 +333,163 @@ class GraphLocalParitySpec extends SparkSuite {
     assert(h == rowSet(ppr), s"hybrid=$h")
   }
 
-  /** Jobs that `body` starts. A marker job run after `body` is awaited on
-    * the listener bus, so every earlier job's start has been delivered. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** What `body` ran: each job's stage count, in start order, and the
+    * shuffle-map stages that wrote records. */
+  private case class Ran(jobs: Seq[Int], shuffleStages: Int)
+
+  /** [[Ran]] of `body`. A marker job run after `body` is awaited on the
+    * listener bus, so every earlier event has been delivered. */
+  private def ran(body: => Unit): Ran = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
     val sc = spark.sparkContext
     val marker = "GraphLocalParitySpec job-count marker"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val shuffles = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        started.add(String.valueOf(j.properties.getProperty("spark.job.description")))
+      override def onJobStart(j: SparkListenerJobStart): Unit = started.add(
+        String.valueOf(j.properties.getProperty("spark.job.description")) ->
+          j.stageInfos.size)
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffles.incrementAndGet()
     }
+    def arrived = started.asScala.exists(_._1 == marker)
     sc.addSparkListener(l)
     try {
       body
       sc.setJobDescription(marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(started.contains(marker), "listener bus did not deliver the marker in 30 s")
+      while (!arrived && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(arrived, "listener bus did not deliver the marker in 30 s")
     } finally sc.removeSparkListener(l)
-    started.size - 1
+    Ran(started.asScala.toSeq.init.map(_._2), shuffles.get)
   }
 
   test("hybrid legs: each later round is one job") {
     // 5 nodes and 8 (directed) or 10 (sym) edges: a limit of 5 runs the
-    // hybrid leg, where four more rounds must cost four more jobs
+    // hybrid leg, where four more rounds must cost four more jobs. With
+    // iters = 1 the intake is the first job, two stages from the input to
+    // the counted adjacencies, and no other job shuffles: then round 1
+    // (labelPropagation's firstRound; the rank family's nodes and one round)
     val seeds = Seq(1L, 3L).toDF("seed")
-    val ops = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
-      "pageRank" -> (it => Graph.pageRank(directed.toDF("s", "t"), "s", "t",
+    val ops = Seq[(String, Int, Int => org.apache.spark.sql.DataFrame)](
+      ("pageRank", 2, it => Graph.pageRank(directed.toDF("s", "t"), "s", "t",
         iters = it)),
-      "personalizedPageRank" -> (it => Graph.personalizedPageRank(
+      ("personalizedPageRank", 2, it => Graph.personalizedPageRank(
         directed.toDF("s", "t"), "s", "t", seeds, "seed", iters = it)),
-      "labelPropagation" -> (it => Graph.labelPropagation(sym.toDF("s", "t"),
+      ("labelPropagation", 1, it => Graph.labelPropagation(sym.toDF("s", "t"),
         "s", "t", iters = it, assumeSymmetric = true)))
-    for ((name, op) <- ops) {
-      def jobs(it: Int) = atDriverRowLimit(5L)(jobsOf(op(it).collect()))
-      val (one, five) = (jobs(1), jobs(5))
-      assert(five - one == 4, s"$name: iters=1 took $one jobs, iters=5 $five")
+    for ((name, round1, op) <- ops) {
+      def at(it: Int) = atDriverRowLimit(5L)(ran(op(it).collect()))
+      val (one, five) = (at(1), at(5))
+      assert(five.jobs.size - one.jobs.size == 4,
+        s"$name: iters=1 took ${one.jobs.size} jobs, iters=5 ${five.jobs.size}")
+      assert(one.jobs.size == 1 + round1 && one.jobs.head == 2 &&
+        one.shuffleStages == 1, s"$name: iters=1 $one")
+    }
+  }
+
+  /** `f` with `spark.sql.shuffle.partitions` at `n`. */
+  private def atShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  private val vertexLoops = Seq[(String,
+      org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+    "labelPropagation" -> (e => Graph.labelPropagation(e, "s", "t", iters = 3)),
+    "pageRank" -> (e => Graph.pageRank(e, "s", "t", iters = 4)),
+    "personalizedPageRank" -> (e => Graph.personalizedPageRank(e, "s", "t",
+      Seq(1L, 7L, 50L, 9999L, 7L).toDF("seed"), "seed", iters = 4)))
+
+  // the random graph's ≈2k rows route to ≈4k records: at 1 shuffle
+  // partition its one destination takes several blocks, at 4 and 7 each
+  // takes about one
+  test("vertex-loop intake: the same rows at 1, 4 and 7 shuffle " +
+    "partitions on every leg, with more than one block per destination") {
+    assert(2 * rnd.size > graft.ops.GraphLocal.BlockLongs / 2, rnd.size)
+    for ((name, op) <- vertexLoops) {
+      val rows = Seq(1, 4, 7).map(n =>
+        atShufflePartitions(n)(threeWays(1000L, s"$name partitions=$n")(op(rndDf))))
+      assert(rows.distinct.size == 1 && rows.head.nonEmpty, name)
+    }
+  }
+
+  test("vertex-loop intake: repeated rows fold and seeds route with the " +
+    "edges on every leg") {
+    val repeated = (rnd ++ rnd.take(500)).toDF("s", "t")
+    for ((name, op) <- vertexLoops) {
+      val want = threeWays(1000L, name)(op(rndDf))
+      assert(threeWays(1000L, s"$name repeated")(op(repeated)) == want, name)
+    }
+    // a seed's row lands with its node's edges: the seed set decides
+    // which nodes get the base term, so a misrouted seed changes the rows
+    def ppr(seeds: Seq[Long]) = Graph.personalizedPageRank(rndDf, "s", "t",
+      seeds.toDF("seed"), "seed", iters = 4)
+    val once = threeWays(1000L, "seeds once")(ppr(Seq(1L, 7L, 50L, 9999L)))
+    assert(threeWays(1000L, "seeds repeated")(ppr(Seq(7L, 1L, 7L, 50L, 9999L, 50L))) == once)
+    assert(threeWays(1000L, "seeds moved")(ppr(Seq(1L, 7L, 51L))) != once)
+  }
+
+  /** Runs [[graft.ops.GraphLocal.packByKey]] over `rows` with `route`,
+    * each partition's columns as they were packed. */
+  private def packed(rows: org.apache.spark.sql.DataFrame, width: Int)(
+      route: (org.apache.spark.sql.catalyst.InternalRow,
+        graft.ops.GraphLocal.Blocks) => Unit): Array[Array[Array[Long]]] =
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        rows.queryExecution, Some("packByKey")) {
+      graft.ops.GraphLocal.packByKey(rows, width, "packByKey")(route)(identity)
+        .collect()
+    }
+
+  test("vertex-loop intake: blocks keep every record, column-aligned, in " +
+    "the one partition of its key") {
+    // 3 blocks' worth of rows over 1000 keys, routed as 2 or 3 LONGs a
+    // record: several full blocks per destination plus a trimmed last one
+    val n = 3L * graft.ops.GraphLocal.BlockLongs
+    val rows = spark.range(n).selectExpr("id % 1000 AS k", "id AS x")
+    val input = (0L until n).map(x => (x % 1000L, x))
+    for (parts <- Seq(1, 4, 7)) atShufflePartitions(parts) {
+      val two = packed(rows, 2) { (r, to) =>
+        to.put(r.getLong(0), r.getLong(1)); to.put(r.getLong(1), r.getLong(0))
+      }
+      val three = packed(rows, 3)((r, to) =>
+        to.put(r.getLong(0), r.getLong(1), 3L * r.getLong(1) + 1L))
+      for ((cols, want) <- Seq(
+          two -> (input ++ input.map(_.swap)).map { case (k, x) => Seq(k, x) },
+          three -> input.map { case (k, x) => Seq(k, x, 3L * x + 1L) })) {
+        assert(cols.length == parts && cols.forall(c => c.forall(_.length == c(0).length)))
+        val got = cols.toSeq.flatMap(c => c(0).indices.map(j => c.toSeq.map(_(j))))
+        assert(got.sortBy(_.mkString(",")) == want.sortBy(_.mkString(",")),
+          s"partitions=$parts width=${want.head.size}")
+        val keys = cols.toSeq.map(_(0).toSet)
+        assert(keys.map(_.size).sum == keys.reduce(_ ++ _).size,
+          s"partitions=$parts: a key in two partitions")
+      }
+    }
+  }
+
+  test("vertex-loop intake: a NULL endpoint fails loudly, not read as " +
+    "node 0") {
+    // the operators' filters keep NULLs out, so the intake, which runs
+    // before any leg is picked, is fed one directly: a NULL key or other
+    // endpoint, at the widths of labelPropagation (2) and the rank family (3)
+    val rows = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(3L), None), (None, Some(4L))).toDF("s", "t")
+    for (null1 <- Seq("s", "t"); width <- Seq(2, 3)) {
+      val one = rows.filter(col(if (null1 == "s") "t" else "s").isNotNull)
+      val e = intercept[Exception](packed(one, width) { (r, to) =>
+        if (width == 2) to.put(r.getLong(0), r.getLong(1))
+        else to.put(r.getLong(1), r.getLong(0), 0L)
+      })
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage)
+          .contains("packByKey: NULL in a NULL-filtered frame")),
+        s"NULL $null1 width=$width: $e")
     }
   }
 

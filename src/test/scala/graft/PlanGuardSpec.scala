@@ -545,6 +545,28 @@ class PlanGuardSpec extends SparkSuite {
       s"edge collects outside the intake at Graph.scala:${outside.mkString(", ")}")
   }
 
+  test("vertex loops: no repartition( or explode( feeds vertexLoop") {
+    // the operators hand vertexLoop their un-mirrored rows, and its intake
+    // mirrors and routes them on the map side into one block shuffle
+    val code = mainCodeLines()
+    val graph = code.filter(_._1.endsWith("ops/Graph.scala"))
+    val loop = graphMember(graph, "private def vertexLoop[")
+    val callers = graph.collect {
+      case (_, i, l) if l.contains("vertexLoop(") && !loop.contains(i) => i
+    }
+    val members = (loop +: callers.map(i => graphMember(graph,
+      graph.filter(_._2 <= i).findLast(_._3.matches("  (private )?def .*")).get._3
+        .trim))).distinct
+    val intake = graphMember(code.filter(_._1.endsWith("ops/GraphLocal.scala")),
+      "def packByKey[")
+    val feeds = (graph.filter(l => members.exists(_.contains(l._2))) ++
+      code.filter(l => l._1.endsWith("ops/GraphLocal.scala") && intake.contains(l._2)))
+      .collect { case (p, i, l) if l.contains("repartition(") ||
+        l.contains("explode(") => s"${p.getFileName}:$i" }
+    assert(callers.size == 2 && feeds.isEmpty,
+      s"callers at Graph.scala:${callers.mkString(", ")}; feeds: ${feeds.mkString(", ")}")
+  }
+
   /** The lines of src/main without comment lines. */
   private def mainCodeLines() = mainSourceLines().filterNot { case (_, _, l) =>
     val t = l.trim
